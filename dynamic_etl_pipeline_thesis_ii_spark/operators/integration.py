@@ -38,24 +38,9 @@ from pyspark.sql import functions as F
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity_join as SJ
 from dynamic_etl_pipeline_thesis_ii_spark.operators import union_engine as U
+from dynamic_etl_pipeline_thesis_ii_spark.scope import persist_scoped
 
 _ROW_ID = "__row_id"
-
-# Group frames persisted by integrate(): every unioned group feeds the
-# retention denominator count, O(k) stage-1/2 pair evaluations (each
-# with its own eager aggregates/collects) and the caller's final
-# consumption — without a persist each action re-derives the group
-# from its sources (measured: the 2-group fixture launches ~8 jobs,
-# each re-running the union + dropDuplicates). The frames are returned
-# lazily, so integrate() cannot unpersist them itself; harnesses
-# release between queries (bench.py does, via the dataops suite's
-# release_shared_caches which drains this list too).
-_SHARED_CACHES: list[DataFrame] = []
-
-
-def release_shared_caches() -> None:
-    while _SHARED_CACHES:
-        _SHARED_CACHES.pop().unpersist()
 
 # column names that identify rows of an entity-keyed time series
 _KEY_HINTS = ("ticker", "symbol", "ts", "timestamp", "date", "id", "key")
@@ -235,24 +220,19 @@ def integrate(dfs: list[DataFrame], cfg: Optional[EngineConfig] = None,
     if len(dfs) > cfg.max_dataframes:
         raise ValueError(f"too many DataFrames: {len(dfs)} > {cfg.max_dataframes}")
 
-    # Drain the PREVIOUS invocation's group caches: direct library
-    # callers rarely know about release_shared_caches(), and without
-    # this a long-lived driver accumulates one persisted frame per
-    # group per call until storage-memory eviction churn. Unpersisting
-    # is correctness-neutral (a still-held frame from an earlier call
-    # simply recomputes), and harness release points are unaffected.
-    release_shared_caches()
-
     reports: list[dict] = []
     groups, union_ops = U.sequential_union(dfs, cfg)
     reports.extend(union_ops)
-    # persist each group (tracked): the denominator count, every
+    # persist each group (scoped): the denominator count, every
     # stage-1/2 pair evaluation and the caller's consumption all read
     # these same k frames — at any scale the orchestrator is O(k^2)
     # evaluations over them, so materializing each once is the
-    # shared-scan discipline, not a small-data trick.
+    # shared-scan discipline, not a small-data trick (measured: the
+    # 2-group fixture otherwise launches ~8 jobs, each re-running the
+    # union + dropDuplicates). The frames are returned lazily, so they
+    # live until the caller's cache scope is released.
     for g in groups:
-        _SHARED_CACHES.append(g.persist())
+        persist_scoped(g)
 
     if len(groups) == 1:
         reports.append({"operation": "early_termination",

@@ -312,11 +312,6 @@ def SQL_PII_SCRUB(x: str,
     return scrubbed, "(" + " + ".join(counts) + ")"
 
 
-# Temporary A/B toggle for the r14 single-scan refactors (tools/ab_scan.py
-# flips it in-session); removed once the measurement is recorded.
-_SINGLE_SCAN = True
-
-
 def token_rows(df, text_col: str = "text", id_col: str = "doc_id"):
     """Explode normalized whitespace tokens to (id, token) rows — the
     shared first stage of the corpus-statistics operators below. One
@@ -347,14 +342,10 @@ def tfidf_top_terms(df, text_col: str = "text", id_col: str = "doc_id",
     toks = token_rows(df, text_col, id_col)
     n_docs = df.agg(F.count_distinct(F.col(id_col)).alias("__n_docs"))
     tf = toks.groupBy("id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    if _SINGLE_SCAN:
-        # df == tf's per-tok row count (one row per (id, tok)): deriving
-        # it from tf shares the (id, tok) exchange via ReuseExchange —
-        # one corpus tokenize pass instead of two. Exact integer counts.
-        dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    else:
-        dfreq = (toks.select("id", "tok").distinct()
-                 .groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
+    # df == tf's per-tok row count (one row per (id, tok)): deriving
+    # it from tf shares the (id, tok) exchange via ReuseExchange —
+    # one corpus tokenize pass instead of two. Exact integer counts.
+    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     if broadcast_vocab:
         dfreq = F.broadcast(dfreq)
     scored = (tf.join(dfreq, "tok")
@@ -402,19 +393,14 @@ def bm25_topk(df, queries, text_col: str = "text", id_col: str = "doc_id",
     per-row Python anywhere."""
     toks = token_rows(df, text_col, id_col)
     tf = toks.groupBy("id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    if _SINGLE_SCAN:
-        # dl, stats and df are all RE-aggregations of tf (sum of tf per
-        # id == token count per id; tf has one row per (id, tok) so its
-        # per-tok row count == document frequency), so every consumer
-        # shares tf's (id, tok) exchange via ReuseExchange: the corpus
-        # is scanned + tokenized + shuffled ONCE instead of five times.
-        # Exact integer counts — values identical to the direct forms.
-        dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
-        dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    else:
-        dl = toks.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
-        dfreq = (toks.select("id", "tok").distinct()
-                 .groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
+    # dl, stats and df are all RE-aggregations of tf (sum of tf per
+    # id == token count per id; tf has one row per (id, tok) so its
+    # per-tok row count == document frequency), so every consumer
+    # shares tf's (id, tok) exchange via ReuseExchange: the corpus
+    # is scanned + tokenized + shuffled ONCE instead of five times.
+    # Exact integer counts — values identical to the direct forms.
+    dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
+    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     stats = dl.agg(F.count(F.lit(1)).alias("__n_docs"),
                    F.avg("dl").alias("__avgdl"))
     if broadcast_vocab:
@@ -741,7 +727,7 @@ def bigram_logprob(df, text_col: str = "text", id_col: str = "doc_id",
     prefix counts, the |V| scalar, and the final join's left side) —
     pass ``pairs`` as a PERSISTED :func:`bigram_rows` frame so the
     corpus scans/explodes once (q_text_corpus_stats does, via its
-    tracked-cache convention); unpersisted, each consumer re-derives
+    scoped-cache convention); unpersisted, each consumer re-derives
     the explosion. Two hash aggregates, a lazy 1-row |V| scalar
     broadcast, and the pairs ⋈ logp join keyed on the bigram — unlike
     the unigram logp table, the bigram table can exceed broadcast size

@@ -51,6 +51,7 @@ from dynamic_etl_pipeline_thesis_ii_spark.plans.validators import (
     OutputValidator,
     ParameterValidator,
 )
+from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope
 
 ProgressFn = Callable[[str, dict], None]
 
@@ -285,10 +286,18 @@ class Pipeline:
         The finance lifecycle (``run``) and this target share the
         publish/report conventions; the composition itself is the
         engine's unchanged scale path — the orchestrator only binds
-        NL-derived parameters and the sink."""
+        NL-derived parameters and the sink.
+
+        The run owns its cached frames: everything persisted while it
+        runs is released when it returns, by which time every target
+        has written its sink."""
+        with cache_scope():
+            return self._dispatch_dataops(query, source_dir, output_path)
+
+    def _dispatch_dataops(self, query: str, source_dir: str,
+                          output_path: str) -> dict:
         from dynamic_etl_pipeline_thesis_ii_spark.queries.dataops_suite import (
             corpus_to_shards_frame,
-            release_shared_caches,
         )
         from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
             write_shards,
@@ -464,16 +473,13 @@ class Pipeline:
             n_shards=plan["n_shards"], n_buckets=plan["n_buckets"],
             tokenizer=plan["tokenizer"])
         self.progress("curate", {"params": dict(plan)})
-        try:
-            # the frame's persisted `shard` column IS the writer's hash;
-            # drop it and let write_shards recompute + verify placement
-            sink_report = write_shards(
-                frame.drop("shard"), output_path,
-                n_shards=plan["n_shards"], key_col="id",
-                shuffle_salt=plan.get("shuffle_salt"), verify=True,
-                manifest=plan.get("manifest", False))
-        finally:
-            release_shared_caches()
+        # the frame's persisted `shard` column IS the writer's hash;
+        # drop it and let write_shards recompute + verify placement
+        sink_report = write_shards(
+            frame.drop("shard"), output_path,
+            n_shards=plan["n_shards"], key_col="id",
+            shuffle_salt=plan.get("shuffle_salt"), verify=True,
+            manifest=plan.get("manifest", False))
         self.progress("publish", {"rows": sink_report.get("rows_written"),
                                   "path": output_path})
         return {

@@ -23,42 +23,13 @@ from dynamic_etl_pipeline_thesis_ii_spark.operators import sampling as SA
 from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as S
 from dynamic_etl_pipeline_thesis_ii_spark.operators import text as T
 from dynamic_etl_pipeline_thesis_ii_spark.operators import web as WB
+# release_shared_caches is re-exported: harnesses release between queries
+from dynamic_etl_pipeline_thesis_ii_spark.scope import (  # noqa: F401
+    persist_scoped,
+    release_shared_caches,
+    run_arms,
+)
 from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
-
-# ---------------------------------------------------------------------------
-# shared-cache tracking: several queries persist a frame two branches
-# consume (shingle base, scored corpus). The frames are returned lazily,
-# so the query function cannot unpersist before its consumer runs —
-# instead every persist is TRACKED here and harnesses release them
-# between queries (bench.py does; repeated un-released invocations stay
-# bounded anyway because Spark's CacheManager dedupes identical
-# canonical plans to one MEMORY_AND_DISK entry).
-# ---------------------------------------------------------------------------
-
-_SHARED_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _SHARED_CACHES.append(df)
-    return df
-
-
-def release_shared_caches() -> None:
-    """Unpersist every shared frame the dataops queries persisted since
-    the last release. Call between queries in long-running harnesses;
-    blocking=False (the default) so release never stalls the caller.
-    Also drains the integration orchestrator's group-frame caches
-    (operators/integration.py persists each unioned group for its
-    O(k^2) pair evaluations — same lazy-return constraint, same
-    release point)."""
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import (
-        integration as _integration,
-    )
-    _integration.release_shared_caches()
-    while _SHARED_CACHES:
-        _SHARED_CACHES.pop().unpersist()
-
 
 # ---------------------------------------------------------------------------
 # corpora
@@ -659,12 +630,12 @@ def q_semantic_decontam(spark, sf_dir):
     the cross-frame cosine hits, 'kept' rows the corpus ids that
     survive the anti-join."""
     corpus, bench = _semantic_contam_corpora(spark, sf_dir)
-    # compute the cross-frame pair join ONCE (tracked persist) and
+    # compute the cross-frame pair join ONCE (scoped persist) and
     # derive the kept side from it — the anti-join end below is
     # literally semantic_decontaminate's body (flagged = distinct
     # id_a, broadcast left_anti; parity pinned in test_scale_paths),
     # re-using the persisted pairs instead of re-running the join
-    pairs = _persist_tracked(
+    pairs = persist_scoped(
         S.semantic_contamination(corpus, bench, threshold=0.95))
     flagged = pairs.select(F.col("id_a").alias("vec_id")).distinct()
     kept = corpus.join(F.broadcast(flagged), "vec_id", "left_anti")
@@ -755,28 +726,15 @@ def q_dedup_neardup_pairs(spark, sf_dir):
     # four arms ~2.5 s combined.
     corpus = _neardup_corpus(spark, sf_dir)
     # minhash and jaccard both consume k=3 shingles of the same corpus:
-    # explode + NGram once, persist (tracked — harnesses release via
-    # release_shared_caches between queries), feed both branches.
-    sh3 = _persist_tracked(D.shingle_rows(corpus, "text", "doc_id", 3))
+    # explode + NGram once, persist (scoped — released with the
+    # caller's cache scope), feed both branches.
+    sh3 = persist_scoped(D.shingle_rows(corpus, "text", "doc_id", 3))
 
-    # Overlap the detector arms as INDEPENDENT concurrent jobs (guide
-    # §2.6): a single union-count job serializes each arm's driver-side
-    # plan/codegen constant (the 64-counter simhash aggregate alone is
-    # ~1 s of per-invocation doExecute, r13 bisection) behind the
-    # previous arm's, and the arms share no lineage except sh3. Each
-    # thread materializes its arm with an EAGER localCheckpoint —
-    # recomputed from the parquet inputs on EVERY invocation (a fresh
-    # checkpoint per call; nothing is keyed on the plan, so bench
-    # repeats stay honest-cold for the arms themselves) — and the
-    # union then reads the six tiny pair lists. Same rows, same
-    # schema, same union order; wall drops from the sum of the arm
-    # chains to roughly the largest one. minhash+jaccard share one
-    # thread so the sh3 cache fills once instead of racing.
-    # localCheckpoint lineage-truncation caveat: same as the simhash
-    # fingerprint checkpoint (swap for reliable checkpoints on
-    # long-lived clusters).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The detector arms share no lineage except sh3, so they run as
+    # concurrent jobs (run_arms; the 64-counter simhash aggregate alone
+    # is ~1 s of per-invocation doExecute, r13 bisection) and the union
+    # reads the six tiny checkpointed pair lists. minhash+jaccard share
+    # one arm so the sh3 cache fills once instead of racing.
     def _mh_ja():
         mh = (D.minhash_lsh_pairs(corpus, k=3, n_hashes=16, bands=4,
                                   shingles=sh3)
@@ -814,15 +772,7 @@ def q_dedup_neardup_pairs(spark, sf_dir):
                         "id_a", "id_b", F.col("cos").alias("metric"))
                 .localCheckpoint(eager=True))
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        mhja_f = pool.submit(_mh_ja)
-        sh_f = pool.submit(_sh)
-        em_f = pool.submit(_em)
-        ct_f = pool.submit(_ct)
-        sd_f = pool.submit(_sd)
-        mh, ja = mhja_f.result()
-        sh, em, ct, sd = (sh_f.result(), em_f.result(), ct_f.result(),
-                          sd_f.result())
+    (mh, ja), sh, em, ct, sd = run_arms(_mh_ja, _sh, _em, _ct, _sd)
     return (mh.unionByName(sh).unionByName(ja).unionByName(em)
             .unionByName(ct).unionByName(sd))
 
@@ -912,17 +862,12 @@ def q_ann_topk(spark, sf_dir):
     times (plan-identity cache hit for the arms' own Catalog reads).
     Composite-only: each arm standalone stays cache-free, and in
     production the arms are independent queries."""
-    emb = _persist_tracked(Catalog(spark, sf_dir).embeddings)
+    emb = persist_scoped(Catalog(spark, sf_dir).embeddings)
     # fill the shared embeddings cache ONCE up front (tiny table), then
-    # run the four arms as independent concurrent jobs (guide §2.6 —
-    # the same overlap as q_dedup_neardup_pairs: each arm's
-    # driver-side planning/codegen, dominated by the PQ literal
-    # expression trees, no longer serializes behind the previous
-    # arm's). Eager localCheckpoint per arm — recomputed from the
-    # parquet inputs on every invocation; rows/schema/union order
-    # unchanged.
+    # run the four arms concurrently (run_arms: each arm's driver-side
+    # planning, dominated by the PQ literal expression trees, no longer
+    # serializes behind the previous arm's)
     emb.count()
-    from concurrent.futures import ThreadPoolExecutor
 
     def _arm(fn, method, bucket_col):
         def run():
@@ -935,13 +880,10 @@ def q_ann_topk(spark, sf_dir):
                     .localCheckpoint(eager=True))
         return run
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fs = [pool.submit(_arm(fn, m, b)) for fn, m, b in
-              ((q_ann_cosine_topk, "brute", False),
-               (q_ann_lsh_bucket, "lsh", True),
-               (q_ann_pq, "pq", False),
-               (q_ann_l2, "l2", False))]
-        br, ls, pq, l2 = [f.result() for f in fs]
+    br, ls, pq, l2 = run_arms(_arm(q_ann_cosine_topk, "brute", False),
+                              _arm(q_ann_lsh_bucket, "lsh", True),
+                              _arm(q_ann_pq, "pq", False),
+                              _arm(q_ann_l2, "l2", False))
     return br.unionByName(ls).unionByName(pq).unionByName(l2)
 
 
@@ -1383,8 +1325,8 @@ def q_text_corpus_stats(spark, sf_dir):
     oov = q_text_vocab_oov(spark, sf_dir)
     lp = q_text_unigram_logprob(spark, sf_dir).select("id", "mean_logprob")
     # the pair frame feeds four consumers inside bigram_logprob —
-    # persist it (tracked) so the corpus explodes once
-    bg_pairs = _persist_tracked(
+    # persist it (scoped) so the corpus explodes once
+    bg_pairs = persist_scoped(
         T.bigram_rows(docs.select("doc_id", "text")))
     bi = T.bigram_logprob(docs, pairs=bg_pairs) \
         .select("id", "mean_bigram_logprob")
@@ -1432,7 +1374,7 @@ def q_sample_token_budget(spark, sf_dir):
     # the selection references its input twice (value table + semi-join
     # left side) — persist the scored frame so the text featurization
     # runs once, same convention as corpus_curation's shared frame
-    scored = _persist_tracked(
+    scored = persist_scoped(
         docs.select("doc_id", "lang",
                     feats["quality_score"].alias("q"),
                     feats["n_tokens"].alias("n_tokens")))
@@ -1466,19 +1408,20 @@ def q_sample_deterministic(spark, sf_dir):
     # sf0.1) — full-row caching defeats column pruning and the scans
     # were never the cost. Per-arm profile: dsir 2.6 s + leak 2.2 s
     # dominate; the other seven arms are ~0.2-0.4 s each. The dsir
-    # weights frame (consumed twice) is already tracked-persisted
+    # weights frame (consumed twice) is already scoped-persisted
     # below — the one expensive shared intermediate.
     null_val = F.lit(None).cast("long").alias("val")
     # Four arms run an EAGER driver job during plan construction (mix:
     # per-source counts; temp: per-lang counts; unimax: per-lang token
     # sums; leak: the LSH pair collect feeding the union-find). They
-    # are mutually independent, so build them on a small thread pool
-    # (guide §2.6 — Spark happily runs several jobs at once; the
-    # serialization was only this function calling them one after
-    # another): construction wall drops from the SUM of the four jobs
-    # to roughly the largest one. Each branch's plan and result are
-    # unchanged — the threads only overlap the waiting.
-    from concurrent.futures import ThreadPoolExecutor
+    # are mutually independent, so run_arms builds them (and the
+    # stratified branch) concurrently: construction wall drops from the
+    # SUM of the four jobs to roughly the largest one. No arm
+    # checkpoints — each branch's plan and result are unchanged.
+    def _st_branch():
+        return (q_sample_stratified(spark, sf_dir)
+                .select(F.lit("stratified").alias("tag"), "doc_id",
+                        F.col("lang").alias("stratum"), null_val))
 
     def _mix_branch():
         return (q_sample_mix_rebalance(spark, sf_dir)
@@ -1511,15 +1454,8 @@ def q_sample_deterministic(spark, sf_dir):
                         F.col("split").alias("stratum"),
                         F.col("component").alias("val")))
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        mx_f = pool.submit(_mix_branch)
-        tm_f = pool.submit(_temp_branch)
-        um_f = pool.submit(_unimax_branch)
-        lk_f = pool.submit(_leak_branch)
-        st = (q_sample_stratified(spark, sf_dir)
-              .select(F.lit("stratified").alias("tag"), "doc_id",
-                      F.col("lang").alias("stratum"), null_val))
-        mx = mx_f.result()
+    st, mx, tm, um, lk = run_arms(_st_branch, _mix_branch, _temp_branch,
+                                  _unimax_branch, _leak_branch)
     pk = (q_sample_pack_chunks(spark, sf_dir)
           .select(F.lit("pack").alias("tag"), F.col("id").alias("doc_id"),
                   F.format_string("b%d/c%d", "bucket", "chunk")
@@ -1547,8 +1483,7 @@ def q_sample_deterministic(spark, sf_dir):
     # temperature branch (SM6): alpha=0.5 language flattening — the
     # closed-form (n_min/n_g)^(1-alpha) rates are IEEE-sqrt exact on
     # both engines, so the kept ROW SET is hash-checked, not just the
-    # per-language counts (built on the pool above)
-    tm = tm_f.result()
+    # per-language counts (built by run_arms above)
     # dsir branch (SM7): importance weights against the src18 target
     # domain; stratum carries the deterministic selection verdict
     # ('hi' = above the pool-mean weight, judged with exact integer
@@ -1560,16 +1495,16 @@ def q_sample_deterministic(spark, sf_dir):
     # pass (r13 — the md5-per-gram hash made the second explode the
     # arm's dominant cost; dsir_gram_buckets carries the fit's flag
     # so neither side needs another corpus scan or an id join)
-    dsir_grams = _persist_tracked(SA.dsir_gram_buckets(
+    dsir_grams = persist_scoped(SA.dsir_gram_buckets(
         docs.withColumn("__t", F.col("source") == "src18"),
         carry=("__t",)))
     dsir_tbl = SA.dsir_logratio_table(
         docs.withColumn("__t", F.col("source") == "src18"),
         target_flag="__t", grams=dsir_grams)
     # the weights frame feeds BOTH the rows and the pool-mean totals:
-    # tracked-persist it, or the gram explodes + table build run twice
-    dsir_w = _persist_tracked(SA.dsir_weights(docs, dsir_tbl,
-                                              grams=dsir_grams))
+    # scoped-persist it, or the gram explodes + table build run twice
+    dsir_w = persist_scoped(SA.dsir_weights(docs, dsir_tbl,
+                                            grams=dsir_grams))
     # decimal(38,0) comparison: micro-weights (~1e11) times a 1e9+
     # doc count overflows BIGINT, which Spark wraps silently in
     # non-ANSI mode while the DuckDB twin raises — decimal keeps the
@@ -1593,15 +1528,13 @@ def q_sample_deterministic(spark, sf_dir):
     # splits ATOMICALLY, so a doc and its near-copy can never straddle
     # train/test; stratum = split name, val = the component id (both
     # the grouping and the assignment are inside the hash check;
-    # built on the pool above — its LSH collect is the largest of the
+    # built by run_arms above — its LSH collect is the largest of the
     # four overlapped construction jobs)
-    lk = lk_f.result()
     # unimax branch (SM10): UniMax epoch-capped uniform language
     # allocation (Chung et al. 2023) — val is the doc's multiplicity in
     # the mixed corpus (floor(epochs) full passes + the deterministic
     # fractional-epoch draw), so the whole per-language waterfill AND
-    # the per-doc hash draws sit inside the hash check (pool above)
-    um = um_f.result()
+    # the per-doc hash draws sit inside the hash check (run_arms above)
     # order branch (SM11): deterministic global training order for
     # two epochs — stratum carries the epoch + hash-range bucket,
     # val the 0-based GLOBAL rank, so the full permutation (not just
@@ -1731,7 +1664,7 @@ GROUP BY t.id
 
 def _curation_scored(spark, sf_dir) -> DataFrame:
     """The curation pipeline's shared scored-corpus frame, persisted
-    (tracked). Three curation branches consume it — the kept-filter,
+    (scoped). Three curation branches consume it — the kept-filter,
     the LSH pair generation, and the component ranking's quality score
     — so the regex-heavy quality/lang pass (the most expensive scan in
     the DAG) runs exactly once instead of once per branch (r12: −15%
@@ -1742,7 +1675,7 @@ def _curation_scored(spark, sf_dir) -> DataFrame:
     full quality_features pass over the corpus (r13)."""
     corpus = _neardup_corpus(spark, sf_dir)
     feats = T.quality_features(F.col("text"))
-    return _persist_tracked(
+    return persist_scoped(
         corpus.select("doc_id", "text",
                       feats["quality_score"].alias("quality_score"),
                       T.lang_id(F.col("text")).alias("pred_lang"),
@@ -1772,22 +1705,15 @@ def q_corpus_curation(spark, sf_dir):
     # The decontamination branch (kept ⨝ broadcast bench 5-gram
     # overlap) and the near-dup drop set (LSH pairs → eager collect →
     # driver union-find → rank window) are INDEPENDENT until the final
-    # anti-join — overlap them as concurrent jobs (guide §2.6, the
-    # q_dedup_neardup_pairs pattern). Both read the same persisted
+    # anti-join, so run_arms overlaps them. Both read the same persisted
     # scored frame; concurrent first-fill is handled by the block
     # manager's per-partition get-or-compute. The decon branch is
-    # eager-checkpointed (recomputed every invocation), the drop set
-    # stays lazy over the driver-built component frame — rows and the
-    # final anti-join are unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        decon_f = pool.submit(
-            lambda: D.decontaminate(kept, bench, k=5, min_overlap=3)
-            .localCheckpoint(eager=True))
-        drop_f = pool.submit(
-            lambda: D.component_drop_set(pairs, score=score))
-        decon, drop = decon_f.result(), drop_f.result()
+    # eager-checkpointed, the drop set stays lazy over the driver-built
+    # component frame.
+    decon, drop = run_arms(
+        lambda: D.decontaminate(kept, bench, k=5, min_overlap=3)
+        .localCheckpoint(eager=True),
+        lambda: D.component_drop_set(pairs, score=score))
     canonical = decon.join(drop, decon["doc_id"] == drop["id"],
                            "left_anti")
     return canonical.select("doc_id", "quality_score", "pred_lang")
@@ -1937,8 +1863,8 @@ def corpus_to_shards_frame(spark, sf_dir, *, token_budget: int = 15_000,
             f"tokenizer must be 'whitespace' or 'bpe', got {tokenizer!r}")
     # the budget selection consumes `scored` twice (value table +
     # semi-join left side) and `scored` embeds the WHOLE curation
-    # pipeline — persist it (tracked) or curation runs twice
-    scored = _persist_tracked(curated.join(toks, "doc_id"))
+    # pipeline — persist it (scoped) or curation runs twice
+    scored = persist_scoped(curated.join(toks, "doc_id"))
     sel = SA.select_token_budget(scored, budget=token_budget,
                                  score_col="quality_score",
                                  tokens_col="n_tokens",
@@ -2060,12 +1986,8 @@ def q_dedup_spans(spark, sf_dir):
     see ``queries/__init__.all_queries``): part='substr' is the
     cross-document ExactSubstr detection, part='decon' the span-level
     benchmark decontamination."""
-    # the two span detectors are independent corpus pipelines — overlap
-    # them as concurrent jobs (guide §2.6, the q_dedup_neardup_pairs
-    # pattern): eager localCheckpoint per branch, recomputed on every
-    # invocation; rows/schema/union order unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the two span detectors are independent corpus pipelines, run
+    # concurrently by run_arms
     def _sub():
         return (q_dedup_substring(spark, sf_dir)
                 .withColumn("part", F.lit("substr"))
@@ -2076,9 +1998,7 @@ def q_dedup_spans(spark, sf_dir):
                 .withColumn("part", F.lit("decon"))
                 .localCheckpoint(eager=True))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sub_f, dec_f = pool.submit(_sub), pool.submit(_dec)
-        sub, dec = sub_f.result(), dec_f.result()
+    sub, dec = run_arms(_sub, _dec)
     return sub.unionByName(dec)
 
 

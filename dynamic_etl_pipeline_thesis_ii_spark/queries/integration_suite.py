@@ -21,6 +21,7 @@ from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity_join as SJ
 from dynamic_etl_pipeline_thesis_ii_spark.operators import union_engine as U
 from dynamic_etl_pipeline_thesis_ii_spark.operators.integration import integrate
+from dynamic_etl_pipeline_thesis_ii_spark.scope import run_arms
 from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
 
 CFG = EngineConfig()  # balanced profile
@@ -250,13 +251,9 @@ def q_greedy_tail(spark, sf_dir):
     re-implementation of the reference algorithm."""
     # The two branches are independent driver-orchestrated pipelines,
     # each with its own eager actions (simjoin: the greedy-assignment
-    # collect; integrate: union counts + pair evaluation + summary) —
-    # overlap them as concurrent jobs (guide §2.6, the dataops-suite
-    # pattern). The simjoin branch is eager-checkpointed (recomputed
-    # every invocation); the integrate branch's summary is a 3-row
-    # driver frame already. Rows, schema and union order unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # collect; integrate: union counts + pair evaluation + summary), so
+    # run_arms overlaps them. The simjoin branch is eager-checkpointed;
+    # the integrate branch's summary is a 3-row driver frame already.
     def _sj_branch():
         return (q_simjoin_full(spark, sf_dir).select(
             F.lit("simjoin_full").alias("branch"),
@@ -276,10 +273,7 @@ def q_greedy_tail(spark, sf_dir):
             F.lit(None).cast("double").alias("v3"),
             F.lit(None).cast("double").alias("v4"))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sj_f = pool.submit(_sj_branch)
-        integ_f = pool.submit(_integ_branch)
-        sj, integ = sj_f.result(), integ_f.result()
+    sj, integ = run_arms(_sj_branch, _integ_branch)
     return sj.unionByName(integ)
 
 

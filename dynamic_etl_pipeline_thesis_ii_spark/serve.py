@@ -59,6 +59,8 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Callable, Optional
 
+from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope
+
 # canonical finance-lifecycle stage order, used only for the coarse
 # progress fraction the reference's status payload carries; dataops
 # runs emit fewer stages and simply top out lower until completion
@@ -133,7 +135,11 @@ class PipelineService:
                 self._cond.notify_all()
 
         try:
-            result = self._runner(run["query"], run["options"], progress)
+            # the run owns its cached frames (released when it ends), so
+            # concurrent runs on one SparkSession never drain each other's
+            with cache_scope():
+                result = self._runner(run["query"], run["options"],
+                                      progress)
             with self._cond:
                 run["result"] = result
                 run["status"] = ("completed"

@@ -902,20 +902,184 @@ def test_ivf_index_reuse_and_parquet_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_shared_caches_tracked_and_released(spark, sf_dir):
-    """Queries that persist shared frames register them; harnesses can
-    release between queries so executor memory stays flat — and a
-    release with nothing tracked is a no-op."""
+    """Queries that persist shared frames register them with the
+    current cache scope (the root scope here); harnesses can release
+    between queries so executor memory stays flat — and a release with
+    nothing registered is a no-op."""
+    from dynamic_etl_pipeline_thesis_ii_spark import scope
     from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite as DS
     DS.release_shared_caches()            # clean slate, idempotent
-    assert not DS._SHARED_CACHES
+    assert not scope._SCOPE.get()
     df = DS.q_dedup_neardup_pairs(spark, sf_dir)
-    assert DS._SHARED_CACHES              # the shingle base registered
-    cached = DS._SHARED_CACHES[-1]
+    cached = [f for _, f in scope._SCOPE.get()]
+    assert cached                         # the shingle base registered
     df.count()
-    assert cached.storageLevel.useMemory  # actually persisted
+    assert all(f.storageLevel.useMemory for f in cached)  # persisted
     DS.release_shared_caches()
-    assert not DS._SHARED_CACHES
-    assert not cached.storageLevel.useMemory  # actually unpersisted
+    assert not scope._SCOPE.get()
+    assert not any(f.storageLevel.useMemory for f in cached)  # released
+    DS.release_shared_caches()            # idempotent on an empty scope
+    assert not scope._SCOPE.get()
+
+
+def test_cache_scopes_isolate_concurrent_threads(spark):
+    """Thread B persisting the SAME plan as thread A (Spark keeps one
+    cache entry for both), draining the root scope and leaving its own
+    scope must not unpersist A's frame; A's scope exit then does."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from dynamic_etl_pipeline_thesis_ii_spark.scope import (
+        cache_scope,
+        persist_scoped,
+        release_shared_caches,
+    )
+
+    def frame():
+        return spark.range(64).withColumn("scoped", F.col("id") * 3)
+
+    a_ready, a_exit = threading.Event(), threading.Event()
+    seen = {}
+
+    def run_a():
+        with cache_scope():
+            seen["a"] = persist_scoped(frame())
+            seen["a"].count()
+            a_ready.set()
+            a_exit.wait(60)
+
+    def run_b():
+        with cache_scope():
+            persist_scoped(frame()).count()
+            release_shared_caches()
+        release_shared_caches()
+
+    ta = threading.Thread(target=run_a)
+    ta.start()
+    assert a_ready.wait(60)
+    tb = threading.Thread(target=run_b)
+    tb.start()
+    tb.join(60)
+    assert not tb.is_alive()
+    assert seen["a"].storageLevel.useMemory   # B left A's frame alone
+    a_exit.set()
+    ta.join(60)
+    assert not ta.is_alive()
+    assert not seen["a"].storageLevel.useMemory
+
+
+def test_shared_plan_refcount_under_thread_stress():
+    """Many more threads than cores, each in its own scope, persist and
+    release frames with ONE shared plan key under a tiny switch
+    interval: every holder must see the entry cached, and the last
+    release must leave it unpersisted with no owner count behind (a
+    lost update to the owner count breaks one or the other)."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from dynamic_etl_pipeline_thesis_ii_spark import scope
+
+    class FakeFrame:
+        """Just enough DataFrame for persist_scoped: a plan key and a
+        cache flag."""
+        cached = False
+        _jdf = SimpleNamespace(queryExecution=lambda: SimpleNamespace(
+            normalized=lambda: SimpleNamespace(semanticHash=lambda: 424242)))
+
+        def persist(self):
+            self.cached = True
+            return self
+
+        def unpersist(self):
+            self.cached = False
+            return self
+
+    frame, errors = FakeFrame(), []
+
+    def hold():
+        try:
+            for _ in range(1000):
+                with scope.cache_scope():
+                    scope.persist_scoped(frame)
+                    if not frame.cached:
+                        errors.append("holder saw its frame unpersisted")
+        except Exception as exc:  # surface thread failures to the test
+            errors.append(repr(exc))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hold) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert not frame.cached and 424242 not in scope._OWNERS
+
+
+def test_run_arms_persists_land_in_caller_scope(spark):
+    """A persist made inside a run_arms arm registers with the caller's
+    scope and is released when that scope exits."""
+    from pyspark.sql import functions as F
+
+    from dynamic_etl_pipeline_thesis_ii_spark import scope
+
+    with scope.cache_scope():
+        (df,) = scope.run_arms(lambda: scope.persist_scoped(
+            spark.range(32).withColumn("arm", F.col("id") + 5)))
+        assert [f for _, f in scope._SCOPE.get()] == [df]
+        df.count()
+        assert df.storageLevel.useMemory
+    assert not df.storageLevel.useMemory
+
+
+def test_run_arms_order_and_first_failure():
+    """Results come back in argument order whatever the completion
+    order; the first failing arm in argument order re-raises."""
+    import time
+
+    import pytest as _pytest
+
+    from dynamic_etl_pipeline_thesis_ii_spark.scope import run_arms
+
+    def slow(v):
+        def arm():
+            time.sleep(0.2)
+            return v
+        return arm
+
+    assert run_arms(slow("a"), lambda: "b", lambda: "c") == ["a", "b", "c"]
+
+    def fail(msg, delay):
+        def arm():
+            time.sleep(delay)
+            raise ValueError(msg)
+        return arm
+
+    with _pytest.raises(ValueError, match="first"):
+        run_arms(lambda: 1, fail("first", 0.2), fail("second", 0.0))
+
+
+def test_cache_scope_leaves_no_persisted_frame(spark, sf_dir):
+    """Leak check: after a scoped composite query, no frame persisted
+    in that scope stays cached."""
+    from dynamic_etl_pipeline_thesis_ii_spark import scope
+    from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite as DS
+
+    # a root-scope owner of the same plans (an earlier unreleased
+    # query) would rightly keep them cached past the scope
+    DS.release_shared_caches()
+    with scope.cache_scope():
+        DS.q_dedup_neardup_pairs(spark, sf_dir).count()
+        cached = [f for _, f in scope._SCOPE.get()]
+        assert cached and all(f.storageLevel.useMemory for f in cached)
+    assert not any(f.storageLevel.useMemory for f in cached)
 
 
 def test_pq_train_guards_and_layout_determinism(spark, sf_dir):

@@ -349,3 +349,95 @@ def test_http_run_census_histogram_target(spark, sf_dir, tmp_path):
         assert spark.read.parquet(out + "_distinct").count() > 0
     finally:
         server.shutdown()
+
+
+def _wait_run(service, run_id, timeout=60.0):
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        status = service.get_run_status(run_id)
+        if status["status"] in ("completed", "failed"):
+            return status
+        time.sleep(0.05)
+    raise AssertionError(f"run {run_id} never finished")
+
+
+def test_concurrent_runs_own_their_cached_frames(spark):
+    """Each run owns its cached frames: run 2 finishing (and releasing
+    its scope) leaves run 1's frames persisted — including a plan both
+    runs persisted, which Spark backs with ONE cache entry — and run
+    1's frames are released once run 1 finishes."""
+    from pyspark.sql import functions as F
+
+    from dynamic_etl_pipeline_thesis_ii_spark.scope import persist_scoped
+
+    persisted = {q: threading.Event() for q in ("one", "two")}
+    finish = {q: threading.Event() for q in ("one", "two")}
+    frames = {}
+
+    def runner(query, options, progress):
+        shared = persist_scoped(spark.range(40).withColumn(
+            "shared", F.col("id") * 7))
+        own = persist_scoped(spark.range(40).withColumn(
+            "own", F.lit(query)))
+        shared.count(), own.count()
+        frames[query] = (shared, own)
+        persisted[query].set()
+        assert finish[query].wait(60)
+        return {"status": "complete"}
+
+    service = PipelineService(runner)
+    run1 = service.create_run("one")
+    assert persisted["one"].wait(60)
+    run2 = service.create_run("two")
+    assert persisted["two"].wait(60)
+    finish["two"].set()
+    assert _wait_run(service, run2)["status"] == "completed"
+    shared1, own1 = frames["one"]
+    assert shared1.storageLevel.useMemory and own1.storageLevel.useMemory
+    assert not frames["two"][1].storageLevel.useMemory
+    finish["one"].set()
+    assert _wait_run(service, run1)["status"] == "completed"
+    assert not shared1.storageLevel.useMemory
+    assert not own1.storageLevel.useMemory
+
+
+def test_dataops_runs_survive_concurrent_cache_release(spark, sf_dir,
+                                                       tmp_path):
+    """A run_dataops loop next to a thread that calls
+    release_shared_caches() at random 0.05-1.5 s intervals on the same
+    session: every run must complete and verify its shards. When the
+    cache lists were module-global, the release unpersisted the run's
+    frames mid-write and the sharded write could abort with
+    TASK_WRITE_FAILED."""
+    import random
+
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        FixtureFetcher,
+        Pipeline,
+    )
+    from dynamic_etl_pipeline_thesis_ii_spark.queries.dataops_suite import (
+        release_shared_caches,
+    )
+
+    stop = threading.Event()
+
+    def drain():
+        rng = random.Random(7)
+        while not stop.wait(rng.uniform(0.05, 1.5)):
+            release_shared_caches()
+
+    drainer = threading.Thread(target=drain, daemon=True)
+    drainer.start()
+    pipe = Pipeline(spark, FixtureFetcher(spark, sf_dir))
+    written = set()
+    try:
+        for i in range(12):
+            res = pipe.run_dataops("dedup and shard the training corpus",
+                                   sf_dir, str(tmp_path / f"shards{i}"))
+            assert res["status"] == "complete"
+            written.add(res["reports"]["sink"]["rows_written"])
+        assert len(written) == 1 and written.pop() > 0
+    finally:
+        stop.set()
+        drainer.join(5)
+    assert not drainer.is_alive()

@@ -102,7 +102,7 @@ def main():
               lambda: T.chunk_documents(docs, size=64, stride=48))
 
         def dsir_arm():
-            dsir_grams = DS._persist_tracked(SA.dsir_gram_buckets(
+            dsir_grams = DS.persist_scoped(SA.dsir_gram_buckets(
                 docs.withColumn("__t", F.col("source") == "src18"),
                 carry=("__t",)))
             dsir_tbl = SA.dsir_logratio_table(
