@@ -10,8 +10,12 @@ from the testdata tables, so the full lifecycle runs offline; pass
 ``--fetcher http`` with API keys in POLYGON_API_KEY /
 ALPHA_VANTAGE_API_KEY to ingest from the live services.
 
-``--dataops`` routes the query to the training-data target instead
-(curate -> token-budget select -> pack -> verified shards):
+``--dataops`` routes the query to the dataops targets instead (the
+``TARGETS`` table in ``plans/orchestrator.py``: ingest, curation,
+dedup, tokenization, retrieval, mixing, and by default curate ->
+token-budget select -> pack -> verified shards); prefix the query with
+``explain:`` to print the plan, or the list of targets, without
+running anything:
 
     python -m dynamic_etl_pipeline_thesis_ii_spark \
         "curate and dedup the corpus into 4 shards, sequence length 512" \
@@ -46,8 +50,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", default=None,
                     help="write outputs (parquet) + report.json here")
     ap.add_argument("--dataops", action="store_true",
-                    help="route to the corpus->shards training-data "
-                         "target (requires --out)")
+                    help="route to the NL dataops targets (default "
+                         "target: corpus->shards; requires --out)")
     ap.add_argument("--quiet", action="store_true")
     args = ap.parse_args(argv)
     if args.dataops and not args.out:

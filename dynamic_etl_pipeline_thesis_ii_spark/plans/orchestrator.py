@@ -25,15 +25,31 @@ from __future__ import annotations
 
 import re
 import time
-from typing import Any, Callable, Optional, Protocol
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import TYPE_CHECKING, Any, Callable, Optional, Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
 from dynamic_etl_pipeline_thesis_ii_spark.functions.compiler import apply_features
 from dynamic_etl_pipeline_thesis_ii_spark.functions.dsl import validate_dsl
 from dynamic_etl_pipeline_thesis_ii_spark.functions.registry import FEATURE_REGISTRY
+# the heavy modules (sources.registry/sinks/warc/pdf/archives,
+# operators.multimodal, queries.dataops_suite pull in pyarrow/pandas,
+# ~0.5 s each cold) stay imported inside the handlers that need them
+from dynamic_etl_pipeline_thesis_ii_spark.operators import (
+    bpe,
+    dedup,
+    packing,
+    quality,
+    sampling,
+    similarity,
+    text,
+    unigram,
+    web,
+)
 from dynamic_etl_pipeline_thesis_ii_spark.operators.cleaning import clean_dataframe
 from dynamic_etl_pipeline_thesis_ii_spark.operators.integration import integrate
 from dynamic_etl_pipeline_thesis_ii_spark.plans.contracts import (
@@ -53,7 +69,55 @@ from dynamic_etl_pipeline_thesis_ii_spark.plans.validators import (
 )
 from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope
 
+if TYPE_CHECKING:
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
+
 ProgressFn = Callable[[str, dict], None]
+# a dataops handler's (outputs, reports); run_dataops adds the status
+# and the plan echo
+Result = tuple[list[DataFrame], dict]
+
+
+class Rejected(Exception):
+    """A dataops run that cannot start or cannot read its input; the
+    message is the reason ``run_dataops`` reports with
+    ``status: rejected``."""
+
+
+@contextmanager
+def _rejects(what: str):
+    """Reject with ``'<what>: <cause>'`` when the block raises — the
+    reason always carries the underlying error."""
+    try:
+        yield
+    except Rejected:
+        raise
+    except Exception as exc:  # noqa: BLE001 — any read failure rejects
+        raise Rejected(f"{what}: {exc}") from exc
+
+
+def _counts(frame: DataFrame, col) -> dict:
+    """``{value: rows}`` of one column or expression over ``frame``."""
+    return {r[0]: r["n"] for r in
+            frame.groupBy(col).agg(F.count(F.lit(1)).alias("n")).collect()}
+
+
+def _vectors(emb: DataFrame, side: str) -> DataFrame:
+    """The embeddings table as ``(<side>_id, <side>_vec)`` — ``c`` for
+    the candidate side of an ANN search, ``q`` for the query side."""
+    return emb.select(F.col("vec_id").alias(f"{side}_id"),
+                      F.col("embedding").alias(f"{side}_vec"))
+
+
+def _nonempty_count(frame: DataFrame, table: str) -> int:
+    """Row count of an input table; an empty one is an actionable
+    rejection, not an opaque executor stacktrace from a fit or join
+    that cannot run on zero rows."""
+    n = frame.count()
+    if n == 0:
+        raise Rejected(f"{table} table is empty")
+    return n
+
 
 # X2 deterministic fallback: enrichment keyword -> default DSL params
 # (the reference's LLM translator fills the same defaults from its
@@ -274,19 +338,19 @@ class Pipeline:
             },
         }
 
-    # -- dataops target: corpus curation -> training shards ----------------
+    # -- dataops targets: NL query -> one row of TARGETS -------------------
     def run_dataops(self, query: str, source_dir: str,
                     output_path: str) -> dict:
-        """Plan-level training-data target: NL query -> typed dataops
-        plan -> curation composition (curate -> per-language token-
-        budget selection -> sequence packing -> shard assignment, the
-        same lazy DAG as the ``corpus_to_shards`` registry query) ->
-        ``write_shards`` with read-back verification.
-
-        The finance lifecycle (``run``) and this target share the
-        publish/report conventions; the composition itself is the
-        engine's unchanged scale path — the orchestrator only binds
-        NL-derived parameters and the sink.
+        """Training-data front door: NL query -> typed dataops plan
+        (the first ``TARGETS`` row whose binder accepts the query) ->
+        that target's handler over the tables under ``source_dir`` ->
+        its sink at ``output_path``. Targets cover ingest, curation
+        and dedup, tokenization and packing, retrieval and ANN indexes,
+        mixing and splits, and — the default, ``corpus_to_shards`` —
+        curate -> token-budget selection -> packing -> verified
+        ``write_shards``. ``explain: <query>`` returns the plan without
+        running it. A run that cannot start, or cannot read its input,
+        returns ``status: rejected`` with a reason naming the cause.
 
         The run owns its cached frames: everything persisted while it
         runs is released when it returns, by which time every target
@@ -296,13 +360,6 @@ class Pipeline:
 
     def _dispatch_dataops(self, query: str, source_dir: str,
                           output_path: str) -> dict:
-        from dynamic_etl_pipeline_thesis_ii_spark.queries.dataops_suite import (
-            corpus_to_shards_frame,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            write_shards,
-        )
-
         # dry-run face: 'explain: <query>' returns the typed plan the
         # engine WOULD execute — no Spark job, no sink write. The
         # reference exposes plan validation as a first-class stage;
@@ -317,7 +374,12 @@ class Pipeline:
                 return {"status": "explained", "outputs": [],
                         "reports": {"plan": None,
                                     "note": "not a dataops query — "
-                                            "would be rejected"}}
+                                            "would be rejected",
+                                    "targets": [
+                                        {"target": t.name,
+                                         "about": t.about,
+                                         "example": t.example}
+                                        for t in TARGETS]}}
             return {"status": "explained", "outputs": [],
                     "reports": {"plan": inner}}
         plan = parse_dataops_query(query)
@@ -326,132 +388,44 @@ class Pipeline:
         if plan is None:
             return {"status": "rejected", "reason": "not a dataops query",
                     "outputs": [], "reports": {}}
-        if plan["target"] == "ingest_crawl":
-            return self._run_ingest_crawl(plan, output_path)
-        if plan["target"] == "ingest_pdfs":
-            return self._run_ingest_pdfs(plan, output_path)
-        if plan["target"] == "ingest_archives":
-            return self._run_ingest_archives(plan, output_path)
-        if plan["target"] == "corpus_diff":
-            return self._run_corpus_diff(plan, source_dir, output_path)
-        if plan["target"] in ("image_dedup", "audio_dedup",
-                              "video_dedup"):
-            return self._run_media_dedup(plan, source_dir, output_path)
-        if plan["target"] in ("image_probe", "audio_probe",
-                              "video_probe"):
-            return self._run_media_probe(plan, source_dir, output_path)
-        if plan["target"] in ("video_containment", "audio_containment"):
-            return self._run_containment(plan, source_dir, output_path)
-        if plan["target"] == "containment_probe":
-            return self._run_containment_probe(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "neardup_probe":
-            return self._run_neardup_probe(plan, source_dir, output_path)
-        if plan["target"] == "band_snapshot":
-            return self._run_band_snapshot(plan, source_dir, output_path)
-        if plan["target"] == "incremental_dedup":
-            return self._run_incremental_dedup(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "substring_dedup":
-            return self._run_substring_dedup(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "passage_snapshot":
-            return self._run_passage_snapshot(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "passage_probe":
-            return self._run_passage_probe(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "domain_rank":
-            return self._run_domain_rank(plan, output_path)
-        if plan["target"] == "link_graph_build":
-            return self._run_link_graph_build(plan, output_path)
-        if plan["target"] == "compact_store":
-            return self._run_compact_store(plan, output_path)
-        if plan["target"] == "license_scan":
-            return self._run_license_scan(plan, source_dir,
-                                          output_path)
-        if plan["target"] == "bin_pack":
-            return self._run_bin_pack(plan, source_dir, output_path)
-        if plan["target"] == "embed_documents":
-            return self._run_embed_documents(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "chunk_documents":
-            return self._run_chunk_documents(plan, source_dir, output_path)
-        if plan["target"] == "corpus_census":
-            return self._run_corpus_census(plan, source_dir, output_path)
-        if plan["target"] == "tokenize_pack":
-            return self._run_tokenize_pack(plan, source_dir, output_path)
-        if plan["target"] == "tokenizer_train":
-            return self._run_tokenizer_train(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "tokenizer_stats":
-            return self._run_tokenizer_stats(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "classifier_train":
-            return self._run_classifier_train(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "classifier_score":
-            return self._run_classifier_score(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "semantic_dedup":
-            return self._run_semantic_dedup(plan, source_dir, output_path)
-        if plan["target"] == "cluster_corpus":
-            return self._run_cluster_corpus(plan, source_dir, output_path)
-        if plan["target"] == "cluster_assign":
-            return self._run_cluster_assign(plan, source_dir, output_path)
-        if plan["target"] == "verify_shards":
-            return self._run_verify_shards(plan, output_path)
-        if plan["target"] == "data_card":
-            return self._run_data_card(plan, source_dir, output_path)
-        if plan["target"] == "decontaminate":
-            return self._run_decontaminate(plan, source_dir, output_path)
-        if plan["target"] == "decontaminate_spans":
-            return self._run_decontaminate_spans(plan, source_dir,
-                                                 output_path)
-        if plan["target"] == "retrieve":
-            return self._run_retrieve(plan, source_dir, output_path)
-        if plan["target"] == "hybrid_search":
-            return self._run_hybrid_search(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "bm25_index_build":
-            return self._run_bm25_index_build(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "bm25_index_append":
-            return self._run_bm25_index_append(plan, source_dir,
-                                               output_path)
-        if plan["target"] == "corpus_store_build":
-            return self._run_corpus_store_build(plan, source_dir,
-                                                output_path)
-        if plan["target"] == "webdataset_write":
-            return self._run_webdataset_write(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "corpus_rebucket":
-            return self._run_corpus_rebucket(plan, output_path)
-        if plan["target"] == "corpus_upsert":
-            return self._run_corpus_upsert(plan, source_dir,
-                                           output_path)
-        if plan["target"] == "ann_search":
-            return self._run_ann_search(plan, source_dir, output_path)
-        if plan["target"] == "ann_index_build":
-            return self._run_ann_index_build(plan, source_dir,
-                                             output_path)
-        if plan["target"] == "ann_index_append":
-            return self._run_ann_index_append(plan, source_dir,
-                                              output_path)
-        if plan["target"] == "ann_recall":
-            return self._run_ann_recall(plan, source_dir, output_path)
-        if plan["target"] == "ann_tune":
-            return self._run_ann_tune(plan, source_dir, output_path)
-        if plan["target"] == "split_corpus":
-            return self._run_split_corpus(plan, source_dir, output_path)
-        if plan["target"] == "dsir_select":
-            return self._run_dsir_select(plan, source_dir, output_path)
-        if plan["target"] == "temperature_mix":
-            return self._run_temperature_mix(plan, source_dir, output_path)
-        if plan["target"] == "unimax_mix":
-            return self._run_unimax_mix(plan, source_dir, output_path)
-        if plan["target"] == "shuffle_order":
-            return self._run_shuffle_order(plan, source_dir, output_path)
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import registry
+
+        target = _TARGET_BY_NAME[plan["target"]]
+        try:
+            for key, reason in target.requires:
+                if not plan.get(key):
+                    raise Rejected(reason)
+            outputs, reports = target.handler(
+                self, plan, registry.Catalog(self.spark, source_dir),
+                output_path)
+        except Rejected as exc:
+            return {"status": "rejected", "reason": str(exc),
+                    "outputs": [], "reports": {"plan": dict(plan)}}
+        return {"status": "complete", "outputs": outputs,
+                "reports": {"plan": dict(plan), **reports}}
+
+    def _sink(self, frame: DataFrame, path: str) -> DataFrame:
+        """Write ``frame`` to ``path`` and return what reads back from
+        it: targets verify and count their sink from the read-back."""
+        frame.write.mode("overwrite").parquet(path)
+        return self.spark.read.parquet(path)
+
+    def _publish(self, frame: DataFrame, output_path: str, count_key: str,
+                 **reports) -> Result:
+        """The common tail: write ``frame`` to the sink, count the
+        read-back, emit ``publish`` and return the result with that
+        count under ``count_key`` after the handler's reports."""
+        n = self._sink(frame, output_path).count()
+        self.progress("publish", {"rows": n, "path": output_path})
+        return [frame], {**reports, count_key: n}
+
+    def _run_corpus_to_shards(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
+        """The default target: curate -> per-language token-budget
+        selection -> sequence packing -> shard assignment, written by
+        ``write_shards`` with read-back verification."""
+        from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
         if plan["n_buckets"] is None:
             # corpus-derived bucket count (one cheap count): the
@@ -461,35 +435,28 @@ class Pipeline:
             # derived value lands in plan/report — bucket count is
             # part of the output's deterministic identity (stream
             # membership hashes id % n_buckets).
-            from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-                Catalog,
-            )
-            n_docs = Catalog(self.spark, source_dir).documents.count()
+            n_docs = cat.documents.count()
             plan["n_buckets"] = derive_n_buckets(
                 n_docs, floor=max(4, plan["n_shards"]))
-        frame = corpus_to_shards_frame(
-            self.spark, source_dir,
+        frame = dataops_suite.corpus_to_shards_frame(
+            self.spark, cat.sf_dir,
             token_budget=plan["token_budget"], seq_len=plan["seq_len"],
             n_shards=plan["n_shards"], n_buckets=plan["n_buckets"],
             tokenizer=plan["tokenizer"])
         self.progress("curate", {"params": dict(plan)})
         # the frame's persisted `shard` column IS the writer's hash;
         # drop it and let write_shards recompute + verify placement
-        sink_report = write_shards(
+        sink_report = sinks.write_shards(
             frame.drop("shard"), output_path,
             n_shards=plan["n_shards"], key_col="id",
             shuffle_salt=plan.get("shuffle_salt"), verify=True,
             manifest=plan.get("manifest", False))
         self.progress("publish", {"rows": sink_report.get("rows_written"),
                                   "path": output_path})
-        return {
-            "status": "complete",
-            "outputs": [frame],
-            "reports": {"plan": dict(plan), "sink": sink_report},
-        }
+        return [frame], {"sink": sink_report}
 
-    def _run_incremental_dedup(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+    def _run_incremental_dedup(self, plan: dict, cat: Catalog,
+                               output_path: str) -> Result:
         """'dedup the batch against the seen snapshot at <path>': the
         continuous-ingest step — source_dir's documents are the new
         batch, the snapshot parquet holds the (id, key) content keys
@@ -508,67 +475,45 @@ class Pipeline:
         ``<output>_snapshot_bloom`` next to the grown snapshot — a
         refit (2x-capacity resize) happens only when accumulated
         inserts exceed the capacity the filter was sized for."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            BloomFilter,
-            bloom_snapshot_fresh,
-            content_keys,
-            incremental_exact,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from pyspark.sql import Window as _W
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "incremental dedup needs a snapshot path "
-                              "('... against the seen snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         seen = self.spark.read.parquet(plan["snapshot_path"])
-        batch = Catalog(self.spark, source_dir).documents
+        batch = cat.documents
         bloom, bloom_loaded = None, False
         if plan.get("bloom"):
             try:
-                bloom = BloomFilter.load(
+                bloom = dedup.BloomFilter.load(
                     self.spark, plan["snapshot_path"] + "_bloom")
                 bloom_loaded = True
             except Exception:
                 pass    # no stored filter yet: first epoch fits one
             if bloom is None:
                 n_seen = seen.select("key").distinct().count()
-                bloom = BloomFilter.fit(seen.select("key"), "key",
-                                        fpp=0.01, n_items=n_seen,
-                                        capacity=2 * n_seen)
-            fresh = bloom_snapshot_fresh(batch, seen, bloom=bloom)
-            keep = F.min("doc_id").over(_W.partitionBy("__k"))
+                bloom = dedup.BloomFilter.fit(seen.select("key"), "key",
+                                              fpp=0.01, n_items=n_seen,
+                                              capacity=2 * n_seen)
+            fresh = dedup.bloom_snapshot_fresh(batch, seen, bloom=bloom)
+            keep = F.min("doc_id").over(Window.partitionBy("__k"))
             fresh = (fresh.withColumn("__keep", keep)
                      .filter(F.col("doc_id") == F.col("__keep"))
                      .drop("__k", "__keep"))
         else:
-            fresh = incremental_exact(batch, seen)
+            fresh = dedup.incremental_exact(batch, seen)
         self.progress("dedup", {"params": dict(plan),
                                 "bloom_loaded": bloom_loaded})
-        fresh.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(fresh, output_path)
         n_fresh = back.count()
         grown = seen.select("id", "key").unionByName(
-            content_keys(back)).distinct()
+            dedup.content_keys(back)).distinct()
         grown.write.mode("overwrite").parquet(output_path + "_snapshot")
         # running corpus census rides the snapshot store too: fold the
         # FRESH rows' census into the loaded one at batch cost — the
         # result equals a full recompute over everything ever
         # ingested, without re-scanning the corpus (text.corpus_census
         # contract; disjointness is exactly what the dedup guarantees)
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            corpus_census,
-            merge_census,
-        )
-        fresh_census = corpus_census(back)
+        fresh_census = text.corpus_census(back)
         try:
             prior = self.spark.read.parquet(
                 plan["snapshot_path"] + "_census")
-            census = merge_census(prior, fresh_census)
+            census = text.merge_census(prior, fresh_census)
         except Exception:       # bootstrap epoch: no census yet
             census = fresh_census
         census.write.mode("overwrite").parquet(
@@ -582,28 +527,26 @@ class Pipeline:
                 grown_keys = self.spark.read.parquet(
                     output_path + "_snapshot")
                 n_grown = grown_keys.select("key").distinct().count()
-                bloom = BloomFilter.fit(grown_keys.select("key"), "key",
-                                        fpp=bloom.fpp, n_items=n_grown,
-                                        capacity=2 * n_grown)
+                bloom = dedup.BloomFilter.fit(grown_keys.select("key"), "key",
+                                              fpp=bloom.fpp, n_items=n_grown,
+                                              capacity=2 * n_grown)
                 bloom_refit = True
             else:
-                bloom.add_keys(content_keys(back).select("key"),
+                bloom.add_keys(dedup.content_keys(back).select("key"),
                                n_new=n_fresh)
             bloom.save(self.spark, output_path + "_snapshot_bloom")
         self.progress("publish", {"rows": n_fresh, "path": output_path})
-        return {"status": "complete", "outputs": [fresh],
-                "reports": {"plan": dict(plan),
-                            "batch_rows": batch.count(),
-                            "fresh_rows": n_fresh,
-                            "bloom_loaded": bloom_loaded,
-                            "bloom_refit": bloom_refit,
-                            "snapshot_path_out":
-                                output_path + "_snapshot",
-                            "census_path_out":
-                                output_path + "_snapshot_census"}}
+        return [fresh], {"batch_rows": batch.count(),
+                         "fresh_rows": n_fresh,
+                         "bloom_loaded": bloom_loaded,
+                         "bloom_refit": bloom_refit,
+                         "snapshot_path_out":
+                             output_path + "_snapshot",
+                         "census_path_out":
+                             output_path + "_snapshot_census"}
 
-    def _run_passage_snapshot(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_passage_snapshot(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'build a passage snapshot of the corpus (windows of 50
         tokens)': persist the documents table's distinct window
         hashes (:func:`operators.dedup.save_window_snapshot` —
@@ -611,29 +554,17 @@ class Pipeline:
         face of the passage_probe target, completing the
         build/probe/grow lifecycle for ExactSubstr exactly as the
         band snapshot does for MinHash."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            save_window_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        n_in = docs.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        report = save_window_snapshot(docs, output_path,
-                                      w=plan["window"])
+        docs = cat.documents
+        n_in = _nonempty_count(docs, "documents")
+        report = dedup.save_window_snapshot(docs, output_path,
+                                            w=plan["window"])
         self.progress("publish", {"rows": report["n_windows"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), "docs_in": n_in,
-                            **report}}
+        return [], {"docs_in": n_in,
+                    **report}
 
-    def _run_passage_probe(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_passage_probe(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'flag duplicated passages against the passage snapshot at
         /path': continuous-ingest ExactSubstr — which passages of
         the batch already exist in the seen corpus
@@ -644,33 +575,14 @@ class Pipeline:
         epoch-grow step. The probe tokenizes with the SNAPSHOT's own
         window size from the geometry sidecar. Rejects a missing or
         unreadable snapshot path with an actionable reason."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            incremental_substring_spans,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "passage probe needs a snapshot path "
-                              "('against the passage snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         snap = plan["snapshot_path"].rstrip("/")
-        try:
+        with _rejects(f"no passage snapshot readable at "
+                      f"{plan['snapshot_path']}"):
             self.spark.read.parquet(snap + "_meta").first()["w"]
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no passage snapshot readable at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        batch = Catalog(self.spark, source_dir).documents
-        spans, fresh = incremental_substring_spans(
+        batch = cat.documents
+        spans, fresh = dedup.incremental_substring_spans(
             batch, self.spark, snap)
-        spans.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(spans, output_path)
         n_spans = back.count()
         n_docs = back.select("id").distinct().count()
         n_fresh = fresh.count()
@@ -678,16 +590,14 @@ class Pipeline:
             fresh.write.mode("append").parquet(snap)
         self.progress("publish", {"rows": n_spans,
                                   "path": output_path})
-        return {"status": "complete", "outputs": [spans],
-                "reports": {"plan": dict(plan),
-                            "spans_flagged": n_spans,
-                            "docs_affected": n_docs,
-                            "fresh_windows": n_fresh,
-                            "snapshot_updated":
-                                bool(plan.get("update"))}}
+        return [spans], {"spans_flagged": n_spans,
+                         "docs_affected": n_docs,
+                         "fresh_windows": n_fresh,
+                         "snapshot_updated":
+                             bool(plan.get("update"))}
 
-    def _run_embed_documents(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_embed_documents(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'embed the documents, 128 dimensions': deterministic
         hashed random-projection embeddings
         (:func:`operators.similarity.hash_embed`) written
@@ -696,32 +606,23 @@ class Pipeline:
         index build/search, semantic dedup, clustering, hybrid
         search) chains off the output dir with no external encoder.
         The report carries the dim and a norm sanity check."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            hash_embed,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        emb = (hash_embed(docs, dim=plan["dim"])
+        docs = cat.documents
+        emb = (similarity.hash_embed(docs, dim=plan["dim"])
                .select(F.col("id").alias("vec_id"), "embedding"))
         self.progress("embed", {"params": dict(plan)})
-        emb.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(emb, output_path)
         n = back.count()
         norms = back.select(F.aggregate(
             F.col("embedding").cast("array<double>"), F.lit(0.0),
             lambda a, x: a + x * x).alias("sq")) \
             .agg(F.round(F.avg("sq"), 4).alias("mean_sq")).first()
         self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [emb],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "dim": plan["dim"],
-                            "mean_sq_norm": norms["mean_sq"]}}
+        return [emb], {"n_vectors": n,
+                       "dim": plan["dim"],
+                       "mean_sq_norm": norms["mean_sq"]}
 
-    def _run_bin_pack(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+    def _run_bin_pack(self, plan: dict, cat: Catalog,
+                      output_path: str) -> Result:
         """'bin pack the corpus into bins of 1024 tokens without
         truncation': truncation-free FFD packing
         (:func:`operators.packing.bin_pack_documents` — every doc
@@ -730,39 +631,29 @@ class Pipeline:
         carries the per-bucket efficiency stats (bins vs the
         oversize-aware lower bound, waste fraction) — the number the
         FFD trade is judged by."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.packing import (
-            bin_pack_documents,
-            bin_pack_stats,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         n_docs = docs.count()
         nb = plan["n_buckets"] or derive_n_buckets(n_docs)
-        packed = bin_pack_documents(docs, budget=plan["budget"],
-                                    n_buckets=nb)
+        packed = packing.bin_pack_documents(docs, budget=plan["budget"],
+                                            n_buckets=nb)
         self.progress("bin_pack", {"params": dict(plan),
                                    "n_buckets": nb})
-        packed.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(packed, output_path)
         stats = [r.asDict() for r in
-                 bin_pack_stats(back, plan["budget"])
+                 packing.bin_pack_stats(back, plan["budget"])
                  .orderBy("bucket").collect()]
         total_bins = sum(s["bins_used"] for s in stats)
         self.progress("publish", {"rows": back.count(),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [packed],
-                "reports": {"plan": dict(plan), "n_docs": n_docs,
-                            "n_buckets": nb,
-                            "total_bins": total_bins,
-                            "oversize_docs": sum(
-                                s["oversize_docs"] for s in stats),
-                            "bucket_stats": stats}}
+        return [packed], {"n_docs": n_docs,
+                          "n_buckets": nb,
+                          "total_bins": total_bins,
+                          "oversize_docs": sum(
+                              s["oversize_docs"] for s in stats),
+                          "bucket_stats": stats}
 
-    def _run_license_scan(self, plan: dict, source_dir: str,
-                          output_path: str) -> dict:
+    def _run_license_scan(self, plan: dict, cat: Catalog,
+                          output_path: str) -> Result:
         """'license audit the corpus' / 'scan the corpus for
         licenses, dropping copyleft and restricted documents':
         corpus-governance scan (:func:`operators.text.license_scan`
@@ -771,41 +662,26 @@ class Pipeline:
         the sink; with one, the KEPT documents land instead and the
         flag pass rides the same scan. Per-class counts inline in
         the report either way."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_class,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_scan,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        flags = license_scan(docs)
-        counts = {r["license_class"]: r["n"]
-                  for r in flags.groupBy("license_class")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
+        docs = cat.documents
+        flags = text.license_scan(docs)
+        counts = _counts(flags, "license_class")
         if plan["drop"]:
             kept = docs.filter(
-                ~license_class(F.col("text")).isin(plan["drop"]))
+                ~text.license_class(F.col("text")).isin(plan["drop"]))
             out_frame = kept
         else:
             out_frame = flags
         self.progress("license_scan", {"params": dict(plan),
                                        "class_counts": counts})
-        out_frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
+        n_out = self._sink(out_frame, output_path).count()
         self.progress("publish", {"rows": n_out,
                                   "path": output_path})
-        return {"status": "complete", "outputs": [out_frame],
-                "reports": {"plan": dict(plan),
-                            "class_counts": counts,
-                            "rows_out": n_out,
-                            "dropped_classes": plan["drop"]}}
+        return [out_frame], {"class_counts": counts,
+                             "rows_out": n_out,
+                             "dropped_classes": plan["drop"]}
 
-    def _run_compact_store(self, plan: dict,
-                           output_path: str) -> dict:
+    def _run_compact_store(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'compact the snapshot at /path': rewrite an append-grown
         store (band/passage/hamming/key snapshots — N epochs of
         parquet appends = N small file batches, the classic
@@ -816,24 +692,11 @@ class Pipeline:
         passage stores, (band, id) for MinHash band tables, (key)
         for content-key snapshots, else every column. The report
         carries files before/after and the deduped row count."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            compact_snapshot,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "compaction needs a store path "
-                              "('compact the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no store readable at {plan['store_path']}"):
             cols = self.spark.read.parquet(
                 plan["store_path"]).columns
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no store readable at "
-                              f"{plan['store_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         if {"band", "key"} <= set(cols):
             key_cols = ["band", "key"]
         elif "whash" in cols:
@@ -844,16 +707,14 @@ class Pipeline:
             key_cols = ["key"]
         else:
             key_cols = list(cols)
-        report = compact_snapshot(self.spark, plan["store_path"],
-                                  output_path, key_cols)
+        report = sinks.compact_snapshot(self.spark, plan["store_path"],
+                                        output_path, key_cols)
         self.progress("publish", {"rows": report["rows"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan),
-                            "key_cols": key_cols, **report}}
+        return [], {"key_cols": key_cols, **report}
 
-    def _run_link_graph_build(self, plan: dict,
-                              output_path: str) -> dict:
+    def _run_link_graph_build(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'build the link graph from the crawl at /path': WARC
         responses -> href extraction -> distinct (src, dst)
         registered-domain edges at the sink
@@ -862,27 +723,11 @@ class Pipeline:
         crawl -> graph -> rank -> weight pipeline; point a follow-up
         'rank the domains by the link graph at <output>' at the
         result. Rejects a missing/unreadable crawl path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            page_link_edges,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.warc import (
-            read_warc,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import warc
 
-        if not plan.get("crawl_path"):
-            return {"status": "rejected",
-                    "reason": "link-graph build needs a crawl path "
-                              "('from the crawl at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            recs = read_warc(self.spark, plan["crawl_path"])
+        with _rejects(f"no crawl readable at {plan['crawl_path']}"):
+            recs = warc.read_warc(self.spark, plan["crawl_path"])
             recs.schema     # force the source to resolve
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no crawl readable at "
-                              f"{plan['crawl_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         pages = (recs.filter((F.col("warc_type") == "response")
                              & (F.col("http_status") == 200)
                              & F.col("http_content_type")
@@ -891,24 +736,22 @@ class Pipeline:
                  .select(F.col("target_uri").alias("url"),
                          F.col("text").alias("html")))
         n_pages = pages.count()
-        edges = page_link_edges(pages)
+        edges = web.page_link_edges(pages)
         self.progress("link_graph", {"params": dict(plan),
                                      "pages": n_pages})
-        edges.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(edges, output_path)
         n_edges = back.count()
         n_domains = (back.select(F.col("src").alias("d"))
                      .unionByName(back.select(F.col("dst").alias("d")))
                      .distinct().count())
         self.progress("publish", {"rows": n_edges,
                                   "path": output_path})
-        return {"status": "complete", "outputs": [edges],
-                "reports": {"plan": dict(plan), "n_pages": n_pages,
-                            "n_edges": n_edges,
-                            "n_domains": n_domains}}
+        return [edges], {"n_pages": n_pages,
+                         "n_edges": n_edges,
+                         "n_domains": n_domains}
 
-    def _run_domain_rank(self, plan: dict,
-                         output_path: str) -> dict:
+    def _run_domain_rank(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'rank the domains by the link graph at /path, 10
         iterations': PageRank over a persisted (src, dst) domain
         edge table (:func:`operators.web.domain_pagerank`) — the
@@ -918,41 +761,22 @@ class Pipeline:
         report inlines the top-10 domains. Rejects a missing path or
         a parquet without (src, dst) columns with an actionable
         reason."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            domain_harmonic,
-            domain_pagerank,
-        )
-
-        if not plan.get("edges_path"):
-            return {"status": "rejected",
-                    "reason": "domain ranking needs a link graph "
-                              "path ('by the link graph at /path' — "
-                              "a parquet of (src, dst) domain "
-                              "edges)",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no link graph readable at {plan['edges_path']}"):
             edges = self.spark.read.parquet(plan["edges_path"])
             if not {"src", "dst"} <= set(edges.columns):
                 raise ValueError(
                     f"expected (src, dst) columns, found "
                     f"{edges.columns}")
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no link graph readable at "
-                              f"{plan['edges_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
         if plan.get("method") == "harmonic":
-            ranks = domain_harmonic(edges.select("src", "dst"),
-                                    max_radius=plan["n_iter"])
+            ranks = web.domain_harmonic(edges.select("src", "dst"),
+                                        max_radius=plan["n_iter"])
             score = "harmonic"
         else:
-            ranks = domain_pagerank(edges.select("src", "dst"),
-                                    n_iter=plan["n_iter"])
+            ranks = web.domain_pagerank(edges.select("src", "dst"),
+                                        n_iter=plan["n_iter"])
             score = "rank"
         self.progress("domain_rank", {"params": dict(plan)})
-        ranks.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(ranks, output_path)
         n = back.count()
         # mirrored report shape across both methods — (domain, score,
         # in_degree) — so users can compare the two rankings from one
@@ -963,25 +787,18 @@ class Pipeline:
                                 F.col("domain")).take(10)
         if score == "harmonic":
             doms = [r["domain"] for r in top_rows]
-            indeg = {r["dst"]: r["n"] for r in
-                     edges.filter(F.col("dst").isin(doms))
-                     .groupBy("dst")
-                     .agg(F.count(F.lit(1)).alias("n")).collect()}
-            top = [{"domain": r["domain"], "score": r[score],
-                    "in_degree": indeg.get(r["domain"], 0)}
-                   for r in top_rows]
+            indeg = _counts(edges.filter(F.col("dst").isin(doms)), "dst")
         else:
-            top = [{"domain": r["domain"], "score": r[score],
-                    "in_degree": r["in_degree"]}
-                   for r in top_rows]
+            indeg = {r["domain"]: r["in_degree"] for r in top_rows}
+        top = [{"domain": r["domain"], "score": r[score],
+                "in_degree": indeg.get(r["domain"], 0)} for r in top_rows]
         self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [ranks],
-                "reports": {"plan": dict(plan), "n_domains": n,
-                            "method": plan.get("method", "pagerank"),
-                            "top_domains": top}}
+        return [ranks], {"n_domains": n,
+                         "method": plan.get("method", "pagerank"),
+                         "top_domains": top}
 
-    def _run_substring_dedup(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_substring_dedup(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'remove duplicated passages across the corpus (windows of
         50 tokens)': cross-document ExactSubstr dedup (D18 —
         :func:`operators.dedup.exact_substring_dedup`): every token
@@ -991,32 +808,31 @@ class Pipeline:
         counts flagged spans, affected documents and removed tokens.
         'flag' / 'find' phrasings report the span table itself
         without rewriting the corpus."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            exact_substring_dedup,
-            substring_duplicate_spans,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         w = plan["window"]
-        spans = substring_duplicate_spans(docs, w=w)
+        spans = dedup.substring_duplicate_spans(docs, w=w)
+        return self._publish_spans(
+            plan, spans, lambda: dedup.exact_substring_dedup(docs, w=w),
+            "substring_dedup", output_path)
+
+    def _publish_spans(self, plan: dict, spans: DataFrame,
+                       cut: Callable[[], DataFrame], stage: str,
+                       output_path: str) -> Result:
+        """Shared tail of the span-cutting targets: 'flag'/'find'
+        phrasings publish the span table itself; otherwise ``cut()``
+        builds the rewritten corpus, which lands with its affected-doc
+        and removed-token counts."""
         if plan.get("flag_only"):
-            spans.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
+            back = self._sink(spans, output_path)
             n_spans = back.count()
             n_docs = back.select("id").distinct().count()
             self.progress("publish", {"rows": n_spans,
                                       "path": output_path})
-            return {"status": "complete", "outputs": [spans],
-                    "reports": {"plan": dict(plan),
-                                "spans_flagged": n_spans,
-                                "docs_affected": n_docs}}
-        cleaned = exact_substring_dedup(docs, w=w)
-        self.progress("substring_dedup", {"params": dict(plan)})
-        cleaned.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+            return [spans], {"spans_flagged": n_spans,
+                             "docs_affected": n_docs}
+        cleaned = cut()
+        self.progress(stage, {"params": dict(plan)})
+        back = self._sink(cleaned, output_path)
         agg = back.agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
@@ -1024,28 +840,22 @@ class Pipeline:
             F.sum("n_removed").alias("removed")).first()
         self.progress("publish", {"rows": agg["docs"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [cleaned],
-                "reports": {"plan": dict(plan),
-                            "docs_out": agg["docs"],
-                            "docs_affected": int(agg["affected"] or 0),
-                            "tokens_removed": int(agg["removed"] or 0)}}
+        return [cleaned], {"docs_out": agg["docs"],
+                           "docs_affected": int(agg["affected"] or 0),
+                           "tokens_removed": int(agg["removed"] or 0)}
 
-    def _media_or_none(self, source_dir: str):
-        """The source dir's optional ``media`` table, or None when the
-        dir carries no readable media parquet — callers turn None into
-        the actionable-rejection contract."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        try:
-            media = Catalog(self.spark, source_dir).media
+    @staticmethod
+    def _media(cat: Catalog) -> DataFrame:
+        """The source dir's optional ``media`` table; a dir without a
+        readable media parquet rejects, naming the read error."""
+        with _rejects(f"no media table readable at "
+                      f"{cat.sf_dir}/media.parquet"):
+            media = cat.media
             media.schema      # force the read to resolve
             return media
-        except Exception:
-            return None
 
-    def _run_media_dedup(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+    def _run_media_dedup(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'dedup the images' / 'dedup the audio clips': perceptual
         near-dup dedup over the source dir's ``media`` table — dHash
         (images) or aHash (audio) fingerprints (one Arrow payload
@@ -1060,35 +870,17 @@ class Pipeline:
         at batch cost via the probe target. Hot-bucket cap telemetry
         (``dedup.bucket_cap_stats``) rides the report — the engine's
         no-silent-caps discipline on its hottest knob."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            dedup_by_components,
-            hamming_band_keys,
-            hamming_band_pairs,
-            save_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            audio_ahash,
-            image_dhash,
-            video_vhash,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal
 
         modality = plan.get("modality", "image")
-        fingerprint = {"image": image_dhash, "audio": audio_ahash,
-                       "video": video_vhash}[modality]
+        fingerprint = {"image": multimodal.image_dhash,
+                       "audio": multimodal.audio_ahash,
+                       "video": multimodal.video_vhash}[modality]
         dec_key = {"image": "images_decodable",
                    "audio": "clips_decodable",
                    "video": "videos_decodable"}[modality]
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_in = media.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "media table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(cat)
+        n_in = _nonempty_count(media, "media")
         mh, nb = plan["max_hamming"], plan["n_blocks"]
         # fingerprint ONCE (the payload decode dominates this target's
         # cost) and share the frame between the pair join, the kept-row
@@ -1096,36 +888,34 @@ class Pipeline:
         fps = fingerprint(media).persist()
         n_decodable = fps.count()
         cap: dict = {}
-        pairs = hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
-                                   cap_report=cap,
-                                   hot_policy=plan.get("hot_policy",
-                                                       "drop"))
-        kept = dedup_by_components(media, pairs, id_col="media_id")
+        pairs = dedup.hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
+                                         cap_report=cap,
+                                         hot_policy=plan.get("hot_policy",
+                                                             "drop"))
+        kept = dedup.dedup_by_components(media, pairs, id_col="media_id")
         self.progress("media_dedup", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "cap": cap})
-        kept.write.mode("overwrite").parquet(output_path)
-        n_kept = self.spark.read.parquet(output_path).count()  # read-back
+        n_kept = self._sink(kept, output_path).count()
         snap = output_path + "_snapshot"
         # represent mode: over-cap buckets keep their min-id member so
         # the PERSISTED snapshot stays probe-able under duplicate
         # floods (a later flood copy flags against the representative
         # instead of silently missing) while staying |corpus|-bounded
-        save_hamming_snapshot(
-            hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
-                              cap_mode="represent"),
+        dedup.save_hamming_snapshot(
+            dedup.hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
+                                    cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
         fps.unpersist()
         self.progress("publish", {"rows": n_kept, "path": output_path})
-        return {"status": "complete", "outputs": [kept],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            dec_key: n_decodable,
-                            "rows_kept": n_kept,
-                            "cap_telemetry": cap,
-                            "snapshot_path_out": snap}}
+        return [kept], {"rows_in": n_in,
+                        dec_key: n_decodable,
+                        "rows_kept": n_kept,
+                        "cap_telemetry": cap,
+                        "snapshot_path_out": snap}
 
-    def _run_media_probe(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+    def _run_media_probe(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'flag the new images|audio against the snapshot at /path':
         the batch half of the media lifecycle — fingerprint the source
         dir's media table and probe the persisted hamming snapshot
@@ -1139,52 +929,30 @@ class Pipeline:
         additionally APPENDS the batch's fresh fingerprints to the
         store (epoch grow at batch cost — the image twin of the
         Bloom add_keys / ANN-index append steps)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            incremental_hamming_pairs,
-            load_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            audio_ahash,
-            image_dhash,
-            video_vhash,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal
 
         modality = plan.get("modality", "image")
-        fingerprint = {"image": image_dhash, "audio": audio_ahash,
-                       "video": video_vhash}[modality]
+        fingerprint = {"image": multimodal.image_dhash,
+                       "audio": multimodal.audio_ahash,
+                       "video": multimodal.video_vhash}[modality]
         noun = {"image": "images", "audio": "clips",
                 "video": "videos"}[modality]
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": f"{modality} probe needs a snapshot path "
-                              "('... against the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            banded, geom = load_hamming_snapshot(
+        with _rejects(f"no loadable hamming snapshot at "
+                      f"{plan['snapshot_path']}"):
+            banded, geom = dedup.load_hamming_snapshot(
                 self.spark, plan["snapshot_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable hamming snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(cat)
         n_in = media.count()
         fps = fingerprint(media).persist()
         n_decodable = fps.count()
-        pairs = incremental_hamming_pairs(fps, banded, **geom)
+        pairs = dedup.incremental_hamming_pairs(fps, banded, **geom)
         self.progress("media_probe", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "geometry": geom})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)       # read-back
+        back = self._sink(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
+        reports = {"batch_rows": n_in,
                    f"{noun}_decodable": n_decodable,
                    "flag_pairs": n_pairs,
                    f"{noun}_flagged": n_flagged,
@@ -1197,19 +965,14 @@ class Pipeline:
             # commit protocol — a failed job leaves the store intact —
             # and the new files get the same range-partitioned/sorted
             # layout so footer-stat pruning covers them too.
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-                hamming_band_keys,
-                hamming_band_pairs,
-                min_label_components,
-            )
             n_before = banded.count()
             fresh = fps.join(back.select(F.col("id_new").alias("id"))
                              .distinct(), "id", "left_anti")
-            drop = (min_label_components(
-                        hamming_band_pairs(fresh, **geom))
+            drop = (dedup.min_label_components(
+                        dedup.hamming_band_pairs(fresh, **geom))
                     .filter(F.col("id") != F.col("comp")).select("id"))
             keep = fresh.join(drop, "id", "left_anti")
-            new_banded = hamming_band_keys(keep, **geom)
+            new_banded = dedup.hamming_band_keys(keep, **geom)
             (new_banded.repartitionByRange("band", "key")
              .sortWithinPartitions("band", "key")
              .write.mode("append").parquet(plan["snapshot_path"]))
@@ -1224,11 +987,10 @@ class Pipeline:
                             f"{noun}_appended": n_appended})
         fps.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+        return [pairs], reports
 
-    def _run_containment(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+    def _run_containment(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'find videos containing clips of each other' / 'audio
         containment': sub-clip matching over the media table —
         per-frame dHash rows (video) or onset-anchored window aHashes
@@ -1240,32 +1002,15 @@ class Pipeline:
         later batches probe for CONTAINED known content at batch cost
         via the containment_probe target. Cap telemetry rides the
         report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hamming_band_keys,
-            save_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            _containment_rollup,
-            audio_window_hashes,
-            video_frame_hashes,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal
 
         modality = plan.get("modality", "video")
-        hashes_fn = (video_frame_hashes if modality == "video"
-                     else audio_window_hashes)
+        hashes_fn = (multimodal.video_frame_hashes if modality == "video"
+                     else multimodal.audio_window_hashes)
         shared_col = ("shared_frames" if modality == "video"
                       else "shared_windows")
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_in = media.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "media table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(cat)
+        n_in = _nonempty_count(media, "media")
         mh, nb = plan["max_hamming"], plan["n_blocks"]
         # hash ONCE (the payload decode dominates) and share the frame
         # between the pair rollup and the persisted snapshot
@@ -1275,34 +1020,32 @@ class Pipeline:
         n_rows = fh.count()
         n_decodable = fh.select("id").distinct().count()
         cap: dict = {}
-        pairs = _containment_rollup(
+        pairs = multimodal._containment_rollup(
             fh, plan["min_shared"], shared_col, max_hamming=mh,
             n_blocks=nb, cap_report=cap,
             hot_policy=plan.get("hot_policy", "drop"))
         self.progress("containment", {"params": dict(plan),
                                       "decodable": n_decodable,
                                       "cap": cap})
-        pairs.write.mode("overwrite").parquet(output_path)
-        n_pairs = self.spark.read.parquet(output_path).count()
+        n_pairs = self._sink(pairs, output_path).count()
         snap = output_path + "_snapshot"
         packed = fh.select(
             (F.col("id") * 4096 + F.col("idx")).alias("id"), "sim")
-        save_hamming_snapshot(
-            hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
-                              cap_mode="represent"),
+        dedup.save_hamming_snapshot(
+            dedup.hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
+                                    cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
         fh.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "items_decodable": n_decodable,
-                            "subitem_rows": n_rows,
-                            "containment_pairs": n_pairs,
-                            "cap_telemetry": cap,
-                            "snapshot_path_out": snap}}
+        return [pairs], {"rows_in": n_in,
+                         "items_decodable": n_decodable,
+                         "subitem_rows": n_rows,
+                         "containment_pairs": n_pairs,
+                         "cap_telemetry": cap,
+                         "snapshot_path_out": snap}
 
-    def _run_containment_probe(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+    def _run_containment_probe(self, plan: dict, cat: Catalog,
+                               output_path: str) -> Result:
         """'flag the new videos sharing frames with the snapshot at
         /p': the batch half of the containment lifecycle — hash the
         batch's sub-items, probe the persisted PACKED band snapshot
@@ -1311,58 +1054,37 @@ class Pipeline:
         update the snapshot' appends the batch's fresh packed hashes
         — items NOT flagged against the store and not contained
         within the batch — the epoch-grow step."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hamming_band_keys,
-            load_hamming_snapshot,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-            _containment_rollup,
-            audio_window_hashes,
-            incremental_containment_pairs,
-            video_frame_hashes,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal
 
         modality = plan.get("modality", "video")
-        hashes_fn = (video_frame_hashes if modality == "video"
-                     else audio_window_hashes)
+        hashes_fn = (multimodal.video_frame_hashes if modality == "video"
+                     else multimodal.audio_window_hashes)
         shared_col = ("shared_frames" if modality == "video"
                       else "shared_windows")
         noun = "videos" if modality == "video" else "clips"
         if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": f"{modality} containment probe needs a "
-                              "snapshot path ('... sharing frames "
-                              "with the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            banded, geom = load_hamming_snapshot(
+            raise Rejected(f"{modality} containment probe needs a "
+                           "snapshot path ('... sharing frames "
+                           "with the snapshot at /path')")
+        with _rejects(f"no loadable hamming snapshot at "
+                      f"{plan['snapshot_path']}"):
+            banded, geom = dedup.load_hamming_snapshot(
                 self.spark, plan["snapshot_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable hamming snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        media = self._media_or_none(source_dir)
-        if media is None:
-            return {"status": "rejected",
-                    "reason": f"no media table readable at "
-                              f"{source_dir}/media.parquet",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        media = self._media(cat)
         n_in = media.count()
         fh = hashes_fn(media)
         fh = fh.withColumnRenamed(fh.columns[1], "idx").persist()
         n_decodable = fh.select("id").distinct().count()
-        pairs = incremental_containment_pairs(
+        pairs = multimodal.incremental_containment_pairs(
             fh, banded, min_shared=plan["min_shared"],
             shared_col=shared_col, **geom)
         self.progress("containment_probe",
                       {"params": dict(plan),
                        "decodable": n_decodable, "geometry": geom})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)
+        back = self._sink(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
+        reports = {"batch_rows": n_in,
                    f"{noun}_decodable": n_decodable,
                    "containment_pairs": n_pairs,
                    f"{noun}_flagged": n_flagged,
@@ -1375,7 +1097,7 @@ class Pipeline:
             n_before = banded.count()
             fresh = fh.join(back.select(F.col("id_new").alias("id"))
                             .distinct(), "id", "left_anti")
-            within = _containment_rollup(
+            within = multimodal._containment_rollup(
                 fresh, plan["min_shared"], shared_col,
                 max_hamming=geom["max_hamming"],
                 n_blocks=geom["n_blocks"])
@@ -1383,8 +1105,8 @@ class Pipeline:
                               .distinct(), "id", "left_anti")
             packed = keep.select(
                 (F.col("id") * 4096 + F.col("idx")).alias("id"), "sim")
-            new_banded = hamming_band_keys(packed, **geom,
-                                           cap_mode="represent")
+            new_banded = dedup.hamming_band_keys(packed, **geom,
+                                                 cap_mode="represent")
             (new_banded.repartitionByRange("band", "key")
              .sortWithinPartitions("band", "key")
              .write.mode("append").parquet(plan["snapshot_path"]))
@@ -1396,11 +1118,10 @@ class Pipeline:
                             f"{noun}_appended": n_appended})
         fh.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+        return [pairs], reports
 
-    def _run_band_snapshot(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_band_snapshot(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'build a near-dup band snapshot of the corpus': persist the
         MinHash band table of the documents table at the sink — the
         build face of the neardup_probe target (the text twin of the
@@ -1410,48 +1131,35 @@ class Pipeline:
         the probe's broadcast semi-join for pruning (slices are
         arrays — parquet min/max stats don't apply to them, which is
         why the probe path prunes by semi-join, not footer stats)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            minhash_band_keys,
-            minhash_band_plan,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        n_in = docs.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        docs = cat.documents
+        n_in = _nonempty_count(docs, "documents")
         # 'at similarity 0.8' derives the banding geometry from the
         # advisor's S-curve fit instead of the default 16x4; later
         # probes infer the geometry from the snapshot's own rows
         # (band_table_geometry), so no sidecar is needed
         geo_kw, band_plan = {}, None
         if plan.get("threshold"):
-            band_plan = minhash_band_plan(plan["threshold"])
+            band_plan = dedup.minhash_band_plan(plan["threshold"])
             geo_kw = {"n_hashes": band_plan["n_hashes"],
                       "bands": band_plan["bands"]}
         # represent mode: a boilerplate flood stores one row per band
         # (flood-proof snapshot — probes/streams still collide with
         # the representative, fan-out stays cap-bounded)
-        bands = minhash_band_keys(docs, max_bucket=2000,
-                                  cap_mode="represent", **geo_kw)
+        bands = dedup.minhash_band_keys(docs, max_bucket=2000,
+                                        cap_mode="represent", **geo_kw)
         (bands.repartitionByRange("band", "id")
          .sortWithinPartitions("band", "id")
          .write.mode("overwrite").parquet(output_path))
         n_rows = self.spark.read.parquet(output_path).count()
         self.progress("publish", {"rows": n_rows, "path": output_path})
-        reports = {"plan": dict(plan), "docs_in": n_in,
+        reports = {"docs_in": n_in,
                    "band_rows": n_rows}
         if band_plan is not None:
             reports["band_plan"] = band_plan
-        return {"status": "complete", "outputs": [bands],
-                "reports": reports}
+        return [bands], reports
 
-    def _run_neardup_probe(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_neardup_probe(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'flag near-duplicate documents against the band snapshot at
         /path': the TEXT near-dup face of the media probes — band the
         source dir's documents with the MinHash LSH parameters and
@@ -1466,62 +1174,41 @@ class Pipeline:
         '... and update the snapshot' appends the batch's fresh
         (unflagged, within-batch-deduped) band keys — the text twin
         of the media epoch-grow step."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            band_table_geometry,
-            dedup_exact,
-            incremental_neardup_pairs,
-            minhash_band_keys,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "near-dup probe needs a snapshot path "
-                              "('... against the band snapshot at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no loadable band snapshot at "
+                      f"{plan['snapshot_path']}"):
             bands = self.spark.read.parquet(plan["snapshot_path"])
             if not {"id", "band", "slice"} <= set(bands.columns):
                 raise ValueError(
                     f"not a band table (columns {bands.columns})")
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable band snapshot at "
-                              f"{plan['snapshot_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        batch = Catalog(self.spark, source_dir).documents
+        batch = cat.documents
         n_in = batch.count()
         cap: dict = {}
         # band the batch with the SNAPSHOT's own geometry (inferred
         # from its rows) — a threshold-tuned snapshot probes
         # correctly, and a mismatched banding would silently collide
         # with nothing
-        n_bands, n_hashes = band_table_geometry(bands)
-        pairs = incremental_neardup_pairs(
+        n_bands, n_hashes = dedup.band_table_geometry(bands)
+        pairs = dedup.incremental_neardup_pairs(
             batch, bands, n_hashes=n_hashes, bands=n_bands,
             cap_report=cap,
             hot_policy=plan.get("hot_policy", "drop"))
         self.progress("neardup_probe", {"params": dict(plan),
                                         "cap": cap})
-        pairs.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)       # read-back
+        back = self._sink(pairs, output_path)
         n_pairs = back.count()
         n_flagged = back.select("id_new").distinct().count()
-        reports = {"plan": dict(plan), "batch_rows": n_in,
+        reports = {"batch_rows": n_in,
                    "flag_pairs": n_pairs, "docs_flagged": n_flagged,
                    "cap_telemetry": cap}
         if plan.get("update"):
             n_before = bands.count()
-            fresh = (dedup_exact(batch)
+            fresh = (dedup.dedup_exact(batch)
                      .join(back.select(F.col("id_new").alias("doc_id"))
                            .distinct(), "doc_id", "left_anti"))
             # append with the snapshot's geometry, not the default —
             # a tuned store must grow homogeneous
-            new_bands = minhash_band_keys(fresh, n_hashes=n_hashes,
-                                          bands=n_bands)
+            new_bands = dedup.minhash_band_keys(fresh, n_hashes=n_hashes,
+                                                bands=n_bands)
             new_bands.write.mode("append").parquet(
                 plan["snapshot_path"])
             n_after = self.spark.read.parquet(
@@ -1533,10 +1220,10 @@ class Pipeline:
                             "snapshot_rows_after": n_after,
                             "docs_appended": n_appended})
         self.progress("publish", {"rows": n_pairs, "path": output_path})
-        return {"status": "complete", "outputs": [pairs],
-                "reports": reports}
+        return [pairs], reports
 
-    def _run_ingest_crawl(self, plan: dict, output_path: str) -> dict:
+    def _run_ingest_crawl(self, plan: dict, cat: Catalog,
+                          output_path: str) -> Result:
         """'extract text from the crawl at /path': WARC file(s) ->
         one row per 200-OK textual response, with the rendered line
         structure from html_to_lines as ``text``. ``doc_id`` is the
@@ -1549,24 +1236,9 @@ class Pipeline:
         dataops query's source_dir at the output directory chains
         crawl -> curate -> select -> pack -> shard end to end (write
         to ``<dir>/documents.parquet``)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            html_to_lines,
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-            registered_domain,
-            url_host,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.warc import (
-            read_warc,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import warc
 
-        if not plan.get("crawl_path"):
-            return {"status": "rejected",
-                    "reason": "crawl ingest needs a path "
-                              "('... the crawl at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        recs = read_warc(self.spark, plan["crawl_path"])
+        recs = warc.read_warc(self.spark, plan["crawl_path"])
         frame = (recs.filter((F.col("warc_type") == "response")
                              & (F.col("http_status") == 200)
                              & F.col("text").isNotNull())
@@ -1576,21 +1248,17 @@ class Pipeline:
                          F.col("http_content_type").alias("content_type"),
                          F.when(F.col("http_content_type")
                                 .contains("html"),
-                                html_to_lines(F.col("text")))
+                                text.html_to_lines(F.col("text")))
                          .otherwise(F.col("text")).alias("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text")))
-                 .withColumn("source",
-                             registered_domain(url_host(F.col("url")))))
+                 .withColumn("lang", text.lang_id(F.col("text")))
+                 .withColumn("source", web.registered_domain(
+                     web.url_host(F.col("url")))))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "rows": n}}
+        return self._publish(frame, output_path, "rows")
 
-    def _run_ingest_archives(self, plan: dict,
-                             output_path: str) -> dict:
+    def _run_ingest_archives(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'extract text from the zip at /path' / 'ingest the tarball
         at /path': archives explode into one row per text-bearing
         member (txt/html/pdf/json tiers applied per kind by the
@@ -1600,20 +1268,9 @@ class Pipeline:
         silently dropped. ``doc_id`` hashes archive#member (stable
         across re-runs); ``source`` is the archive file name, so a
         multi-archive corpus keeps its provenance through curation."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            html_to_lines,
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.archives import (
-            read_archives,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import archives
 
-        if not plan.get("archive_path"):
-            return {"status": "rejected",
-                    "reason": "archive ingest needs a path "
-                              "('... the zip at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        rows = read_archives(self.spark, plan["archive_path"])
+        rows = archives.read_archives(self.spark, plan["archive_path"])
         summaries = rows.filter(F.col("kind") == "__archive__")
         stats = summaries.agg(
             F.count(F.lit(1)).alias("archives"),
@@ -1630,22 +1287,18 @@ class Pipeline:
                      F.element_at(F.split(F.col("archive"), "/"), -1)
                      .alias("source"),
                      F.when(F.col("kind") == "html",
-                            html_to_lines(F.col("text")))
+                            text.html_to_lines(F.col("text")))
                      .otherwise(F.col("text")).alias("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text"))))
+                 .withColumn("lang", text.lang_id(F.col("text"))))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "archives_seen": stats["archives"],
-                            "members_seen": int(stats["members"]),
-                            "members_skipped": int(stats["skipped"]),
-                            "rows_written": n}}
+        return self._publish(frame, output_path, "rows_written",
+                             archives_seen=stats["archives"],
+                             members_seen=int(stats["members"]),
+                             members_skipped=int(stats["skipped"]))
 
-    def _run_ingest_pdfs(self, plan: dict, output_path: str) -> dict:
+    def _run_ingest_pdfs(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'extract text from the pdfs at /path': PDF file(s) -> one
         row per file with extractable text (files with no text tier —
         encrypted, image-only, unsupported codecs — are counted in
@@ -1655,19 +1308,9 @@ class Pipeline:
         via the stopword heuristic, source = the file's directory
         name) so a follow-up dataops query chains pdfs -> curate ->
         select -> pack -> shard exactly like the crawl front door."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            lang_id,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.pdf import (
-            read_pdfs,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import pdf
 
-        if not plan.get("pdf_path"):
-            return {"status": "rejected",
-                    "reason": "pdf ingest needs a path "
-                              "('... the pdfs at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        rows = read_pdfs(self.spark, plan["pdf_path"])
+        rows = pdf.read_pdfs(self.spark, plan["pdf_path"])
         n_total = rows.count()
         frame = (rows.filter(F.col("text").isNotNull())
                  .select(F.xxhash64("path").alias("doc_id"),
@@ -1675,78 +1318,50 @@ class Pipeline:
                          F.col("n_pages"),
                          F.col("text"))
                  .withColumn("n_chars", F.length("text"))
-                 .withColumn("lang", lang_id(F.col("text")))
+                 .withColumn("lang", text.lang_id(F.col("text")))
                  .withColumn("source", F.element_at(
                      F.split(F.col("url"), "/"), -2)))
         self.progress("ingest", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
+        n = self._sink(frame, output_path).count()
         self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "files_seen": n_total,
-                            "rows_written": n,
-                            "files_without_text": n_total - n}}
+        return [frame], {"files_seen": n_total,
+                         "rows_written": n,
+                         "files_without_text": n_total - n}
 
-    def _run_corpus_diff(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+    def _run_corpus_diff(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'diff ... against the snapshot at <path>': the CURRENT
         corpus (source_dir's documents table) vs a prior snapshot
         parquet of the same (doc_id, text) shape -> (doc_id, status)
         written to the sink plus a per-status count report. The diff
         itself is :func:`operators.dedup.corpus_diff` — only ids and
         32-bit content keys enter the shuffle."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            corpus_diff,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("snapshot_path"):
-            return {"status": "rejected",
-                    "reason": "corpus diff needs a snapshot path "
-                              "('... against the snapshot at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         old = self.spark.read.parquet(plan["snapshot_path"])
-        new = Catalog(self.spark, source_dir).documents
-        frame = corpus_diff(old, new)
+        new = cat.documents
+        frame = dedup.corpus_diff(old, new)
         self.progress("diff", {"params": dict(plan)})
         frame.write.mode("overwrite").parquet(output_path)
-        counts = {r["status"]: r["n"] for r in self.spark.read
-                  .parquet(output_path)             # read-back verify
-                  .groupBy("status").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}
+        counts = _counts(self.spark.read.parquet(output_path),  # read-back
+                         "status")
         self.progress("publish", {"rows": sum(counts.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "diff_counts": counts}}
+        return [frame], {"diff_counts": counts}
 
-    def _run_chunk_documents(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_chunk_documents(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'chunk for RAG, size N stride M': scan-only overlapping
         chunking of the documents table -> (id, chunk_idx, chunk_text,
         n_tokens) parquet (:func:`operators.text.chunk_documents` —
         no shuffle; the 1->N expansion happens inside the write
         scan)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            chunk_documents,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        frame = chunk_documents(docs, size=plan["size"],
-                                stride=plan["stride"])
+        docs = cat.documents
+        frame = text.chunk_documents(docs, size=plan["size"],
+                                     stride=plan["stride"])
         self.progress("chunk", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        n = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "rows_written": n}}
+        return self._publish(frame, output_path, "rows_written")
 
-    def _run_classifier_train(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_classifier_train(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'train a quality classifier on the corpus and save it':
         gopher weak labels -> hashed-ngram logistic pipeline
         (Q7, ``operators/quality.py``), persisted with Spark ML's
@@ -1754,83 +1369,50 @@ class Pipeline:
         score-everywhere artifact. The report carries the label
         balance and the model's training accuracy on its own weak
         labels (a sanity floor, not an eval)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.quality import (
-            score_quality,
-            train_quality_classifier,
-            weak_labels_from_gopher,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        labeled = weak_labels_from_gopher(docs)
+        docs = cat.documents
+        labeled = quality.weak_labels_from_gopher(docs)
         pos = labeled.agg(F.avg("label").alias("p")).first()["p"]
         if pos is None or pos in (0.0, 1.0):
-            return {"status": "rejected",
-                    "reason": f"weak labels are degenerate "
-                              f"(positive rate {pos}) — a one-class "
-                              f"corpus cannot train a classifier",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected(f"weak labels are degenerate "
+                           f"(positive rate {pos}) — a one-class "
+                           f"corpus cannot train a classifier")
         self.progress("train_classifier", {"params": dict(plan),
                                            "positive_rate":
                                                round(pos, 4)})
-        model = train_quality_classifier(labeled)
+        model = quality.train_quality_classifier(labeled)
         model.write().overwrite().save(output_path)
-        scored = score_quality(labeled, model).join(
+        scored = quality.score_quality(labeled, model).join(
             labeled.select(F.col("doc_id").alias("id"), "label"), "id")
         acc = scored.agg(F.avg(
             (((F.col("quality_prob") >= 0.5).cast("double"))
              == F.col("label")).cast("double")).alias("a")) \
             .first()["a"]
         self.progress("publish", {"path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan),
-                            "positive_rate": round(pos, 4),
-                            "train_accuracy": round(acc, 4),
-                            "model_path": output_path}}
+        return [], {"positive_rate": round(pos, 4),
+                    "train_accuracy": round(acc, 4),
+                    "model_path": output_path}
 
-    def _run_classifier_score(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_classifier_score(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'score the corpus with the classifier at /path': reload
         the persisted Q7 model (Spark ML native loader) and write
         (id, quality_prob) per document — one scan, the
         score-everywhere half of the lifecycle. Rejects a missing or
         unloadable model path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.quality import (
-            score_quality,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("model_path"):
-            return {"status": "rejected",
-                    "reason": "scoring needs a model path ('with "
-                              "the classifier at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no classifier loadable at {plan['model_path']}"):
             from pyspark.ml import PipelineModel
             model = PipelineModel.load(plan["model_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no classifier loadable at "
-                              f"{plan['model_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        docs = Catalog(self.spark, source_dir).documents
-        scores = score_quality(docs, model)
+        docs = cat.documents
+        scores = quality.score_quality(docs, model)
         self.progress("score", {"params": dict(plan)})
-        scores.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(scores, output_path)
         agg = back.agg(F.count(F.lit(1)).alias("n"),
                        F.round(F.avg("quality_prob"), 4)
                        .alias("mean")).first()
         self.progress("publish", {"rows": agg["n"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [scores],
-                "reports": {"plan": dict(plan), "rows": agg["n"],
-                            "mean_quality_prob": agg["mean"]}}
+        return [scores], {"rows": agg["n"],
+                          "mean_quality_prob": agg["mean"]}
 
     def _load_tokenizer_store(self, path: str):
         """Load a persisted tokenizer store, inferring its kind from
@@ -1844,17 +1426,17 @@ class Pipeline:
         if {"rank", "a", "b"} <= cols:
             return "bpe", {"merges": [(r["a"], r["b"]) for r in
                                       store.orderBy("rank").collect()]}
-        if {"piece", "logprob"} <= cols:
+        if {"rank", "piece", "logprob"} <= cols:
             return "unigram", {"pieces": [(r["piece"], r["logprob"])
                                           for r in
                                           store.orderBy("rank")
                                           .collect()]}
         raise ValueError(
-            f"columns {sorted(cols)} are neither a BPE (rank,a,b) nor "
-            f"a unigram (rank,piece,logprob) store")
+            f"not a tokenizer store (columns {sorted(cols)} are neither "
+            f"a BPE (rank,a,b) nor a unigram (rank,piece,logprob) store)")
 
-    def _run_tokenizer_stats(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_tokenizer_stats(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'report tokenizer stats with the tokenizer at /path': the
         artifact-validation telemetry — per-language fertility
         (subword tokens per word; a language far above the corpus
@@ -1866,35 +1448,18 @@ class Pipeline:
         table lands at the sink; the report inlines it (strata-
         bounded) plus the corpus-wide roll-up. One count-only Arrow
         pass + one strata-bounded aggregate."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            tokenizer_stats,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("tokenizer_path"):
-            return {"status": "rejected",
-                    "reason": "tokenizer stats need a tokenizer path "
-                              "('... with the tokenizer at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no tokenizer readable at "
+                      f"{plan['tokenizer_path']}"):
             kind, kw = self._load_tokenizer_store(plan["tokenizer_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no tokenizer readable at "
-                              f"{plan['tokenizer_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         # a source whose documents table carries no lang column still
         # gets the corpus-wide telemetry (the 'all' stratum) instead
         # of an uncaught AnalysisException
         lang_col = "lang" if "lang" in docs.columns else None
-        per_lang = tokenizer_stats(docs, lang_col=lang_col, **kw)
+        per_lang = bpe.tokenizer_stats(docs, lang_col=lang_col, **kw)
         self.progress("tokenizer_stats", {"params": dict(plan),
                                           "kind": kind})
-        per_lang.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)    # read-back
+        back = self._sink(per_lang, output_path)
         rows = sorted((r.asDict() for r in back.collect()),
                       key=lambda r: r["lang"])
         tot_toks = sum(r["n_tokens"] for r in rows)
@@ -1904,12 +1469,11 @@ class Pipeline:
                    if tot_words else None}
         self.progress("publish", {"rows": len(rows),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [per_lang],
-                "reports": {"plan": dict(plan), "kind": kind,
-                            "per_lang": rows, "overall": overall}}
+        return [per_lang], {"kind": kind,
+                            "per_lang": rows, "overall": overall}
 
-    def _run_tokenizer_train(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_tokenizer_train(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'train a bpe tokenizer on the corpus, 300 merges, and save
         it' / 'train a unigram tokenizer, vocab 500': the tokenizer
         is THE canonical train-once artifact — every downstream token
@@ -1919,35 +1483,22 @@ class Pipeline:
         'tokenize the corpus with the tokenizer at /path and pack
         ...' loads it instead of retraining (bit-identical encoding,
         pinned in tests)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            save_bpe,
-            train_bpe,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-            save_unigram,
-            train_unigram,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         self.progress("train_tokenizer", {"params": dict(plan)})
         if plan["model"] == "unigram":
-            pieces = train_unigram(docs,
-                                   vocab_size=max(plan["n_merges"],
-                                                  64))
-            report = save_unigram(self.spark, pieces, output_path)
+            pieces = unigram.train_unigram(docs,
+                                           vocab_size=max(plan["n_merges"],
+                                                          64))
+            report = unigram.save_unigram(self.spark, pieces, output_path)
         else:
-            merges = train_bpe(docs, n_merges=plan["n_merges"])
-            report = save_bpe(self.spark, merges, output_path)
+            merges = bpe.train_bpe(docs, n_merges=plan["n_merges"])
+            report = bpe.save_bpe(self.spark, merges, output_path)
         self.progress("publish", {"path": output_path, **report})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report,
-                            "tokenizer_path": output_path}}
+        return [], {**report,
+                    "tokenizer_path": output_path}
 
-    def _run_tokenize_pack(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_tokenize_pack(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'tokenize the corpus and pack 512-token sequences': train a
         BPE merge table on the corpus, encode straight to ids
         (``bpe.encode_ids``), concatenate-and-split into fixed-length
@@ -1959,19 +1510,7 @@ class Pipeline:
         surface. The merge/piece table + vocab size go into the
         report — the reusable artifacts a production run persists
         beside the shards."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-            bpe_vocab,
-            encode_ids,
-            train_bpe,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.packing import (
-            pack_sequences,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         if plan["n_buckets"] is None:
             # corpus-derived (see derive_n_buckets): the one packing
             # shuffle's task count is n_buckets — a fixed default
@@ -1979,84 +1518,49 @@ class Pipeline:
             # since bucket count is part of the deterministic output
             # identity.
             plan["n_buckets"] = derive_n_buckets(docs.count())
-        loaded_bpe = loaded_pieces = None
+        loaded: dict = {}
         if plan.get("tokenizer_path"):
             # the train-once reuse face: load the persisted artifact,
             # kind inferred from its own columns — never retrain
-            try:
-                cols = set(self.spark.read.parquet(
-                    plan["tokenizer_path"]).columns)
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no tokenizer readable at "
-                                  f"{plan['tokenizer_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
-            if {"rank", "a", "b"} <= cols:
-                from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-                    load_bpe,
-                )
-                loaded_bpe = load_bpe(self.spark,
-                                      plan["tokenizer_path"])
-                plan["model"] = "bpe"
-            elif {"rank", "piece", "logprob"} <= cols:
-                from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-                    load_unigram,
-                )
-                loaded_pieces = load_unigram(self.spark,
-                                             plan["tokenizer_path"])
-                plan["model"] = "unigram"
-            else:
-                return {"status": "rejected",
-                        "reason": f"parquet at "
-                                  f"{plan['tokenizer_path']} is not "
-                                  f"a tokenizer store (columns "
-                                  f"{sorted(cols)})",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
+            with _rejects(f"no tokenizer readable at "
+                          f"{plan['tokenizer_path']}"):
+                plan["model"], loaded = self._load_tokenizer_store(
+                    plan["tokenizer_path"])
         if plan.get("model") == "unigram":
             # TK3: the unigram-LM trainer behind the same target —
             # n_merges doubles as the piece-vocabulary budget
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.unigram import (
-                apply_unigram,
-                train_unigram,
-                unigram_vocab,
-            )
-            pieces = (loaded_pieces if loaded_pieces is not None
-                      else train_unigram(
+            pieces = (loaded["pieces"] if "pieces" in loaded
+                      else unigram.train_unigram(
                           docs, vocab_size=max(plan["n_merges"], 64)))
-            vocab = unigram_vocab(pieces)
+            vocab = unigram.unigram_vocab(pieces)
             merges = pieces          # report carries the piece table size
             self.progress("tokenize", {"params": dict(plan),
                                        "vocab_size": len(vocab)})
-            tok = apply_unigram(docs, pieces, ids=True)
+            tok = unigram.apply_unigram(docs, pieces, ids=True)
         else:
-            merges = (loaded_bpe if loaded_bpe is not None
-                      else train_bpe(docs, n_merges=plan["n_merges"]))
-            vocab = bpe_vocab(merges)
+            merges = (loaded["merges"] if "merges" in loaded
+                      else bpe.train_bpe(docs, n_merges=plan["n_merges"]))
+            vocab = bpe.bpe_vocab(merges)
             self.progress("tokenize", {"params": dict(plan),
                                        "vocab_size": len(vocab)})
-            tok = encode_ids(docs, merges)
+            tok = bpe.encode_ids(docs, merges)
         # eos: the id just past the vocab is the reserved per-document
         # separator (trainers size the embedding at vocab_size + 1)
         eos_id = len(vocab) if plan.get("eos") else None
-        frame = pack_sequences(tok, plan["seq_len"],
-                               n_buckets=plan["n_buckets"],
-                               eos_id=eos_id)
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        frame = packing.pack_sequences(tok, plan["seq_len"],
+                                       n_buckets=plan["n_buckets"],
+                                       eos_id=eos_id)
+        back = self._sink(frame, output_path)
         n_seq = back.count()
         self.progress("publish", {"rows": n_seq, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "vocab_size": len(vocab),
-                            "eos_id": eos_id,
-                            "n_merges": len(merges),
-                            "n_sequences": n_seq,
-                            "tokens_packed": n_seq * plan["seq_len"]}}
+        return [frame], {"vocab_size": len(vocab),
+                         "eos_id": eos_id,
+                         "n_merges": len(merges),
+                         "n_sequences": n_seq,
+                         "tokens_packed": n_seq * plan["seq_len"]}
 
-    def _run_corpus_census(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_corpus_census(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'census the corpus' / 'report corpus statistics': the
         mergeable per-stratum census (:func:`operators.text.
         corpus_census`) over the documents table — the standalone
@@ -2068,19 +1572,10 @@ class Pipeline:
         histogram (:func:`operators.text.census_histogram` — same
         mergeable-sums contract) to ``<output>_hist`` and inlines the
         per-bucket doc counts."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            census_histogram,
-            corpus_census,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        frame = corpus_census(docs)
+        docs = cat.documents
+        frame = text.corpus_census(docs)
         self.progress("census", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(frame, output_path)
         langs = {r["stratum"]: r["n_docs"] for r in
                  back.filter(F.col("kind") == "lang").collect()}
         total = back.filter(F.col("kind") == "__total__").first()
@@ -2088,27 +1583,20 @@ class Pipeline:
             # an empty corpus yields zero GROUPING SETS rows — reject
             # with a reason instead of a NoneType subscript crash
             # (matches the sibling targets' empty-corpus contract)
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        reports = {"plan": dict(plan),
-                   "n_docs": total["n_docs"],
+            raise Rejected("documents table is empty")
+        reports = {"n_docs": total["n_docs"],
                    "n_tokens": total["n_tokens"],
                    "n_chars": total["n_chars"],
                    "docs_per_lang": langs}
         outputs = [frame]
         if plan.get("histogram"):
-            hist = census_histogram(docs)
-            hist.write.mode("overwrite").parquet(output_path + "_hist")
-            hb = self.spark.read.parquet(output_path + "_hist")
+            hist = text.census_histogram(docs)
+            hb = self._sink(hist, output_path + "_hist")
             reports["docs_per_length_bucket"] = {
                 int(r["bucket"]): r["n_docs"] for r in
                 hb.filter(F.col("kind") == "__total__").collect()}
             reports["histogram_path"] = output_path + "_hist"
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-                histogram_quantiles,
-            )
-            reports["length_quantiles_per_lang"] = histogram_quantiles(
+            reports["length_quantiles_per_lang"] = text.histogram_quantiles(
                 hb, quantiles=(0.5, 0.9, 0.99), kind="lang")
             outputs.append(hist)
         if plan.get("distinct"):
@@ -2117,22 +1605,13 @@ class Pipeline:
             # can't maintain incrementally (values repeat across
             # batches); sketches land beside the census so the next
             # epoch folds instead of re-scanning
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-                hash32,
-                normalize_text,
-            )
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-                census_distinct,
-                estimate_distinct,
-            )
             fp = docs.withColumn(
-                "fp", hash32(normalize_text(
+                "fp", dedup.hash32(dedup.normalize_text(
                     F.coalesce(F.col("text"), F.lit("")))))
-            dcen = census_distinct(fp, "fp")
-            dcen.write.mode("overwrite").parquet(output_path + "_distinct")
-            db = self.spark.read.parquet(output_path + "_distinct")
+            dcen = text.census_distinct(fp, "fp")
+            db = self._sink(dcen, output_path + "_distinct")
             ests = {(r["kind"], r["stratum"]): (r["n_distinct"], r["n_rows"])
-                    for r in estimate_distinct(db).collect()}
+                    for r in text.estimate_distinct(db).collect()}
             reports["distinct_docs_per_lang"] = {
                 s: round(v[0], 1) for (k, s), v in ests.items()
                 if k == "lang"}
@@ -2144,11 +1623,10 @@ class Pipeline:
             outputs.append(dcen)
         self.progress("publish", {"rows": back.count(),
                                   "path": output_path})
-        return {"status": "complete", "outputs": outputs,
-                "reports": reports}
+        return outputs, reports
 
-    def _run_semantic_dedup(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+    def _run_semantic_dedup(self, plan: dict, cat: Catalog,
+                            output_path: str) -> Result:
         """'semantically dedup ...': SemDeDup over the embeddings
         table (:func:`operators.similarity.semantic_dedup`) — kept
         rows written to the sink with an in/out count report.
@@ -2160,37 +1638,20 @@ class Pipeline:
         corpus to keep per-cluster size (and so total pair work)
         bounded; the chosen value lands in the progress report and
         the plan echo."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            semantic_dedup,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        emb = cat.embeddings
+        n_in = _nonempty_count(emb, "embeddings")
         if not plan.get("n_clusters"):
             plan["n_clusters"] = derive_n_clusters(n_in)
-        frame = semantic_dedup(emb, threshold=plan["threshold"],
-                               n_clusters=plan["n_clusters"],
-                               keep=plan["keep"])
+        frame = similarity.semantic_dedup(emb, threshold=plan["threshold"],
+                                          n_clusters=plan["n_clusters"],
+                                          keep=plan["keep"])
         self.progress("dedup", {"params": dict(plan),
                                 "n_clusters": plan["n_clusters"]})
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "rows_in": n_in, "rows_kept": n_out}}
+        return self._publish(frame, output_path, "rows_kept",
+                             rows_in=n_in)
 
-    def _run_cluster_corpus(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+    def _run_cluster_corpus(self, plan: dict, cat: Catalog,
+                            output_path: str) -> Result:
         """'cluster the embeddings into 12 topics': standalone corpus
         clustering (:func:`operators.similarity.cluster_embeddings`)
         — per-vector assignments + coherence land at the sink, the
@@ -2199,24 +1660,11 @@ class Pipeline:
         per-cluster sizes + mean center-cosine. An unnamed cluster
         count derives from the corpus via :func:`derive_n_clusters`
         (constant target cluster SIZE, same reasoning as SemDeDup)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            cluster_embeddings,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        emb = cat.embeddings
+        n_in = _nonempty_count(emb, "embeddings")
         if not plan.get("n_clusters"):
             plan["n_clusters"] = derive_n_clusters(n_in)
-        assign, centers = cluster_embeddings(
+        assign, centers = similarity.cluster_embeddings(
             emb, n_clusters=plan["n_clusters"])
         self.progress("cluster", {"params": dict(plan),
                                   "n_clusters": plan["n_clusters"]})
@@ -2229,66 +1677,42 @@ class Pipeline:
                  .collect())
         self.progress("publish", {"rows": back.count(),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [assign, centers],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "centers_path": output_path + "_centers",
-                            "cluster_sizes": {int(r["cluster"]): r["n"]
-                                              for r in stats},
-                            "cluster_coherence": {int(r["cluster"]):
-                                                  r["coherence"]
-                                                  for r in stats}}}
+        return [assign, centers], {"rows_in": n_in,
+                                   "centers_path": output_path + "_centers",
+                                   "cluster_sizes": {int(r["cluster"]): r["n"]
+                                                     for r in stats},
+                                   "cluster_coherence": {int(r["cluster"]):
+                                                         r["coherence"]
+                                                         for r in stats}}
 
-    def _run_cluster_assign(self, plan: dict, source_dir: str,
-                            output_path: str) -> dict:
+    def _run_cluster_assign(self, plan: dict, cat: Catalog,
+                            output_path: str) -> Result:
         """'assign the new embeddings to the clusters at <path>': map
         a fresh batch onto a persisted cluster map
         (:func:`operators.similarity.assign_to_centers` — broadcast
         GEMM argmin, no refit, no rescan of the fit corpus; the
         data-map twin of the frozen-index append). Rejected with an
         actionable reason when the path is missing or unreadable."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            assign_to_centers,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("centers_path"):
-            return {"status": "rejected",
-                    "reason": "cluster_assign needs 'clusters at <path>'",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no cluster map readable at "
+                      f"{plan['centers_path']}"):
             centers = self.spark.read.parquet(plan["centers_path"])
             # explicit raise, not assert: -O strips asserts and a
             # malformed store must reject, not crash downstream
             if not {"cluster", "center"} <= set(centers.columns):
                 raise ValueError("not a cluster map")
-        except Exception:
-            return {"status": "rejected",
-                    "reason": ("no cluster map readable at "
-                               f"{plan['centers_path']}"),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        emb = Catalog(self.spark, source_dir).embeddings
-        n_in = emb.count()
-        if n_in == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        assign = assign_to_centers(emb, centers)
+        emb = cat.embeddings
+        n_in = _nonempty_count(emb, "embeddings")
+        assign = similarity.assign_to_centers(emb, centers)
         self.progress("assign", {"params": dict(plan),
                                  "n_centers": centers.count()})
-        assign.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        stats = (back.groupBy("cluster")
-                 .agg(F.count(F.lit(1)).alias("n")).collect())
+        back = self._sink(assign, output_path)
+        sizes = _counts(back, "cluster")
         self.progress("publish", {"rows": back.count(),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [assign],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "cluster_sizes": {int(r["cluster"]): r["n"]
-                                              for r in stats}}}
+        return [assign], {"rows_in": n_in, "cluster_sizes": sizes}
 
-    def _run_verify_shards(self, plan: dict, output_path: str) -> dict:
+    def _run_verify_shards(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'verify the shards at /path against the manifest': the
         receiving side of a data shipment — recompute the
         order-insensitive per-shard fingerprints over the shard set
@@ -2298,69 +1722,44 @@ class Pipeline:
         actionable reason when no shard path is named; the verdict +
         mismatched shard ids land in the report AND at the sink as a
         one-row-per-shard status frame."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            verify_shard_manifest,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        if not plan.get("shards_path"):
-            return {"status": "rejected",
-                    "reason": "verify_shards needs 'shards at <path>'",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         mpath = plan.get("manifest_path") or \
             plan["shards_path"].rstrip("/") + "_manifest"
-        try:
+        with _rejects(f"no manifest readable at {mpath}"):
             manifest = self.spark.read.parquet(mpath)
-        except Exception:
-            return {"status": "rejected",
-                    "reason": f"no manifest readable at {mpath}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         self.progress("verify", {"params": dict(plan),
                                  "manifest_path": mpath})
         # a sha256 column marks a write_webdataset manifest — verify
         # the tar files byte-for-byte (distributed sha2 scan) instead
         # of recomputing parquet row fingerprints
         is_wds = "sha256" in manifest.columns
-        try:
+        with _rejects(f"no shard set readable at {plan['shards_path']}"):
             if is_wds:
-                from dynamic_etl_pipeline_thesis_ii_spark.sources. \
-                    sinks import verify_webdataset
-                chk = verify_webdataset(self.spark,
-                                        plan["shards_path"], manifest)
+                chk = sinks.verify_webdataset(self.spark,
+                                              plan["shards_path"], manifest)
             else:
-                chk = verify_shard_manifest(
+                chk = sinks.verify_shard_manifest(
                     self.spark, plan["shards_path"], manifest)
-        except Exception:
-            return {"status": "rejected",
-                    "reason": ("no shard set readable at "
-                               f"{plan['shards_path']}"),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         bad = set(chk["mismatched"])
         # union so an EXTRA shard directory (present on disk, absent
         # from the manifest) still gets a status row
-        if is_wds:
-            shard_ids = {r["file"] for r in manifest.collect()} | bad
-            status_frame = self.spark.createDataFrame(
-                [(s, "mismatch" if s in bad else "ok")
-                 for s in sorted(shard_ids)],
-                "file string, status string")
-        else:
-            shard_ids = ({int(r["shard"]) for r in manifest.collect()}
-                         | bad)
-            status_frame = self.spark.createDataFrame(
-                [(s, "mismatch" if s in bad else "ok")
-                 for s in sorted(shard_ids)],
-                "shard int, status string")
+        key, as_id, schema = (("file", str, "file string") if is_wds
+                              else ("shard", int, "shard int"))
+        shard_ids = {as_id(r[key]) for r in manifest.collect()} | bad
+        status_frame = self.spark.createDataFrame(
+            [(s, "mismatch" if s in bad else "ok")
+             for s in sorted(shard_ids)], f"{schema}, status string")
         status_frame.write.mode("overwrite").parquet(output_path)
         self.progress("publish", {"rows": chk["n_shards"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [status_frame],
-                "reports": {"plan": dict(plan), "ok": chk["ok"],
-                            "n_shards": chk["n_shards"],
-                            "manifest_path": mpath,
-                            "mismatched_shards": chk["mismatched"]}}
+        return [status_frame], {"ok": chk["ok"],
+                                "n_shards": chk["n_shards"],
+                                "manifest_path": mpath,
+                                "mismatched_shards": chk["mismatched"]}
 
-    def _run_data_card(self, plan: dict, source_dir: str,
-                       output_path: str) -> dict:
+    def _run_data_card(self, plan: dict, cat: Catalog,
+                       output_path: str) -> Result:
         """'generate a data card for the corpus': the
         Datasheets-for-Datasets capstone — one run composing the
         corpus's headline composition (census: docs/tokens/chars per
@@ -2374,37 +1773,14 @@ class Pipeline:
         companion). Four one-scan aggregations total, every
         driver-side object bounded by |strata| — never by corpus
         size."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            hash32,
-            normalize_text,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            census_distinct,
-            census_histogram,
-            code_features,
-            corpus_census,
-            estimate_distinct,
-            gopher_rules,
-            histogram_quantiles,
-            lang_id,
-            quality_features,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            write_run_artifacts,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        docs = Catalog(self.spark, source_dir).documents
-        census = corpus_census(docs)
-        census.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        docs = cat.documents
+        census = text.corpus_census(docs)
+        back = self._sink(census, output_path)
         total = back.filter(F.col("kind") == "__total__").first()
         if total is None or total["n_docs"] == 0:
-            return {"status": "rejected",
-                    "reason": "documents table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            raise Rejected("documents table is empty")
         self.progress("census", {"params": dict(plan)})
         comp = {
             "n_docs": total["n_docs"], "n_tokens": total["n_tokens"],
@@ -2416,32 +1792,31 @@ class Pipeline:
                                 back.filter(F.col("kind") == "source")
                                 .collect()},
         }
-        hist = census_histogram(docs)
-        hist.write.mode("overwrite").parquet(output_path + "_hist")
-        hist = self.spark.read.parquet(output_path + "_hist")
+        hist = text.census_histogram(docs)
+        hist = self._sink(hist, output_path + "_hist")
         # quantiles read the persisted sidecar — the card's consumer
         # gets the full distribution, not just three cut points
-        lengths = histogram_quantiles(hist, quantiles=(0.5, 0.9, 0.99),
-                                      kind="lang")
+        lengths = text.histogram_quantiles(hist, quantiles=(0.5, 0.9, 0.99),
+                                           kind="lang")
         self.progress("lengths", {"langs": len(lengths)})
         fp = docs.withColumn(
-            "fp", hash32(normalize_text(
+            "fp", dedup.hash32(dedup.normalize_text(
                 F.coalesce(F.col("text"), F.lit("")))))
-        dist = estimate_distinct(census_distinct(fp, "fp")) \
+        dist = text.estimate_distinct(text.census_distinct(fp, "fp")) \
             .filter(F.col("kind") == "__total__").first()
         dup = {"distinct_docs_estimate": round(dist["n_distinct"], 1),
                "approx_dup_rate": round(
                    1.0 - min(1.0, dist["n_distinct"] / dist["n_rows"]),
                    4) if dist["n_rows"] else 0.0}
-        q = quality_features(F.col("text"))
-        g = gopher_rules(F.col("text"))
-        c = code_features(F.col("text"))
+        q = text.quality_features(F.col("text"))
+        g = text.gopher_rules(F.col("text"))
+        c = text.code_features(F.col("text"))
         qrow = docs.agg(
             F.round(F.avg(q["quality_score"]), 4).alias("mean_quality"),
             F.round(F.avg(g["gopher_pass"].cast("double")), 4)
             .alias("gopher_pass_rate"),
             F.round(F.avg(c["code_score"]), 4).alias("mean_code_score"),
-            F.round(F.avg((lang_id(F.col("text")) == F.col("lang"))
+            F.round(F.avg((text.lang_id(F.col("text")) == F.col("lang"))
                           .cast("double")), 4)
             .alias("lang_id_agreement")).first()
         quality = {k: qrow[k] for k in
@@ -2451,13 +1826,7 @@ class Pipeline:
         # governance: the datasheet's licensing section — per-class
         # doc counts from the T19 scan (one extra aggregate over the
         # same text column; |classes| <= 5 driver-side)
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            license_class,
-        )
-        licensing = {r["c"]: r["n"] for r in
-                     docs.groupBy(license_class(F.col("text"))
-                                  .alias("c"))
-                     .agg(F.count(F.lit(1)).alias("n")).collect()}
+        licensing = _counts(docs, text.license_class(F.col("text")))
         card = {"composition": comp,
                 "length_quantiles_per_lang": lengths,
                 "duplication": dup, "quality": quality,
@@ -2473,16 +1842,13 @@ class Pipeline:
         # not just what the corpus IS but how a budgeted training run
         # would draw from it.
         if plan.get("mix_budget") is not None:
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-                unimax_epochs,
-            )
             toks_per_lang = {
                 r["stratum"]: r["n_tokens"]
                 for r in back.filter((F.col("kind") == "lang")
                                      & (F.col("stratum") != "__null__"))
                 .collect()}
-            eps = unimax_epochs(toks_per_lang, plan["mix_budget"],
-                                plan["mix_epochs"])
+            eps = sampling.unimax_epochs(toks_per_lang, plan["mix_budget"],
+                                         plan["mix_epochs"])
             card["suggested_mix"] = {
                 "budget_tokens": plan["mix_budget"],
                 "max_epochs": plan["mix_epochs"],
@@ -2508,23 +1874,15 @@ class Pipeline:
         # count-only Arrow pass. A NAMED-but-unreadable store rejects
         # (the user asked for a section the run cannot produce).
         if plan.get("tokenizer_path"):
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.bpe import (
-                tokenizer_stats,
-            )
-            try:
+            with _rejects(f"no tokenizer readable at "
+                          f"{plan['tokenizer_path']}"):
                 kind, kw = self._load_tokenizer_store(
                     plan["tokenizer_path"])
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no tokenizer readable at "
-                                  f"{plan['tokenizer_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
             lang_col = "lang" if "lang" in docs.columns else None
             t_rows = sorted(
                 (r.asDict() for r in
-                 tokenizer_stats(docs, lang_col=lang_col,
-                                 **kw).collect()),
+                 bpe.tokenizer_stats(docs, lang_col=lang_col,
+                                     **kw).collect()),
                 key=lambda r: r["lang"])
             t_toks = sum(r["n_tokens"] for r in t_rows)
             t_words = sum(r["n_words"] for r in t_rows)
@@ -2546,41 +1904,38 @@ class Pipeline:
         # scan: dHash/aHash/vHash), not a mime guess. Absent media ->
         # the section says so explicitly rather than silently reading
         # as text-only.
-        media = self._media_or_none(source_dir)
-        if media is None:
+        try:
+            media = self._media(cat)
+        except Rejected:
             card["media"] = {"present": False}
         else:
-            from dynamic_etl_pipeline_thesis_ii_spark.operators.multimodal import (
-                audio_ahash,
-                image_dhash,
-                media_census,
-                video_vhash,
+            from dynamic_etl_pipeline_thesis_ii_spark.operators import (
+                multimodal,
             )
             kinds = {r["stratum"]: {"n_items": r["n_items"],
                                     "n_bytes": r["n_bytes"]}
-                     for r in media_census(media).collect()
+                     for r in multimodal.media_census(media).collect()
                      if r["kind"] == "media_kind"}
             card["media"] = {"present": True, "per_kind": kinds}
-            for mod, noun, fp in (("image", "images", image_dhash),
-                                  ("audio", "clips", audio_ahash),
-                                  ("video", "videos", video_vhash)):
+            for mod, noun, fp in (("image", "images", multimodal.image_dhash),
+                                  ("audio", "clips", multimodal.audio_ahash),
+                                  ("video", "videos", multimodal.video_vhash)):
                 n_kind = kinds.get(mod, {}).get("n_items", 0)
                 n_dec = fp(media).count() if n_kind else 0
                 card["media"][f"{noun}_decodable"] = n_dec
                 card["media"][f"{mod}_decodable_fraction"] = round(
                     n_dec / n_kind, 4) if n_kind else None
             self.progress("media", card["media"])
-        card_path = write_run_artifacts(output_path + "_card",
-                                        {"data_card": card})
+        card_path = sinks.write_run_artifacts(output_path + "_card",
+                                              {"data_card": card})
         self.progress("publish", {"rows": back.count(),
                                   "path": output_path,
                                   "card_path": card_path})
-        return {"status": "complete", "outputs": [census],
-                "reports": {"plan": dict(plan), "data_card": card,
-                            "card_path": card_path}}
+        return [census], {"data_card": card,
+                          "card_path": card_path}
 
-    def _run_decontaminate(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_decontaminate(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'decontaminate the corpus against the benchmark at /path':
         drop corpus rows that leak benchmark content, surviving rows
         land at the sink with an in/kept/flagged report.
@@ -2600,61 +1955,31 @@ class Pipeline:
         streaming corpus scan — no corpus shuffle; the flagged-id set
         (bounded by the benchmark's neighborhood) broadcasts into the
         anti-join."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            contamination_pairs,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            semantic_contamination,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("benchmark_path"):
-            return {"status": "rejected",
-                    "reason": "decontamination needs a benchmark path "
-                              "('... against the benchmark at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        # a missing/unreadable benchmark is an actionable rejection
+        # (the verify_shards/ann_index_append contract), not an
+        # AnalysisException stacktrace
+        with _rejects(f"no benchmark readable at "
+                      f"{plan['benchmark_path']}"):
             bench = self.spark.read.parquet(plan["benchmark_path"])
-        except Exception as exc:
-            # a missing/unreadable benchmark is an actionable
-            # rejection (the verify_shards/ann_index_append contract),
-            # not an AnalysisException stacktrace
-            return {"status": "rejected",
-                    "reason": f"no benchmark readable at "
-                              f"{plan['benchmark_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         if plan["semantic"]:
-            corpus = Catalog(self.spark, source_dir).embeddings
-            pairs = semantic_contamination(
+            corpus, key = cat.embeddings, "vec_id"
+            pairs = similarity.semantic_contamination(
                 corpus, bench, threshold=plan["threshold"])
-            flagged = (pairs.select(F.col("id_a").alias("vec_id"))
-                       .distinct())
-            kept = corpus.join(F.broadcast(flagged), "vec_id",
-                               "left_anti")
         else:
-            corpus = Catalog(self.spark, source_dir).documents
-            pairs = contamination_pairs(
+            corpus, key = cat.documents, "doc_id"
+            pairs = dedup.contamination_pairs(
                 corpus, bench, k=5, min_overlap=plan["min_overlap"])
-            flagged = (pairs.select(F.col("id_a").alias("doc_id"))
-                       .distinct())
-            kept = corpus.join(F.broadcast(flagged), "doc_id",
-                               "left_anti")
+        flagged = pairs.select(F.col("id_a").alias(key)).distinct()
+        kept = corpus.join(F.broadcast(flagged), key, "left_anti")
         n_in = corpus.count()
         n_flagged = flagged.count()
         self.progress("decontaminate", {"params": dict(plan),
                                         "flagged": n_flagged})
-        kept.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [kept],
-                "reports": {"plan": dict(plan), "rows_in": n_in,
-                            "rows_flagged": n_flagged,
-                            "rows_kept": n_out}}
+        return self._publish(kept, output_path, "rows_kept",
+                             rows_in=n_in, rows_flagged=n_flagged)
 
-    def _run_decontaminate_spans(self, plan: dict, source_dir: str,
-                                 output_path: str) -> dict:
+    def _run_decontaminate_spans(self, plan: dict, cat: Catalog,
+                                 output_path: str) -> Result:
         """'remove benchmark passages from the corpus against the
         benchmark at /path (windows of 20 tokens)': span-surgical
         decontamination (D19 — :func:`operators.dedup.
@@ -2664,61 +1989,18 @@ class Pipeline:
         documents quoting one eval item. 'flag'/'find' phrasings
         report the span table without rewriting. Rejects a missing
         or unreadable benchmark path."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            apply_span_removal,
-            benchmark_span_flags,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("benchmark_path"):
-            return {"status": "rejected",
-                    "reason": "span decontamination needs a "
-                              "benchmark path ('against the "
-                              "benchmark at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
+        with _rejects(f"no benchmark readable at "
+                      f"{plan['benchmark_path']}"):
             bench = self.spark.read.parquet(plan["benchmark_path"])
             bench.schema
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no benchmark readable at "
-                              f"{plan['benchmark_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        corpus = Catalog(self.spark, source_dir).documents
-        spans = benchmark_span_flags(corpus, bench, w=plan["window"])
-        if plan.get("flag_only"):
-            spans.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
-            n_spans = back.count()
-            n_docs = back.select("id").distinct().count()
-            self.progress("publish", {"rows": n_spans,
-                                      "path": output_path})
-            return {"status": "complete", "outputs": [spans],
-                    "reports": {"plan": dict(plan),
-                                "spans_flagged": n_spans,
-                                "docs_affected": n_docs}}
-        cleaned = apply_span_removal(corpus, spans)
-        self.progress("decontaminate_spans", {"params": dict(plan)})
-        cleaned.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        agg = back.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
-            .alias("affected"),
-            F.sum("n_removed").alias("removed")).first()
-        self.progress("publish", {"rows": agg["docs"],
-                                  "path": output_path})
-        return {"status": "complete", "outputs": [cleaned],
-                "reports": {"plan": dict(plan),
-                            "docs_out": agg["docs"],
-                            "docs_affected": int(agg["affected"] or 0),
-                            "tokens_removed": int(agg["removed"] or 0)}}
+        corpus = cat.documents
+        spans = dedup.benchmark_span_flags(corpus, bench, w=plan["window"])
+        return self._publish_spans(
+            plan, spans, lambda: dedup.apply_span_removal(corpus, spans),
+            "decontaminate_spans", output_path)
 
-    def _run_retrieve(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+    def _run_retrieve(self, plan: dict, cat: Catalog,
+                      output_path: str) -> Result:
         """'search the corpus for "hash join strategies", top 5' /
         'retrieve the best documents for "x" and "y"': BM25 lexical
         retrieval (:func:`operators.text.bm25_topk`) over the
@@ -2736,38 +2018,19 @@ class Pipeline:
         parquet, the corpus never rescans (the lang/source join back
         to the documents table is a pruned two-column projection, no
         text read)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            bm25_topk,
-            search_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("queries"):
-            return {"status": "rejected",
-                    "reason": "retrieval needs at least one quoted "
-                              "query string ('search the corpus for "
-                              "\"...\"')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         qset = self.spark.createDataFrame(
             [(i + 1, q) for i, q in enumerate(plan["queries"])],
             "query_id bigint, query_text string")
         if plan.get("index_path"):
-            try:
+            with _rejects(f"no retrieval index readable at "
+                          f"{plan['index_path']}"):
                 self.spark.read.parquet(
                     plan["index_path"].rstrip("/") + "/stats").first()
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no retrieval index readable at "
-                                  f"{plan['index_path']}: {exc}",
-                        "outputs": [],
-                        "reports": {"plan": dict(plan)}}
-            hits = search_bm25_index(self.spark, plan["index_path"],
-                                     qset, k=plan["k"])
+            hits = text.search_bm25_index(self.spark, plan["index_path"],
+                                          qset, k=plan["k"])
         else:
-            hits = bm25_topk(docs, qset, k=plan["k"])
+            hits = text.bm25_topk(docs, qset, k=plan["k"])
         frame = (hits
                  .join(F.broadcast(qset), "query_id")
                  .join(docs.select(F.col("doc_id").alias("id"),
@@ -2775,19 +2038,15 @@ class Pipeline:
                  .select("query_id", "query_text", "rank", "id",
                          "bm25", "n_terms", "lang", "source"))
         self.progress("retrieve", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        counts = {r["query_text"]: r["n"]
-                  for r in back.groupBy("query_text")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
+        back = self._sink(frame, output_path)
+        counts = _counts(back, "query_text")
         self.progress("publish", {"rows": sum(counts.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "hits_per_query": counts,
-                            "rows_written": sum(counts.values())}}
+        return [frame], {"hits_per_query": counts,
+                         "rows_written": sum(counts.values())}
 
-    def _run_corpus_store_build(self, plan: dict, source_dir: str,
-                                output_path: str) -> dict:
+    def _run_corpus_store_build(self, plan: dict, cat: Catalog,
+                                output_path: str) -> Result:
         """'build a bucketed corpus store, 32 buckets': persist the
         documents table hash-bucketed by doc_id
         (:func:`sources.sinks.save_corpus_store`) so every later
@@ -2795,24 +2054,18 @@ class Pipeline:
         only the buckets holding batch keys. Bucket count derives
         corpus-proportionally when unnamed (constant rows per bucket
         — the rewrite unit must stay batch-scale at 100 TB)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            save_corpus_store,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         self.progress("build_store", {"params": dict(plan)})
-        report = save_corpus_store(docs, output_path,
-                                   n_buckets=plan["n_buckets"])
+        report = sinks.save_corpus_store(docs, output_path,
+                                         n_buckets=plan["n_buckets"])
         self.progress("publish", {"rows": report["rows"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        return [], report
 
-    def _run_webdataset_write(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_webdataset_write(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'export the corpus as webdataset, 8 shards' / 'write the
         corpus to webdataset shards at 64 mb': tar-shard export for
         streaming training loaders (:func:`sources.sinks.
@@ -2821,49 +2074,47 @@ class Pipeline:
         manifest beside them). Shard count derives from corpus bytes
         against the mb target when unnamed; a duplicate-key corpus is
         rejected actionably (WebDataset keys must be unique)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            SinkError,
-            write_webdataset,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
         self.progress("export", {"params": dict(plan)})
         dest = output_path.rstrip("/") + "/webdataset"
         if plan.get("table") == "media":
-            from dynamic_etl_pipeline_thesis_ii_spark.operators. \
-                multimodal import container_ext
-            media = self._media_or_none(source_dir)
-            if media is None:
-                return {"status": "rejected",
-                        "reason": f"no media table readable at "
-                                  f"{source_dir}/media.parquet",
-                        "outputs": [], "reports": {"plan": dict(plan)}}
+            from dynamic_etl_pipeline_thesis_ii_spark.operators import (
+                multimodal,
+            )
+            media = self._media(cat)
             frame = media.withColumn(
-                "__ext", container_ext("payload", "kind")
+                "__ext", multimodal.container_ext("payload", "kind")
                 if "kind" in media.columns
-                else container_ext("payload"))
+                else multimodal.container_ext("payload"))
             kwargs = dict(key_col="media_id", text_col=None,
                           binary_col="payload", ext_col="__ext")
         else:
-            frame = Catalog(self.spark, source_dir).documents
+            frame = cat.documents
             kwargs = dict(key_col="doc_id")
         try:
-            report = write_webdataset(
+            report = sinks.write_webdataset(
                 frame, dest,
                 n_shards=plan["n_shards"],
                 target_shard_mb=plan["target_shard_mb"], **kwargs)
-        except SinkError as exc:
-            return {"status": "rejected", "reason": str(exc),
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        except sinks.SinkError as exc:
+            raise Rejected(str(exc))
         self.progress("publish", {"rows": report["rows_written"],
                                   "path": dest})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        return [], report
 
-    def _run_corpus_upsert(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _corpus_store(self, plan: dict) -> str:
+        """The named bucketed corpus store, once its geometry sidecar
+        reads back."""
+        store = plan["store_path"].rstrip("/")
+        with _rejects(f"no corpus store readable at "
+                      f"{plan['store_path']} (build one "
+                      f"with 'build a bucketed corpus store')"):
+            self.spark.read.parquet(store + "_meta").first()
+        return store
+
+    def _run_corpus_upsert(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'upsert the batch into the corpus store at /path': MERGE
         the source dir's documents into a persisted bucketed store
         (:func:`sources.sinks.merge_into_corpus` — batch rows replace
@@ -2871,42 +2122,19 @@ class Pipeline:
         rewrite, untouched directories stay byte-identical). The
         batch also lands at the run's output for lineage. Rejects a
         missing path or a path without a store geometry sidecar."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            merge_into_corpus,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "corpus upsert needs a store path "
-                              "('... into the corpus store at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        store = plan["store_path"].rstrip("/")
-        try:
-            self.spark.read.parquet(store + "_meta").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no corpus store readable at "
-                              f"{plan['store_path']} (build one "
-                              f"with 'build a bucketed corpus "
-                              f"store'): {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        batch = Catalog(self.spark, source_dir).documents
-        report = merge_into_corpus(self.spark, store, batch)
+        store = self._corpus_store(plan)
+        batch = cat.documents
+        report = sinks.merge_into_corpus(self.spark, store, batch)
         self.progress("upsert", {"params": dict(plan), **report})
-        batch.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
+        n_out = self._sink(batch, output_path).count()
         self.progress("publish", {"rows": n_out, "path": store})
-        return {"status": "complete", "outputs": [batch],
-                "reports": {"plan": dict(plan), **report,
-                            "batch_rows": n_out}}
+        return [batch], {**report,
+                         "batch_rows": n_out}
 
-    def _run_corpus_rebucket(self, plan: dict,
-                             output_path: str) -> dict:
+    def _run_corpus_rebucket(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'rebucket the corpus store at /path': re-derive the
         store's bucket count from its CURRENT rows and rewrite to the
         run's output (:func:`sources.sinks.rebucket_corpus_store` —
@@ -2917,36 +2145,17 @@ class Pipeline:
         restores constant rows/bucket and later merges against the
         new path are batch-cost again. Rejects a missing path or a
         path without the store's geometry sidecar."""
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-            rebucket_corpus_store,
-        )
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
-        if not plan.get("store_path"):
-            return {"status": "rejected",
-                    "reason": "rebucket needs a store path "
-                              "('rebucket the corpus store at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        store = plan["store_path"].rstrip("/")
-        try:
-            self.spark.read.parquet(store + "_meta").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no corpus store readable at "
-                              f"{plan['store_path']} (build one "
-                              f"with 'build a bucketed corpus "
-                              f"store'): {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        report = rebucket_corpus_store(self.spark, store, output_path)
+        store = self._corpus_store(plan)
+        report = sinks.rebucket_corpus_store(self.spark, store, output_path)
         self.progress("rebucket", {"params": dict(plan), **report})
         self.progress("publish", {"rows": report["rows"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        return [], report
 
-    def _run_hybrid_search(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_hybrid_search(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'find documents like doc 42 using both keywords and
         embeddings, top 5': hybrid more-like-this — the named
         documents' own text feeds the BM25 tower and their own
@@ -2966,39 +2175,10 @@ class Pipeline:
         Scale: the query set is the handful of named ids — both
         towers broadcast it; the corpus never shuffles on anything
         but its own aggregates (store-backed: the probed lists)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            hybrid_topk,
-            load_index_tuning,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("doc_ids"):
-            return {"status": "rejected",
-                    "reason": "hybrid search needs document ids "
-                              "('like doc 42')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         dense_index, n_probe, probe_source = None, None, None
         if plan.get("index_path"):
-            try:
-                dense_index = load_ivfpq_index(self.spark,
-                                               plan["index_path"])
-            except Exception as exc:
-                return {"status": "rejected",
-                        "reason": f"no loadable index store at "
-                                  f"{plan['index_path']}: {exc}",
-                        "outputs": [], "reports": {"plan": dict(plan)}}
-            n_probe, probe_source = plan.get("n_probe"), "query"
-            if n_probe is None:
-                tuned = load_index_tuning(self.spark,
-                                          plan["index_path"])
-                if tuned and tuned.get("tuned_n_probe") is not None:
-                    n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-                else:
-                    n_probe, probe_source = 2, "default"
-        cat = Catalog(self.spark, source_dir)
+            dense_index = self._load_index(plan)
+            n_probe, probe_source = self._n_probe(plan)
         docs = cat.documents.select("doc_id", "text")
         emb = cat.embeddings
         ids = [int(i) for i in plan["doc_ids"]]
@@ -3013,63 +2193,47 @@ class Pipeline:
                  queries.select("query_id").collect()]
         missing = sorted(set(ids) - set(found))
         if missing:
-            return {"status": "rejected",
-                    "reason": f"no document+embedding for ids "
-                              f"{missing} ('like doc N' needs both)",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        cands = emb.select(F.col("vec_id").alias("c_id"),
-                           F.col("embedding").alias("c_vec"))
-        hits = (hybrid_topk(docs, cands, queries,
-                            k=plan["k"] + 1, k_pool=plan["k"] + 10,
-                            dense_index=dense_index,
-                            n_probe=n_probe or 2)
+            raise Rejected(f"no document+embedding for ids "
+                           f"{missing} ('like doc N' needs both)")
+        cands = _vectors(emb, "c")
+        hits = (similarity.hybrid_topk(docs, cands, queries,
+                                       k=plan["k"] + 1, k_pool=plan["k"] + 10,
+                                       dense_index=dense_index,
+                                       n_probe=n_probe or 2)
                 .filter(F.col("id") != F.col("query_id")))
         self.progress("hybrid_search", {"params": dict(plan),
                                         "dense_arm": ("ivf" if dense_index
                                                       else "brute")})
-        hits.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        counts = {int(r["query_id"]): r["n"]
-                  for r in back.groupBy("query_id")
-                  .agg(F.count(F.lit(1)).alias("n")).collect()}
+        back = self._sink(hits, output_path)
+        counts = _counts(back, "query_id")
         both = back.filter(F.col("n_arms") == 2).count()
         self.progress("publish", {"rows": sum(counts.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [hits],
-                "reports": {"plan": dict(plan),
-                            "hits_per_query": counts,
-                            "hits_in_both_towers": both,
-                            "dense_arm": ("ivf" if dense_index
-                                          else "brute"),
-                            **({"n_probe": n_probe,
-                                "n_probe_source": probe_source}
-                               if dense_index else {})}}
+        return [hits], {"hits_per_query": counts,
+                        "hits_in_both_towers": both,
+                        "dense_arm": ("ivf" if dense_index
+                                      else "brute"),
+                        **({"n_probe": n_probe,
+                            "n_probe_source": probe_source}
+                           if dense_index else {})}
 
-    def _run_bm25_index_build(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_bm25_index_build(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'build a retrieval index over the corpus': persist the BM25
         inverted index (:func:`operators.text.save_bm25_index` —
         tok-sorted postings + df/dl/stats sidecars) at the output.
         The lexical twin of `_run_ann_index_build`: build pays the
         corpus scan exactly once, every later 'search the index at
         /path for "..."' answers at query cost."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            save_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         self.progress("build_index", {"params": dict(plan)})
-        report = save_bm25_index(docs, output_path)
+        report = text.save_bm25_index(docs, output_path)
         self.progress("publish", {"rows": report["n_postings"],
                                   "path": output_path})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report}}
+        return [], report
 
-    def _run_bm25_index_append(self, plan: dict, source_dir: str,
-                               output_path: str) -> dict:
+    def _run_bm25_index_append(self, plan: dict, cat: Catalog,
+                               output_path: str) -> Result:
         """'add the new documents to the retrieval index at /path':
         the lexical epoch-N+1 step, twin of `_run_ann_index_append` —
         the source dir's documents tokenize/aggregate at BATCH cost
@@ -3079,41 +2243,22 @@ class Pipeline:
         later 'search the index at /path' folds the sidecars so
         scores equal a full rebuild exactly. Already-indexed ids are
         broadcast-prune skipped and counted in the report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.text import (
-            append_bm25_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": "index append needs an index path "
-                              "('... to the retrieval index at "
-                              "/path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
         store = plan["index_path"].rstrip("/")
-        try:
+        with _rejects(f"no retrieval index readable at "
+                      f"{plan['index_path']}"):
             self.spark.read.parquet(store + "/stats").first()
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no retrieval index readable at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [],
-                    "reports": {"plan": dict(plan)}}
-        docs = Catalog(self.spark, source_dir).documents
-        report = append_bm25_index(self.spark, store, docs)
+        docs = cat.documents
+        report = text.append_bm25_index(self.spark, store, docs)
         self.progress("append_index", {"params": dict(plan),
                                        **report})
         n_after = self.spark.read.parquet(store + "/dl").count()
         self.progress("publish", {"rows": report["n_new_postings"],
                                   "path": store})
-        return {"status": "complete", "outputs": [],
-                "reports": {"plan": dict(plan), **report,
-                            "docs_after": n_after}}
+        return [], {**report,
+                    "docs_after": n_after}
 
-    def _run_ann_search(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+    def _run_ann_search(self, plan: dict, cat: Catalog,
+                        output_path: str) -> Result:
         """'find the 10 nearest neighbors for each document, with an
         opq rotation': corpus self-kNN over the embeddings table via
         the IVF-PQ index (build + search — codes-only ADC with an
@@ -3129,43 +2274,21 @@ class Pipeline:
         sizing curve — probe cost |Q|·n_probe·n/lists stays bounded),
         rerank touches k·|Q| full vectors, everything else joins
         codes against broadcast LUTs."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_build,
-            ivfpq_search,
-            opq_rotation,
-            pq_reconstruction_mse,
-            pq_train,
-            rotate_vectors,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         if plan.get("index_path"):
-            return self._run_ann_search_store(plan, source_dir,
-                                              output_path)
-        emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            # k-means cannot fit zero rows — an empty corpus is an
-            # actionable rejection, not an opaque executor stacktrace
-            # (the cluster_corpus/semantic_dedup empty-corpus contract)
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+            return self._run_ann_search_store(plan, cat, output_path)
+        emb = cat.embeddings
+        n = _nonempty_count(emb, "embeddings")
         n_clusters = max(16, int(n ** 0.5))
-        cand = emb.select(F.col("vec_id").alias("c_id"),
-                          F.col("embedding").alias("c_vec"))
-        qry = emb.select(F.col("vec_id").alias("q_id"),
-                         F.col("embedding").alias("q_vec"))
+        cand = _vectors(emb, "c")
+        qry = _vectors(emb, "q")
         rotation, opq_report = None, None
         if plan["opq"]:
-            rotation = opq_rotation(emb, vec_col="embedding", m=4)
-            raw_books = pq_train(emb, vec_col="embedding", m=4)
-            rot = rotate_vectors(emb, rotation, vec_col="embedding")
-            rot_books = pq_train(rot, vec_col="embedding", m=4)
-            mse_raw = pq_reconstruction_mse(emb, raw_books)
-            mse_rot = pq_reconstruction_mse(rot, rot_books)
+            rotation = similarity.opq_rotation(emb, vec_col="embedding", m=4)
+            raw_books = similarity.pq_train(emb, vec_col="embedding", m=4)
+            rot = similarity.rotate_vectors(emb, rotation, vec_col="embedding")
+            rot_books = similarity.pq_train(rot, vec_col="embedding", m=4)
+            mse_raw = similarity.pq_reconstruction_mse(emb, raw_books)
+            mse_rot = similarity.pq_reconstruction_mse(rot, rot_books)
             opq_report = {
                 "mse_raw": round(mse_raw, 6),
                 "mse_rotated": round(mse_rot, 6),
@@ -3178,7 +2301,7 @@ class Pipeline:
         self.progress("plan_index", {"params": dict(plan),
                                      "n_clusters": n_clusters,
                                      "opq": opq_report})
-        centers, books, coded = ivfpq_build(
+        centers, books, coded = similarity.ivfpq_build(
             cand, n_clusters=n_clusters, m=4, rotation=rotation)
         # search k+1 with the exact rerank tier, drop self matches
         # (dist 0 to itself), re-rank to k — every surviving row is a
@@ -3187,26 +2310,21 @@ class Pipeline:
         # self-kNN means |queries| == |corpus|: past a broadcastable
         # size the |Q|-sized probe-LUT / rerank frames must SHUFFLE-
         # join (keyed exchanges) instead of shipping to every executor
-        hits = ivfpq_search(centers, books, coded, qry, k=k + 1,
-                            n_probe=2, rerank=2 * (k + 1),
-                            candidates=cand, rotation=rotation,
-                            broadcast_queries=n <= 100_000)
-        from pyspark.sql import Window
+        hits = similarity.ivfpq_search(centers, books, coded, qry, k=k + 1,
+                                       n_probe=2, rerank=2 * (k + 1),
+                                       candidates=cand, rotation=rotation,
+                                       broadcast_queries=n <= 100_000)
         w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(),
                                                F.col("c_id").asc())
         frame = (hits.filter(F.col("q_id") != F.col("c_id"))
                  .withColumn("rank", F.row_number().over(w))
                  .filter(F.col("rank") <= k))
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()  # read-back
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "n_clusters": n_clusters,
-                            "opq": opq_report, "rows_written": n_out}}
+        return self._publish(frame, output_path, "rows_written",
+                             n_vectors=n, n_clusters=n_clusters,
+                             opq=opq_report)
 
-    def _run_ann_search_store(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_ann_search_store(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'find the 10 nearest neighbors for each document using the
         ann index at /path': search the PERSISTED IVF-PQ store
         instead of rebuilding — the serve face that closes the
@@ -3219,65 +2337,31 @@ class Pipeline:
         exact-rerank tier here — results carry the ``adc`` column
         the index serves by); self matches drop by id when the store
         indexes the querying corpus itself."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_search,
-            load_index_tuning,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        n_probe, probe_source = plan.get("n_probe"), "query"
-        if n_probe is None:
-            tuned = load_index_tuning(self.spark, plan["index_path"])
-            if tuned and tuned.get("tuned_n_probe") is not None:
-                n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-            else:
-                n_probe, probe_source = 2, "default"
+        centers, books, coded, rotation = self._load_index(plan)
+        emb = cat.embeddings
+        n = _nonempty_count(emb, "embeddings")
+        n_probe, probe_source = self._n_probe(plan)
         k = plan["k"]
-        qry = emb.select(F.col("vec_id").alias("q_id"),
-                         F.col("embedding").alias("q_vec"))
+        qry = _vectors(emb, "q")
         self.progress("search_index", {"params": dict(plan),
                                        "n_probe": n_probe,
                                        "n_probe_source": probe_source})
         # corpus-sized query batches must not broadcast their LUTs
         # (the self-kNN rule in _run_ann_search)
-        hits = ivfpq_search(centers, books, coded, qry, k=k + 1,
-                            n_probe=n_probe, rotation=rotation,
-                            broadcast_queries=n <= 100_000)
-        from pyspark.sql import Window
+        hits = similarity.ivfpq_search(centers, books, coded, qry, k=k + 1,
+                                       n_probe=n_probe, rotation=rotation,
+                                       broadcast_queries=n <= 100_000)
         w = Window.partitionBy("q_id").orderBy(F.col("adc").asc(),
                                                F.col("c_id").asc())
         frame = (hits.filter(F.col("q_id") != F.col("c_id"))
                  .withColumn("rank", F.row_number().over(w))
                  .filter(F.col("rank") <= k))
-        frame.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
-        self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_queries": n,
-                            "n_probe": n_probe,
-                            "n_probe_source": probe_source,
-                            "ranking": "adc",
-                            "rows_written": n_out}}
+        return self._publish(frame, output_path, "rows_written",
+                             n_queries=n, n_probe=n_probe,
+                             n_probe_source=probe_source, ranking="adc")
 
-    def _run_ann_index_build(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_ann_index_build(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'build an ann index over the embeddings, 64 lists, with an
         opq rotation': fit the IVF-PQ index once and persist the
         complete store (centers/books/codes/rotation, plain parquet —
@@ -3287,45 +2371,28 @@ class Pipeline:
         step at 100 TB and happens exactly once. When the query names
         no list count it derives as sqrt(n) (the standard IVF sizing
         curve: probe cost |Q|·n_probe·n/lists stays bounded)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_build,
-            opq_rotation,
-            save_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        emb = Catalog(self.spark, source_dir).embeddings
-        n = emb.count()
-        if n == 0:
-            # same empty-corpus contract as _run_ann_search: reject
-            # before KMeans.fit sees zero rows
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        emb = cat.embeddings
+        n = _nonempty_count(emb, "embeddings")
         n_lists = plan["n_lists"] or max(16, int(n ** 0.5))
-        rotation = (opq_rotation(emb, vec_col="embedding", m=4)
+        rotation = (similarity.opq_rotation(emb, vec_col="embedding", m=4)
                     if plan["opq"] else None)
-        cand = emb.select(F.col("vec_id").alias("c_id"),
-                          F.col("embedding").alias("c_vec"))
-        centers, books, coded = ivfpq_build(
+        cand = _vectors(emb, "c")
+        centers, books, coded = similarity.ivfpq_build(
             cand, n_clusters=n_lists, m=4, rotation=rotation)
         self.progress("build_index", {"params": dict(plan),
                                       "n_lists": n_lists})
-        save_ivfpq_index(self.spark, centers, books, coded,
-                         output_path, rotation=rotation)
+        similarity.save_ivfpq_index(self.spark, centers, books, coded,
+                                    output_path, rotation=rotation)
         n_codes = self.spark.read.parquet(
             output_path + "/codes").count()       # read-back
         self.progress("publish", {"rows": n_codes, "path": output_path})
-        return {"status": "complete", "outputs": [coded],
-                "reports": {"plan": dict(plan), "n_vectors": n,
-                            "n_lists": n_lists, "m": 4,
-                            "opq": rotation is not None,
-                            "codes_written": n_codes}}
+        return [coded], {"n_vectors": n,
+                         "n_lists": n_lists, "m": 4,
+                         "opq": rotation is not None,
+                         "codes_written": n_codes}
 
-    def _run_ann_index_append(self, plan: dict, source_dir: str,
-                              output_path: str) -> dict:
+    def _run_ann_index_append(self, plan: dict, cat: Catalog,
+                              output_path: str) -> Result:
         """'append the new vectors to the index at /path': the ANN
         epoch-N+1 step, twin of the Bloom snapshot reload in
         `_run_incremental_dedup` — the source dir's embeddings encode
@@ -3337,35 +2404,12 @@ class Pipeline:
         store intact). The batch's own codes also land at the run's
         output for lineage. The report carries before/appended/after
         counts, with `after` from a read-back of the grown store."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ivfpq_append,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": "index append needs an index path "
-                              "('... to the index at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        centers, books, coded, rotation = self._load_index(plan)
         n_before = coded.count()
-        batch = Catalog(self.spark, source_dir).embeddings.select(
-            F.col("vec_id").alias("c_id"),
-            F.col("embedding").alias("c_vec"))
-        appended = ivfpq_append(centers, books, batch,
-                                rotation=rotation)
-        appended.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)   # read-back
+        batch = _vectors(cat.embeddings, "c")
+        appended = similarity.ivfpq_append(centers, books, batch,
+                                           rotation=rotation)
+        back = self._sink(appended, output_path)
         n_appended = back.count()
         self.progress("append_index", {"params": dict(plan),
                                        "appended": n_appended})
@@ -3374,57 +2418,50 @@ class Pipeline:
             plan["index_path"] + "/codes").count()
         self.progress("publish", {"rows": n_appended,
                                   "path": plan["index_path"]})
-        return {"status": "complete", "outputs": [appended],
-                "reports": {"plan": dict(plan),
-                            "codes_before": n_before,
+        return [appended], {"codes_before": n_before,
                             "codes_appended": n_appended,
-                            "codes_after": n_after}}
+                            "codes_after": n_after}
 
-    def _load_index_and_query_sample(self, plan: dict,
-                                     source_dir: str, noun: str):
+    def _load_index(self, plan: dict):
+        """The persisted IVF-PQ store at the plan's index path:
+        ``(centers, books, coded, rotation)``."""
+        with _rejects(f"no loadable index store at {plan['index_path']}"):
+            return similarity.load_ivfpq_index(self.spark,
+                                               plan["index_path"])
+
+    def _n_probe(self, plan: dict) -> tuple[int, str]:
+        """n_probe and the source that set it: explicit in the query
+        ('probing 4 lists') > the store's tuned _meta sidecar (a prior
+        'tune the ann index at /path' run) > static default 2. The
+        report says which source won, so an untuned store is visible,
+        not silent."""
+        if plan.get("n_probe") is not None:
+            return plan["n_probe"], "query"
+        tuned = similarity.load_index_tuning(self.spark, plan["index_path"])
+        if tuned and tuned.get("tuned_n_probe") is not None:
+            return tuned["tuned_n_probe"], "tuned"
+        return 2, "default"
+
+    def _load_index_and_query_sample(self, plan: dict, cat: Catalog):
         """Shared front door of the index-telemetry targets
         (`ann_recall`, `ann_tune`): load the persisted IVF-PQ store
         and draw the deterministic query sample from the source
-        dir's embeddings. Returns the rejection dict on failure,
-        else ``(centers, books, coded, rotation, queries, cand)``."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        if not plan.get("index_path"):
-            return {"status": "rejected",
-                    "reason": f"{noun} needs an index path "
-                              f"('... the ann index at /path')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        try:
-            centers, books, coded, rotation = load_ivfpq_index(
-                self.spark, plan["index_path"])
-        except Exception as exc:
-            return {"status": "rejected",
-                    "reason": f"no loadable index store at "
-                              f"{plan['index_path']}: {exc}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        emb = Catalog(self.spark, source_dir).embeddings
-        if emb.count() == 0:
-            return {"status": "rejected",
-                    "reason": "embeddings table is empty",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        dir's embeddings: ``(centers, books, coded, rotation,
+        queries, cand)``."""
+        centers, books, coded, rotation = self._load_index(plan)
+        emb = cat.embeddings
+        _nonempty_count(emb, "embeddings")
         # deterministic content-hash sample order (a bare limit would
         # take whichever partitions answered first); limit = TakeOrdered
         sample = (emb.orderBy(F.pmod(F.xxhash64("vec_id"),
                                      F.lit(1_000_003)), "vec_id")
                   .limit(plan["n_queries"]))
-        queries = sample.select(F.col("vec_id").alias("q_id"),
-                                F.col("embedding").alias("q_vec"))
-        cand = emb.select(F.col("vec_id").alias("c_id"),
-                          F.col("embedding").alias("c_vec"))
+        queries = _vectors(sample, "q")
+        cand = _vectors(emb, "c")
         return centers, books, coded, rotation, queries, cand
 
-    def _run_ann_tune(self, plan: dict, source_dir: str,
-                      output_path: str) -> dict:
+    def _run_ann_tune(self, plan: dict, cat: Catalog,
+                      output_path: str) -> Result:
         """'tune the ann index at /path for recall 0.9': close the
         n_probe knob into a loop against the recall telemetry
         (:func:`operators.similarity.ann_nprobe_tune`) — double
@@ -3438,34 +2475,23 @@ class Pipeline:
         ``_meta`` sidecar (:func:`save_index_tuning`) so a later
         recall/search run against the same store defaults to the
         tuned setting — the loop stays closed across runs."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ann_nprobe_tune,
-            save_index_tuning,
-        )
-
-        loaded = self._load_index_and_query_sample(plan, source_dir,
-                                                   "index tuning")
-        if isinstance(loaded, dict):
-            return loaded
-        centers, books, coded, rotation, queries, cand = loaded
-        report = ann_nprobe_tune(centers, books, coded, queries, cand,
-                                 k=plan["k"],
-                                 target_recall=plan["target_recall"],
-                                 rotation=rotation)
-        save_index_tuning(self.spark, plan["index_path"], report)
+        centers, books, coded, rotation, queries, cand = \
+            self._load_index_and_query_sample(plan, cat)
+        report = similarity.ann_nprobe_tune(
+            centers, books, coded, queries, cand, k=plan["k"],
+            target_recall=plan["target_recall"], rotation=rotation)
+        similarity.save_index_tuning(self.spark, plan["index_path"], report)
         report["meta_saved"] = True
         self.progress("tune", {"params": dict(plan), **report})
         curve = self.spark.createDataFrame(
             [(c["n_probe"], c["recall"]) for c in report["curve"]],
             "n_probe int, recall double")
-        curve.write.mode("overwrite").parquet(output_path)
-        n_out = self.spark.read.parquet(output_path).count()
+        n_out = self._sink(curve, output_path).count()
         self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [curve],
-                "reports": {"plan": dict(plan), **report}}
+        return [curve], report
 
-    def _run_ann_recall(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+    def _run_ann_recall(self, plan: dict, cat: Catalog,
+                        output_path: str) -> Result:
         """'estimate the recall of the ann index at /path, top 10,
         probing 4 lists': recall@k telemetry for a persisted IVF-PQ
         store (:func:`operators.similarity.ann_recall_estimate`) —
@@ -3479,38 +2505,12 @@ class Pipeline:
         at the sink and the report carries the recall. Cost: one
         corpus scan against |sample| broadcast queries — cheap by
         construction; the sample size caps it."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            ann_recall_estimate,
-            load_ivfpq_index,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        loaded = self._load_index_and_query_sample(plan, source_dir,
-                                                   "recall estimation")
-        if isinstance(loaded, dict):
-            return loaded
-        centers, books, coded, rotation, queries, cand = loaded
-        # n_probe resolution order: explicit in the query ('probing 4
-        # lists') > the store's tuned _meta sidecar (a prior 'tune the
-        # ann index at /path' run) > static default 2. The report says
-        # which source won, so an untuned store is visible, not silent.
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-            load_index_tuning,
-        )
-        n_probe, probe_source = plan.get("n_probe"), "query"
-        if n_probe is None:
-            tuned = load_index_tuning(self.spark, plan["index_path"])
-            if tuned and tuned.get("tuned_n_probe") is not None:
-                n_probe, probe_source = tuned["tuned_n_probe"], "tuned"
-            else:
-                n_probe, probe_source = 2, "default"
-        report, hits = ann_recall_estimate(centers, books, coded,
-                                           queries, cand, k=plan["k"],
-                                           n_probe=n_probe,
-                                           rotation=rotation,
-                                           return_hits=True)
+        centers, books, coded, rotation, queries, cand = \
+            self._load_index_and_query_sample(plan, cat)
+        n_probe, probe_source = self._n_probe(plan)
+        report, hits = similarity.ann_recall_estimate(
+            centers, books, coded, queries, cand, k=plan["k"],
+            n_probe=n_probe, rotation=rotation, return_hits=True)
         report["n_probe_source"] = probe_source
         self.progress("recall", {"params": dict(plan), **report})
         # hits is the CACHED frame the estimate graded — write it
@@ -3519,12 +2519,11 @@ class Pipeline:
         hits.unpersist()
         n_out = self.spark.read.parquet(output_path).count()
         self.progress("publish", {"rows": n_out, "path": output_path})
-        return {"status": "complete", "outputs": [hits],
-                "reports": {"plan": dict(plan), **report,
-                            "rows_written": n_out}}
+        return [hits], {**report,
+                        "rows_written": n_out}
 
-    def _run_split_corpus(self, plan: dict, source_dir: str,
-                          output_path: str) -> dict:
+    def _run_split_corpus(self, plan: dict, cat: Catalog,
+                          output_path: str) -> Result:
         """'split the corpus into train/val/test 80/10/10 without
         leakage': deterministic split assignment over the documents
         table. The default is per-document salted-hash assignment
@@ -3536,72 +2535,42 @@ class Pipeline:
         can never straddle train/test. Per-split counts land in the
         report; fractions normalize from an '80/10/10' triple when
         the query names one."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            leakage_safe_split,
-            split_assign,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         if plan["leak_safe"]:
-            pairs = minhash_lsh_pairs(docs)
-            frame = leakage_safe_split(docs, plan["splits"], pairs)
+            pairs = dedup.minhash_lsh_pairs(docs)
+            frame = sampling.leakage_safe_split(docs, plan["splits"], pairs)
         else:
-            frame = split_assign(docs, plan["splits"],
-                                 key_col="doc_id")
+            frame = sampling.split_assign(docs, plan["splits"],
+                                          key_col="doc_id")
         self.progress("split", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)   # read-back
-        counts = {r["split"]: r["n"] for r in
-                  back.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}
+        back = self._sink(frame, output_path)
+        counts = _counts(back, "split")
         self.progress("publish", {"rows": sum(counts.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "split_counts": counts,
-                            "rows": sum(counts.values())}}
+        return [frame], {"split_counts": counts,
+                         "rows": sum(counts.values())}
 
-    def _run_temperature_mix(self, plan: dict, source_dir: str,
-                             output_path: str) -> dict:
+    def _run_temperature_mix(self, plan: dict, cat: Catalog,
+                             output_path: str) -> Result:
         """'flatten the language mix with temperature 0.5': alpha
         sampling of the documents table
         (:func:`operators.sampling.temperature_mix`) with per-stratum
         before/after counts in the report."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            temperature_mix,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
+        docs = cat.documents
         strata = plan["strata"]
-        frame = temperature_mix(docs, strata, alpha=plan["alpha"],
-                                key_col="doc_id", salt="temp")
+        frame = sampling.temperature_mix(docs, strata, alpha=plan["alpha"],
+                                         key_col="doc_id", salt="temp")
         self.progress("sample", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
-        after = {r[strata]: r["n"] for r in
-                 back.groupBy(strata).agg(F.count(F.lit(1)).alias("n"))
-                 .collect()}
-        before = {r[strata]: r["n"] for r in
-                  docs.groupBy(strata).agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}
+        back = self._sink(frame, output_path)
+        after = _counts(back, strata)
+        before = _counts(docs, strata)
         self.progress("publish", {"rows": sum(after.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "counts_before": before,
-                            "counts_after": after}}
+        return [frame], {"counts_before": before,
+                         "counts_after": after}
 
-    def _run_shuffle_order(self, plan: dict, source_dir: str,
-                           output_path: str) -> dict:
+    def _run_shuffle_order(self, plan: dict, cat: Catalog,
+                           output_path: str) -> Result:
         """'shuffle the corpus for training, epoch 3': write the
         deterministic global training order
         (:func:`operators.sampling.shuffle_order`) — (doc_id, epoch,
@@ -3611,31 +2580,22 @@ class Pipeline:
         rank range is gap-free 0..n-1 (max rank + count from one
         aggregate over the read-back — no corpus-sized driver
         state)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            shuffle_order,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents.select("doc_id")
-        frame = shuffle_order(docs, epoch=plan["epoch"])
+        docs = cat.documents.select("doc_id")
+        frame = sampling.shuffle_order(docs, epoch=plan["epoch"])
         self.progress("shuffle", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(frame, output_path)
         agg = back.agg(F.count(F.lit(1)).alias("n"),
                        F.max("rank").alias("max_rank"),
                        F.countDistinct("bucket").alias("n_buckets")) \
             .first()
         self.progress("publish", {"rows": agg["n"], "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "n_docs": agg["n"],
-                            "max_rank": agg["max_rank"],
-                            "buckets_used": agg["n_buckets"],
-                            "gap_free": agg["max_rank"] == agg["n"] - 1}}
+        return [frame], {"n_docs": agg["n"],
+                         "max_rank": agg["max_rank"],
+                         "buckets_used": agg["n_buckets"],
+                         "gap_free": agg["max_rank"] == agg["n"] - 1}
 
-    def _run_unimax_mix(self, plan: dict, source_dir: str,
-                        output_path: str) -> dict:
+    def _run_unimax_mix(self, plan: dict, cat: Catalog,
+                        output_path: str) -> Result:
         """'unimax the language mix with a budget of 50000 tokens, at
         most 2 epochs': UniMax epoch-capped allocation
         (:func:`operators.sampling.unimax_allocation`) of the token
@@ -3646,29 +2606,18 @@ class Pipeline:
         equal-share — which is the number a mixing decision actually
         reads; a missing budget rejects actionably (the epoch cap
         alone does not determine an allocation)."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            unimax_allocation,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
         if plan.get("budget") is None:
-            return {"status": "rejected",
-                    "reason": "unimax needs a token budget "
-                              "('... with a budget of 1000000 tokens')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        docs = Catalog(self.spark, source_dir).documents
+            raise Rejected("unimax needs a token budget "
+                           "('... with a budget of 1000000 tokens')")
+        docs = cat.documents
         strata = plan["strata"]
         if strata not in docs.columns:
-            return {"status": "rejected",
-                    "reason": f"documents table has no {strata!r} column",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        frame = unimax_allocation(docs, plan["budget"],
-                                  plan["max_epochs"], strata_col=strata)
+            raise Rejected(f"documents table has no {strata!r} column")
+        frame = sampling.unimax_allocation(docs, plan["budget"],
+                                           plan["max_epochs"],
+                                           strata_col=strata)
         self.progress("allocate", {"params": dict(plan)})
-        frame.write.mode("overwrite").parquet(output_path)
-        back = self.spark.read.parquet(output_path)      # read-back
+        back = self._sink(frame, output_path)
         per = (back.groupBy(strata)
                .agg(F.first("epochs").alias("epochs"),
                     F.count(F.lit(1)).alias("n_docs"),
@@ -3681,11 +2630,10 @@ class Pipeline:
         self.progress("publish", {"rows": sum(a["n_docs"]
                                               for a in alloc.values()),
                                   "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan), "allocation": alloc}}
+        return [frame], {"allocation": alloc}
 
-    def _run_dsir_select(self, plan: dict, source_dir: str,
-                         output_path: str) -> dict:
+    def _run_dsir_select(self, plan: dict, cat: Catalog,
+                         output_path: str) -> Result:
         """'importance resample toward src18': fit the DSIR log-ratio
         table with the named source as the in-pool target domain
         (one-scan ``target_flag`` path), score every document, and
@@ -3697,36 +2645,21 @@ class Pipeline:
         corpus's actual source census (tiny distinct collect) so a
         typo rejects with a reason instead of silently weighting
         against an empty target."""
-        from dynamic_etl_pipeline_thesis_ii_spark.operators.sampling import (
-            dsir_logratio_table,
-            dsir_weights,
-        )
-        from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
-            Catalog,
-        )
-
-        docs = Catalog(self.spark, source_dir).documents
-        tgt = plan.get("target_source")
-        if not tgt:
-            return {"status": "rejected",
-                    "reason": "dsir needs a target domain "
-                              "('... toward <source>')",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
+        docs = cat.documents
+        tgt = plan["target_source"]
         sources = {r["source"] for r in
                    docs.select("source").distinct().collect()}
         if tgt not in sources:
-            return {"status": "rejected",
-                    "reason": f"unknown target source {tgt!r}; corpus "
-                              f"has {sorted(sources)[:8]}",
-                    "outputs": [], "reports": {"plan": dict(plan)}}
-        table = dsir_logratio_table(
+            raise Rejected(f"unknown target source {tgt!r}; corpus "
+                           f"has {sorted(sources)[:8]}")
+        table = sampling.dsir_logratio_table(
             docs.withColumn("__t", F.col("source") == tgt),
             target_flag="__t")
         # persist: the weights frame feeds up to three actions (the
         # totals aggregate, the parquet write, and the above-mean
         # count) — without it the gram-explode pipeline recomputes
         # per action
-        weights = dsir_weights(docs, table).persist()
+        weights = sampling.dsir_weights(docs, table).persist()
         # above-mean cut with exact integer arithmetic: broadcast the
         # 1-row totals and keep weight*n > total (no doubles, no
         # order dependence). decimal(38,0) keeps the product exact
@@ -3746,16 +2679,13 @@ class Pipeline:
         frame = above if plan.get("select") else weights
         self.progress("weight", {"params": dict(plan)})
         try:
-            frame.write.mode("overwrite").parquet(output_path)
-            back = self.spark.read.parquet(output_path)  # read-back
+            back = self._sink(frame, output_path)
             n_rows = back.count()
             n_sel = n_rows if plan.get("select") else above.count()
         finally:
             weights.unpersist()
         self.progress("publish", {"rows": n_rows, "path": output_path})
-        return {"status": "complete", "outputs": [frame],
-                "reports": {"plan": dict(plan),
-                            "rows": n_rows, "above_mean": n_sel}}
+        return [frame], {"rows": n_rows, "above_mean": n_sel}
 
 
 # dataops NL routing: deterministic keyword/number extraction, mirroring
@@ -3830,32 +2760,20 @@ _DATAOPS_HINTS = ("curate", "curation", "dedup", "deduplicate", "shard",
                   "to the index", "index at ",
                   # scoped: 'stock split' must not route here
                   "split the corpus", "into train", "leakage")
-# 'remove duplicated passages across the corpus (windows of 50
-# tokens)' -> ExactSubstr dedup (D18); the verb decides rewrite vs
-# report-only
 _SUBSTR_TARGET_RE = re.compile(
     r"\b(remove|strip|cut|flag|find)\b[^.]*\b(?:duplicat\w*|repeated)\s+"
     r"(?:passages?|substrings?|spans?|token\s+runs?)\b"
     r"|\bexact\s+substring\s+dedup\b")
 _SUBSTR_WINDOW_RE = re.compile(
     r"\b(?:windows?|runs?)\s+of\s+(\d+)\s+tokens?\b")
-# 'build a passage snapshot of the corpus' — the ExactSubstr build
-# face; a snapshot mention on a flag/find-passages phrasing routes
-# to the incremental probe instead of the batch span report
 _PASSAGE_BUILD_RE = re.compile(
     r"\b(?:build|create)\b[^.]*\bpassage\s+snapshot\b")
-# 'rank the domains by the link graph at /path' / 'pagerank the
-# domains' — the crawl-curation domain-quality prior (W4)
 _DOMAIN_RANK_RE = re.compile(
     r"\b(?:rank|pagerank|score)\b[^.]*\bdomains?\b"
     r"|\bdomain\s+rank(?:ing)?\b")
 _ITER_RE = re.compile(r"\b(\d+)\s+iterations?\b")
-# 'compact the snapshot/store/index at /path' — small-file rewrite
-# of any append-grown store into the run's output
 _COMPACT_RE = re.compile(
     r"\bcompact\b[^.]*\b(?:snapshot|store|index)\b")
-# 'license audit the corpus' / 'scan the corpus for licenses,
-# dropping copyleft and restricted documents' (T19)
 _LICENSE_RE = re.compile(
     r"\blicen[cs]e\s+(?:audit|scan)\b"
     r"|\b(?:scan|audit)\b[^.]*\blicen[cs]es?\b")
@@ -3863,21 +2781,13 @@ _LICENSE_DROP_RE = re.compile(
     r"\b(?:drop|remov|filter)\w*\b[^.]*?"
     r"\b(copyleft|restricted|cc|permissive|unmarked)\b"
     r"(?:[^.]*?\b(copyleft|restricted|cc|permissive|unmarked)\b)?")
-# 'bin pack the corpus into bins of 1024 tokens without truncation'
-# — truncation-free FFD packing (PK3); distinct from the default
-# concatenate-and-split shard flow
 _BINPACK_RE = re.compile(
     r"\bbin[- ]?pack\b|\bwithout\s+truncat\w+\b")
 _BIN_BUDGET_RE = re.compile(
     r"\bbins?\s+of\s+(\d+)\s+tokens?\b|\bbudget\s+(?:of\s+)?(\d+)\b")
-# 'embed the documents, 128 dimensions' — built-in hashed
-# random-projection featurizer; the output chains into every dense
-# target as the embeddings table
 _EMBED_RE = re.compile(
     r"\bembed\b[^.]*\b(?:documents|corpus|docs)\b")
 _DIM_RE = re.compile(r"\b(\d+)\s+dim(?:ension)?s?\b")
-# target routing: 'diff ... snapshot/previous' -> corpus_diff;
-# 'chunk' -> chunk_documents; everything else -> corpus_to_shards
 _DIFF_TARGET_RE = re.compile(r"\bdiff\b")
 # paths may be local (/, ./, ~/) or any Hadoop-filesystem URI
 # (s3://, s3a://, hdfs://, gs://, abfs://, file://) — production
@@ -3891,8 +2801,6 @@ _GRAPH_PATH_RE = re.compile(
 _CHUNK_TARGET_RE = re.compile(r"\bchunk(?:ed|ing|s)?\b")
 _CHUNK_SIZE_RE = re.compile(r"\bsize\s+(?:of\s+)?(\d+)\b")
 _CHUNK_STRIDE_RE = re.compile(r"\b(?:stride|overlap step)\s+(?:of\s+)?(\d+)\b")
-# 'semantically dedup' / 'dedup by embedding' -> semantic_dedup;
-# 'temperature 0.3' / 'flatten the language mix' -> temperature_mix
 _SEMANTIC_TARGET_RE = re.compile(r"\bsemantic(?:ally)?\b|\bby embeddings?\b")
 _ANN_TARGET_RE = re.compile(
     r"\bnearest\s+neighbou?rs?\b|\bann\s+(?:search|index)\b|"
@@ -3903,8 +2811,6 @@ _ANN_TARGET_RE = re.compile(
 _RETRIEVE_TARGET_RE = re.compile(
     r"\bbm25\b|\bsearch the corpus\b|\bsearch the index\b|"
     r"\bretrieve\b.{0,40}\b(?:documents|docs)\b")
-# 'find documents like doc 42 using both keywords and embeddings':
-# hybrid two-tower more-like-this (BM25 + dense cosine, RRF-fused)
 _HYBRID_TARGET_RE = re.compile(
     r"\bhybrid\b|\bboth\s+keywords?\s+and\s+(?:embeddings?|vectors?)\b"
     r"|\bkeywords?\s+and\s+embeddings?\b")
@@ -3930,9 +2836,6 @@ _CLUSTER_TARGET_RE = re.compile(
     r"\bcluster(?:ing)?\b[^.]*\b(?:embeddings?|corpus|documents)\b"
     r"|\binto\s+\d+\s+topics\b")
 _TOPICS_RE = re.compile(r"\b(\d+)\s+topics\b")
-# 'assign the new embeddings to the clusters at /path' — map a fresh
-# batch onto a persisted cluster map without refitting (the data-map
-# twin of the frozen-index append)
 _CLUSTER_ASSIGN_RE = re.compile(
     r"\b(?:assign|map)\b[^.]*\bto the (?:clusters?|cluster map)\b")
 _CLUSTERS_PATH_RE = re.compile(
@@ -3971,7 +2874,6 @@ _UNIMAX_BUDGET_RE = re.compile(
 _UNIMAX_EPOCHS_RE = re.compile(
     r"\b(?:at\s+most|max(?:imum)?(?:\s+of)?)\s+(\d+)\s+epochs?\b"
     r"|\b(\d+)\s+epochs?\s+(?:cap|max)\b|\bepoch\s+cap\s+(?:of\s+)?(\d+)\b")
-# 'extract text from the crawl at /path' / 'ingest the warc archive'
 _CRAWL_TARGET_RE = re.compile(r"\bcrawl\b|\bwarc\b")
 # 'build the link graph from the crawl at /path' — href extraction
 # into (src, dst) domain edges; checked BEFORE the bare crawl door
@@ -3987,17 +2889,11 @@ _ARCHIVE_TARGET_RE = re.compile(r"\bzips?\b|\btarballs?\b|\btars?\b")
 _ARCHIVE_PATH_RE = re.compile(
     r"\b(?:zip|tarball|tar(?:\.gz)?|archive)s?\s+(?:at\s+|in\s+|from\s+)?"
     + _PATH_SHAPE, re.IGNORECASE)
-# 'generate a data card for the corpus' / 'write a datasheet'
 _DATACARD_TARGET_RE = re.compile(r"\bdata\s?card\b|\bdatasheet\b")
-# 'census the corpus' / 'report corpus statistics per language'
 _CENSUS_TARGET_RE = re.compile(
     r"\bcensus\b|\bcorpus stat(?:istic)?s\b"
     r"|\bcorpus .*length distribution\b")
-# 'tokenize the corpus and pack 512-token sequences'
 _TOKENIZE_TARGET_RE = re.compile(r"\btokeni[sz]e\b")
-# 'train a bpe tokenizer on the corpus, 300 merges, and save it' —
-# the train-once artifact face; 'tokenize ... with the tokenizer at
-# /path' is the reuse face
 _TOKENIZER_TRAIN_RE = re.compile(
     r"\btrain\b[^.]*\btokeni[sz]er\b")
 # 'report tokenizer stats with the tokenizer at /path' / 'tokenizer
@@ -4011,8 +2907,6 @@ _TOKSTATS_RE = re.compile(
 _TOKENIZER_PATH_RE = re.compile(
     r"\btokeni[sz]er\s+(?:at\s+|in\s+|from\s+)?" + _PATH_SHAPE,
     re.IGNORECASE)
-# 'train a quality classifier on the corpus and save it' / 'score
-# the corpus with the classifier at /path' — the Q7 model lifecycle
 _CLASSIFIER_TRAIN_RE = re.compile(
     r"\btrain\b[^.]*\b(?:quality\s+)?classifier\b")
 _CLASSIFIER_SCORE_RE = re.compile(
@@ -4021,7 +2915,6 @@ _CLASSIFIER_PATH_RE = re.compile(
     r"\bclassifier\s+(?:at\s+|in\s+|from\s+)?" + _PATH_SHAPE,
     re.IGNORECASE)
 _MERGES_RE = re.compile(r"\b(\d+)\s+merges?\b")
-# 'importance resample toward src18' / 'dsir select docs like src3'
 _DSIR_TARGET_RE = re.compile(r"\bdsir\b|\bimportance\b|\bresampl")
 _DSIR_SOURCE_RE = re.compile(
     r"\b(?:toward|towards|like|similar to)\s+(?:the\s+)?(?:source\s+|"
@@ -4039,11 +2932,7 @@ _SEQ_LEN_RE = re.compile(
     r"\b(?:sequence|seq|context)s?(?:\s+length)?(?:\s+of)?\s+(\d+)\b")
 _SHARDS_RE = re.compile(r"\b(\d+)\s+shards?\b")
 _EPOCH_RE = re.compile(r"\bepoch\s+(\d+)\b")
-# 'decontaminate the corpus against the benchmark at /path';
-# 'semantically' / 'by embedding' opts into the embedding-space path
 _DECONTAM_TARGET_RE = re.compile(r"\bdecontaminat|\bcontamination\b")
-# 'remove benchmark passages from the corpus against the benchmark
-# at /p' — the span-surgical decontamination phrasing (D19)
 _BENCH_SPAN_RE = re.compile(
     r"\b(?:remove|strip|cut|flag|find)\b[^.]*\bbenchmark\s+"
     r"(?:passages?|spans?|quotes?)\b")
@@ -4052,16 +2941,12 @@ _BENCH_PATH_RE = re.compile(
     r"(?:at\s+|in\s+|from\s+)?" + _PATH_SHAPE, re.IGNORECASE)
 _OVERLAP_RE = re.compile(
     r"\b(?:min(?:imum)?\s+)?overlap\s+(?:of\s+)?(\d+)\b")
-# 'build an ann index over the embeddings, 64 lists' /
-# 'append the new vectors to the index at /path'
 _ANN_INDEX_BUILD_RE = re.compile(
     r"\b(?:build|create|fit)\b[^.]*\b(?:ann|ivf(?:-?pq)?|vector)\s+"
     r"index\b|\bindex\s+the\s+embeddings\b")
 _ANN_INDEX_APPEND_RE = re.compile(
     r"\b(?:append|add)\b[^.]*\bto\s+the\s+"
     r"(?:ann\s+|ivf(?:-?pq)?\s+|vector\s+)?index\b")
-# 'estimate the recall of the ann index at /path, top 10, probing 4
-# lists, sampling 64 queries' — the index drift monitor
 _ANN_RECALL_RE = re.compile(
     r"\brecall\s+of\s+the\s+(?:ann\s+|ivf(?:-?pq)?\s+|vector\s+)?"
     r"index\b"
@@ -4069,8 +2954,6 @@ _ANN_RECALL_RE = re.compile(
     r"\brecall\b")
 _PROBES_RE = re.compile(r"\bprobing\s+(\d+)\b|\b(\d+)\s+probes\b")
 _SAMPLE_Q_RE = re.compile(r"\bsampl(?:e|ing)\s+(\d+)\s+quer")
-# 'tune the ann index at /path for recall 0.9, top 10' — close the
-# n_probe knob into a loop against the recall telemetry
 _ANN_TUNE_RE = re.compile(
     r"\btune\b[^.]*\b(?:ann\s+|ivf(?:-?pq)?\s+|vector\s+)?index\b")
 _TARGET_RECALL_RE = re.compile(r"\brecall\s+(?:of\s+)?(0?\.\d+|1\.0|1)\b")
@@ -4082,8 +2965,6 @@ _TARGET_RECALL_RE = re.compile(r"\brecall\s+(?:of\s+)?(0?\.\d+|1\.0|1)\b")
 _BM25_INDEX_APPEND_RE = re.compile(
     r"\b(?:append|add)\b[^.]*\bto\s+the\s+"
     r"(?:retrieval|bm25|lexical|inverted)\s+index\b")
-# bucketed corpus store lifecycle: 'build a bucketed corpus store,
-# 32 buckets' / 'upsert the batch into the corpus store at /path'
 _STORE_BUILD_RE = re.compile(
     r"\b(?:build|create)\b[^.]*\b(?:bucketed\s+)?corpus\s+store\b")
 _UPSERT_RE = re.compile(
@@ -4097,7 +2978,6 @@ _BUCKETS_RE = re.compile(r"\b(\d+)\s+buckets?\b")
 _INDEX_PATH_RE = re.compile(
     r"\bindex\s+(?:at\s+|in\s+)?" + _PATH_SHAPE, re.IGNORECASE)
 _LISTS_RE = re.compile(r"\b(\d+)\s+(?:lists|inverted lists)\b")
-# 'split the corpus into train/val/test 80/10/10 without leakage'
 _SPLIT_TARGET_RE = re.compile(
     r"\bsplit\b[^.]*\binto\s+train\b|"
     r"\btrain\s*/\s*(?:val(?:id(?:ation)?)?|dev)\s*/\s*test\b")
@@ -4186,263 +3066,90 @@ def derive_n_buckets(n_docs: int, docs_per_bucket: int = 4_000,
 
 def parse_dataops_query(query: str) -> Optional[dict]:
     """NL corpus-curation query -> typed parameter dict, or None when
-    the query carries no dataops intent. Targets, matched in
-    priority order:
-
-    - ``ingest_crawl`` — 'extract text from the crawl at <path>' /
-      'ingest the warc archive at <path>' (WARC records -> rendered
-      text via html_to_lines -> documents-shaped parquet; the web
-      front door);
-    - ``ingest_pdfs`` — 'extract text from the pdfs at <path>'
-      (PDF files -> metadata + content-stream text ->
-      documents-shaped parquet; the document front door beside the
-      WARC one — rejected with an actionable reason without a path);
-    - ``corpus_diff`` — 'diff ... against the snapshot at <path>'
-      (data-versioning; requires a filesystem path, bound to
-      ``snapshot_path`` — None when the phrase names no path, which
-      the orchestrator rejects with an actionable reason);
-    - ``corpus_census`` — 'census the corpus' / 'report corpus
-      statistics' (mergeable per-stratum doc/token/char counts —
-      the standalone face of the snapshot-store telemetry);
-    - ``ingest_archives`` — 'extract text from the zip at <path>' /
-      'ingest the tarball at <path>' (per-member text tiers,
-      zip-bomb caps counted in the report);
-    - ``data_card`` — 'generate a data card for the corpus'
-      (Datasheets-for-Datasets: composition/lengths/duplication/
-      quality/licensing/media in one nested report + artifact);
-    - ``verify_shards`` — 'verify the shards at <path> against the
-      manifest at <path>' (order-insensitive integrity check);
-    - ``cluster_corpus`` / ``cluster_assign`` — 'cluster the
-      embeddings into 12 topics' / 'assign the batch to the
-      clusters at <path>' (k-means data map + frozen-centers
-      assign lifecycle);
-    - ``decontaminate`` — 'decontaminate the corpus against the
-      benchmark at <path>' (n-gram shingle-overlap removal by
-      default; 'semantically' / 'by embedding' swaps in the
-      cosine-threshold path over the embeddings table; requires a
-      benchmark path, rejected with an actionable reason without
-      one);
-    - ``decontaminate_spans`` — 'remove benchmark passages from the
-      corpus against the benchmark at <path> (windows of 20
-      tokens)' (span-surgical: the leaked run is cut, the document
-      survives; 'flag'/'find' report the span table);
-    - ``tokenize_pack`` — 'tokenize the corpus and pack 512-token
-      sequences' (train BPE → encode to ids → fixed-length
-      input_ids rows; optional 'N merges', 'N shards' for the
-      bucket count; 'with the tokenizer at /path' loads the
-      persisted artifact instead of retraining);
-    - ``tokenizer_train`` — 'train a bpe|unigram tokenizer on the
-      corpus, 300 merges, and save it' (the train-once artifact:
-      merge/piece table persists at the output, reloads
-      bit-identically into tokenize_pack);
-    - ``classifier_train`` / ``classifier_score`` — 'train a
-      quality classifier on the corpus and save it' then 'score
-      the corpus with the classifier at /path' (Q7 gopher-weak-label
-      logistic pipeline, Spark ML native save/load; degenerate
-      one-class corpora reject);
-    - ``split_corpus`` — 'split the corpus into train/val/test
-      80/10/10 without leakage' (deterministic salted-hash split;
-      'leakage' upgrades to near-dup-component-atomic assignment);
-    - ``ann_index_append`` — 'append the new vectors to the index at
-      <path>' (epoch-N+1 encode against the frozen store, codes
-      parquet-append; requires an index path);
-    - ``ann_index_build`` — 'build an ann index over the embeddings,
-      64 lists, with an opq rotation' (fit once, persist the complete
-      centers/books/codes/rotation store; list count derives as
-      sqrt(n) when unnamed);
-    - ``ann_recall`` — 'estimate the recall of the ann index at
-      /path, top 10, probing 4 lists, sampling 64 queries' (recall@k
-      of the persisted store against the exact squared-L2 scan over
-      a deterministic query sample — the drift monitor for when to
-      raise n_probe or rebuild; requires an index path);
-    - ``tokenizer_stats`` — 'report tokenizer stats with the
-      tokenizer at /path' / 'tokenizer fertility per language'
-      (per-language fertility = subword tokens per word + chars-per-
-      token compression from the persisted BPE/unigram store — the
-      artifact-validation numbers; kind inferred from the store's
-      own columns, path required);
-    - ``ann_tune`` — 'tune the ann index at /path for recall 0.9'
-      (double n_probe against the recall telemetry until the sampled
-      recall@k meets the target or probing is exhaustive; the
-      (n_probe, recall) curve lands at the sink, target_met=false
-      when ADC quantization caps below the target);
-    - ``ann_search`` — 'find the 10 nearest neighbors' / 'similarity
-      search' (IVF-PQ self-kNN over the embeddings table with exact
-      rerank; 'with an opq rotation' opts into the parametric OPQ
-      rotation and reports its reconstruction-MSE delta);
-    - ``retrieve`` — 'search the corpus for "hash join", top 5' /
-      'retrieve the best documents for "x"' (BM25 lexical top-k over
-      the documents table, one quoted string per query; rejected
-      with an actionable reason when no quoted query is present;
-      '... the index at /path' probes the persisted BM25 store at
-      query cost instead of rescanning the corpus);
-    - ``hybrid_search`` — 'find documents like doc 42 using both
-      keywords and embeddings, top 5' (two-tower more-like-this:
-      the named docs' text feeds BM25, their embeddings feed exact
-      cosine, reciprocal-rank fused; self-hits dropped);
-    - ``bm25_index_build`` — 'build a retrieval index over the
-      corpus' (persist tok-sorted postings + df/dl/stats; the
-      lexical twin of the ANN index build);
-    - ``bm25_index_append`` — 'add the new documents to the
-      retrieval index at /path' (batch-cost epoch grow: postings
-      append, df/stats delta rows fold at search time — scores
-      equal a full rebuild exactly);
-    - ``corpus_store_build`` / ``corpus_upsert`` — 'build a
-      bucketed corpus store, 32 buckets' then 'upsert the batch
-      into the corpus store at /path' (hash-bucketed MERGE INTO:
-      batch rows replace same-key rows and insert otherwise; only
-      buckets holding batch keys rewrite — untouched directories
-      stay byte-identical; the merge report flags geometry growth
-      past ~4x the derive curve);
-    - ``corpus_rebucket`` — 'rebucket the corpus store at /path'
-      (re-derive the bucket count from CURRENT rows and rewrite to
-      the run's output — never in place; restores constant
-      rows/bucket after merge-driven growth so merges stay
-      batch-cost);
-    - ``webdataset_write`` — 'export the corpus as webdataset, 8
-      shards' / 'write the corpus to webdataset shards at 64 mb'
-      (tar-shard export for streaming training loaders:
-      ``{key}.json``/``{key}.txt`` members in byte-deterministic
-      ``shard-%06d.tar`` files with a per-shard sha256 manifest;
-      shard count derives from corpus bytes when unnamed; 'export
-      the images/media as webdataset' ships the media table's
-      payload bytes instead, extensions sniffed from container
-      magic; 'verify ... shards' stays on the manifest-check
-      route);
-    - ``semantic_dedup`` — 'semantically dedup ...' / 'dedup by
-      embedding' (SemDeDup over the embeddings table; optional
-      'threshold 0.9', 'N clusters', 'lowest id' keep policy);
-    - ``incremental_dedup`` — 'dedup the batch against the seen
-      snapshot at <path>' (continuous-ingest exact dedup vs a
-      persisted (id, key) content snapshot; 'with a bloom filter'
-      opts into the broadcast pre-filter — same answer, ~fpp of the
-      batch through the anti-join; the updated snapshot lands next
-      to the fresh rows);
-    - ``substring_dedup`` — 'remove duplicated passages across the
-      corpus (windows of 50 tokens)' (cross-document ExactSubstr
-      dedup: verbatim >=w-token runs keep their first occurrence and
-      are cut everywhere else; 'flag'/'find' phrasings report the
-      span table without rewriting);
-    - ``passage_snapshot`` / ``passage_probe`` — 'build a passage
-      snapshot of the corpus' then 'flag duplicated passages
-      against the passage snapshot at /path' (incremental
-      ExactSubstr: batch-cost probe of the persisted distinct
-      window hashes with the snapshot's OWN window geometry;
-      '... and update the snapshot' appends the batch's fresh
-      hashes — epoch grow);
-    - ``link_graph_build`` — 'build the link graph from the crawl
-      at /path' (WARC pages -> href extraction -> distinct
-      (src, dst) registered-domain edges; feeds domain_rank);
-    - ``domain_rank`` — 'rank the domains by the link graph at
-      /path, 10 iterations' (PageRank over a persisted (src, dst)
-      domain edge table, or HyperBall harmonic centrality with 'by
-      harmonic centrality' — the crawl-curation quality priors;
-      top-10 domains inline in the report);
-    - ``compact_store`` — 'compact the snapshot at /path' (rewrite
-      an append-grown store into the run's output: distinct keys,
-      range-sorted files sized from the deduped count — key/sort
-      columns infer from the store's own schema);
-    - ``license_scan`` — 'license audit the corpus' / 'scan the
-      corpus for licenses, dropping copyleft and restricted
-      documents' (per-doc marker flags + most-restrictive class;
-      with a drop list the kept documents land instead, per-class
-      counts inline either way);
-    - ``bin_pack`` — 'bin pack the corpus into bins of 1024 tokens
-      without truncation' (truncation-free FFD packing: every doc
-      whole, no bin over budget, oversize docs isolated; per-bucket
-      bins-vs-lower-bound and waste stats in the report);
-    - ``embed_documents`` — 'embed the documents, 128 dimensions'
-      (deterministic hashed random-projection embeddings; write to
-      <dir>/embeddings.parquet and every dense target chains off
-      the output dir with no external encoder);
-    - ``dsir_select`` — 'importance resample toward src18' / 'dsir
-      select docs like <source>' (hashed-n-gram importance weights
-      against an in-pool target domain; 'select'/'keep' narrows the
-      output to above-pool-mean rows);
-    - ``temperature_mix`` — 'flatten the language mix' /
-      'temperature 0.3' (alpha sampling; strata = source when the
-      query says source/domain, else lang);
-    - ``unimax_mix`` — 'unimax the language mix with a budget of
-      50000 tokens, at most 2 epochs' (epoch-capped uniform
-      allocation; budget required, epoch cap defaults to 2, strata
-      follows the temperature convention);
-    - ``shuffle_order`` — 'shuffle the corpus for training, epoch 3'
-      (deterministic global training order; epoch defaults to 0,
-      'shard' phrasing stays on corpus_to_shards);
-    - ``chunk_documents`` — 'chunk for RAG, size 256 stride 192'
-      (RAG splitting; size/stride default to the operator's 128/96);
-    - ``image_dedup`` / ``audio_dedup`` / ``video_dedup`` — 'dedup
-      the images' / 'dedup the audio clips' / 'dedup the videos'
-      (perceptual dHash/aHash/vHash dedup over the source dir's media
-      table; kept rows + the banded fingerprint snapshot land at the
-      sink; 'within N bits' tunes max_hamming, 'recovering hot
-      buckets' opts into reband);
-    - ``image_probe`` / ``audio_probe`` / ``video_probe`` — 'flag
-      the new images|audio|videos against the snapshot at /path'
-      (batch-cost probe of a persisted hamming snapshot with its own
-      geometry; '... and update the snapshot' appends the batch's
-      fresh fingerprints — epoch grow);
-    - ``video_containment`` / ``audio_containment`` — 'find videos
-      containing clips of each other' / 'audio containment'
-      (sub-clip matching: per-frame dHash / onset-window aHash rows
-      paired through the packed-id banding, rolled up per item pair;
-      pairs + the packed band snapshot land at the sink; 'at least N
-      frames|windows' tunes min_shared);
-    - ``containment_probe`` — 'flag the new videos sharing frames
-      with the snapshot at /path' (batch-cost probe of the packed
-      containment store; '... and update the snapshot' appends the
-      batch's fresh packed hashes);
-    - ``band_snapshot`` — 'build a near-dup band snapshot of the
-      corpus' (persist the documents table's MinHash band table in
-      flood-proof represent mode — the text build face; 'at
-      similarity 0.8' derives the banding geometry from the LSH
-      parameter advisor's S-curve fit instead of the default 16x4,
-      and later probes infer the geometry from the snapshot's own
-      rows);
-    - ``neardup_probe`` — 'flag near-duplicate documents against the
-      band snapshot at /path' (batch-cost MinHash probe with cap
-      telemetry; 'recovering hot buckets' → star policy; '... and
-      update the snapshot' appends fresh band keys);
-    - ``corpus_to_shards`` — everything else. Defaults match the
-      registry query (budget 15k, seq 512, 4 shards); ``epoch N``
-      binds a deterministic per-epoch shuffle salt; a "bpe" mention
-      swaps the token counts feeding selection/packing for
-      corpus-trained subword counts."""
+    the query carries no dataops intent. The first ``TARGETS`` row (in
+    priority order) whose binder accepts the query names the target;
+    ``corpus_to_shards``, the last row, takes every query that passes
+    the hint gate. 'explain: <query>' on a non-dataops query lists
+    every target with an example."""
     ql = query.lower()
     if not any(h in ql for h in _DATAOPS_HINTS):
         return None
+    for target in TARGETS:
+        params = target.bind(ql, query)
+        if params is not None:
+            return {"target": target.name, **params}
+    raise AssertionError("corpus_to_shards binds every query")
+
+
+# -- binders: (lowercased query, original query) -> plan params or None
+
+def _first_int(regex, ql: str, default: Optional[int] = None):
+    """The first non-empty group of ``regex``'s first match in ``ql``
+    as an int ('50,000' and '50_000' read as 50000), else ``default``."""
+    m = re.search(regex, ql)
+    if m is None:
+        return default
+    return int(next(g for g in m.groups() if g).replace(",", "")
+               .replace("_", ""))
+
+
+def _path(regex: re.Pattern, query: str) -> Optional[str]:
+    """The path ``regex`` captures in the original query (paths keep
+    their case), or None when the query names none."""
+    m = regex.search(query)
+    return m.group(1) if m else None
+
+
+def _path_binder(gate: re.Pattern, path_re: Optional[re.Pattern] = None,
+                 key: str = "") -> Callable[[str, str], Optional[dict]]:
+    """Binder of a target whose only parameter, if any, is a path:
+    ``gate`` accepts the lowercased query, ``path_re`` binds ``key``
+    from the original one (None when the query names no path)."""
+    def bind(ql: str, query: str) -> Optional[dict]:
+        if gate.search(ql):
+            return {key: _path(path_re, query)} if path_re else {}
+    return bind
+
+
+def _bind_corpus_diff(ql: str, query: str) -> Optional[dict]:
     # snapshot-anchored targets outrank the bare crawl keyword: 'dedup
     # the crawl batch against the seen snapshot at /p' is incremental
     # dedup over crawl OUTPUT, not a fresh ingest — a crawl mention
     # only routes to ingest_crawl when no snapshot intent is present
     if _DIFF_TARGET_RE.search(ql) and ("snapshot" in ql
                                        or "previous" in ql):
-        m = _SNAPSHOT_PATH_RE.search(query)   # paths keep their case
-        return {"target": "corpus_diff",
-                "snapshot_path": m.group(1) if m else None}
+        return {"snapshot_path": _path(_SNAPSHOT_PATH_RE, query)}
+
+
+def _bind_compact_store(ql: str, query: str) -> Optional[dict]:
     if _COMPACT_RE.search(ql):
-        mp = (_SNAPSHOT_PATH_RE.search(query)
-              or _STORE_PATH_RE.search(query)
-              or _INDEX_PATH_RE.search(query))
-        return {"target": "compact_store",
-                "store_path": mp.group(1) if mp else None}
+        return {"store_path": (_path(_SNAPSHOT_PATH_RE, query)
+                               or _path(_STORE_PATH_RE, query)
+                               or _path(_INDEX_PATH_RE, query))}
+
+
+def _bind_license_scan(ql: str, query: str) -> Optional[dict]:
     if _LICENSE_RE.search(ql):
         drop = []
         if m := _LICENSE_DROP_RE.search(ql):
             drop = sorted({g for g in m.groups() if g})
-        return {"target": "license_scan", "drop": drop}
+        return {"drop": drop}
+
+
+def _bind_bin_pack(ql: str, query: str) -> Optional[dict]:
     if _BINPACK_RE.search(ql):
-        budget = 1024
-        if m := _BIN_BUDGET_RE.search(ql):
-            budget = int(next(g for g in m.groups() if g))
-        nb = None
-        if m := _BUCKETS_RE.search(ql):
-            nb = int(m.group(1))
-        return {"target": "bin_pack", "budget": budget,
-                "n_buckets": nb}
+        budget = _first_int(_BIN_BUDGET_RE, ql, 1024)
+        nb = _first_int(_BUCKETS_RE, ql)
+        return {"budget": budget, "n_buckets": nb}
+
+
+def _bind_embed_documents(ql: str, query: str) -> Optional[dict]:
     if _EMBED_RE.search(ql):
-        dim = int(m.group(1)) if (m := _DIM_RE.search(ql)) else 64
-        return {"target": "embed_documents", "dim": dim}
+        dim = _first_int(_DIM_RE, ql, 64)
+        return {"dim": dim}
+
+
+def _bind_band_snapshot(ql: str, query: str) -> Optional[dict]:
     if _BAND_SNAPSHOT_BUILD_RE.search(ql):
         # 'at similarity 0.8' / 'threshold 0.8' opts into the LSH
         # parameter advisor (minhash_band_plan) instead of the
@@ -4451,143 +3158,150 @@ def parse_dataops_query(query: str) -> Optional[dict]:
         if m := (_SEM_THRESHOLD_RE.search(ql)
                  or _SIMILARITY_RE.search(ql)):
             thr = float(m.group(1))
-        return {"target": "band_snapshot", "threshold": thr}
+        return {"threshold": thr}
+
+
+def _bind_neardup_probe(ql: str, query: str) -> Optional[dict]:
     if _NEARDUP_PROBE_RE.search(ql):
-        m = _SNAPSHOT_PATH_RE.search(query)   # paths keep their case
-        return {"target": "neardup_probe",
-                "snapshot_path": m.group(1) if m else None,
+        return {"snapshot_path": _path(_SNAPSHOT_PATH_RE, query),
                 "hot_policy": ("star" if ("star" in ql
                                           or "recover" in ql)
                                else "drop"),
                 "update": "update" in ql or "grow" in ql}
+
+
+def _bind_passage_snapshot(ql: str, query: str) -> Optional[dict]:
     if _PASSAGE_BUILD_RE.search(ql):
-        w = 50
-        if mw := _SUBSTR_WINDOW_RE.search(ql):
-            w = int(mw.group(1))
-        return {"target": "passage_snapshot", "window": w}
+        w = _first_int(_SUBSTR_WINDOW_RE, ql, 50)
+        return {"window": w}
+
+
+def _bind_domain_rank(ql: str, query: str) -> Optional[dict]:
     if _DOMAIN_RANK_RE.search(ql) and ("link graph" in ql
                                        or "pagerank" in ql
                                        or "harmonic" in ql
                                        or "domain rank" in ql):
-        m = _GRAPH_PATH_RE.search(query)     # paths keep their case
-        ni = int(mi.group(1)) if (mi := _ITER_RE.search(ql)) else 10
-        return {"target": "domain_rank",
-                "edges_path": m.group(1) if m else None,
+        return {"edges_path": _path(_GRAPH_PATH_RE, query),
                 # 'by harmonic centrality' swaps the power iteration
                 # for the HyperBall sketch expansion (radius = the
                 # iteration knob, default 8)
                 "method": ("harmonic" if "harmonic" in ql
                            else "pagerank"),
-                "n_iter": (ni if _ITER_RE.search(ql)
-                           else (8 if "harmonic" in ql else 10))}
+                "n_iter": _first_int(_ITER_RE, ql,
+                                     8 if "harmonic" in ql else 10)}
+
+
+def _bind_passage_probe(ql: str, query: str) -> Optional[dict]:
+    # a snapshot mention routes a passage phrasing to the incremental
+    # probe face instead of the batch span report
+    if _SUBSTR_TARGET_RE.search(ql) and "snapshot" in ql:
+        return {"snapshot_path": _path(_SNAPSHOT_PATH_RE, query),
+                "update": "update" in ql or "grow" in ql}
+
+
+def _bind_substring_dedup(ql: str, query: str) -> Optional[dict]:
     if m := _SUBSTR_TARGET_RE.search(ql):
-        # a snapshot mention routes to the incremental probe face
-        if "snapshot" in ql:
-            mp = _SNAPSHOT_PATH_RE.search(query)  # paths keep case
-            return {"target": "passage_probe",
-                    "snapshot_path": mp.group(1) if mp else None,
-                    "update": "update" in ql or "grow" in ql}
-        w = 50
-        if mw := _SUBSTR_WINDOW_RE.search(ql):
-            w = int(mw.group(1))
-        return {"target": "substring_dedup", "window": w,
+        w = _first_int(_SUBSTR_WINDOW_RE, ql, 50)
+        return {"window": w,
                 # 'flag'/'find' report the span table; 'remove'/
                 # 'strip'/'cut' rewrite the corpus
                 "flag_only": m.group(1) in ("flag", "find")}
+
+
+def _bind_containment_probe(ql: str, query: str) -> Optional[dict]:
     if m := _CONTAIN_PROBE_RE.search(ql):
         modality = "audio" if "audio" in m.group(1) else "video"
-        ms = 2
-        if mm := _MIN_SHARED_RE.search(ql):
-            ms = int(mm.group(1))
-        m = _SNAPSHOT_PATH_RE.search(query)   # paths keep their case
-        return {"target": "containment_probe", "modality": modality,
-                "min_shared": ms,
-                "snapshot_path": m.group(1) if m else None,
+        ms = _first_int(_MIN_SHARED_RE, ql, 2)
+        return {"modality": modality, "min_shared": ms,
+                "snapshot_path": _path(_SNAPSHOT_PATH_RE, query),
                 "update": "update" in ql or "grow" in ql}
-    if m := _CONTAIN_RE.search(ql):
-        modality = ("audio" if "audio" in (m.group(1) or m.group(2))
-                    else "video")
-        ms = 2 if modality == "audio" else 3
-        if mm := _MIN_SHARED_RE.search(ql):
-            ms = int(mm.group(1))
-        mh = 6
-        if mm := _HAMMING_RE.search(ql):
-            mh = int(next(g for g in mm.groups() if g))
-        return {"target": f"{modality}_containment",
-                "modality": modality, "min_shared": ms,
+
+
+def _media_modality(noun: str) -> str:
+    return ("audio" if "audio" in noun
+            else "video" if "video" in noun else "image")
+
+
+def _containment_binder(modality: str) -> Callable[[str, str],
+                                                   Optional[dict]]:
+    """Binder of the ``<modality>_containment`` row."""
+    def bind(ql: str, query: str) -> Optional[dict]:
+        m = _CONTAIN_RE.search(ql)
+        if not m or _media_modality(m.group(1) or m.group(2)) != modality:
+            return None
+        ms = _first_int(_MIN_SHARED_RE, ql, 2 if modality == "audio" else 3)
+        mh = _first_int(_HAMMING_RE, ql, 6)
+        return {"modality": modality, "min_shared": ms,
                 "max_hamming": mh, "n_blocks": 8,
                 "hot_policy": ("reband" if ("reband" in ql
                                             or "recover" in ql)
                                else "drop")}
-    if m := _MEDIA_PROBE_RE.search(ql):
-        modality = ("audio" if "audio" in m.group(1)
-                    else "video" if "video" in m.group(1) else "image")
-        m = _SNAPSHOT_PATH_RE.search(query)   # paths keep their case
+    return bind
+
+
+def _media_probe_binder(modality: str) -> Callable[[str, str],
+                                                   Optional[dict]]:
+    """Binder of the ``<modality>_probe`` row."""
+    def bind(ql: str, query: str) -> Optional[dict]:
+        m = _MEDIA_PROBE_RE.search(ql)
+        if not m or _media_modality(m.group(1)) != modality:
+            return None
         # '... and update the snapshot' additionally appends the
         # batch's FRESH (unflagged, within-batch-deduped) fingerprints
         # to the store — the epoch-grow step, like the Bloom/ANN stores
-        return {"target": f"{modality}_probe",
-                "modality": modality,
-                "snapshot_path": m.group(1) if m else None,
+        return {"modality": modality,
+                "snapshot_path": _path(_SNAPSHOT_PATH_RE, query),
                 "update": "update" in ql or "grow" in ql}
-    if m := _MEDIA_DEDUP_RE.search(ql):
-        noun = m.group(1) or m.group(2)
-        modality = ("audio" if "audio" in noun
-                    else "video" if "video" in noun else "image")
-        mh = 6
-        if m := _HAMMING_RE.search(ql):
-            mh = int(next(g for g in m.groups() if g))
+    return bind
+
+
+def _media_dedup_binder(modality: str) -> Callable[[str, str],
+                                                   Optional[dict]]:
+    """Binder of the ``<modality>_dedup`` row."""
+    def bind(ql: str, query: str) -> Optional[dict]:
+        m = _MEDIA_DEDUP_RE.search(ql)
+        if not m or _media_modality(m.group(1) or m.group(2)) != modality:
+            return None
+        mh = _first_int(_HAMMING_RE, ql, 6)
         # 'recovering hot buckets' / 'reband' opts over-cap buckets
         # into the skew-aware re-banding tier instead of dropping them
-        return {"target": f"{modality}_dedup", "modality": modality,
+        return {"modality": modality,
                 "max_hamming": mh, "n_blocks": 8,
                 "hot_policy": ("reband" if ("reband" in ql
                                             or "recover" in ql)
                                else "drop")}
+    return bind
+
+
+def _bind_incremental_dedup(ql: str, query: str) -> Optional[dict]:
     if (("dedup" in ql or "deduplicate" in ql or "ingest" in ql)
             and "against" in ql and "snapshot" in ql):
-        m = _SNAPSHOT_PATH_RE.search(query)
-        return {"target": "incremental_dedup",
-                "snapshot_path": m.group(1) if m else None,
+        return {"snapshot_path": _path(_SNAPSHOT_PATH_RE, query),
                 "bloom": "bloom" in ql}
-    if _ARCHIVE_TARGET_RE.search(ql):
-        # the container outranks its contents: 'the zip of pdfs at /p'
-        # routes to the archive door, whose kernel applies the pdf
-        # text tier per member anyway
-        m = _ARCHIVE_PATH_RE.search(query)  # paths keep their case
-        return {"target": "ingest_archives",
-                "archive_path": m.group(1) if m else None}
-    if _PDF_TARGET_RE.search(ql):
-        m = _PDF_PATH_RE.search(query)     # paths keep their case
-        return {"target": "ingest_pdfs",
-                "pdf_path": m.group(1) if m else None}
-    if _LINK_GRAPH_BUILD_RE.search(ql):
-        m = _CRAWL_PATH_RE.search(query)   # paths keep their case
-        return {"target": "link_graph_build",
-                "crawl_path": m.group(1) if m else None}
-    if _CRAWL_TARGET_RE.search(ql):
-        m = _CRAWL_PATH_RE.search(query)   # paths keep their case
-        return {"target": "ingest_crawl",
-                "crawl_path": m.group(1) if m else None}
+
+
+def _bind_webdataset_write(ql: str, query: str) -> Optional[dict]:
     if _WDS_RE.search(ql) and not _SHARD_VERIFY_RE.search(ql):
-        ns = int(m.group(1)) if (m := _SHARDS_RE.search(ql)) else None
-        mb = int(m.group(1)) if (m := _WDS_MB_RE.search(ql)) else 256
+        ns = _first_int(_SHARDS_RE, ql)
+        mb = _first_int(_WDS_MB_RE, ql, 256)
         # 'export the images/media/clips as webdataset' ships the
         # media table's payload bytes instead of document text
         media = bool(re.search(
             r"\b(?:images?|media|audio|clips?|videos?)\b", ql))
-        return {"target": "webdataset_write", "n_shards": ns,
-                "target_shard_mb": mb,
+        return {"n_shards": ns, "target_shard_mb": mb,
                 "table": "media" if media else "documents"}
+
+
+def _bind_verify_shards(ql: str, query: str) -> Optional[dict]:
     if _SHARD_VERIFY_RE.search(ql) and not _DECONTAM_TARGET_RE.search(ql):
         # the decontam exclusion keeps 'check the corpus shards for
         # contamination against the benchmark at /b' on its intended
         # route — 'verify/check ... shards' alone is the manifest check
-        sp = _SHARDS_PATH_RE.search(query)   # paths keep their case
-        mp = _MANIFEST_PATH_RE.search(query)
-        return {"target": "verify_shards",
-                "shards_path": sp.group(1) if sp else None,
-                "manifest_path": mp.group(1) if mp else None}
+        return {"shards_path": _path(_SHARDS_PATH_RE, query),
+                "manifest_path": _path(_MANIFEST_PATH_RE, query)}
+
+
+def _bind_data_card(ql: str, query: str) -> Optional[dict]:
     if _DATACARD_TARGET_RE.search(ql):
         # 'generate a data card ... with the tokenizer at /path' adds
         # the TK4 fertility section: per-language tokens-per-word is
@@ -4595,83 +3309,70 @@ def parse_dataops_query(query: str) -> Optional[dict]:
         # A named token budget ('... with a budget of 1000000 tokens,
         # at most 2 epochs') adds the SM10 suggested-mix section —
         # pure driver math over the census the card already collects.
-        mt = _TOKENIZER_PATH_RE.search(query)  # paths keep their case
-        budget = None
-        if m := _UNIMAX_BUDGET_RE.search(ql):
-            budget = int(next(g for g in m.groups() if g)
-                         .replace(",", "").replace("_", ""))
-        ep = 2
-        if m := _UNIMAX_EPOCHS_RE.search(ql):
-            ep = int(next(g for g in m.groups() if g))
-        return {"target": "data_card",
-                "tokenizer_path": mt.group(1) if mt else None,
+        budget = _first_int(_UNIMAX_BUDGET_RE, ql)
+        ep = _first_int(_UNIMAX_EPOCHS_RE, ql, 2)
+        return {"tokenizer_path": _path(_TOKENIZER_PATH_RE, query),
                 "mix_budget": budget, "mix_epochs": ep}
+
+
+def _bind_corpus_census(ql: str, query: str) -> Optional[dict]:
     if _CENSUS_TARGET_RE.search(ql):
         # 'with a length histogram' / 'length distribution' adds the
         # power-of-two token-length histogram sidecar; 'distinct'
         # adds the HLL distinct-fingerprint census (dup-rate telemetry)
-        return {"target": "corpus_census",
-                "histogram": ("histogram" in ql
+        return {"histogram": ("histogram" in ql
                               or "distribution" in ql),
                 "distinct": "distinct" in ql}
-    if _DECONTAM_TARGET_RE.search(ql) or _BENCH_SPAN_RE.search(ql):
-        m = _BENCH_PATH_RE.search(query)   # paths keep their case
+
+
+def _bind_decontaminate_spans(ql: str, query: str) -> Optional[dict]:
+    # 'at the passage level' / 'remove benchmark passages' ->
+    # span-surgical decontamination: cut the leaked run, keep the
+    # document (D19)
+    if _BENCH_SPAN_RE.search(ql) or (_DECONTAM_TARGET_RE.search(ql)
+                                     and ("passage" in ql
+                                          or "span" in ql)):
+        w = _first_int(_SUBSTR_WINDOW_RE, ql, 20)
+        return {"benchmark_path": _path(_BENCH_PATH_RE, query),
+                "window": w,
+                "flag_only": ("flag" in ql or "find" in ql)}
+
+
+def _bind_decontaminate(ql: str, query: str) -> Optional[dict]:
+    if _DECONTAM_TARGET_RE.search(ql):
         thr = (float(t.group(1))
                if (t := _SEM_THRESHOLD_RE.search(ql)) else 0.95)
-        ov = int(t.group(1)) if (t := _OVERLAP_RE.search(ql)) else 3
-        # 'at the passage level' / 'remove benchmark passages' ->
-        # span-surgical decontamination: cut the leaked run, keep
-        # the document (D19)
-        if ("passage" in ql or "span" in ql
-                or _BENCH_SPAN_RE.search(ql)):
-            w = 20
-            if mw := _SUBSTR_WINDOW_RE.search(ql):
-                w = int(mw.group(1))
-            return {"target": "decontaminate_spans",
-                    "benchmark_path": m.group(1) if m else None,
-                    "window": w,
-                    "flag_only": ("flag" in ql or "find" in ql)}
-        return {"target": "decontaminate",
-                "benchmark_path": m.group(1) if m else None,
+        ov = _first_int(_OVERLAP_RE, ql, 3)
+        return {"benchmark_path": _path(_BENCH_PATH_RE, query),
                 "semantic": bool(_SEMANTIC_TARGET_RE.search(ql)),
                 "threshold": thr, "min_overlap": ov}
-    if _CLASSIFIER_SCORE_RE.search(ql):
-        m = _CLASSIFIER_PATH_RE.search(query)  # paths keep their case
-        return {"target": "classifier_score",
-                "model_path": m.group(1) if m else None}
-    if _CLASSIFIER_TRAIN_RE.search(ql):
-        return {"target": "classifier_train"}
-    if _TOKSTATS_RE.search(ql):
-        mt = _TOKENIZER_PATH_RE.search(query)  # paths keep their case
-        return {"target": "tokenizer_stats",
-                "tokenizer_path": mt.group(1) if mt else None}
+
+
+def _bind_tokenizer_train(ql: str, query: str) -> Optional[dict]:
     if _TOKENIZER_TRAIN_RE.search(ql):
-        merges = int(m.group(1)) if (m := _MERGES_RE.search(ql)) \
-            else 200
-        if m := re.search(r"\bvocab(?:ulary)?\s+(?:of\s+)?(\d+)\b",
-                          ql):
-            merges = int(m.group(1))
-        return {"target": "tokenizer_train", "n_merges": merges,
+        merges = _first_int(r"\bvocab(?:ulary)?\s+(?:of\s+)?(\d+)\b", ql,
+                            _first_int(_MERGES_RE, ql, 200))
+        return {"n_merges": merges,
                 "model": ("unigram" if ("unigram" in ql
                                         or "sentencepiece" in ql)
                           else "bpe")}
+
+
+def _bind_tokenize_pack(ql: str, query: str) -> Optional[dict]:
     if _TOKENIZE_TARGET_RE.search(ql):
-        seq = int(m.group(1)) if (m := _SEQ_LEN_RE.search(ql)) else None
-        if seq is None:  # '512-token sequences' phrasing
-            m = re.search(r"\b(\d+)[- ]token\b", ql)
-            seq = int(m.group(1)) if m else 512
-        merges = int(m.group(1)) if (m := _MERGES_RE.search(ql)) else 200
+        seq = _first_int(_SEQ_LEN_RE, ql,
+                         # '512-token sequences' phrasing
+                         _first_int(r"\b(\d+)[- ]token\b", ql, 512))
+        merges = _first_int(_MERGES_RE, ql, 200)
         # n_buckets=None -> corpus-derived at run time (the packing
         # shuffle's task count IS n_buckets; a fixed default is a
         # 100x-scale trap — see derive_n_buckets)
-        nb = int(m.group(1)) if (m := _SHARDS_RE.search(ql)) else None
-        mt = _TOKENIZER_PATH_RE.search(query)  # paths keep their case
-        return {"target": "tokenize_pack", "seq_len": seq,
-                "n_merges": merges, "n_buckets": nb,
+        nb = _first_int(_SHARDS_RE, ql)
+        return {"seq_len": seq, "n_merges": merges, "n_buckets": nb,
                 # 'with the tokenizer at /path' loads the persisted
                 # artifact (kind inferred from its columns) instead
                 # of retraining — the train-once contract
-                "tokenizer_path": mt.group(1) if mt else None,
+                "tokenizer_path": _path(_TOKENIZER_PATH_RE, query),
                 # 'with a unigram model' / 'sentencepiece' swaps the
                 # BPE trainer for the unigram-LM tokenizer (TK3)
                 "model": ("unigram" if ("unigram" in ql
@@ -4680,6 +3381,9 @@ def parse_dataops_query(query: str) -> Optional[dict]:
                 # 'with an eos separator' reserves the id just past
                 # the vocab for the per-document delimiter
                 "eos": "eos" in ql or "separator" in ql}
+
+
+def _bind_split_corpus(ql: str, query: str) -> Optional[dict]:
     if _SPLIT_TARGET_RE.search(ql):
         fr = _SPLIT_FRACS_RE.search(ql)
         if fr:
@@ -4688,69 +3392,49 @@ def parse_dataops_query(query: str) -> Optional[dict]:
             splits = {"train": a / tot, "val": b / tot, "test": c / tot}
         else:
             splits = {"train": 0.8, "val": 0.1, "test": 0.1}
-        return {"target": "split_corpus", "splits": splits,
+        return {"splits": splits,
                 "leak_safe": ("leak" in ql or "near-dup" in ql
                               or "near dup" in ql)}
-    if _BM25_INDEX_APPEND_RE.search(ql):
-        m = _INDEX_PATH_RE.search(query)   # paths keep their case
-        return {"target": "bm25_index_append",
-                "index_path": m.group(1) if m else None}
-    if _REBUCKET_RE.search(ql):
-        m = _STORE_PATH_RE.search(query)   # paths keep their case
-        return {"target": "corpus_rebucket",
-                "store_path": m.group(1) if m else None}
-    if _UPSERT_RE.search(ql):
-        m = _STORE_PATH_RE.search(query)   # paths keep their case
-        return {"target": "corpus_upsert",
-                "store_path": m.group(1) if m else None}
+
+
+def _bind_corpus_store_build(ql: str, query: str) -> Optional[dict]:
     if _STORE_BUILD_RE.search(ql):
-        nb = int(m.group(1)) if (m := _BUCKETS_RE.search(ql)) else None
-        return {"target": "corpus_store_build", "n_buckets": nb}
+        nb = _first_int(_BUCKETS_RE, ql)
+        return {"n_buckets": nb}
+
+
+def _bind_ann_tune(ql: str, query: str) -> Optional[dict]:
     if _ANN_TUNE_RE.search(ql):
-        k = 10
-        if m := _ANN_K_RE.search(ql):
-            k = int(next(g for g in m.groups() if g))
+        k = _first_int(_ANN_K_RE, ql, 10)
         target = 0.9
         if m := _TARGET_RECALL_RE.search(ql):
             target = float(m.group(1))
-        nq = 32
-        if m := _SAMPLE_Q_RE.search(ql):
-            nq = int(m.group(1))
-        mi = _INDEX_PATH_RE.search(query)  # paths keep their case
-        return {"target": "ann_tune", "k": k,
-                "target_recall": target, "n_queries": nq,
-                "index_path": mi.group(1) if mi else None}
+        nq = _first_int(_SAMPLE_Q_RE, ql, 32)
+        return {"k": k, "target_recall": target, "n_queries": nq,
+                "index_path": _path(_INDEX_PATH_RE, query)}
+
+
+def _bind_ann_recall(ql: str, query: str) -> Optional[dict]:
     if _ANN_RECALL_RE.search(ql):
-        k = 10
-        if m := _ANN_K_RE.search(ql):
-            k = int(next(g for g in m.groups() if g))
+        k = _first_int(_ANN_K_RE, ql, 10)
         # None when the query names no probe count: the handler then
         # prefers the store's tuned _meta sidecar over the static
         # default — an explicit 'probing N lists' always wins
-        n_probe = None
-        if m := _PROBES_RE.search(ql):
-            n_probe = int(next(g for g in m.groups() if g))
-        nq = 32
-        if m := _SAMPLE_Q_RE.search(ql):
-            nq = int(m.group(1))
-        mi = _INDEX_PATH_RE.search(query)  # paths keep their case
-        return {"target": "ann_recall", "k": k, "n_probe": n_probe,
-                "n_queries": nq,
-                "index_path": mi.group(1) if mi else None}
-    if _ANN_INDEX_APPEND_RE.search(ql):
-        m = _INDEX_PATH_RE.search(query)   # paths keep their case
-        return {"target": "ann_index_append",
-                "index_path": m.group(1) if m else None}
+        n_probe = _first_int(_PROBES_RE, ql)
+        nq = _first_int(_SAMPLE_Q_RE, ql, 32)
+        return {"k": k, "n_probe": n_probe, "n_queries": nq,
+                "index_path": _path(_INDEX_PATH_RE, query)}
+
+
+def _bind_ann_index_build(ql: str, query: str) -> Optional[dict]:
     if _ANN_INDEX_BUILD_RE.search(ql):
-        nl = int(m.group(1)) if (m := _LISTS_RE.search(ql)) else None
-        return {"target": "ann_index_build", "n_lists": nl,
-                "opq": "opq" in ql or "rotation" in ql}
-    if _BM25_INDEX_BUILD_RE.search(ql):
-        return {"target": "bm25_index_build"}
+        nl = _first_int(_LISTS_RE, ql)
+        return {"n_lists": nl, "opq": "opq" in ql or "rotation" in ql}
+
+
+def _bind_hybrid_search(ql: str, query: str) -> Optional[dict]:
     if _HYBRID_TARGET_RE.search(ql):
-        k = 10
-        if m := _ANN_K_RE.search(ql):
-            k = int(next(g for g in m.groups() if g))
+        k = _first_int(_ANN_K_RE, ql, 10)
         ids = []
         if m := _LIKE_DOCS_RE.search(ql):
             ids = [int(x) for x in re.findall(r"\d+", m.group(1))]
@@ -4758,104 +3442,104 @@ def parse_dataops_query(query: str) -> Optional[dict]:
         # IVF-PQ store as the dense tower (probed-lists cost instead
         # of a corpus scan); n_probe resolves like the search face —
         # explicit 'probing N lists' > tuned _meta > default
-        mi = _INDEX_PATH_RE.search(query)    # paths keep their case
-        n_probe = None
-        if m := _PROBES_RE.search(ql):
-            n_probe = int(next(g for g in m.groups() if g))
-        return {"target": "hybrid_search", "k": k, "doc_ids": ids,
-                "index_path": mi.group(1) if mi else None,
+        n_probe = _first_int(_PROBES_RE, ql)
+        return {"k": k, "doc_ids": ids,
+                "index_path": _path(_INDEX_PATH_RE, query),
                 "n_probe": n_probe}
+
+
+def _bind_retrieve(ql: str, query: str) -> Optional[dict]:
     if _RETRIEVE_TARGET_RE.search(ql):
-        k = 10
-        if m := _ANN_K_RE.search(ql):
-            k = int(next(g for g in m.groups() if g))
-        mi = _INDEX_PATH_RE.search(query)    # paths keep their case
-        return {"target": "retrieve", "k": k,
+        k = _first_int(_ANN_K_RE, ql, 10)
+        return {"k": k,
                 # 'search the index at /p for "..."' probes the
                 # persisted BM25 store instead of rescanning
-                "index_path": mi.group(1) if mi else None,
+                "index_path": _path(_INDEX_PATH_RE, query),
                 # query strings keep their original case
                 "queries": _QUOTED_RE.findall(query)}
+
+
+def _bind_ann_search(ql: str, query: str) -> Optional[dict]:
     if _ANN_TARGET_RE.search(ql):
-        k = 10
-        if m := _ANN_K_RE.search(ql):
-            k = int(next(g for g in m.groups() if g))
+        k = _first_int(_ANN_K_RE, ql, 10)
         # 'with an opq rotation' opts the index into the parametric
         # OPQ rotation — same exact-tier answers, tighter ADC; the
         # run reports the rotation's reconstruction-MSE delta.
         # '... using the ann index at /path' searches the PERSISTED
         # store instead of rebuilding (tuned n_probe from its _meta;
         # an explicit 'probing N lists' wins, the recall-face rule)
-        mi = _INDEX_PATH_RE.search(query)  # paths keep their case
-        n_probe = None
-        if m := _PROBES_RE.search(ql):
-            n_probe = int(next(g for g in m.groups() if g))
-        return {"target": "ann_search", "k": k,
-                "opq": "opq" in ql or "rotation" in ql,
-                "index_path": mi.group(1) if mi else None,
+        n_probe = _first_int(_PROBES_RE, ql)
+        return {"k": k, "opq": "opq" in ql or "rotation" in ql,
+                "index_path": _path(_INDEX_PATH_RE, query),
                 "n_probe": n_probe}
+
+
+def _bind_semantic_dedup(ql: str, query: str) -> Optional[dict]:
     if _SEMANTIC_TARGET_RE.search(ql):
         thr = (float(m.group(1))
                if (m := _SEM_THRESHOLD_RE.search(ql)) else 0.95)
         # n_clusters=None -> corpus-derived at run time (the SemDeDup
         # per-cluster pair join is quadratic in cluster size; a fixed
         # default is a 100x-scale trap — the paper runs 50k clusters)
-        ncl = int(m.group(1)) if (m := _CLUSTERS_RE.search(ql)) else None
-        return {"target": "semantic_dedup", "threshold": thr,
-                "n_clusters": ncl,
+        ncl = _first_int(_CLUSTERS_RE, ql)
+        return {"threshold": thr, "n_clusters": ncl,
                 "keep": "min" if "lowest id" in ql else "far"}
-    if _CLUSTER_ASSIGN_RE.search(ql):
-        m = _CLUSTERS_PATH_RE.search(query)   # paths keep their case
-        return {"target": "cluster_assign",
-                "centers_path": m.group(1) if m else None}
+
+
+def _bind_cluster_corpus(ql: str, query: str) -> Optional[dict]:
     if _CLUSTER_TARGET_RE.search(ql):
         # n_clusters=None -> corpus-derived at run time (constant
         # target cluster size, same curve as SemDeDup)
-        ncl = None
-        if m := _CLUSTERS_RE.search(ql):
-            ncl = int(m.group(1))
-        elif m := _TOPICS_RE.search(ql):
-            ncl = int(m.group(1))
-        return {"target": "cluster_corpus", "n_clusters": ncl}
+        ncl = _first_int(_CLUSTERS_RE, ql, _first_int(_TOPICS_RE, ql))
+        return {"n_clusters": ncl}
+
+
+def _bind_dsir_select(ql: str, query: str) -> Optional[dict]:
     if _DSIR_TARGET_RE.search(ql):
         m = _DSIR_SOURCE_RE.search(query)
-        return {"target": "dsir_select",
-                "target_source": m.group(1) if m else None,
+        return {"target_source": m.group(1) if m else None,
                 # 'select'/'keep' narrows output to docs weighing
                 # above the POOL MEAN (integer-exact, calibration-free
                 # — the absolute zero point shifts with smoothing
                 # mass); otherwise the full weight vector ships
                 "select": ("select" in ql or "keep" in ql)}
+
+
+def _bind_shuffle_order(ql: str, query: str) -> Optional[dict]:
     if _SHUFFLE_TARGET_RE.search(ql) and "shard" not in ql:
-        ep = int(m.group(1)) if (m := _EPOCH_N_RE.search(ql)) else 0
-        return {"target": "shuffle_order", "epoch": ep}
+        ep = _first_int(_EPOCH_N_RE, ql, 0)
+        return {"epoch": ep}
+
+
+def _bind_unimax_mix(ql: str, query: str) -> Optional[dict]:
     if _UNIMAX_TARGET_RE.search(ql):
-        budget = None
-        if m := _UNIMAX_BUDGET_RE.search(ql):
-            budget = int(next(g for g in m.groups() if g)
-                         .replace(",", "").replace("_", ""))
-        ep = 2
-        if m := _UNIMAX_EPOCHS_RE.search(ql):
-            ep = int(next(g for g in m.groups() if g))
+        budget = _first_int(_UNIMAX_BUDGET_RE, ql)
+        ep = _first_int(_UNIMAX_EPOCHS_RE, ql, 2)
         strata = "source" if ("source" in ql or "domain" in ql) else "lang"
-        return {"target": "unimax_mix", "budget": budget,
-                "max_epochs": ep, "strata": strata}
+        return {"budget": budget, "max_epochs": ep, "strata": strata}
+
+
+def _bind_temperature_mix(ql: str, query: str) -> Optional[dict]:
     if _TEMP_TARGET_RE.search(ql):
         alpha = float(m.group(1)) if (m := _ALPHA_RE.search(ql)) else 0.5
         strata = "source" if ("source" in ql or "domain" in ql) else "lang"
-        return {"target": "temperature_mix", "alpha": alpha,
-                "strata": strata}
+        return {"alpha": alpha, "strata": strata}
+
+
+def _bind_chunk_documents(ql: str, query: str) -> Optional[dict]:
     if _CHUNK_TARGET_RE.search(ql) and "shard" not in ql:
-        size = int(m.group(1)) if (m := _CHUNK_SIZE_RE.search(ql)) else 128
-        stride = (int(m.group(1))
-                  if (m := _CHUNK_STRIDE_RE.search(ql)) else None)
-        return {"target": "chunk_documents", "size": size,
+        size = _first_int(_CHUNK_SIZE_RE, ql, 128)
+        stride = _first_int(_CHUNK_STRIDE_RE, ql)
+        return {"size": size,
                 "stride": min(stride, size) if stride else
                 max(1, (size * 3) // 4)}
+
+
+def _bind_corpus_to_shards(ql: str, query: str) -> dict:
     # n_buckets=None -> corpus-derived at run time (derive_n_buckets);
     # an explicit 'N shards' keeps bucket count tied to the user's
     # shard count as before
-    plan = {"target": "corpus_to_shards", "token_budget": 15_000,
+    plan = {"token_budget": 15_000,
             "seq_len": 512, "n_shards": 4, "n_buckets": None,
             "shuffle_salt": None,
             # 'with a manifest' opts into the per-shard integrity
@@ -4879,3 +3563,318 @@ def parse_dataops_query(query: str) -> Optional[dict]:
     if m := _EPOCH_RE.search(ql):
         plan["shuffle_salt"] = f"epoch-{m.group(1)}"
     return plan
+
+
+@dataclass(frozen=True)
+class Target:
+    """One NL dataops target. ``bind(ql, query)`` returns the plan
+    parameters when the lowercased/original query names this target,
+    else None. Before ``handler(pipeline, plan, catalog, output_path)``
+    runs, each ``requires`` pair rejects the run with its reason when
+    that plan key is empty."""
+
+    name: str
+    bind: Callable[[str, str], Optional[dict]]
+    handler: Callable[..., Result]
+    about: str
+    example: str
+    requires: tuple[tuple[str, str], ...] = ()
+
+
+# Priority order: the first row whose binder accepts a query wins, so a
+# specific phrasing sits above any broader one it overlaps.
+TARGETS: tuple[Target, ...] = (
+    Target("corpus_diff", _bind_corpus_diff, Pipeline._run_corpus_diff,
+           "diff the documents against a prior (doc_id, text) snapshot",
+           "diff the corpus against the snapshot at /data/prev",
+           (("snapshot_path", "corpus diff needs a snapshot path "
+             "('... against the snapshot at /path')"),)),
+    Target("compact_store", _bind_compact_store,
+           Pipeline._run_compact_store,
+           "rewrite an append-grown store into the output, deduped",
+           "compact the snapshot at /data/bands",
+           (("store_path", "compaction needs a store path "
+             "('compact the snapshot at /path')"),)),
+    Target("license_scan", _bind_license_scan, Pipeline._run_license_scan,
+           "per-document license flags; optionally drop classes",
+           "scan the corpus for licenses, dropping copyleft documents"),
+    Target("bin_pack", _bind_bin_pack, Pipeline._run_bin_pack,
+           "truncation-free first-fit-decreasing packing into token bins",
+           "bin pack the corpus into bins of 1024 tokens"),
+    Target("embed_documents", _bind_embed_documents,
+           Pipeline._run_embed_documents,
+           "hashed random-projection embeddings of the documents",
+           "embed the documents, 128 dimensions"),
+    Target("band_snapshot", _bind_band_snapshot,
+           Pipeline._run_band_snapshot,
+           "persist the documents' MinHash band table for later probes",
+           "build a near-dup band snapshot of the corpus"),
+    Target("neardup_probe", _bind_neardup_probe,
+           Pipeline._run_neardup_probe,
+           "flag batch documents near-duplicating a band snapshot",
+           "flag near-dups against the band snapshot at /data/bands",
+           (("snapshot_path", "near-dup probe needs a snapshot path "
+             "('... against the band snapshot at /path')"),)),
+    Target("passage_snapshot", _bind_passage_snapshot,
+           Pipeline._run_passage_snapshot,
+           "persist the documents' distinct token-window hashes",
+           "build a passage snapshot of the corpus, windows of 50 tokens"),
+    Target("domain_rank", _bind_domain_rank, Pipeline._run_domain_rank,
+           "PageRank or harmonic centrality over a domain link graph",
+           "rank the domains by the link graph at /data/edges",
+           (("edges_path", "domain ranking needs a link graph path "
+             "('by the link graph at /path' — a parquet of (src, dst) "
+             "domain edges)"),)),
+    Target("passage_probe", _bind_passage_probe,
+           Pipeline._run_passage_probe,
+           "flag batch passages already in a passage snapshot",
+           "flag duplicated passages against the passage snapshot at /w",
+           (("snapshot_path", "passage probe needs a snapshot path "
+             "('against the passage snapshot at /path')"),)),
+    Target("substring_dedup", _bind_substring_dedup,
+           Pipeline._run_substring_dedup,
+           "cut token runs repeated across documents (ExactSubstr)",
+           "remove duplicated passages across the corpus"),
+    Target("containment_probe", _bind_containment_probe,
+           Pipeline._run_containment_probe,
+           "flag batch media sharing frames/windows with a snapshot",
+           "flag the new videos sharing frames with the snapshot at /f"),
+    Target("video_containment", _containment_binder("video"),
+           Pipeline._run_containment,
+           "pairs of videos sharing frames, plus a frame-hash snapshot",
+           "find videos containing clips of each other"),
+    Target("audio_containment", _containment_binder("audio"),
+           Pipeline._run_containment,
+           "pairs of clips sharing windows, plus a window-hash snapshot",
+           "audio containment across the clips"),
+    Target("image_probe", _media_probe_binder("image"),
+           Pipeline._run_media_probe,
+           "flag batch images near a persisted fingerprint snapshot",
+           "flag the new images against the snapshot at /data/img",
+           (("snapshot_path", "image probe needs a snapshot path "
+             "('... against the snapshot at /path')"),)),
+    Target("audio_probe", _media_probe_binder("audio"),
+           Pipeline._run_media_probe,
+           "flag batch clips near a persisted fingerprint snapshot",
+           "flag the new audio against the snapshot at /data/aud",
+           (("snapshot_path", "audio probe needs a snapshot path "
+             "('... against the snapshot at /path')"),)),
+    Target("video_probe", _media_probe_binder("video"),
+           Pipeline._run_media_probe,
+           "flag batch videos near a persisted fingerprint snapshot",
+           "flag the new videos against the snapshot at /data/vid",
+           (("snapshot_path", "video probe needs a snapshot path "
+             "('... against the snapshot at /path')"),)),
+    Target("image_dedup", _media_dedup_binder("image"),
+           Pipeline._run_media_dedup,
+           "perceptual near-dup dedup of the images (dHash)",
+           "dedup the images within 6 bits"),
+    Target("audio_dedup", _media_dedup_binder("audio"),
+           Pipeline._run_media_dedup,
+           "perceptual near-dup dedup of the audio clips (aHash)",
+           "dedup the audio clips"),
+    Target("video_dedup", _media_dedup_binder("video"),
+           Pipeline._run_media_dedup,
+           "perceptual near-dup dedup of the videos (vHash)",
+           "dedup the videos"),
+    Target("incremental_dedup", _bind_incremental_dedup,
+           Pipeline._run_incremental_dedup,
+           "exact-dedup a batch against a seen-content snapshot",
+           "dedup the batch against the seen snapshot at /data/seen",
+           (("snapshot_path", "incremental dedup needs a snapshot path "
+             "('... against the seen snapshot at /path')"),)),
+    # the container outranks its contents: 'the zip of pdfs at /p'
+    # routes to the archive door, whose kernel applies the pdf text
+    # tier per member anyway
+    Target("ingest_archives",
+           _path_binder(_ARCHIVE_TARGET_RE, _ARCHIVE_PATH_RE, "archive_path"),
+           Pipeline._run_ingest_archives,
+           "zip/tar members -> documents-shaped parquet",
+           "extract text from the zip at /data/docs.zip",
+           (("archive_path", "archive ingest needs a path "
+             "('... the zip at /path')"),)),
+    Target("ingest_pdfs",
+           _path_binder(_PDF_TARGET_RE, _PDF_PATH_RE, "pdf_path"),
+           Pipeline._run_ingest_pdfs,
+           "PDF files -> documents-shaped parquet",
+           "extract text from the pdfs at /data/pdfs",
+           (("pdf_path", "pdf ingest needs a path "
+             "('... the pdfs at /path')"),)),
+    Target("link_graph_build",
+           _path_binder(_LINK_GRAPH_BUILD_RE, _CRAWL_PATH_RE, "crawl_path"),
+           Pipeline._run_link_graph_build,
+           "WARC pages -> distinct (src, dst) domain edges",
+           "build the link graph from the crawl at /data/crawl",
+           (("crawl_path", "link-graph build needs a crawl path "
+             "('from the crawl at /path')"),)),
+    Target("ingest_crawl",
+           _path_binder(_CRAWL_TARGET_RE, _CRAWL_PATH_RE, "crawl_path"),
+           Pipeline._run_ingest_crawl,
+           "WARC responses -> documents-shaped parquet",
+           "extract text from the crawl at /data/crawl",
+           (("crawl_path", "crawl ingest needs a path "
+             "('... the crawl at /path')"),)),
+    Target("webdataset_write", _bind_webdataset_write,
+           Pipeline._run_webdataset_write,
+           "export documents or media as WebDataset tar shards",
+           "export the corpus as webdataset, 8 shards"),
+    Target("verify_shards", _bind_verify_shards,
+           Pipeline._run_verify_shards,
+           "check a shard set against its integrity manifest",
+           "verify the shards at /data/shards against the manifest",
+           (("shards_path", "verify_shards needs 'shards at <path>'"),)),
+    Target("data_card", _bind_data_card, Pipeline._run_data_card,
+           "datasheet: composition, lengths, duplication, quality",
+           "generate a data card for the corpus"),
+    Target("corpus_census", _bind_corpus_census,
+           Pipeline._run_corpus_census,
+           "mergeable per-language/source doc, token and char counts",
+           "census the corpus"),
+    Target("decontaminate_spans", _bind_decontaminate_spans,
+           Pipeline._run_decontaminate_spans,
+           "cut benchmark token runs out of documents",
+           "remove benchmark passages against the benchmark at /data/eval",
+           (("benchmark_path", "span decontamination needs a benchmark "
+             "path ('against the benchmark at /path')"),)),
+    Target("decontaminate", _bind_decontaminate,
+           Pipeline._run_decontaminate,
+           "drop documents overlapping a benchmark (n-gram or cosine)",
+           "decontaminate the corpus against the benchmark at /data/eval",
+           (("benchmark_path", "decontamination needs a benchmark path "
+             "('... against the benchmark at /path')"),)),
+    Target("classifier_score",
+           _path_binder(_CLASSIFIER_SCORE_RE, _CLASSIFIER_PATH_RE,
+                        "model_path"),
+           Pipeline._run_classifier_score,
+           "score documents with a saved quality classifier",
+           "score the corpus with the classifier at /data/model",
+           (("model_path", "scoring needs a model path ('with the "
+             "classifier at /path')"),)),
+    Target("classifier_train", _path_binder(_CLASSIFIER_TRAIN_RE),
+           Pipeline._run_classifier_train,
+           "train and save a weak-label quality classifier",
+           "train a quality classifier on the corpus and save it"),
+    Target("tokenizer_stats",
+           _path_binder(_TOKSTATS_RE, _TOKENIZER_PATH_RE, "tokenizer_path"),
+           Pipeline._run_tokenizer_stats,
+           "per-language fertility of a saved tokenizer",
+           "report tokenizer stats with the tokenizer at /data/bpe",
+           (("tokenizer_path", "tokenizer stats need a tokenizer path "
+             "('... with the tokenizer at /path')"),)),
+    Target("tokenizer_train", _bind_tokenizer_train,
+           Pipeline._run_tokenizer_train,
+           "train and save a BPE or unigram tokenizer",
+           "train a bpe tokenizer on the corpus, 300 merges, and save it"),
+    Target("tokenize_pack", _bind_tokenize_pack,
+           Pipeline._run_tokenize_pack,
+           "tokenize to ids and pack fixed-length sequences",
+           "tokenize the corpus and pack 512-token sequences"),
+    Target("split_corpus", _bind_split_corpus,
+           Pipeline._run_split_corpus,
+           "deterministic train/val/test split, optionally leak-safe",
+           "split the corpus into train/val/test without leakage"),
+    Target("bm25_index_append",
+           _path_binder(_BM25_INDEX_APPEND_RE, _INDEX_PATH_RE, "index_path"),
+           Pipeline._run_bm25_index_append,
+           "append a batch to a persisted BM25 index",
+           "add the new documents to the retrieval index at /data/bm25",
+           (("index_path", "index append needs an index path "
+             "('... to the retrieval index at /path')"),)),
+    Target("corpus_rebucket",
+           _path_binder(_REBUCKET_RE, _STORE_PATH_RE, "store_path"),
+           Pipeline._run_corpus_rebucket,
+           "rewrite a corpus store with a re-derived bucket count",
+           "rebucket the corpus store at /data/store",
+           (("store_path", "rebucket needs a store path "
+             "('rebucket the corpus store at /path')"),)),
+    Target("corpus_upsert",
+           _path_binder(_UPSERT_RE, _STORE_PATH_RE, "store_path"),
+           Pipeline._run_corpus_upsert,
+           "merge a batch into a bucketed corpus store",
+           "upsert the batch into the corpus store at /data/store",
+           (("store_path", "corpus upsert needs a store path "
+             "('... into the corpus store at /path')"),)),
+    Target("corpus_store_build", _bind_corpus_store_build,
+           Pipeline._run_corpus_store_build,
+           "persist the documents hash-bucketed by doc_id",
+           "build a bucketed corpus store, 32 buckets"),
+    Target("ann_tune", _bind_ann_tune, Pipeline._run_ann_tune,
+           "raise an IVF-PQ index's n_probe until recall meets a target",
+           "tune the ann index at /data/ivf for recall 0.9",
+           (("index_path", "index tuning needs an index path "
+             "('... the ann index at /path')"),)),
+    Target("ann_recall", _bind_ann_recall, Pipeline._run_ann_recall,
+           "sampled recall@k of a persisted IVF-PQ index",
+           "estimate the recall of the ann index at /data/ivf, top 10",
+           (("index_path", "recall estimation needs an index path "
+             "('... the ann index at /path')"),)),
+    Target("ann_index_append",
+           _path_binder(_ANN_INDEX_APPEND_RE, _INDEX_PATH_RE, "index_path"),
+           Pipeline._run_ann_index_append,
+           "encode a batch against a frozen IVF-PQ index and append",
+           "append the new vectors to the index at /data/ivf",
+           (("index_path", "index append needs an index path "
+             "('... to the index at /path')"),)),
+    Target("ann_index_build", _bind_ann_index_build,
+           Pipeline._run_ann_index_build,
+           "fit and persist an IVF-PQ index over the embeddings",
+           "build an ann index over the embeddings, 64 lists"),
+    Target("bm25_index_build", _path_binder(_BM25_INDEX_BUILD_RE),
+           Pipeline._run_bm25_index_build,
+           "persist a BM25 inverted index over the documents",
+           "build a retrieval index over the corpus"),
+    Target("hybrid_search", _bind_hybrid_search,
+           Pipeline._run_hybrid_search,
+           "more-like-this over BM25 and embeddings, rank-fused",
+           "hybrid search for documents like doc 42, top 5",
+           (("doc_ids", "hybrid search needs document ids "
+             "('like doc 42')"),)),
+    Target("retrieve", _bind_retrieve, Pipeline._run_retrieve,
+           "BM25 top-k documents per quoted query",
+           "search the corpus for \"hash join strategies\", top 5",
+           (("queries", "retrieval needs at least one quoted query "
+             "string ('search the corpus for \"...\"')"),)),
+    Target("ann_search", _bind_ann_search, Pipeline._run_ann_search,
+           "IVF-PQ k-nearest neighbours of every embedding",
+           "find the 10 nearest neighbors for each document"),
+    Target("semantic_dedup", _bind_semantic_dedup,
+           Pipeline._run_semantic_dedup,
+           "SemDeDup over the embeddings table",
+           "semantically dedup the corpus, threshold 0.9"),
+    Target("cluster_assign",
+           _path_binder(_CLUSTER_ASSIGN_RE, _CLUSTERS_PATH_RE, "centers_path"),
+           Pipeline._run_cluster_assign,
+           "assign embeddings to a persisted cluster map",
+           "assign the new embeddings to the clusters at /data/centers",
+           (("centers_path", "cluster_assign needs 'clusters at "
+             "<path>'"),)),
+    Target("cluster_corpus", _bind_cluster_corpus,
+           Pipeline._run_cluster_corpus,
+           "k-means clusters of the embeddings, centers saved",
+           "cluster the embeddings into 12 topics"),
+    Target("dsir_select", _bind_dsir_select, Pipeline._run_dsir_select,
+           "DSIR importance weights toward a named source",
+           "importance resample toward src18",
+           (("target_source", "dsir needs a target domain "
+             "('... toward <source>')"),)),
+    Target("shuffle_order", _bind_shuffle_order,
+           Pipeline._run_shuffle_order,
+           "deterministic global training order for an epoch",
+           "shuffle the corpus for training, epoch 3"),
+    Target("unimax_mix", _bind_unimax_mix, Pipeline._run_unimax_mix,
+           "UniMax epoch-capped token allocation across languages",
+           "unimax the language mix with a budget of 50000 tokens"),
+    Target("temperature_mix", _bind_temperature_mix,
+           Pipeline._run_temperature_mix,
+           "temperature (alpha) resampling of the language mix",
+           "flatten the language mix with temperature 0.5"),
+    Target("chunk_documents", _bind_chunk_documents,
+           Pipeline._run_chunk_documents,
+           "overlapping token chunks of the documents for RAG",
+           "chunk the documents for RAG, size 256 stride 192"),
+    Target("corpus_to_shards", _bind_corpus_to_shards,
+           Pipeline._run_corpus_to_shards,
+           "curate, select a token budget, pack and write verified shards",
+           "curate and dedup the corpus into 4 shards"),
+)
+_TARGET_BY_NAME = {t.name: t for t in TARGETS}

@@ -3019,3 +3019,57 @@ def test_webdataset_nl_face(spark, sf_dir, tmp_path):
     man = spark.read.parquet(rep["manifest_path"])
     assert man.count() == 2
     assert man.agg(F.sum("rows")).first()[0] == rep["rows_written"]
+
+
+def test_target_table_contract():
+    """TARGETS is the one routing table of the NL dataops front door:
+    every row's example parses to that row, names are unique, each
+    row's required plan keys are keys its binder sets, every handler
+    the dispatcher can reach has a row, and 'explain:' on a non-dataops
+    query lists every target. Pure Python: no Spark session, no job."""
+    from dynamic_etl_pipeline_thesis_ii_spark.plans import orchestrator as O
+
+    names = [t.name for t in O.TARGETS]
+    assert len(names) == len(set(names))
+    for t in O.TARGETS:
+        plan = O.parse_dataops_query(t.example)
+        assert plan is not None and plan["target"] == t.name, t.example
+        assert t.about
+        assert {key for key, _ in t.requires} <= set(plan), t.name
+    # the dispatcher calls row handlers only; the one other _run_*
+    # method is the store face ann_search's handler hands off to
+    handlers = {t.handler for t in O.TARGETS}
+    runs = {f for k, f in vars(O.Pipeline).items() if k.startswith("_run_")}
+    assert runs - handlers == {O.Pipeline._run_ann_search_store}
+    assert handlers <= runs
+
+    res = Pipeline(None, None).run_dataops("explain: what time is it",
+                                           "/no/source", "/no/sink")
+    assert res["status"] == "explained" and res["reports"]["plan"] is None
+    listed = res["reports"]["targets"]
+    assert [e["target"] for e in listed] == names
+    assert all(e["example"] and e["about"] for e in listed)
+
+
+def test_rejections_name_their_cause(spark, sf_dir, tmp_path):
+    """A rejection for an unreadable input carries the underlying error
+    after the 'no X readable at P' prefix — a parquet that is not a
+    cluster map says so instead of only 'no cluster map readable'."""
+    pipe = Pipeline(spark, FixtureFetcher(spark, sf_dir))
+    not_map = str(tmp_path / "not_a_map")
+    spark.createDataFrame([(1, 2.0)], "a int, b double") \
+        .write.parquet(not_map)
+    r = pipe.run_dataops(
+        f"assign the new embeddings to the clusters at {not_map}",
+        sf_dir, str(tmp_path / "out1"))
+    assert r["status"] == "rejected"
+    assert r["reason"].startswith("no cluster map readable at")
+    assert "not a cluster map" in r["reason"]
+
+    r = pipe.run_dataops(
+        f"verify the shards at {tmp_path}/none against the manifest",
+        sf_dir, str(tmp_path / "out2"))
+    assert r["status"] == "rejected"
+    prefix = f"no manifest readable at {tmp_path}/none_manifest: "
+    assert r["reason"].startswith(prefix)
+    assert len(r["reason"]) > len(prefix)
