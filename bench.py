@@ -1192,13 +1192,20 @@ def main() -> None:
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
     colds: dict[str, float] = {}
+    # Janino compiles; warm repeats should compile 0 classes (a
+    # non-zero count means the working set outgrew session.py's
+    # codegen cache or a plan embeds a run-varying literal)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     for name in names:
-        times = []
+        times, counts = [], []
         for _ in range(repeat):
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             n = df.count()
             times.append(time.perf_counter() - t0)
+            counts.append(compiles.getCount())
+        warm_compiles = counts[-1] - counts[0]
         timings[name] = round(min(times), 3)
         # repeat 1 is COLD by construction: release_shared_caches() ran
         # after the previous query, so it computes everything from the
@@ -1219,8 +1226,8 @@ def main() -> None:
         # drop any shared frames the query persisted — executor memory
         # stays flat across the headline instead of accumulating caches
         release_shared_caches()
-        print(f"# {name}: {timings[name]}s min-of-{repeat} ({n} rows)",
-              file=sys.stderr)
+        print(f"# {name}: {timings[name]}s min-of-{repeat} ({n} rows, "
+              f"{warm_compiles} warm codegen compiles)", file=sys.stderr)
     total = round(sum(timings.values()), 3)
     load_end = round(os.getloadavg()[0], 2)
     # worst max/min ratio across queries slower than 0.2 s (sub-0.2 s

@@ -475,17 +475,21 @@ class Pipeline:
         ``<output>_snapshot_bloom`` next to the grown snapshot — a
         refit (2x-capacity resize) happens only when accumulated
         inserts exceed the capacity the filter was sized for."""
+        from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
+
         seen = self.spark.read.parquet(plan["snapshot_path"])
         batch = cat.documents
+        bloom_path = plan["snapshot_path"] + "_bloom"
+        census_path = plan["snapshot_path"] + "_census"
         bloom, bloom_loaded = None, False
         if plan.get("bloom"):
-            try:
-                bloom = dedup.BloomFilter.load(
-                    self.spark, plan["snapshot_path"] + "_bloom")
+            # no stored filter yet: the first epoch fits one; a stored
+            # one that cannot be loaded rejects
+            if sinks._path_exists(self.spark, bloom_path):
+                with _rejects(f"no bloom filter readable at {bloom_path}"):
+                    bloom = dedup.BloomFilter.load(self.spark, bloom_path)
                 bloom_loaded = True
-            except Exception:
-                pass    # no stored filter yet: first epoch fits one
-            if bloom is None:
+            else:
                 n_seen = seen.select("key").distinct().count()
                 bloom = dedup.BloomFilter.fit(seen.select("key"), "key",
                                               fpp=0.01, n_items=n_seen,
@@ -509,13 +513,13 @@ class Pipeline:
         # result equals a full recompute over everything ever
         # ingested, without re-scanning the corpus (text.corpus_census
         # contract; disjointness is exactly what the dedup guarantees)
-        fresh_census = text.corpus_census(back)
-        try:
-            prior = self.spark.read.parquet(
-                plan["snapshot_path"] + "_census")
-            census = text.merge_census(prior, fresh_census)
-        except Exception:       # bootstrap epoch: no census yet
-            census = fresh_census
+        census = text.corpus_census(back)
+        if sinks._path_exists(self.spark, census_path):
+            # a missing census is the bootstrap epoch; a stored one that
+            # cannot be read or merged rejects
+            with _rejects(f"no census readable at {census_path}"):
+                census = text.merge_census(
+                    self.spark.read.parquet(census_path), census)
         census.write.mode("overwrite").parquet(
             output_path + "_snapshot_census")
         bloom_refit = False
@@ -1903,12 +1907,13 @@ class Pipeline:
         # decodes (fingerprint row-count deltas over the payload
         # scan: dHash/aHash/vHash), not a mime guess. Absent media ->
         # the section says so explicitly rather than silently reading
-        # as text-only.
-        try:
-            media = self._media(cat)
-        except Rejected:
+        # as text-only; a media table that exists but cannot be read
+        # rejects with its cause.
+        if not sinks._path_exists(self.spark,
+                                  f"{cat.sf_dir}/media.parquet"):
             card["media"] = {"present": False}
         else:
+            media = self._media(cat)
             from dynamic_etl_pipeline_thesis_ii_spark.operators import (
                 multimodal,
             )

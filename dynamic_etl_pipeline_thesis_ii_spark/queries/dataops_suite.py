@@ -1691,7 +1691,13 @@ def q_corpus_curation(spark, sf_dir):
     cluster, ties to the lowest id). One lazy composition of the text,
     dedup and graph operators; the only iterative part is the component
     loop."""
-    scored = _curation_scored(spark, sf_dir)
+    return _curate(spark, sf_dir, _curation_scored(spark, sf_dir))
+
+
+def _curate(spark, sf_dir, scored: DataFrame) -> DataFrame:
+    """:func:`q_corpus_curation` over an already built
+    :func:`_curation_scored` frame, so a caller that also reads the
+    scored frame builds (and persists) it once."""
     kept = scored.filter((F.col("quality_score") >= 0.5)
                          & (F.col("pred_lang") == "en"))
     bench = (Catalog(spark, sf_dir).documents
@@ -1838,7 +1844,8 @@ def corpus_to_shards_frame(spark, sf_dir, *, token_budget: int = 15_000,
     Arrow kernel. The oracle-checked registry query stays on the
     whitespace path (BPE training is iterative — not
     SQL-expressible)."""
-    curated = q_corpus_curation(spark, sf_dir)
+    scored_all = _curation_scored(spark, sf_dir)
+    curated = _curate(spark, sf_dir, scored_all)
     corpus = _neardup_corpus(spark, sf_dir)
     if tokenizer == "bpe":
         from dynamic_etl_pipeline_thesis_ii_spark.operators import bpe as B
@@ -1848,16 +1855,10 @@ def corpus_to_shards_frame(spark, sf_dir, *, token_budget: int = 15_000,
         toks = (B.apply_bpe(corpus, merges, with_tokens=False)
                 .select(F.col("id").alias("doc_id"), "n_tokens"))
     elif tokenizer == "whitespace":
-        # the curation call above already persisted the scored corpus
-        # WITH n_tokens (same quality_features struct) — plan-identity
-        # cache hit, so this costs zero extra corpus scans instead of
-        # a second full regex pass (r13, guide §5 caching). CACHE
-        # DEPENDENCY: standalone (cache-evicted) reuse of this branch
-        # pays _curation_scored's lang-id regex pass and caches the
-        # text column with no consumer — acceptable here because the
-        # curation call above guarantees the hit; don't lift this
-        # projection out of the composite without re-costing it.
-        toks = _curation_scored(spark, sf_dir).select("doc_id", "n_tokens")
+        # the persisted scored frame curation reads also carries
+        # n_tokens (same quality_features struct), so the token counts
+        # cost no extra corpus scan instead of a second regex pass (r13)
+        toks = scored_all.select("doc_id", "n_tokens")
     else:
         raise ValueError(
             f"tokenizer must be 'whitespace' or 'bpe', got {tokenizer!r}")

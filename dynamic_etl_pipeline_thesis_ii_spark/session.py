@@ -57,6 +57,19 @@ _DEFAULTS: dict[str, str] = {
     # ann_topk 1.3->0.75 s measured at sf0.1). Driver-side latency only;
     # errors lose the "called from <file>:<line>" frame, nothing else.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated-code classes are cached by their source; Spark's default
+    # cache holds 100, and the engine's working set is larger: the 49
+    # registry queries compile 884 distinct classes at sf0.01, one
+    # four-op NL pass (chunk, census, corpus_to_shards, finance) about
+    # 180, corpus_to_shards alone 142. With 100 entries LRU eviction
+    # dropped every class before its next use, so each warm pass
+    # recompiled its whole set (~178 Janino compiles per NL pass, ~175
+    # per perfbench registry pass, at 25-45 ms of driver CPU each).
+    # 2000 covers both with room; warm passes compile 0 classes. Cost:
+    # metaspace. After a GC following two passes of all 49 queries it
+    # held 185.6 MB against 178.3 MB with the default cache (about 9 KB
+    # per retained class). A static conf: it takes effect at JVM start.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

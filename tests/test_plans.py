@@ -3073,3 +3073,57 @@ def test_rejections_name_their_cause(spark, sf_dir, tmp_path):
     prefix = f"no manifest readable at {tmp_path}/none_manifest: "
     assert r["reason"].startswith(prefix)
     assert len(r["reason"]) > len(prefix)
+
+
+def test_incremental_dedup_rejects_unreadable_sidecars(spark, sf_dir,
+                                                       tmp_path):
+    """Only a MISSING census or Bloom sidecar is the bootstrap epoch; a
+    sidecar that exists but cannot be read or merged rejects with its
+    cause instead of silently restarting the census or refitting."""
+    from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
+        content_keys,
+    )
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
+
+    snap = str(tmp_path / "snap")
+    content_keys(Catalog(spark, sf_dir).documents.filter("doc_id % 3 = 0")) \
+        .write.parquet(snap)
+    spark.createDataFrame([(1, 2.0)], "a int, b double") \
+        .write.parquet(snap + "_census")
+    pipe = Pipeline(spark, FixtureFetcher(spark, sf_dir))
+    r = pipe.run_dataops(
+        f"dedup the batch against the seen snapshot at {snap}",
+        sf_dir, str(tmp_path / "out1"))
+    assert r["status"] == "rejected"
+    prefix = f"no census readable at {snap}_census: "
+    assert r["reason"].startswith(prefix), r["reason"]
+    assert len(r["reason"]) > len(prefix)
+
+    spark.createDataFrame([(1, 2.0)], "a int, b double") \
+        .write.parquet(snap + "_bloom")
+    r = pipe.run_dataops(
+        f"dedup the batch against the seen snapshot at {snap} "
+        f"with a bloom filter", sf_dir, str(tmp_path / "out2"))
+    assert r["status"] == "rejected"
+    prefix = f"no bloom filter readable at {snap}_bloom: "
+    assert r["reason"].startswith(prefix), r["reason"]
+    assert len(r["reason"]) > len(prefix)
+
+
+def test_data_card_rejects_unreadable_media(spark, sf_dir, tmp_path):
+    """A media.parquet that exists but cannot be read ends the data card
+    run with the read error; only a missing one reads as no media."""
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
+
+    src = str(tmp_path / "card_sf")
+    Catalog(spark, sf_dir).documents.limit(40) \
+        .write.parquet(src + "/documents.parquet")
+    with open(src + "/media.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    pipe = Pipeline(spark, FixtureFetcher(spark, sf_dir))
+    r = pipe.run_dataops("generate a data card for the corpus", src,
+                         str(tmp_path / "card_out"))
+    assert r["status"] == "rejected"
+    prefix = f"no media table readable at {src}/media.parquet: "
+    assert r["reason"].startswith(prefix), r["reason"]
+    assert len(r["reason"]) > len(prefix)
