@@ -565,12 +565,16 @@ def weighted_hash_topk(df: DataFrame, weight_col: str, k: int,
 
     Scale shape: global top-k compiles to TakeOrderedAndProject
     (per-partition heads, no full sort shuffle); per-``group_col``
-    top-k pre-truncates to k rows per group WITHIN each scan
-    partition (``similarity._partition_topk`` — the same map-side
-    half TakeOrdered uses), so the rank window's exchange moves
+    top-k is a ``row_number() <= k`` window that Spark plans with a
+    partial ``WindowGroupLimit`` below the window's exchange, so each
+    scan partition keeps k rows per group and the exchange moves
     ~n_partitions·k rows per group instead of the group's full
     membership — at 100 TB with a handful of giant language groups
-    the one-stage window is a per-group global sort."""
+    the one-stage window is a per-group global sort. The partial
+    limit applies only for k up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+    1000); above it the window shuffles whole groups. No engine
+    caller passes such a k."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     u = ((_bucket(F.col(key_col), salt, 1 << 32) + 1).cast("double")
@@ -581,12 +585,9 @@ def weighted_hash_topk(df: DataFrame, weight_col: str, k: int,
     if group_col is None:
         return (keyed.orderBy(F.col("__r").desc(), F.col(key_col).asc())
                 .limit(k).drop("__r"))
-    from .similarity import _partition_topk
     win = Window.partitionBy(group_col).orderBy(
         F.col("__r").desc(), F.col(key_col).asc())
-    local = _partition_topk(keyed, k, by="__r", ascending=False,
-                            tie=key_col, q=group_col)
-    return (local.withColumn("__rk", F.row_number().over(win))
+    return (keyed.withColumn("__rk", F.row_number().over(win))
             .filter(F.col("__rk") <= k).drop("__r", "__rk"))
 
 

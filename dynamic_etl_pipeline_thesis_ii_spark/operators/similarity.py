@@ -217,7 +217,9 @@ def ivf_search(centers_df: DataFrame, bucketed: DataFrame,
     ``n_probe`` nearest clusters (~n_probe/n_clusters of the corpus) —
     a broadcast of the tiny query->cluster probe list against the
     cluster-bucketed candidates; at 100 TB the clusters are the
-    partitioning, so a probe touches only its own partitions."""
+    partitioning, so a probe touches only its own partitions. The rank
+    window's partial ``WindowGroupLimit`` cuts each scan partition to
+    k rows per query before the exchange."""
     q_scored = (queries.crossJoin(F.broadcast(centers_df))
                 .withColumn("__cdist", cosine(
                     F.col(q_vec).cast("array<double>"),
@@ -237,9 +239,7 @@ def ivf_search(centers_df: DataFrame, bucketed: DataFrame,
             F.col(c_vec).cast("array<double>"),
             F.col("__qn"), F.col("__cn")), 6).alias("cos"))
     w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(c_id).asc())
-    return (_partition_topk(scored, k, by="cos", ascending=False,
-                            tie=c_id, q=q_id)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(q_id, c_id, "cos", "rank"))
 
@@ -263,9 +263,9 @@ def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int,
     """Exact top-k by cosine for each query vector. The candidate side
     streams through a broadcast of the (small) query set; ranking uses a
     window over rounded cosine (6dp) with id tie-break for determinism.
-    The scored stream pre-truncates to k rows per query WITHIN each
-    scan partition (:func:`_partition_topk` — vectors never enter the
-    Arrow kernel, only (q_id, c_id, cos)), so the rank window shuffles
+    Spark plans the ``row_number() <= k`` filter as a partial
+    ``WindowGroupLimit`` below the window's exchange, so each scan
+    partition keeps k rows per query and the rank window shuffles
     ~n_partitions·|Q|·k rows instead of the full |C|·|Q| product."""
     qn = queries.withColumn("__qn", l2norm(F.col(q_vec).cast("array<double>")))
     cn = candidates.withColumn("__cn", l2norm(F.col(c_vec).cast("array<double>")))
@@ -277,9 +277,7 @@ def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int,
             F.col(c_vec).cast("array<double>"),
             F.col("__qn"), F.col("__cn")), 6).alias("cos"))
     w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(c_id).asc())
-    return (_partition_topk(scored, k, by="cos", ascending=False,
-                            tie=c_id, q=q_id)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(q_id, c_id, "cos", "rank"))
 
@@ -298,8 +296,9 @@ def lsh_topk(queries: DataFrame, candidates: DataFrame, k: int, bits: int = 6,
     """Approximate top-k: candidates pre-bucketed by sign-bit LSH; each
     query searches only its own bucket. One broadcast probe into the
     bucketed candidates instead of a cross product; the scored stream
-    pre-truncates per partition before the rank window (same
-    two-stage shape as :func:`pq_topk`)."""
+    is cut to k rows per query by Spark's partial ``WindowGroupLimit``
+    before the rank window's exchange (same two-stage shape as
+    :func:`pq_topk`)."""
     qb = (queries.withColumn("bucket", sign_bucket(F.col(q_vec), bits))
           .withColumn("__qn", l2norm(F.col(q_vec).cast("array<double>"))))
     cb = (candidates.withColumn("bucket", sign_bucket(F.col(c_vec), bits))
@@ -312,9 +311,7 @@ def lsh_topk(queries: DataFrame, candidates: DataFrame, k: int, bits: int = 6,
             F.col(c_vec).cast("array<double>"),
             F.col("__qn"), F.col("__cn")), 6).alias("cos"))
     w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(c_id).asc())
-    return (_partition_topk(scored, k, by="cos", ascending=False,
-                            tie=c_id, q=q_id)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(q_id, "bucket", c_id, "cos", "rank"))
 
@@ -336,7 +333,8 @@ def lsh_topk_multiprobe(queries: DataFrame, candidates: DataFrame, k: int,
     and broadcast into the bucket join — the scan still touches only
     ~2^probe_dims/2^bits of the corpus. Each candidate lives in exactly
     one bucket, so probes never produce duplicate (query, candidate)
-    pairs."""
+    pairs. The rank window's partial ``WindowGroupLimit`` keeps k rows
+    per query and scan partition before the exchange."""
     cb = (candidates.withColumn("bucket", sign_bucket(F.col(c_vec), bits))
           .withColumn("__cn", l2norm(F.col(c_vec).cast("array<double>"))))
     base = (queries.withColumn("bucket", sign_bucket(F.col(q_vec), bits))
@@ -369,9 +367,7 @@ def lsh_topk_multiprobe(queries: DataFrame, candidates: DataFrame, k: int,
             F.col(c_vec).cast("array<double>"),
             F.col("__qn"), F.col("__cn")), 6).alias("cos"))
     w = Window.partitionBy(q_id).orderBy(F.col("cos").desc(), F.col(c_id).asc())
-    return (_partition_topk(scored, k, by="cos", ascending=False,
-                            tie=c_id, q=q_id)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select(q_id, c_id, "cos", "rank"))
 
@@ -443,86 +439,71 @@ def _subdist(sub: str, centroid: list[float]) -> str:
             f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x), 6)")
 
 
-def _subdists(vec: str, codebooks: list, s: int) -> list[str]:
-    """All k centroid distances for subspace ``s``, as SQL text.
-    CONSTANT-vector centroids (the grid codebook) share the
-    subvector's sum and sum-of-squares — 2 array passes instead of k,
-    via ||x - c·1||² = q - 2c·s + dsub·c². The DuckDB twin uses the
-    SAME formula so the 6-dp-rounded doubles stay engine-identical
-    (the constants are Python floats formatted with repr, which
-    round-trips exactly). Trained (non-constant) codebooks take the
-    general pass."""
+def _pq_subspace(vec: str, codebooks: list, s: int, emit) -> str:
+    """SQL text that folds subspace ``s`` of ``vec`` into
+    ``emit(dists)``, where ``dists`` are the k centroid distances as
+    SQL text. CONSTANT-vector centroids (the grid codebook) share the
+    subvector's sum and sum of squares, via ||x - c·1||² = q - 2c·s +
+    dsub·c²: ONE struct-accumulator ``aggregate`` folds (s, q) in a
+    single pass and its finish lambda forms all k distances from those
+    two scalars, so each subvector is read once per row whatever k
+    is. The DuckDB twin uses the SAME formula and the same
+    left-to-right folds, so the 6-dp-rounded doubles stay
+    engine-identical (the constants are Python floats formatted with
+    repr, which round-trips exactly). Trained (non-constant)
+    codebooks take the general per-centroid pass."""
     dsub = len(codebooks[0][0])
     sub = f"slice({vec}, {s * dsub + 1}, {dsub})"
     if all(len(set(c)) == 1 for c in codebooks[s]):
-        ssum = f"aggregate({sub}, 0.0D, (a, x) -> a + x)"
-        qsum = (f"aggregate(transform({sub}, x -> x * x), 0.0D, "
-                f"(a, x) -> a + x)")
-        return [f"round({qsum} - ({_flit(2.0 * c[0])}) * {ssum} "
-                f"+ ({_flit(dsub * c[0] * c[0])}), 6)"
-                for c in codebooks[s]]
-    return [_subdist(sub, c) for c in codebooks[s]]
+        dists = [f"round(a.q - ({_flit(2.0 * c[0])}) * a.s "
+                 f"+ ({_flit(dsub * c[0] * c[0])}), 6)"
+                 for c in codebooks[s]]
+        return (f"aggregate({sub}, named_struct('s', 0.0D, 'q', 0.0D), "
+                f"(a, x) -> named_struct('s', a.s + x, 'q', a.q + x * x), "
+                f"a -> {emit(dists)})")
+    return emit([_subdist(sub, c) for c in codebooks[s]])
+
+
+def _pq_expr(vec: str, codebooks: list, emit) -> Column:
+    """``array(emit(subspace dists) for each subspace)`` as ONE SQL
+    string parsed JVM-side in a single py4j round trip — the
+    Column-method formulation made ~400 round trips per call (~0.5 s
+    of driver latency per invocation, measured in r13 — the resolved
+    trees are identical). A vector whose length is not m·dsub fails
+    the query with both lengths named; slicing it would silently
+    encode short or empty subspaces."""
+    m, dsub = len(codebooks), len(codebooks[0][0])
+    body = ", ".join(_pq_subspace(vec, codebooks, s, emit)
+                     for s in range(m))
+    return F.expr(
+        f"CASE WHEN size({vec}) <> {m * dsub} THEN raise_error(concat("
+        f"'PQ vector length ', cast(size({vec}) as string), ' does not "
+        f"match the codebook dimension {m * dsub} (m={m} x dsub={dsub})'))"
+        f" ELSE array({body}) END")
+
+
+def _argmin(dists: list[str]) -> str:
+    """Index of the smallest distance, lowest index on ties: the min
+    of (distance, index) structs orders by distance, then index."""
+    return ("array_min(array(" + ", ".join(
+        f"named_struct('d', {d}, 'i', {j})" for j, d in enumerate(dists))
+        + ")).i")
 
 
 def pq_codes(vec: str, codebooks: list) -> Column:
     """array<int> of per-subspace nearest-centroid indexes (0-based;
     ties take the lowest index on every engine). ``vec`` is a SQL
     expression string (a column name or e.g. ``cast(v as
-    array<double>)``): the whole m-subspace expression tree is built
-    as ONE SQL string parsed JVM-side in a single py4j round trip —
-    the Column-method formulation made ~400 round trips per call
-    (~0.5 s of driver latency per invocation at this box's py4j RTT;
-    r13, measured — the resolved trees are identical)."""
-    codes = []
-    for s in range(len(codebooks)):
-        dists = "array(" + ", ".join(_subdists(vec, codebooks, s)) + ")"
-        codes.append(f"cast(array_position({dists}, array_min({dists})) "
-                     f"- 1 as int)")
-    return F.expr("array(" + ", ".join(codes) + ")")
+    array<double>)``); see :func:`_pq_expr`."""
+    return _pq_expr(vec, codebooks, _argmin)
 
 
 def pq_lut(qvec: str, codebooks: list) -> Column:
     """Per-query ADC lookup table: array<array<double>> of
     [m][k] subspace-to-centroid squared distances. ``qvec`` is a SQL
     expression string (see :func:`pq_codes`)."""
-    subs = ["array(" + ", ".join(_subdists(qvec, codebooks, s)) + ")"
-            for s in range(len(codebooks))]
-    return F.expr("array(" + ", ".join(subs) + ")")
-
-
-def _partition_topk(scored: DataFrame, k: int, by: str = "adc",
-                    ascending: bool = True, tie: str = "c_id",
-                    q: str = "q_id", flush_rows: int = 100_000) -> DataFrame:
-    """Per-PARTITION top-k per q_id over a scored stream, with NO
-    shuffle — the map-side half of the same two-stage trick
-    TakeOrdered uses. A vectorized Arrow kernel accumulates input
-    batches and truncates to k rows per q_id whenever the buffer
-    passes ``flush_rows``, so memory stays bounded and each partition
-    emits at most |Q|·k rows. Top-k under the TOTAL (``by``
-    asc/desc, ``tie`` asc) order is associative: local-then-global
-    truncation returns exactly the global top-k. Extra columns (e.g.
-    an lsh ``bucket``) pass through untouched — the output schema is
-    the input schema."""
-    def kernel(batches):
-        import pandas as pd
-
-        def crush(frames):
-            cat = pd.concat(frames, ignore_index=True)
-            return (cat.sort_values([by, tie], kind="mergesort",
-                                    ascending=[ascending, True])
-                    .groupby(q, sort=False).head(k))
-
-        buf, n = [], 0
-        for pdf in batches:
-            buf.append(pdf)
-            n += len(pdf)
-            if n >= flush_rows:
-                cat = crush(buf)
-                buf, n = [cat], len(cat)
-        if buf:
-            yield crush(buf)
-
-    return scored.mapInPandas(kernel, schema=scored.schema)
+    return _pq_expr(qvec, codebooks,
+                    lambda dists: "array(" + ", ".join(dists) + ")")
 
 
 def pq_topk(queries: DataFrame, candidates: DataFrame, codebooks: list,
@@ -533,13 +514,14 @@ def pq_topk(queries: DataFrame, candidates: DataFrame, codebooks: list,
     search join touches codes only. Output ``(q_id, c_id, adc, rank)``
     with adc = approximate squared L2 distance, rank ascending.
 
-    Two-stage top-k: the scored stream pre-truncates to k rows per
-    query WITHIN each scan partition (:func:`_partition_topk`, no
-    shuffle), so the global rank window shuffles ~n_partitions·|Q|·k
-    rows instead of the full |C|·|Q| product — at 10⁹ candidates ×
-    10³ queries the one-stage window would shuffle 10¹² rows for a
-    top-10 answer. The ADC arithmetic stays JVM-side; only the narrow
-    (q_id, c_id, adc) scalars cross into the Arrow kernel."""
+    Two-stage top-k: Spark plans the ``row_number() <= k`` filter as a
+    partial ``WindowGroupLimit`` that keeps k rows per query WITHIN
+    each scan partition, below the rank window's exchange, so the
+    window shuffles ~n_partitions·|Q|·k rows instead of the full
+    |C|·|Q| product — at 10⁹ candidates × 10³ queries the one-stage
+    window would shuffle 10¹² rows for a top-10 answer. The whole
+    search stays in the JVM. A NULL vector scores NULL and ranks
+    last."""
     cand = candidates.select(
         F.col(c_id).alias("c_id"),
         pq_codes(f"cast(`{c_vec}` as array<double>)", codebooks)
@@ -553,10 +535,9 @@ def pq_topk(queries: DataFrame, candidates: DataFrame, codebooks: list,
         F.lit(0.0), lambda acc, x: acc + x), 6)
     scored = (cand.join(F.broadcast(qs))
               .select("q_id", "c_id", adc.alias("adc")))
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").asc(),
+    w = Window.partitionBy("q_id").orderBy(F.col("adc").asc_nulls_last(),
                                            F.col("c_id").asc())
-    return (_partition_topk(scored, k)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 
 
@@ -688,8 +669,10 @@ def ivfpq_search(centers_df: DataFrame, codebooks: list, coded: DataFrame,
     ranked by a different metric would probe the wrong lists), takes
     its ``n_probe`` nearest, and builds one residual lookup table per
     probed list from (q − center). The (|Q|·n_probe) probe frame
-    joins into the codes scan, ADC-scores only the probed lists,
-    pre-truncates per partition (:func:`_partition_topk`) and ranks.
+    joins into the codes scan, ADC-scores only the probed lists and
+    ranks; the rank window's partial ``WindowGroupLimit`` keeps
+    ``max(k, rerank)`` rows per query and scan partition before the
+    exchange.
     Output ``(q_id, c_id, adc, rank)``.
 
     ``rerank=R`` (with ``candidates``) adds the standard exact
@@ -739,10 +722,9 @@ def ivfpq_search(centers_df: DataFrame, codebooks: list, coded: DataFrame,
     scored = (coded.join(_maybe_bc(probes), "__cluster")
               .select("q_id", "c_id", adc.alias("adc")))
     keep = max(k, rerank)
-    w = Window.partitionBy("q_id").orderBy(F.col("adc").asc(),
+    w = Window.partitionBy("q_id").orderBy(F.col("adc").asc_nulls_last(),
                                            F.col("c_id").asc())
-    ranked = (_partition_topk(scored, keep)
-              .withColumn("rank", F.row_number().over(w))
+    ranked = (scored.withColumn("rank", F.row_number().over(w))
               .filter(F.col("rank") <= keep))
     if not rerank:
         return ranked
@@ -1129,8 +1111,9 @@ def exact_l2_topk(queries: DataFrame, candidates: DataFrame, k: int,
     recall must be measured against the same metric, not cosine).
     The :func:`brute_force_topk` plan shape: candidates stream
     through a broadcast of the (small) query set, the scored stream
-    pre-truncates per partition (:func:`_partition_topk` — vectors
-    never leave the scan), then one constant-size rank window."""
+    is cut to k rows per query and scan partition by Spark's partial
+    ``WindowGroupLimit`` (vectors never leave the scan), then one
+    constant-size rank window."""
     q = queries.select(q_id,
                        F.col(q_vec).cast("array<double>").alias("__qv"))
     c = candidates.select(c_id,
@@ -1139,11 +1122,9 @@ def exact_l2_topk(queries: DataFrame, candidates: DataFrame, k: int,
     scored = j.select(F.col(q_id), F.col(c_id),
                       F.round(_sq_l2(F.col("__qv"), F.col("__cv")), 6)
                       .alias("dist"))
-    w = Window.partitionBy(q_id).orderBy(F.col("dist").asc(),
+    w = Window.partitionBy(q_id).orderBy(F.col("dist").asc_nulls_last(),
                                          F.col(c_id).asc())
-    return (_partition_topk(scored, k, by="dist", ascending=True,
-                            tie=c_id, q=q_id)
-            .withColumn("rank", F.row_number().over(w))
+    return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 
 

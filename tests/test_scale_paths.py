@@ -3,11 +3,51 @@ aggregates (sketch within tolerance), broadcast threshold behavior."""
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
 from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import write_bucketed
+
+
+def _partial_topk_at(plan: str, group: str) -> int:
+    """Offset of the first partial ``WindowGroupLimit`` in an executed
+    plan string, checked to sit below the ``Exchange
+    hashpartitioning(<group>`` of its rank window: each scan partition
+    is cut to k rows per group before the shuffle. A ``MapInPandas``
+    node there would be a Python hop on the top-k path."""
+    m = re.search(r"WindowGroupLimit \[[^\n]*, Partial", plan)
+    assert m, plan
+    assert plan.index(f"Exchange hashpartitioning({group}") < m.start(), plan
+    assert "MapInPandas" not in plan, plan
+    return m.start()
+
+
+@contextlib.contextmanager
+def _one_stage_windows(spark):
+    """Plan rank windows without the partial ``WindowGroupLimit``, so a
+    reference answer is the one-stage global window and not the
+    engine's own two-stage plan."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _collect_one_stage(spark, df) -> list:
+    with _one_stage_windows(spark):
+        assert "WindowGroupLimit" not in \
+            df._jdf.queryExecution().executedPlan().toString()
+        return df.collect()
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
@@ -220,8 +260,8 @@ def test_pq_codes_train_and_adc_search(spark, sf_dir):
 
 def test_pq_topk_two_stage_no_full_shuffle(spark, sf_dir):
     """pq_topk pre-truncates to k rows per query WITHIN each scan
-    partition before the global rank window: the plan shows the Arrow
-    kernel (MapInPandas) feeding the q_id Exchange with no shuffle
+    partition before the global rank window: the plan shows Spark's
+    partial WindowGroupLimit feeding the q_id Exchange with no shuffle
     Exchange below it — the |C|·|Q| scored product never shuffles
     (only ~n_partitions·|Q|·k pre-truncated rows do) — and the result
     is row-identical to the one-stage global window."""
@@ -239,13 +279,10 @@ def test_pq_topk_two_stage_no_full_shuffle(spark, sf_dir):
     out = SIM.pq_topk(queries, cands, books, k=4)
 
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
-    mp = plan.index("MapInPandas")
-    ex = plan.index("Exchange hashpartitioning(q_id")
-    assert ex < mp, plan     # the window's Exchange sits ABOVE the kernel
-    # below the kernel only the query side's BroadcastExchange appears —
-    # no shuffle (hash/range/single-partition) Exchange of the product
-    below = plan[mp:]
+    # below the partial limit only the query side's BroadcastExchange
+    # appears — no shuffle (hash/range/single-partition) Exchange of
+    # the product
+    below = plan[_partial_topk_at(plan, "q_id"):]
     assert "Exchange hashpartitioning" not in below, plan
     assert "Exchange rangepartitioning" not in below, plan
     assert "Exchange SinglePartition" not in below, plan
@@ -268,22 +305,114 @@ def test_pq_topk_two_stage_no_full_shuffle(spark, sf_dir):
     ref = (scored.select("q_id", "c_id", adc.alias("adc"))
            .withColumn("rank", F.row_number().over(w))
            .filter(F.col("rank") <= 4))
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
+    assert sorted(map(tuple, out.collect())) \
+        == sorted(map(tuple, _collect_one_stage(spark, ref)))
+
+
+def test_pq_rejects_vectors_of_the_wrong_length(spark):
+    """PQ slices each vector by the codebook's dsub; a vector whose
+    length is not m·dsub would encode short or empty subspaces and
+    rank silently. Codes, lookup tables and the search all fail with
+    both lengths named instead."""
+    from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
+
+    books = SIM.pq_grid_codebooks(64, m=4, k=8)
+    vecs = spark.createDataFrame(
+        [(i, [((i * 7 + j) % 5) / 10.0 for j in range(32)])
+         for i in range(6)], "id long, v array<double>")
+    for col in (SIM.pq_codes("v", books), SIM.pq_lut("v", books)):
+        with pytest.raises(Exception, match=r"PQ vector length 32 does "
+                           r"not match the codebook dimension 64"):
+            vecs.select(col).collect()
+    queries = vecs.select(F.col("id").alias("q_id"),
+                          F.col("v").alias("q_vec"))
+    cands = vecs.select(F.col("id").alias("c_id"),
+                        F.col("v").alias("c_vec"))
+    with pytest.raises(Exception, match="PQ vector length 32"):
+        SIM.pq_topk(queries, cands, books, k=2).collect()
+
+
+def test_null_vectors_rank_last(spark):
+    """A candidate with a NULL vector scores NULL; the ascending ADC
+    and L2 windows rank it after every real candidate instead of
+    first for every query."""
+    from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
+
+    vecs = spark.createDataFrame(
+        [(i, [((i * 7 + j) % 5) / 10.0 for j in range(64)])
+         for i in range(6)] + [(99, None)], "id long, v array<double>")
+    queries = vecs.filter("id < 2").select(F.col("id").alias("q_id"),
+                                           F.col("v").alias("q_vec"))
+    cands = vecs.select(F.col("id").alias("c_id"), F.col("v").alias("c_vec"))
+    books = SIM.pq_grid_codebooks(64, m=4, k=8)
+    for out in (SIM.pq_topk(queries, cands, books, k=7),
+                SIM.exact_l2_topk(queries, cands, k=7),
+                SIM.brute_force_topk(queries, cands, k=7)):
+        ranks = {r["q_id"]: r["rank"] for r in out.collect()
+                 if r["c_id"] == 99}
+        assert ranks == {0: 7, 1: 7}, ranks
+
+
+def test_pq_grid_encoder_ties_match_duckdb_twin(spark):
+    """The one-pass grid encoder on exact ties: every subvector's mean
+    sits on the midpoint of two adjacent grid centroids (dyadic
+    values, so the distances tie exactly on both engines). Engine
+    codes and lookup tables equal the DuckDB twin's, and each tied
+    code takes the lower centroid index."""
+    import duckdb
+    import pyarrow as pa
+
+    from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
+    from dynamic_etl_pipeline_thesis_ii_spark.queries import dataops_suite as DS
+
+    m, k, dim = DS._PQ_M, DS._PQ_K, DS._PQ_DIM
+    dsub = dim // m
+    books = SIM.pq_grid_codebooks(dim, m=m, k=k)
+    cents = [c[0] for c in books[0]]
+    rows, want = [], []
+    for i in range(2 * (k - 1)):
+        vec, codes = [], []
+        for s in range(m):
+            j = (i + 3 * s) % (k - 1)          # tie between j and j+1
+            mid = (cents[j] + cents[j + 1]) / 2
+            amp = 0.0625 * ((i + s) % 3)       # same mean, own spread
+            vec += [mid + (amp if t % 2 else -amp) for t in range(dsub)]
+            codes.append(j)
+        rows.append((i, vec))
+        want.append((i, codes))
+
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    got = sorted((r["id"], list(r["codes"]), [list(x) for x in r["lut"]])
+                 for r in df.select("id",
+                                    SIM.pq_codes("v", books).alias("codes"),
+                                    SIM.pq_lut("v", books).alias("lut"))
+                 .collect())
+    assert [(i, c) for i, c, _ in got] == want
+
+    con = duckdb.connect()
+    con.register("t", pa.table({"id": [r[0] for r in rows],
+                                "v": [r[1] for r in rows]}))
+    dists = [DS._sql_pq_dists("v", s) for s in range(m)]
+    twin = con.execute(
+        "SELECT id, [" + ", ".join(DS._sql_pq_code(d) for d in dists)
+        + "] AS codes, [" + ", ".join(dists) + "] AS lut FROM t "
+        "ORDER BY id").fetchall()
+    assert got == [(i, list(c), [list(x) for x in lut])
+                   for i, c, lut in twin]
 
 
 def test_partition_topk_fuzz_vs_global_window(spark):
-    """Seeded fuzz of the two-stage kernel: random scored frames with
-    HEAVY score ties, random partitioning, tiny flush thresholds (to
-    force mid-stream truncation), both sort directions — the
-    pre-truncated + windowed result must equal the one-stage global
-    window exactly. Ties are the risky path: a kernel that truncated
-    on a non-total order would drop the wrong tied row."""
+    """Seeded fuzz of the two-stage top-k plan the ANN family and
+    grouped sampling rely on: random scored frames with HEAVY score
+    ties, random partitioning, random k, both sort directions — the
+    ``row_number() <= k`` window, planned with its partial
+    WindowGroupLimit, must return exactly a pure-Python top-k under
+    the same total order (score, then c_id). Ties are the risky path:
+    a pre-truncation on a non-total order would drop the wrong tied
+    row."""
     import random
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from dynamic_etl_pipeline_thesis_ii_spark.operators.similarity import (
-        _partition_topk,
-    )
     rng = random.Random(97)
     for trial in range(4):
         rows = [(rng.randrange(6), i, float(rng.randrange(4)))
@@ -292,24 +421,27 @@ def test_partition_topk_fuzz_vs_global_window(spark):
         k = rng.randrange(1, 5)
         df = (spark.createDataFrame(rows, "q_id long, c_id long, adc double")
               .repartition(rng.randrange(2, 9)))
-        pre = _partition_topk(df, k, by="adc", ascending=asc,
-                              flush_rows=rng.randrange(8, 40))
         order = (F.col("adc").asc() if asc else F.col("adc").desc(),
                  F.col("c_id").asc())
         w = Window.partitionBy("q_id").orderBy(*order)
-        two = (pre.withColumn("r", F.row_number().over(w))
+        two = (df.withColumn("r", F.row_number().over(w))
                .filter(F.col("r") <= k))
-        ref = (df.withColumn("r", F.row_number().over(w))
-               .filter(F.col("r") <= k))
-        assert sorted(map(tuple, two.collect())) \
-            == sorted(map(tuple, ref.collect())), trial
+        _partial_topk_at(two._jdf.queryExecution().executedPlan()
+                         .toString(), "q_id")
+        want = []
+        for q in {r[0] for r in rows}:
+            grp = sorted((r for r in rows if r[0] == q),
+                         key=lambda r: (r[2] if asc else -r[2], r[1]))
+            want += [r + (i + 1,) for i, r in enumerate(grp[:k])]
+        assert sorted(map(tuple, two.collect())) == sorted(want), trial
 
 
 def test_ann_family_two_stage_plans(spark, sf_dir):
     """The whole ANN family pre-truncates per partition before the
-    rank window: in every plan the Arrow kernel (MapInPandas) sits
-    BELOW the q_id Exchange, so the |C|·|Q| (or bucket-join) scored
-    product never shuffles — only ~n_partitions·|Q|·k rows do."""
+    rank window: in every plan Spark's partial WindowGroupLimit sits
+    BELOW the q_id Exchange with no shuffle Exchange under it, so the
+    |C|·|Q| (or bucket-join) scored product never shuffles — only
+    ~n_partitions·|Q|·k rows do."""
     from pyspark.sql import functions as F
     from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
 
@@ -327,10 +459,9 @@ def test_ann_family_two_stage_plans(spark, sf_dir):
     }
     for name, out in outs.items():
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" in plan, name
-        mp = plan.index("MapInPandas")
-        ex = plan.index("Exchange hashpartitioning(q_id")
-        assert ex < mp, (name, plan)
+        below = plan[_partial_topk_at(plan, "q_id"):]
+        assert "Exchange hashpartitioning" not in below, (name, plan)
+        assert "Exchange rangepartitioning" not in below, (name, plan)
         assert out.count() == 15, name      # 5 queries x top-3 survive
 
 
@@ -423,7 +554,7 @@ def test_ivfpq_index_roundtrip_and_search_plan(spark, sf_dir, tmp_path):
     parquet round-trip and a search against the RELOADED index (the
     100 TB consumption shape — codes only, no raw vectors) matches
     the fresh index exactly; the search plan shows the broadcast
-    probe join and the pre-truncation kernel with no shuffle below
+    probe join and the partial WindowGroupLimit with no shuffle below
     it."""
     from pyspark.sql import functions as F
     from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
@@ -447,15 +578,12 @@ def test_ivfpq_index_roundtrip_and_search_plan(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, fresh))
 
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan
-    mp = plan.index("MapInPandas")
-    assert plan.index("Exchange hashpartitioning(q_id") < mp, plan
-    below = plan[mp:]
+    below = plan[_partial_topk_at(plan, "q_id"):]
     assert "BroadcastHashJoin" in below or "BroadcastNestedLoopJoin" in below
     # the STREAMED side of the codes join (everything printed between
-    # the kernel and the probe side's BroadcastExchange) must be
+    # the partial limit and the probe side's BroadcastExchange) must be
     # shuffle-free: scan coded parquet -> broadcast join -> project ->
-    # kernel. The broadcast subtree itself MAY shuffle — the probe
+    # partial limit. The broadcast subtree itself MAY shuffle — the probe
     # frame is |Q|*n_clusters rows and its per-query center ranking
     # pays a window there, which is the designed trade.
     streamed = below[:below.index("BroadcastExchange")]
@@ -1161,7 +1289,7 @@ def test_weighted_topk_compiles_to_take_ordered(spark, sf_dir):
 def test_grouped_weighted_topk_pretruncates_before_window(spark, sf_dir):
     """Grouped weighted top-k pre-truncates per scan partition before
     the rank window: the exchange feeding the window must read from
-    the Arrow map stage (MapInPandas below the Exchange/Window), so a
+    Spark's partial WindowGroupLimit with no shuffle below it, so a
     giant language group never full-sorts — and the pre-truncated
     output must equal the one-stage window's answer row-for-row."""
     from pyspark.sql import Window
@@ -1173,11 +1301,12 @@ def test_grouped_weighted_topk_pretruncates_before_window(spark, sf_dir):
     out = SA.weighted_hash_topk(docs, "n_chars", 5, "doc_id",
                                 group_col="lang")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan and "MapInPandas" in plan, plan
-    # the map stage sits BELOW the window's exchange: everything the
-    # shuffle moves has already been truncated to <=k rows per group
-    # per partition
-    assert plan.index("Window") < plan.index("MapInPandas"), plan
+    # the partial limit sits BELOW the window's exchange: everything
+    # the shuffle moves has already been truncated to <=k rows per
+    # group per partition
+    below = plan[_partial_topk_at(plan, "lang"):]
+    assert "Exchange hashpartitioning" not in below, plan
+    assert "Exchange rangepartitioning" not in below, plan
 
     # answer parity vs the direct one-stage window
     u = ((SA._bucket(F.col("doc_id"), "", 1 << 32) + 1).cast("double")
@@ -1188,9 +1317,9 @@ def test_grouped_weighted_topk_pretruncates_before_window(spark, sf_dir):
                          .cast("double")))
     win = Window.partitionBy("lang").orderBy(
         F.col("__r").desc(), F.col("doc_id").asc())
-    want = sorted((r["lang"], r["doc_id"]) for r in
-                  keyed.withColumn("__rk", F.row_number().over(win))
-                  .filter(F.col("__rk") <= 5).collect())
+    want = sorted((r["lang"], r["doc_id"]) for r in _collect_one_stage(
+        spark, keyed.withColumn("__rk", F.row_number().over(win))
+        .filter(F.col("__rk") <= 5)))
     got = sorted((r["lang"], r["doc_id"]) for r in out.collect())
     assert got == want and len(got) > 5  # several language groups
 
