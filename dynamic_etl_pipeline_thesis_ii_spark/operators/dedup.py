@@ -795,55 +795,55 @@ def star_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     return labels.select(F.col("u").alias("id"), F.col("m").alias("comp"))
 
 
-def min_label_components(pairs: DataFrame, max_iter: int = 20,
-                         driver_threshold: int = 5_000_000,
-                         distributed: str = "star") -> DataFrame:
-    """Connected components over a near-dup pair list: (id, component)
-    with component = the smallest doc id reachable — the step that turns
-    pairwise matches into dedup groups (keep one doc per component).
-
-    Hybrid execution: the pair list is the SMALL side of dedup (LSH has
-    already collapsed the corpus), so below ``driver_threshold`` edges
-    the components come from a driver-side union-find over the collected
-    pairs (microseconds, zero extra jobs). Above it, the distributed
-    path: ``distributed="star"`` (default) runs large-star/small-star
-    contraction (:func:`star_components`, O(log n) rounds — the
-    billion-edge path); ``distributed="propagation"`` keeps Pregel-lite
-    min-label propagation (one shuffle join + aggregate per round,
-    O(graph diameter) rounds, fine for the shallow clusters near-dup
-    graphs produce). The contract stays (id, component)."""
-    # one action: fetch up to threshold+1 pairs; a full result means the
-    # graph is big -> fall through to the distributed loop (recomputing
-    # the pair plan once — the rare branch)
+def _union_find_labels(pairs: DataFrame, driver_threshold: int) -> dict | None:
+    """``{id: smallest reachable id}`` from a driver-side union-find
+    over the collected pairs, or ``None`` when the pair list has more
+    than ``driver_threshold`` edges. One action: it fetches up to
+    threshold+1 pairs, and a full result means the graph is big (the
+    caller falls through to a distributed loop, recomputing the pair
+    plan once — the rare branch)."""
     rows = pairs.select("id_a", "id_b").limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
-        parent: dict = {}
+    if len(rows) > driver_threshold:
+        return None
+    parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
 
-        for r in rows:
-            a, b = find(r[0]), find(r[1])
-            if a != b:
-                # min-id root so component == smallest reachable id
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        nodes = {x for r in rows for x in (r[0], r[1])}
-        if not nodes:
-            # empty pair list (clean corpus): schemaless createDataFrame
-            # would raise CANNOT_INFER_EMPTY_SCHEMA — derive the typed
-            # empty frame from the pair schema instead
-            return pairs.select(F.col("id_a").alias("id"),
-                                F.col("id_a").alias("comp")).limit(0)
-        spark = pairs.sparkSession
-        return spark.createDataFrame(
-            [(x, find(x)) for x in sorted(nodes)], ["id", "comp"])
+    for r in rows:
+        a, b = find(r[0]), find(r[1])
+        if a != b:
+            # min-id root so component == smallest reachable id
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    nodes = sorted({x for r in rows for x in (r[0], r[1])})
+    return {x: find(x) for x in nodes}
 
+
+def _local_frame(pairs: DataFrame, columns: dict[str, list]) -> DataFrame:
+    """A driver-built id frame, every column typed like ``pairs.id_a``.
+    Built from Arrow it plans as a ``LocalRelation`` with its real
+    ``sizeInBytes``, so joins against it broadcast when the query is
+    planned; ``createDataFrame(list)`` would plan an unsizable
+    ``LogicalRDD`` behind a Python-worker ``parallelize`` stage."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    dtype = pairs.schema["id_a"].dataType
+    schema = StructType([StructField(c, dtype) for c in columns])
+    return pairs.sparkSession.createDataFrame(
+        pa.Table.from_pydict(columns, schema=to_arrow_schema(schema)))
+
+
+def _distributed_components(pairs: DataFrame, max_iter: int = 20,
+                            distributed: str = "star") -> DataFrame:
+    """(id, comp) over a pair list too big for the driver union-find."""
     if distributed == "star":
         return star_components(pairs)
 
@@ -881,13 +881,91 @@ def min_label_components(pairs: DataFrame, max_iter: int = 20,
     return labels.select("id", "comp")
 
 
+_DRIVER_EDGES = 5_000_000
+
+
+def min_label_components(pairs: DataFrame, max_iter: int = 20,
+                         driver_threshold: int = _DRIVER_EDGES,
+                         distributed: str = "star") -> DataFrame:
+    """Connected components over a near-dup pair list: (id, component)
+    with component = the smallest doc id reachable — the step that turns
+    pairwise matches into dedup groups (keep one doc per component).
+
+    Hybrid execution: the pair list is the SMALL side of dedup (LSH has
+    already collapsed the corpus), so below ``driver_threshold`` edges
+    the components come from a driver-side union-find over the collected
+    pairs: one pair-collect action, then microseconds of Python, and
+    the result enters the plan as a sized ``LocalRelation`` (no further
+    job). Above it, the distributed path: ``distributed="star"``
+    (default) runs large-star/small-star contraction
+    (:func:`star_components`, O(log n) rounds — the billion-edge path);
+    ``distributed="propagation"`` keeps Pregel-lite
+    min-label propagation (one shuffle join + aggregate per round,
+    O(graph diameter) rounds, fine for the shallow clusters near-dup
+    graphs produce). The contract stays (id, component)."""
+    labels = _union_find_labels(pairs, driver_threshold)
+    if labels is None:
+        return _distributed_components(pairs, max_iter, distributed)
+    return _local_frame(pairs, {"id": list(labels),
+                                "comp": list(labels.values())})
+
+
+def _above(a, b) -> bool:
+    """``a > b`` in Spark's ordering of non-null values: NaN sorts
+    above every number and equals itself."""
+    if b != b:
+        return False
+    return a != a or a > b
+
+
+def _driver_drop_ids(labels: dict, score: dict) -> list:
+    """Every clustered id but its component's winner: the highest
+    score (NULL last), ties to the lowest id — the order of
+    :func:`component_drop_set`'s window."""
+    winner: dict = {}
+    for x, c in labels.items():
+        w = winner.get(c)
+        if w is None:
+            winner[c] = x
+            continue
+        sx, sw = score.get(x), score.get(w)
+        if sx is None:
+            better = sw is None and x < w
+        elif sw is None or _above(sx, sw):
+            better = True
+        else:
+            better = not _above(sw, sx) and x < w
+        if better:
+            winner[c] = x
+    return [x for x, c in labels.items() if winner[c] != x]
+
+
 def component_drop_set(pairs: DataFrame,
                        score: DataFrame | None = None) -> DataFrame:
     """The ``(id)`` drop set of :func:`dedup_by_components`, factored
     out so callers can overlap the component resolution (which runs an
     eager pair collect, :func:`min_label_components`) with other
-    independent jobs (guide §2.6) and attach the anti-join themselves."""
-    comp = min_label_components(pairs)
+    independent jobs (guide §2.6) and attach the anti-join themselves.
+
+    When the union-find runs on the driver, so does the ranking: one
+    broadcast semi-join collects the component nodes' scores, and the
+    drop ids return as a sized ``LocalRelation``, so the caller's
+    anti-join is planned as a broadcast with no exchange on its big
+    side. Over the driver threshold the rank window below runs
+    instead; both give the same set."""
+    labels = _union_find_labels(pairs, _DRIVER_EDGES)
+    if labels is not None:
+        best: dict = {}
+        if score is not None and labels:
+            nodes = _local_frame(pairs, {"id": list(labels)})
+            # max() per id, as the window path's collapse does
+            for i, s in (score.select("id", "score")
+                         .join(F.broadcast(nodes), "id", "left_semi")
+                         .collect()):
+                if s is not None and (i not in best or _above(s, best[i])):
+                    best[i] = s
+        return _local_frame(pairs, {"id": _driver_drop_ids(labels, best)})
+    comp = _distributed_components(pairs)
     if score is None:
         return comp.filter(F.col("id") != F.col("comp")).select("id")
     # collapse to one score per clustered id BEFORE ranking: a score

@@ -1673,15 +1673,22 @@ GROUP BY t.id
 
 def _curation_scored(spark, sf_dir) -> DataFrame:
     """The curation pipeline's shared scored-corpus frame, persisted
-    (scoped). Three curation branches consume it — the kept-filter,
-    the LSH pair generation, and the component ranking's quality score
-    — so the regex-heavy quality/lang pass (the most expensive scan in
-    the DAG) runs exactly once instead of once per branch (r12: −15%
-    wall at sf0.1; at 100 TB it's a full corpus scan saved). It also
-    carries ``n_tokens`` (a field of the SAME quality_features struct,
-    zero extra scan work) so ``corpus_to_shards`` can feed its
-    token-budget selection off this cache instead of paying a SECOND
-    full quality_features pass over the corpus (r13)."""
+    (scoped). Two curation branches consume it — the kept-filter and
+    the component ranking's quality score — so the regex-heavy
+    quality/lang pass (the most expensive scan in the DAG) runs exactly
+    once instead of once per branch (r12: −15% wall at sf0.1; at 100 TB
+    it's a full corpus scan saved). It also carries ``n_tokens`` (a
+    field of the SAME quality_features struct, zero extra scan work),
+    which ``_curate`` carries through to ``corpus_to_shards``'
+    token-budget selection instead of paying a SECOND full
+    quality_features pass over the corpus (r13).
+
+    The LSH pair generation reads the parquet corpus, not this frame:
+    it needs only ``doc_id`` and ``text``, and under AQE a self-join
+    whose two sides read one persisted frame plans two
+    ``TableCacheQueryStage``s and reuses no exchange, so shingling,
+    hashing and the signature and band shuffles would all run twice.
+    Over parquet the second side is a ``ReusedExchange``."""
     corpus = _neardup_corpus(spark, sf_dir)
     feats = T.quality_features(F.col("text"))
     return persist_scoped(
@@ -1700,18 +1707,21 @@ def q_corpus_curation(spark, sf_dir):
     cluster, ties to the lowest id). One lazy composition of the text,
     dedup and graph operators; the only iterative part is the component
     loop."""
-    return _curate(spark, sf_dir, _curation_scored(spark, sf_dir))
+    return (_curate(spark, sf_dir, _curation_scored(spark, sf_dir))
+            .select("doc_id", "quality_score", "pred_lang"))
 
 
 def _curate(spark, sf_dir, scored: DataFrame) -> DataFrame:
     """:func:`q_corpus_curation` over an already built
     :func:`_curation_scored` frame, so a caller that also reads the
-    scored frame builds (and persists) it once."""
+    scored frame builds (and persists) it once. Carries ``n_tokens``
+    alongside ``(doc_id, quality_score, pred_lang)``."""
     kept = scored.filter((F.col("quality_score") >= 0.5)
                          & (F.col("pred_lang") == "en"))
     bench = (Catalog(spark, sf_dir).documents
              .filter(F.col("doc_id") % 13 == 0).select("doc_id", "text"))
-    pairs = D.minhash_lsh_pairs(scored.select("doc_id", "text"),
+    # over parquet, not the persisted scored frame: see _curation_scored
+    pairs = D.minhash_lsh_pairs(_neardup_corpus(spark, sf_dir),
                                 k=3, n_hashes=16, bands=4)
     # quality-aware keep: score every corpus doc (clusters may span the
     # quality/lang filter, so the ranking sees pre-filter scores too)
@@ -1719,19 +1729,21 @@ def _curate(spark, sf_dir, scored: DataFrame) -> DataFrame:
                           F.col("quality_score").alias("score"))
     # The decontamination branch (kept ⨝ broadcast bench 5-gram
     # overlap) and the near-dup drop set (LSH pairs → eager collect →
-    # driver union-find → rank window) are INDEPENDENT until the final
-    # anti-join, so run_arms overlaps them. Both read the same persisted
-    # scored frame; concurrent first-fill is handled by the block
-    # manager's per-partition get-or-compute. The decon branch is
-    # eager-checkpointed, the drop set stays lazy over the driver-built
-    # component frame.
+    # driver union-find → score collect → driver ranking) are
+    # INDEPENDENT until the final anti-join, so run_arms overlaps them.
+    # Both read the persisted scored frame; concurrent first-fill is
+    # handled by the block manager's per-partition get-or-compute. The
+    # decon branch is eager-checkpointed without `text` (no later stage
+    # reads it); the drop set comes back as a driver-built
+    # LocalRelation, so the anti-join below is a broadcast.
     decon, drop = run_arms(
         lambda: D.decontaminate(kept, bench, k=5, min_overlap=3)
-        .localCheckpoint(eager=True),
+        .drop("text").localCheckpoint(eager=True),
         lambda: D.component_drop_set(pairs, score=score))
     canonical = decon.join(drop, decon["doc_id"] == drop["id"],
                            "left_anti")
-    return canonical.select("doc_id", "quality_score", "pred_lang")
+    return canonical.select("doc_id", "quality_score", "pred_lang",
+                            "n_tokens")
 
 
 def _sql_corpus_curation_arms() -> str:
@@ -1853,28 +1865,26 @@ def corpus_to_shards_frame(spark, sf_dir, *, token_budget: int = 15_000,
     Arrow kernel. The oracle-checked registry query stays on the
     whitespace path (BPE training is iterative — not
     SQL-expressible)."""
-    scored_all = _curation_scored(spark, sf_dir)
-    curated = _curate(spark, sf_dir, scored_all)
-    corpus = _neardup_corpus(spark, sf_dir)
+    if tokenizer not in ("whitespace", "bpe"):
+        raise ValueError(
+            f"tokenizer must be 'whitespace' or 'bpe', got {tokenizer!r}")
+    # whitespace token counts ride through curation on the persisted
+    # scored frame (same quality_features struct), so they cost no
+    # extra corpus scan instead of a second regex pass (r13)
+    curated = _curate(spark, sf_dir, _curation_scored(spark, sf_dir))
     if tokenizer == "bpe":
         from dynamic_etl_pipeline_thesis_ii_spark.operators import bpe as B
+        corpus = _neardup_corpus(spark, sf_dir)
         merges = B.train_bpe(corpus, n_merges=bpe_merges)
         # count-only: the budget/pack stages never read the token
         # arrays, so don't Arrow-ship them out of the kernel
         toks = (B.apply_bpe(corpus, merges, with_tokens=False)
                 .select(F.col("id").alias("doc_id"), "n_tokens"))
-    elif tokenizer == "whitespace":
-        # the persisted scored frame curation reads also carries
-        # n_tokens (same quality_features struct), so the token counts
-        # cost no extra corpus scan instead of a second regex pass (r13)
-        toks = scored_all.select("doc_id", "n_tokens")
-    else:
-        raise ValueError(
-            f"tokenizer must be 'whitespace' or 'bpe', got {tokenizer!r}")
+        curated = curated.drop("n_tokens").join(toks, "doc_id")
     # the budget selection consumes `scored` twice (value table +
     # semi-join left side) and `scored` embeds the WHOLE curation
     # pipeline — persist it (scoped) or curation runs twice
-    scored = persist_scoped(curated.join(toks, "doc_id"))
+    scored = persist_scoped(curated)
     sel = SA.select_token_budget(scored, budget=token_budget,
                                  score_col="quality_score",
                                  tokens_col="n_tokens",

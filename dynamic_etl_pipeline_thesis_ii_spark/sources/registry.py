@@ -10,6 +10,7 @@ pruning and partition pruning for free on every downstream query.
 from __future__ import annotations
 
 import os
+import stat
 import weakref
 
 import pyarrow.dataset as pa_ds
@@ -26,8 +27,36 @@ from pyspark.sql import functions as F
 # plan-level memoization only — no data is cached; every action still
 # computes from the parquet input. Keyed weakly by session so a
 # restarted session (tests, serve) re-resolves cleanly.
+#
+# An analyzed relation also pins the file listing it was resolved
+# against, so each entry carries the listing's fingerprint (names,
+# sizes, mtimes) and is re-resolved when the files change: a
+# long-lived serve session would otherwise read an appended table at
+# its old row count, or fail on an overwritten table's deleted files.
 _RELATION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
     weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple | None:
+    """``(path, size, mtime_ns)`` of every file at or under ``path``,
+    sorted; ``None`` when ``path`` is not on the local file system
+    (such tables are resolved on every call, never memoized)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns),)
+    files, dirs = [], [path]
+    while dirs:
+        with os.scandir(dirs.pop()) as entries:
+            for e in entries:
+                if e.is_dir():
+                    dirs.append(e.path)
+                else:
+                    est = e.stat()
+                    files.append((e.path, est.st_size, est.st_mtime_ns))
+    return tuple(sorted(files))
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -52,10 +81,12 @@ class Catalog:
         if name not in self._cache:
             memo = _RELATION_MEMO.setdefault(self.spark, {})
             key = (os.path.abspath(self.sf_dir), name)
-            if key in memo:
-                self._cache[name] = memo[key]
-                return self._cache[name]
             path = os.path.join(self.sf_dir, f"{name}.parquet")
+            listing = _listing(path)
+            if listing is not None and key in memo \
+                    and memo[key][0] == listing:
+                self._cache[name] = memo[key][1]
+                return self._cache[name]
             df = self.spark.read.parquet(path)
             # Normalize every parquet timestamp flavor to one session-UTC
             # TimestampType so downstream operators see a single type
@@ -78,7 +109,8 @@ class Catalog:
                 elif field.type.tz is None:
                     df = df.withColumn(
                         field.name, F.col(field.name).cast("timestamp"))
-            memo[key] = df
+            if listing is not None:
+                memo[key] = (listing, df)
             self._cache[name] = df
         return self._cache[name]
 

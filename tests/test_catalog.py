@@ -81,3 +81,30 @@ def test_sessionize_is_ntz_safe(spark, tmp_path):
         assert sessions == [1, 1, 2]
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", old)
+
+
+def _census_docs(spark, src, out):
+    """n_docs of a 'census the corpus' NL run over ``src``."""
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        FixtureFetcher,
+        Pipeline,
+    )
+
+    res = Pipeline(spark, FixtureFetcher(spark, src)).run_dataops(
+        "census the corpus", src, out)
+    assert res["status"] == "complete", res
+    return res["reports"]["n_docs"]
+
+
+def test_relation_memo_follows_an_append(spark, sf_dir, tmp_path):
+    """Two runs in one session over a table appended to in between:
+    the second run counts the appended rows (the session-lived
+    relation memo must not pin the first run's file listing)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    path = str(tmp_path / "src" / "documents.parquet")
+    docs.limit(40).write.parquet(path)
+    src = str(tmp_path / "src")
+    assert _census_docs(spark, src, str(tmp_path / "c1")) == 40
+    (docs.limit(25).withColumn("doc_id", F.col("doc_id") + 1_000_000)
+     .write.mode("append").parquet(path))
+    assert _census_docs(spark, src, str(tmp_path / "c2")) == 65

@@ -441,3 +441,43 @@ def test_dataops_runs_survive_concurrent_cache_release(spark, sf_dir,
         stop.set()
         drainer.join(5)
     assert not drainer.is_alive()
+
+
+def test_http_runs_read_an_overwritten_table(spark, sf_dir, tmp_path):
+    """One serve process, two runs over a source table overwritten in
+    between: the second run reads the new rows (no stale file listing,
+    no FILE_NOT_EXIST on the first version's deleted part files)."""
+    from dynamic_etl_pipeline_thesis_ii_spark.plans.orchestrator import (
+        FixtureFetcher,
+        Pipeline,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    src = str(tmp_path / "src")
+    path = src + "/documents.parquet"
+    docs.limit(30).write.parquet(path)
+    service = PipelineService(pipeline_runner(
+        lambda progress: Pipeline(spark, FixtureFetcher(spark, src),
+                                  progress=progress)))
+    server, port = _start(service)
+    try:
+        n_docs = []
+        for i, n in enumerate((30, 12)):
+            if i:
+                docs.orderBy("doc_id").limit(n).write.mode("overwrite") \
+                    .parquet(path)
+            code, resp = _req(port, "POST", "/api/pipeline/run", {
+                "query": "census the corpus",
+                "options": {"source_dir": src,
+                            "output_path": str(tmp_path / f"c{i}")}})
+            assert code == 200
+            status = _wait_status(port, resp["run_id"],
+                                  {"completed", "failed"})
+            assert status["status"] == "completed", status
+            code, results = _req(port, "GET",
+                                 f"/api/pipeline/results/{resp['run_id']}")
+            assert results["status"] == "complete", results
+            n_docs.append(results["reports"]["n_docs"])
+        assert n_docs == [30, 12]
+    finally:
+        server.shutdown()
