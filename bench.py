@@ -26,24 +26,58 @@ relative to that. A run with
 spread_max >> 1.5 or loadavg far above zero at start is not a valid
 round-over-round signal.
 
-The output also carries a ``scale_probe`` section (disable with
-BENCH_SCALE=0): the near-dup detectors' CANDIDATE generation measured
-on the documents corpus replicated 1x/2x/4x (replica texts re-salted
-per word so replicas are not near-dups of each other — growth in
-candidates then reflects blocking behavior, not constructed dups).
-Sub-quadratic candidate growth across the factors is the direct
-evidence that the banded/blocked join strategies hold as the corpus
-scales; a broken blocking shows up as candidates growing ~f² instead
-of ~f.
+The output also carries a scale probe (disable with BENCH_SCALE=0):
+each row of ``PROBES`` counts one operator's candidates or rows out,
+and times it (min of $BENCH_PROBE_REPEAT, default 2), on replicas of
+the inputs at each of $BENCH_SCALE_FACTORS (default 1,4,16). Replica
+texts are re-salted per word and replica embeddings sign-flipped, so
+replicas are not near-dups of each other: count growth then reflects
+blocking behaviour, not constructed dups, and a broken blocking shows
+up as counts growing ~f² instead of ~f. Each row declares its count
+growth (``Growth``); tests/test_scale_probe.py asserts it in the slow
+tier. The full record goes to SCALE_PROBE.json beside this file, one
+compact ``# probe`` line per series to stdout.
+
+To add a probe, add one ``Probe(name, build, growth)`` row: ``build``
+takes the shared ``Inputs`` and a factor, does the untimed setup and
+returns a ``Run`` (usually ``_on_docs(lambda inp, d: <frame>)`` for
+an operator over the salted corpus), and ``growth`` is the count
+growth the operator promises.
 """
 
 from __future__ import annotations
 
+import functools
+import io
 import json
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
+import zipfile
+from typing import Any, Callable, NamedTuple
+
+import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from dynamic_etl_pipeline_thesis_ii_spark.operators import bpe as BP
+from dynamic_etl_pipeline_thesis_ii_spark.operators import dedup as D
+from dynamic_etl_pipeline_thesis_ii_spark.operators import multimodal as MM
+from dynamic_etl_pipeline_thesis_ii_spark.operators import packing as PK
+from dynamic_etl_pipeline_thesis_ii_spark.operators import quality as Q
+from dynamic_etl_pipeline_thesis_ii_spark.operators import sampling as SA
+from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as S
+from dynamic_etl_pipeline_thesis_ii_spark.operators import text as T
+from dynamic_etl_pipeline_thesis_ii_spark.operators import unigram as UG
+from dynamic_etl_pipeline_thesis_ii_spark.operators import web as W
+from dynamic_etl_pipeline_thesis_ii_spark.sources import archives as AR
+from dynamic_etl_pipeline_thesis_ii_spark.sources import pdf as PDF
+from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks as SK
+from dynamic_etl_pipeline_thesis_ii_spark.sources import warc as WC
+from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -101,1035 +135,670 @@ HEADLINE = [
 ]
 
 
-def scale_probe(spark, factors: list[int]) -> dict:
-    """Candidate-pair counts + wall time for each near-dup blocking
-    strategy at growing corpus multiples. Filters/verification are
-    disabled (max_hamming=64, threshold=0) so the count is the
-    CANDIDATE stage — the part that can go quadratic.
+class Growth(NamedTuple):
+    """A series' declared count growth over the factors ``f``, as
+    ``candidates`` at ``f`` against ``c1``, its value at the first
+    factor (taken as ×1 below): ``linear`` c = f·c1 exactly,
+    ``affine`` c = a + b·f exactly, ``flat`` c = c1, ``power``
+    0 < c ≤ c1·f^bound, ``below`` c < bound at every factor."""
+    kind: str
+    bound: float = 0.0
 
-    Expected shapes: jaccard exactly linear (df-capped shingle
-    blocking), minhash ~linear (band-signature collisions), simhash
-    (the DEFAULT n_blocks=6 Manku banding as invoked by the query
-    suite, ~32-bit keys) ~linear — the chance-collision term is
-    ~N²/2^32; simhash_narrow (the opt-in 4x16-bit small-corpus fast
-    path) superlinear-but-bounded — 16-bit band keys have a
-    chance-collision term ~N²/2^16 that the max_bucket cap truncates
-    once buckets saturate, which is exactly why it is no longer the
-    default. contam (corpus vs fixed benchmark set) must show FLAT
-    candidate counts and wall time — the replicas are word-salted so
-    only the unsalted replica overlaps the fixed bench set, and the
-    broadcast probe never shuffles the corpus; pack's rows out = docs
-    in, exactly linear (one windowed scan).
+    def __str__(self):
+        return {"power": f"<= f^{self.bound:g}",
+                "below": f"< {self.bound:g}"}.get(self.kind, self.kind)
 
-    The corpus-shuffle text passes ride the same harness with rows-out
-    as the count: lineclean (boilerplate line removal — one window
-    count on the 32-bit line hash) and spanclean (repeated k-gram
-    removal — one corpus shuffle on the gram hash) emit exactly one
-    row per doc, so rows must be EXACTLY linear and wall time ~linear
-    (their shuffle keys are hashes, uniform at any corpus size; blank/
-    tail rows carry per-row unique keys so there is no null-key skew
-    partition to saturate). bigram emits one row per >=2-token doc
-    (~linear) and is probed through its self-contained path — four
-    corpus explosions instead of the query suite's one persisted pairs
-    frame, a constant-factor upper bound on the suite's cost with the
-    identical shuffle structure (pairs ⋈ logp on near-uniform bigram
-    keys).
 
-    Round-8 additions: chunk (overlapping chunking — scan-only 1->N
-    expansion, rows = sum ceil(tokens/stride) so EXACTLY linear, no
-    shuffle to misbehave); url (normalize + canonical URL dedup over a
-    synthesized half-duplicated URL column — per-row regex chain plus
-    ONE shuffle on the normalized URL, rows ~n/2 exactly, time
-    ~linear); pq (codes + two-stage ADC top-k over the REPLICATED
-    embeddings table, 8 fixed queries — rows out FLAT at |Q|·k by
-    construction, wall time ~linear in candidates: one codes scan, a
-    broadcast LUT join, per-partition pre-truncation, then a
-    constant-size rank window); quality (score the replicated corpus
-    with a classifier trained ONCE on the 1x base — the train-on-
-    sample/score-everywhere contract; scoring is one scan with the
-    coefficient vector in the model, rows EXACTLY linear); bpe (apply
-    a merge table trained ONCE on the 1x base, count-only mode — the
-    per-executor word cache makes per-row cost a dict lookup, rows
-    EXACTLY linear); langid (trained char-n-gram classify: one gram
-    explode + broadcast vocabulary-sized weight join + per-doc
-    aggregate, rows EXACTLY linear, wall ~linear — the explode
-    dominates). Training cost for all three is paid at probe setup,
-    outside the timed series, mirroring production where the model /
-    merge table / profile table is a reusable artifact.
+GROWTH_KINDS = ("linear", "affine", "flat", "power", "below")
+LINEAR = Growth("linear")
+AFFINE = Growth("affine")
+FLAT = Growth("flat")
+NEAR_LINEAR = Growth("power", 1.2)
 
-    Round-8 session-2 additions: html (block-aware HTML->lines — one
-    per-row regexp projection, rows EXACTLY linear, no shuffle); dsir
-    (importance weights against a log-ratio table fitted ONCE on the
-    1x base — gram explode + broadcast 4096-row join + per-doc sum,
-    the langid shape, rows EXACTLY linear); semdedup (within-cluster
-    candidate pairs over sign-flip-decorrelated embedding replicas
-    with n_clusters scaled 16*f — per-cluster size stays flat so
-    candidates grow ~f, never f²; the k-means fit is inside the timed
-    cost, as in production); bloom (incremental-dedup fast path —
-    filter fitted ONCE on the 1x base's snapshot keys at setup; timed
-    work is the broadcast membership scan plus the anti-join of the
-    bloom-positive sliver, rows out exactly linear)."""
-    from pyspark.sql import functions as F
 
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import dedup as D
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as S
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import text as T
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import web as W
-    from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
+def growth_breach(growth: Growth, series: list[dict]) -> str | None:
+    """Why ``series`` breaks ``growth``, or None when it holds."""
+    pts = [(r["factor"], r["candidates"]) for r in series]
+    (f1, c1), (f2, c2) = pts[0], pts[min(1, len(pts) - 1)]
+    holds = {
+        "linear": lambda f, c: c * f1 == c1 * f,
+        "affine": lambda f, c: (c - c1) * (f2 - f1) == (c2 - c1) * (f - f1),
+        "flat": lambda f, c: c == c1,
+        "power": lambda f, c: 0 < c1 and c <= c1 * (f / f1) ** growth.bound,
+        "below": lambda f, c: c < growth.bound,
+    }[growth.kind]
+    for f, c in pts:
+        if not holds(f, c):
+            return (f"{growth} broken at x{f}: counts "
+                    f"{[c for _, c in pts]} at factors {[f for f, _ in pts]}")
+    return None
 
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import packing as PK
 
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import bpe as BP
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import quality as Q
+class Run(NamedTuple):
+    """One factor's timed work. ``work()`` returns a frame, whose count
+    is the record's ``candidates``, or record fields; ``before()`` runs
+    untimed ahead of every repeat and ``after(last)`` once after them,
+    returning more record fields."""
+    n_docs: int | None
+    work: Callable[[], Any]
+    before: Callable[[], Any] | None = None
+    after: Callable[[Any], dict] | None = None
 
-    base = Catalog(spark, SF_DIR).documents.select("doc_id", "text")
-    # fixed small benchmark set (every 13th base doc): contamination
-    # cost must stay linear in the corpus with the bench side constant
-    bench_set = base.filter(F.col("doc_id") % 13 == 0).persist()
-    # train-once artifacts for the scoring/apply series (setup cost,
-    # not timed): synthetic balanced labels — the probe pins SCORING
-    # throughput, not model quality (test_quality.py owns that)
-    q_model = Q.train_quality_classifier(
-        base.withColumn("label", (F.col("doc_id") % 2).cast("double")),
-        n_features=1 << 16, max_iter=5)
-    bpe_merges = BP.train_bpe(base, n_merges=150)
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import unigram as UG
-    uni_pieces = UG.train_unigram(base, vocab_size=150)
-    # the synthetic lang labels carry no real signal — irrelevant for
-    # a THROUGHPUT probe; the classify path (explode + broadcast
-    # weight join + per-doc aggregate) does identical work regardless
-    lang_w, lang_floors = T.train_lang_ngrams(
-        Catalog(spark, SF_DIR).documents, top_k=300)
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import sampling as SA
-    dsir_tbl = SA.dsir_logratio_table(
-        base.withColumn("__t", F.col("doc_id") % 13 == 0),
-        target_flag="__t").persist()
-    dsir_tbl.count()
-    bloom_seen = D.content_keys(
-        base.filter(F.col("doc_id") % 3 == 0)).persist()
-    bloom_filter = D.BloomFilter.fit(bloom_seen.select("key"), "key",
-                                     fpp=0.01)
-    methods = {
-        "minhash": lambda d: D.minhash_lsh_pairs(d),
-        # max_hamming=64 disables verification to expose the candidate
-        # stage; key_blocks pins the banding under test (the floor rule
-        # would otherwise degrade 64-hamming runs to single-block keys)
-        "simhash": lambda d: D.simhash_pairs(d, max_hamming=64,
-                                             n_blocks=6, key_blocks=3),
-        "simhash_narrow": lambda d: D.simhash_pairs(d, max_hamming=64,
-                                                    n_blocks=4,
-                                                    key_blocks=1),
-        "jaccard": lambda d: D.jaccard_pairs(d, threshold=0.0),
-        "contam": lambda d: D.contamination_pairs(d, bench_set, k=5,
-                                                  min_overlap=1),
-        "pack": lambda d: PK.pack_chunks(d, budget=2000, n_buckets=8),
-        "lineclean": lambda d: T.remove_boilerplate_lines(d),
-        "spanclean": lambda d: T.remove_repeated_spans(d),
-        "bigram": lambda d: T.bigram_logprob(d),
-        "chunk": lambda d: T.chunk_documents(d, size=64, stride=48),
-        # half-duplicated synthetic URLs (two doc_ids share each path,
-        # tracking params + mixed case force the full normalize chain):
-        # dedup keeps ~n/2 rows — exactly linear
-        "url": lambda d: W.url_dedup(d.withColumn(
-            "url", F.concat(F.lit("HTTPS://Example.COM/p/"),
-                            (F.col("doc_id") / 2).cast("long"),
-                            F.lit("/?utm_source=probe&utm_id="),
-                            F.col("doc_id")))),
-        # bloom: incremental-dedup fast path — filter built ONCE on
-        # the 1x base's keys (setup, like the other trained
-        # artifacts); the timed work is the broadcast membership scan
-        # + the anti-join of the bloom-positive sliver. Replica texts
-        # are word-salted, so ~1/f of the corpus is a true dup of the
-        # snapshot: rows out = n - n_base/3, exactly linear
-        "bloom": lambda d: D.bloom_snapshot_fresh(d, bloom_seen,
-                                                  bloom=bloom_filter),
-        # embed: hashed random-projection document embedding (N12) —
-        # one Arrow scan, per-executor token-vector cache, NO
-        # shuffle; rows out EXACTLY linear, wall ~linear (the token
-        # loop dominates; replica word-salting grows the cache but
-        # lookups stay O(1))
-        "embed": lambda d: S.hash_embed(d, dim=64),
-        # substr: ExactSubstr span detection (D18) — replicas are
-        # word-salted so windows never collide ACROSS replicas;
-        # duplicated spans come only from each replica's own internal
-        # repetition -> spans ~linear in docs, wall ~linear (window
-        # build is one projection; only (id, pos, hash64) rows — 20
-        # bytes/token — reach the two key-partitioned shuffles)
-        "substr": lambda d: D.substring_duplicate_spans(d, w=8),
-        "quality": lambda d: Q.score_quality(d, q_model),
-        "bpe": lambda d: BP.apply_bpe(d, bpe_merges, with_tokens=False),
-        # unigram: Viterbi segmentation with the piece table trained
-        # ONCE on the 1x base — the executor word cache makes per-row
-        # cost a dict lookup after warmup (the bpe probe's shape),
-        # rows EXACTLY linear
-        "unigram": lambda d: UG.apply_unigram(d, uni_pieces,
-                                              with_tokens=False),
-        "langid": lambda d: T.lang_id_ngram(d, lang_w, lang_floors),
-        # html: per-row regexp projection (synthetic page around each
-        # doc) — rows EXACTLY linear, wall ~linear, no shuffle
-        "html": lambda d: d.select(T.html_to_lines(F.concat(
-            F.lit("<html><body><p>"),
-            F.regexp_replace("text", r"\.\s+", ".</p><p>"),
-            F.lit("</p><br><div>footer</div></body></html>")))
-            .alias("text")),
-        # dsir: score against the table fitted ONCE on the 1x base
-        # (train-on-sample / score-everywhere) — one gram explode +
-        # broadcast 4096-row join + groupBy(doc), rows EXACTLY linear
-        "dsir": lambda d: SA.dsir_weights(d, dsir_tbl),
-        # leak: leakage-safe split = LSH pairs + connected components
-        # + component-hash assign; replicas are word-salted so the
-        # pair graph grows ~linearly and components stay shallow —
-        # rows out EXACTLY n, wall ~linear (the LSH banding dominates)
-        "leak": lambda d: SA.leakage_safe_split(
-            d.select("doc_id"), {"train": 0.8, "val": 0.1, "test": 0.1},
-            D.minhash_lsh_pairs(d)),
-        # packseq: fixed-length sequence assembly over synthetic
-        # one-id-per-word streams (JVM hash ids — salt-INSENSITIVE, so
-        # replica word-salting doesn't inflate the token count the way
-        # BPE subwords would; the encode cost itself is the bpe
-        # probe's job). Isolates the packing shuffle: one
-        # repartition(bucket) + sorted Arrow walk, rows out =
-        # floor(tokens/256) per bucket — EXACTLY linear
-        "packseq": lambda d: PK.pack_sequences(
-            d.select("doc_id", F.transform(
-                F.split(F.col("text"), r"\s+"),
-                lambda w: F.pmod(F.hash(w), F.lit(32768)).cast("int"))
-                .alias("input_ids")),
-            seq_len=256, id_col="doc_id"),
-        # packseq at 4 vs 32 buckets: the packing shuffle's task count
-        # IS n_buckets, so at a fixed corpus wall time should FALL as
-        # buckets rise (more parallel streams, same total tokens) —
-        # the probe record behind derive_n_buckets' corpus-derived
-        # default. Rows out differ slightly between variants (each
-        # bucket drops its own trailing partial — that's the
-        # documented identity trade, not noise).
-        "packseq_b4": lambda d: PK.pack_sequences(
-            d.select("doc_id", F.transform(
-                F.split(F.col("text"), r"\s+"),
-                lambda w: F.pmod(F.hash(w), F.lit(32768)).cast("int"))
-                .alias("input_ids")),
-            seq_len=256, id_col="doc_id", n_buckets=4),
-        "packseq_b32": lambda d: PK.pack_sequences(
-            d.select("doc_id", F.transform(
-                F.split(F.col("text"), r"\s+"),
-                lambda w: F.pmod(F.hash(w), F.lit(32768)).cast("int"))
-                .alias("input_ids")),
-            seq_len=256, id_col="doc_id", n_buckets=32),
-    }
-    def _salted_docs(f: int):
-        """factor-f corpus: replica i appends "~i" to every word, so
-        replicas share no shingles with each other and the corpus at
-        factor f has ~f x the base corpus's near-dup structure —
-        linear, not quadratic. ONE recipe shared by the main method
-        loop and the bm25/hybrid store probes."""
-        reps = [base.select(
-                    (F.col("doc_id") * f + i).alias("doc_id"),
-                    (F.regexp_replace("text", r"(\S+)", f"$1~{i}")
-                     if i else F.col("text")).alias("text"))
-                for i in range(f)]
-        out_df = reps[0]
-        for r in reps[1:]:
-            out_df = out_df.unionAll(r)
-        return out_df
 
-    out: dict[str, list] = {m: [] for m in methods}
-    for f in factors:
-        corpus = _salted_docs(f).persist()
-        n = corpus.count()
-        # min-of-N (default 2): a single timing at the 16x tier is
-        # vulnerable to box contention — a one-off 3x outlier reads as
-        # superlinear growth when the shape is actually linear
-        probe_rep = max(1, int(os.environ.get("BENCH_PROBE_REPEAT", "2")))
-        for m, fn in methods.items():
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = fn(corpus).count()
-                best = min(best, time.perf_counter() - t0)
-            out[m].append({"factor": f, "n_docs": n, "candidates": c,
-                           "sec": round(best, 3)})
-        corpus.unpersist()
-    bench_set.unpersist()
-    dsir_tbl.unpersist()
-    bloom_seen.unpersist()
+class Probe(NamedTuple):
+    """One series: ``build(inputs, f)`` does the untimed setup of
+    factor ``f`` and returns its :class:`Run`."""
+    name: str
+    build: Callable[["Inputs", int], Run]
+    growth: Growth
 
-    # PQ rides the EMBEDDINGS table: replicas keep their vectors (ADC
-    # cost depends on candidate count, not vector novelty) with ids
-    # remapped to stay unique; 8 fixed queries, so rows out is FLAT at
-    # |Q|*k while wall time must stay ~linear in candidates
-    emb = Catalog(spark, SF_DIR).embeddings
-    books = S.pq_grid_codebooks(64, m=4, k=8)
-    pq_q = (emb.filter(F.col("vec_id") < 8)
-            .select(F.col("vec_id").alias("q_id"),
-                    F.col("embedding").alias("q_vec")).persist())
-    pq_q.count()
-    probe_rep = max(1, int(os.environ.get("BENCH_PROBE_REPEAT", "2")))
-    out["pq"] = []
-    for f in factors:
-        reps = [emb.select((F.col("vec_id") * f + i).alias("c_id"),
-                           F.col("embedding").alias("c_vec"))
-                for i in range(f)]
-        cand = reps[0]
-        for r in reps[1:]:
-            cand = cand.unionAll(r)
-        cand = cand.persist()
-        n = cand.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = S.pq_topk(pq_q, cand, books, k=5).count()
-            best = min(best, time.perf_counter() - t0)
-        out["pq"].append({"factor": f, "n_docs": n, "candidates": c,
-                          "sec": round(best, 3)})
-        cand.unpersist()
-    pq_q.unpersist()
 
-    # semdedup rides the embeddings too, but replicas must NOT be
-    # semantic dups of each other (the analog of the text probes'
-    # word-salting): replica i flips each vector component's sign by
-    # a per-(replica, component) hash bit — within-replica cosines
-    # are PRESERVED exactly (s_j^2 = 1), cross-replica cosines
-    # decorrelate to ~0, so pair structure grows ~f, not f^2.
-    # n_clusters scales with the corpus (the SemDeDup contract: the
-    # paper runs 50k clusters on LAION) keeping per-cluster size flat;
-    # the k-means fit is part of the timed cost, as in production.
-    def _flip(i):
-        return lambda x, j: (x * (1 - 2 * F.pmod(
-            F.hash(j, F.lit(i)), F.lit(2)))).cast("float")
+def _replicate(f: int, replica: Callable[[int], DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionAll, map(replica, range(f)))
 
-    def _flipped_embs(f: int, id_name: str, vec_name: str):
-        """factor-f embeddings with sign-flip-decorrelated replicas
-        (within-replica cosines preserved exactly, cross-replica ~0)
-        — the ONE recipe shared by the semdedup/cluster and hybrid
-        probes."""
-        reps = []
-        for i in range(f):
-            v = (F.col("embedding") if i == 0 else
-                 F.transform("embedding", _flip(i)))
-            reps.append(emb.select(
-                (F.col("vec_id") * f + i).alias(id_name),
-                v.alias(vec_name)))
-        out_df = reps[0]
-        for r in reps[1:]:
-            out_df = out_df.unionAll(r)
-        return out_df
 
-    out["semdedup"] = []
-    # cluster: standalone corpus clustering (N11) over the same
-    # decorrelated replicas — n_clusters scales 16*f (constant target
-    # cluster size), rows out EXACTLY linear (one assignment per
-    # vector), wall ~linear: the k-means fit is sample-bounded (r12)
-    # and the scoring join broadcasts the centers.
-    out["cluster"] = []
-    for f in factors:
-        cand = _flipped_embs(f, "vec_id", "embedding").persist()
-        n = cand.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            # threshold=-1 disables the cosine cut (probe convention:
-            # count the CANDIDATE stage — the within-cluster pair join
-            # that can go quadratic), so candidates = sum C(|c|,2)
-            c = S.semantic_pairs(cand, threshold=-1.0,
-                                 n_clusters=16 * f).count()
-            best = min(best, time.perf_counter() - t0)
-        out["semdedup"].append({"factor": f, "n_docs": n,
-                                "candidates": c, "sec": round(best, 3)})
-        best_cl, c_cl = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            assign, _centers = S.cluster_embeddings(
-                cand, n_clusters=16 * f)
-            c_cl = assign.count()
-            best_cl = min(best_cl, time.perf_counter() - t0)
-        out["cluster"].append({"factor": f, "n_docs": n,
-                               "candidates": c_cl,
-                               "sec": round(best_cl, 3)})
-        cand.unpersist()
+def salted_docs(docs: DataFrame, f: int) -> DataFrame:
+    """Factor-f corpus: replica i gets ids ``doc_id*f + i`` and appends
+    ``~i`` to every word, so replicas share no shingles and the
+    corpus's near-dup structure grows ~f, not f². Other columns ride
+    along unchanged."""
+    rest = [c for c in docs.columns if c not in ("doc_id", "text")]
+    return _replicate(f, lambda i: docs.select(
+        (F.col("doc_id") * f + i).alias("doc_id"),
+        (F.regexp_replace("text", r"(\S+)", f"$1~{i}") if i
+         else F.col("text")).alias("text"), *rest))
 
-    # crawl: WARC ingestion throughput. One synthetic gzipped WARC
-    # file (100 response records wrapping real document texts) is
-    # written once at setup; factor f reads a directory holding f
-    # copies. The reader's parallelism unit is the FILE (binaryFile +
-    # one Arrow frame per file), so rows out = 100*f exactly linear
-    # and wall time ~linear once f exceeds core count — flat before
-    # that, which is the desired embarrassingly-parallel shape.
-    import shutil
-    import tempfile
 
-    from dynamic_etl_pipeline_thesis_ii_spark.sources import warc as WC
+def embedding_replicas(emb: DataFrame, f: int, first_flip: int | None = 0,
+                       id_base: int = 0) -> DataFrame:
+    """Factor-f ``(vec_id, embedding)``: replica i gets ids
+    ``vec_id*f + i + id_base`` and flips each component's sign by a
+    per-(mask, component) hash bit with mask ``i + first_flip`` (mask
+    0, or ``first_flip=None``, keeps the vector). Cosines within a
+    replica are preserved exactly (s² = 1); across replicas they
+    decorrelate to ~0, so pair structure grows ~f, not f²."""
+    def replica(i):
+        mask = None if first_flip is None else i + first_flip
+        vec = (F.col("embedding") if not mask else F.transform(
+            "embedding", lambda x, j: (x * (1 - 2 * F.pmod(
+                F.hash(j, F.lit(mask)), F.lit(2)))).cast("float")))
+        return emb.select((F.col("vec_id") * f + i + id_base)
+                          .alias("vec_id"), vec.alias("embedding"))
+    return _replicate(f, replica)
 
-    texts = [r[0] for r in base.limit(100).select("text").collect()]
-    member = _synth_warc_gz(texts)
-    crawl_root = tempfile.mkdtemp(prefix="bench_warc_")
-    try:
-        out["crawl"] = []
-        for f in factors:
-            d = os.path.join(crawl_root, f"f{f}")
-            os.makedirs(d, exist_ok=True)
-            for i in range(f):
-                with open(os.path.join(d, f"part{i}.warc.gz"), "wb") as fh:
-                    fh.write(member)
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = WC.read_warc(spark, d).count()
-                best = min(best, time.perf_counter() - t0)
-            out["crawl"].append({"factor": f, "n_docs": len(texts) * f,
-                                 "candidates": c, "sec": round(best, 3)})
-    finally:
-        shutil.rmtree(crawl_root, ignore_errors=True)
 
-    # pdf / archive: the W4/W5 ingestion front doors at growing file
-    # counts. Both readers ride binaryFile + one Arrow kernel with
-    # FILE as the parallelism unit (same contract as crawl), so rows
-    # out are exactly linear in files and wall ~linear once files
-    # exceed cores — any superlinear growth here would mean listing /
-    # driver overhead creeping in, which is precisely what the probe
-    # guards. Setup writes the fixtures once per factor (8 multi-page
-    # PDFs and 4 multi-member zips per replica, wrapping real corpus
-    # texts); only the read is timed.
-    import io
-    import zipfile
+def _best_of(repeat: int, work, before=None):
+    """Min-of-``repeat`` wall seconds of ``work()``, a returned frame
+    counted inside the timer; also the last result and its count."""
+    best, got, n = float("inf"), None, None
+    for _ in range(repeat):
+        if before is not None:
+            before()
+        t0 = time.perf_counter()
+        got = work()
+        n = got.count() if isinstance(got, DataFrame) else None
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 3), got, n
 
-    from dynamic_etl_pipeline_thesis_ii_spark.sources import (
-        archives as AR,
-        pdf as PDF,
-    )
 
-    pdf_texts = [t[:400] for t in texts[:24]]
-    pdf_bytes = [PDF.write_pdf([pdf_texts[3 * i], pdf_texts[3 * i + 1],
-                                pdf_texts[3 * i + 2]])
-                 for i in range(8)]
-    zip_bytes = []
+class Inputs:
+    """What the rows share: the base tables, artifacts built once on the
+    ×1 base (setup cost, as in production, where the model, merge table
+    or index is a stored artifact), a scratch directory, and frames held
+    for the current factor."""
+
+    def __init__(self, spark, sf_dir: str, repeat: int):
+        self.spark, self.repeat = spark, repeat
+        self._kept: list[DataFrame] = []
+        self._held: dict[str, tuple[DataFrame, int]] = {}
+        cat = Catalog(spark, sf_dir)
+        self.base = base = cat.documents.select("doc_id", "text")
+        self.emb = emb = cat.embeddings
+        self.vectors = emb.select(F.col("vec_id").alias("c_id"),
+                                  F.col("embedding").alias("c_vec"))
+        # fixed benchmark sides: every 13th doc, every 7th vector
+        self.bench_set = self.keep(base.filter(F.col("doc_id") % 13 == 0))
+        self.bench_emb = self.keep(emb.filter(F.col("vec_id") % 7 == 0))
+        # synthetic labels: the probes time scoring, not model quality
+        self.q_model = Q.train_quality_classifier(
+            base.withColumn("label", (F.col("doc_id") % 2).cast("double")),
+            n_features=1 << 16, max_iter=5)
+        self.lang = T.train_lang_ngrams(cat.documents, top_k=300)
+        self.bpe_merges = BP.train_bpe(base, n_merges=150)
+        self.uni_pieces = UG.train_unigram(base, vocab_size=150)
+        self.dsir_tbl = self.keep(SA.dsir_logratio_table(
+            base.withColumn("__t", F.col("doc_id") % 13 == 0),
+            target_flag="__t"))
+        # the incremental-dedup snapshot: every 3rd doc's key
+        self.seen = self.keep(D.content_keys(
+            base.filter(F.col("doc_id") % 3 == 0)))
+        self.bloom = D.BloomFilter.fit(self.seen.select("key"), "key",
+                                       fpp=0.01)
+        self.texts = [r[0] for r in base.limit(100).select("text").collect()]
+        self.probe_batch = self.keep(base.limit(100).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"))
+        self.pq_q = self.keep(emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")))
+        self.ann_index = S.ivfpq_build(self.vectors, n_clusters=16, m=4)
+        self.bm_queries = self.keep(spark.createDataFrame(
+            [(1, "spark window agg"), (2, "hash join table"),
+             (3, "stream batch merge line")],
+            "query_id bigint, query_text string"))
+        self.hy_queries = self.keep(self.bm_queries.join(
+            emb.filter(F.col("vec_id") < 3).select(
+                (F.col("vec_id") + 1).alias("query_id"),
+                F.col("embedding").alias("query_vec")), "query_id"))
+        self.tmp = tempfile.mkdtemp(prefix="bench_probe_")
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """``df`` persisted and counted until :meth:`close`."""
+        df = df.persist()
+        df.count()
+        self._kept.append(df)
+        return df
+
+    def held(self, key: str, make) -> tuple[DataFrame, int]:
+        """``(frame, rows)`` of ``make()``, persisted once per factor."""
+        if key not in self._held:
+            df = make().persist()
+            self._held[key] = (df, df.count())
+        return self._held[key]
+
+    def release(self) -> None:
+        for df, _ in self._held.values():
+            df.unpersist()
+        self._held.clear()
+
+    def close(self) -> None:
+        self.release()
+        for df in self._kept:
+            df.unpersist()
+        shutil.rmtree(self.tmp, ignore_errors=True)
+
+    def path(self, name: str, f: int) -> str:
+        return os.path.join(self.tmp, f"{name}_f{f}")
+
+    def files(self, name: str, f: int, blobs: list[bytes], ext: str) -> str:
+        d = self.path(name, f)
+        os.makedirs(d)
+        for i, b in enumerate(blobs):
+            with open(os.path.join(d, f"{i}{ext}"), "wb") as fh:
+                fh.write(b)
+        return d
+
+    def docs(self, f: int) -> tuple[DataFrame, int]:
+        return self.held("docs", lambda: salted_docs(self.base, f))
+
+    def flipped(self, f: int) -> tuple[DataFrame, int]:
+        return self.held("flipped", lambda: embedding_replicas(self.emb, f))
+
+    def plain(self, f: int) -> tuple[DataFrame, int]:
+        return self.held("plain", lambda: embedding_replicas(
+            self.emb, f, first_flip=None))
+
+    def media(self, kind: str, f: int, replica) -> tuple[DataFrame, int]:
+        """The held ``(media_id, kind, payload)`` frame of ``f`` replicas,
+        replica i's ``(j, payload)`` items under ids ``i*10_000 + j``."""
+        return self.held(kind, lambda: self.spark.createDataFrame(
+            [(i * 10_000 + j, kind, payload) for i in range(f)
+             for j, payload in replica(i)],
+            "media_id long, kind string, payload binary").repartition(32))
+
+
+def _over(frames: str, fn) -> Callable[[Inputs, int], Run]:
+    """A row timed as ``fn(inputs, frame, f)`` over ``Inputs.<frames>(f)``."""
+    def build(inp, f):
+        d, n = getattr(inp, frames)(f)
+        return Run(n, lambda: fn(inp, d, f))
+    return build
+
+
+def _on_docs(fn) -> Callable[[Inputs, int], Run]:
+    """A row timed as ``fn(inputs, corpus)`` over the held salted corpus."""
+    return _over("docs", lambda inp, d, f: fn(inp, d))
+
+
+def _id_stream(d: DataFrame) -> DataFrame:
+    """One JVM-hash id per word: salt-insensitive, so replicas do not
+    inflate the token count the way BPE subwords would."""
+    return d.select("doc_id", F.transform(
+        F.split(F.col("text"), r"\s+"),
+        lambda w: F.pmod(F.hash(w), F.lit(32768)).cast("int"))
+        .alias("input_ids"))
+
+
+def _image_replica(i: int) -> list:
+    """625 gradient-noise BMPs (×16 passes 10^4 images, enough to pin
+    the band join's growth and hot-bucket capping). Replica i mixes a
+    distinct random raster into every base image, so cross-replica
+    gradient signs decorrelate (dhash ignores a brightness offset), and
+    plants one noisy copy of its first image."""
+    rng = np.random.default_rng(17)
+    grad = np.linspace(0, 200, 20, dtype=np.uint8)
+    base = [((rng.integers(0, 256, (20, 20, 3)).astype(int)
+              + np.roll(grad, 3 * j)[None, :, None]) // 2).astype(np.uint8)
+            for j in range(625)]
+    mixes = (np.random.default_rng(1000 + i).integers(
+        0, 256, (len(base),) + base[0].shape) if i else None)
+    out = []
+    for j, im in enumerate(base):
+        img = im if i == 0 else ((im.astype(int) + mixes[j]) // 2) \
+            .astype(np.uint8)
+        out.append((j, bytes(MM.write_bmp(img))))
+        if j == 0:
+            noisy = img.copy()
+            noisy[::9, ::6] = np.clip(noisy[::9, ::6].astype(int) + 10, 0,
+                                      255).astype(np.uint8)
+            out.append((5000, bytes(MM.write_bmp(noisy))))
+    return out
+
+
+_AUDIO_RATE = 8000
+
+
+def _audio_replica(i: int) -> list:
+    """200 one-second clips: 8 band-centre tones, each under a random
+    per-segment envelope, so unrelated clips sit ~32 aHash bits apart;
+    one planted gain-scaled, requantized re-encode (a resample would cut
+    the top bands, a real >6-bit change)."""
+    t = np.arange(_AUDIO_RATE) / _AUDIO_RATE
+    tones = np.sin(2 * np.pi * np.geomspace(140, 3400, 8)[:, None]
+                   * t[None, :])
+    seg = np.minimum((np.arange(len(t)) * 9) // len(t), 8)
+    rng = np.random.default_rng(7000 + i)
+    out = []
+    for j in range(200):
+        env = 0.1 + 0.9 * rng.random((9, 8))
+        clip = (tones * env[seg].T).sum(axis=0) / 8.0
+        pcm = (np.clip(clip, -1, 1) * 20000).astype("<i2")
+        out.append((j, bytes(MM.write_wav(pcm, _AUDIO_RATE))))
+        if j == 0:
+            redo = ((pcm * 0.5).astype(np.int32)
+                    + rng.integers(-120, 120, len(pcm))).astype("<i2")
+            out.append((5000, bytes(MM.write_wav(redo, _AUDIO_RATE))))
+    return out
+
+
+def _video_replica(i: int) -> list:
+    """60 six-frame AVI clips: three drifting random 2D sinusoids over a
+    static per-clip noise texture (two sinusoids left ~200 chance ≤6-bit
+    pairs at 976 clips), temporally smooth so the planted noisy copy
+    stays within 6 bits."""
+    yy, xx = np.mgrid[0:24, 0:32].astype(float)
+    rng = np.random.default_rng(9000 + i)
+    out = []
+    for j in range(60):
+        fx, fy = rng.uniform(0.3, 4.0, 3), rng.uniform(0.3, 4.0, 3)
+        p0, sp = rng.uniform(0, 2 * np.pi, 3), rng.uniform(0.1, 0.4, 3)
+        tex = rng.uniform(-30, 30, (24, 32))
+        frames = []
+        for t in range(6):
+            g = 127.0 + tex
+            for k in range(3):
+                g = g + 50 * np.sin(2 * np.pi * (fx[k] * xx / 32
+                                                 + fy[k] * yy / 24)
+                                    + p0[k] + t * sp[k])
+            c0 = np.clip(g, 0, 255).astype(np.uint8)
+            frames.append(np.stack(
+                [c0, (c0 // 2 + 40).astype(np.uint8), 255 - c0], axis=2))
+        out.append((j, MM.write_avi(frames, fps=6.0)))
+        if j == 0:
+            noisy = [np.clip(fr.astype(int) + rng.integers(-8, 9, fr.shape),
+                             0, 255).astype(np.uint8) for fr in frames]
+            out.append((5000, MM.write_avi(noisy, fps=6.0)))
+    return out
+
+
+def _annappend(inp, f):
+    centers, books, coded = inp.ann_index
+    batch, n = inp.held("batch", lambda: embedding_replicas(
+        inp.emb, f, first_flip=1, id_base=1_000_000).toDF("c_id", "c_vec"))
+
+    def recall(appended):   # untimed: recall@10 of the grown store
+        rep = S.ann_recall_estimate(
+            centers, books, coded.unionByName(appended), inp.pq_q,
+            inp.vectors.unionByName(batch), k=10, n_probe=2)
+        return {"recall_at_10": rep["recall_at_k"]}
+    return Run(n, lambda: S.ivfpq_append(centers, books, batch),
+               after=recall)
+
+
+def _crawl(inp, f):
+    d = inp.files("crawl", f, [_synth_warc_gz(inp.texts)] * f, ".warc.gz")
+    return Run(len(inp.texts) * f, lambda: WC.read_warc(inp.spark, d))
+
+
+def _pdf(inp, f):          # 8 three-page PDFs per replica
+    t = [x[:400] for x in inp.texts[:24]]
+    d = inp.files("pdf", f, [PDF.write_pdf(t[3 * i:3 * i + 3])
+                             for i in range(8)] * f, ".pdf")
+    return Run(8 * f, lambda: PDF.read_pdfs(inp.spark, d))
+
+
+def _archive(inp, f):      # 4 zips of 6 texts and a JSON member per replica
+    blobs = []
     for i in range(4):
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w") as z:
             for j in range(6):
-                t = texts[(6 * i + j) % len(texts)]
-                z.writestr(f"doc{i}_{j}.txt", t)
+                z.writestr(f"doc{i}_{j}.txt",
+                           inp.texts[(6 * i + j) % len(inp.texts)])
             z.writestr(f"meta{i}.json", '{"k": %d}' % i)
-        zip_bytes.append(buf.getvalue())
-    ing_root = tempfile.mkdtemp(prefix="bench_ingest_")
+        blobs.append(buf.getvalue())
+    d = inp.files("zip", f, blobs * f, ".zip")
+    return Run(4 * f, lambda: AR.read_archives(inp.spark, d))
+
+
+def _wds(inp, f):
+    dest = inp.path("wds", f)
+    corpus, _ = inp.docs(f)
+
+    def write():
+        rep = SK.write_webdataset(corpus, dest, key_col="doc_id",
+                                  n_shards=None, target_shard_mb=1,
+                                  check_unique=False)
+        return {"n_docs": rep["rows_written"],
+                "n_shards": rep["shards_written"]}
+
+    def read_back(_):
+        sec, _, c = _best_of(inp.repeat, lambda: AR.read_webdataset(
+            inp.spark, dest + "/shard-*.tar"))
+        return {"candidates": c, "sec_read": sec}
+    return Run(None, write, after=read_back)
+
+
+def _imgdedup(inp, f):
+    media, n = inp.media("image", f, _image_replica)
+
+    def work():
+        cap: dict = {}
+        c = MM.image_neardup_pairs(media, max_hamming=6,
+                                   cap_report=cap).count()
+        return {"candidates": c,
+                "capped_buckets": cap.get("capped_buckets", 0),
+                "capped_rows": cap.get("capped_rows", 0)}
+    return Run(n, work)
+
+
+def _auddedup(inp, f):
+    media, n = inp.media("audio", f, _audio_replica)
+    return Run(n, lambda: MM.audio_neardup_pairs(media, max_hamming=6))
+
+
+def _viddedup(inp, f):
+    media, n = inp.media("video", f, _video_replica)
+    return Run(n, lambda: MM.video_neardup_pairs(media, max_hamming=6))
+
+
+def _vcontain(inp, f):
+    media, n = inp.media("video", f, _video_replica)
+    return Run(n, lambda: MM.video_containment_pairs(
+        media, min_shared_frames=2, max_hamming=6))
+
+
+def _zorder(inp, f):
+    dest = inp.path("zorder", f)
+    df = (inp.spark.range(5000 * f)
+          .withColumn("x", (F.hash(F.col("id")) % 10_000 + 10_000) % 10_000)
+          .withColumn("y", (F.hash(F.col("id"), F.lit(7)) % 10_000
+                            + 10_000) % 10_000))
+
+    def write():
+        SK.zorder_write(df, dest, ["x", "y"], bits=6, n_files=16)
+        return {}
+
+    def touched(_):         # files holding rows of a 4%-of-range y-box
+        return {"candidates": inp.spark.read.parquet(dest)
+                .filter((F.col("y") >= 4000) & (F.col("y") < 4400))
+                .select(F.input_file_name()).distinct().count()}
+    return Run(5000 * f, write, after=touched)
+
+
+def _upsert(inp, f):
+    store = inp.path("upsert", f)
+    df = inp.spark.range(5000 * f).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("doc text "), F.col("id")).alias("text"))
+    batch = inp.spark.range(20).select(
+        F.when(F.col("id") < 10, F.col("id") * 13)
+        .otherwise(F.col("id") + 10_000_000).alias("doc_id"),
+        F.lit("updated").alias("text"))
+
+    def merge():
+        rep = SK.merge_into_corpus(inp.spark, store, batch)
+        return {"candidates": rep["rows_kept"] + rep["rows_updated"]
+                + rep["rows_inserted"],
+                "rows_per_bucket": rep["est_rows_per_bucket"]}
+    # a fresh store per repeat: each repeat merges 10 updates, 10 inserts
+    return Run(5000 * f, merge, before=lambda: SK.save_corpus_store(
+        df, store, rows_per_bucket=250))
+
+
+def _bm25(inp, f):
+    corpus, n = inp.docs(f)
+    idx = inp.path("bm25", f)
+    T.save_bm25_index(corpus, idx)
+    return Run(n, lambda: T.search_bm25_index(inp.spark, idx,
+                                              inp.bm_queries, k=10))
+
+
+def _hybrid(inp, f, ivf=False):
+    docs, n_docs = inp.docs(f)
+    flipped, n_vecs = inp.flipped(f)
+    cand = flipped.toDF("c_id", "c_vec")
+    kw = {}
+    if ivf:
+        centers, books, coded = S.ivfpq_build(
+            cand, n_clusters=max(4, int(math.sqrt(n_docs + n_vecs))),
+            m=4, k=8)
+        codes, _ = inp.held("hybridivf", lambda: coded)
+        kw = {"dense_index": (centers, books, codes, None), "n_probe": 2}
+    return Run(n_docs + n_vecs, lambda: S.hybrid_topk(
+        docs, cand, inp.hy_queries, k=8, k_pool=12, **kw))
+
+
+def _substrinc(inp, f):
+    snap = inp.path("substrinc", f)
+    rep = D.save_window_snapshot(inp.docs(f)[0], snap, w=8)
+    return Run(rep["n_windows"], lambda: D.incremental_substring_spans(
+        inp.probe_batch, inp.spark, snap, include_batch=False)[0])
+
+
+def _pagerank(inp, f):
+    n = 2000 * f
+    edges, _ = inp.held("pagerank", lambda: inp.spark.range(n * 6).select(
+        F.concat(F.lit("d"), F.col("id") % n).alias("src"),
+        F.concat(F.lit("d"), F.pmod(F.hash(F.col("id")), F.lit(n)))
+        .alias("dst")).filter(F.col("src") != F.col("dst")).distinct())
+    return Run(n, lambda: W.domain_pagerank(edges, n_iter=5))
+
+
+# The probe table, in `# probe` stdout order. Counts are of the
+# CANDIDATE stage where a detector has one (verification off:
+# max_hamming=64, threshold=0 or -1), else rows out. Adding a probe is
+# one row: a name, a build over the shared Inputs and a declared growth.
+PROBES = [
+    # Manku / band-signature collisions: ~linear
+    Probe("minhash", _on_docs(lambda inp, d: D.minhash_lsh_pairs(d)),
+          NEAR_LINEAR),
+    # key_blocks pins the banding under test (the floor rule would
+    # degrade max_hamming=64 runs to single-block keys); the default
+    # 6 blocks give ~32-bit keys, chance collisions ~N²/2^32
+    Probe("simhash", _on_docs(lambda inp, d: D.simhash_pairs(
+        d, max_hamming=64, n_blocks=6, key_blocks=3)), NEAR_LINEAR),
+    # opt-in 4x16-bit path: chance collisions ~N²/2^16, truncated by the
+    # bucket cap once buckets saturate, which is why it is not the default
+    Probe("simhash_narrow", _on_docs(lambda inp, d: D.simhash_pairs(
+        d, max_hamming=64, n_blocks=4, key_blocks=1)), Growth("power", 2.0)),
+    # df-capped shingle blocking
+    Probe("jaccard", _on_docs(lambda inp, d: D.jaccard_pairs(
+        d, threshold=0.0)), LINEAR),
+    # only the unsalted replica overlaps the fixed benchmark side, which
+    # broadcasts: the corpus is never shuffled
+    Probe("contam", _on_docs(lambda inp, d: D.contamination_pairs(
+        d, inp.bench_set, k=5, min_overlap=1)), FLAT),
+    # one windowed scan, rows out = docs in
+    Probe("pack", _on_docs(lambda inp, d: PK.pack_chunks(
+        d, budget=2000, n_buckets=8)), LINEAR),
+    # one window count on the 32-bit line hash, one row per doc
+    Probe("lineclean", _on_docs(lambda inp, d:
+                                T.remove_boilerplate_lines(d)), LINEAR),
+    # one corpus shuffle on the k-gram hash, one row per doc
+    Probe("spanclean", _on_docs(lambda inp, d: T.remove_repeated_spans(d)),
+          LINEAR),
+    # self-contained path: four corpus explosions, an upper bound on the
+    # suite's one persisted pairs frame; one row per >=2-token doc
+    Probe("bigram", _on_docs(lambda inp, d: T.bigram_logprob(d)),
+          NEAR_LINEAR),
+    # scan-only 1->N, rows = sum ceil(tokens/stride)
+    Probe("chunk", _on_docs(lambda inp, d: T.chunk_documents(
+        d, size=64, stride=48)), LINEAR),
+    # two doc_ids share each synthetic URL (tracking params and mixed
+    # case force the full normalize chain); dedup keeps n/2
+    Probe("url", _on_docs(lambda inp, d: W.url_dedup(d.withColumn(
+        "url", F.concat(F.lit("HTTPS://Example.COM/p/"),
+                        (F.col("doc_id") / 2).cast("long"),
+                        F.lit("/?utm_source=probe&utm_id="),
+                        F.col("doc_id"))))), LINEAR),
+    # one Arrow scan with a per-executor token-vector cache, no shuffle
+    Probe("embed", _on_docs(lambda inp, d: S.hash_embed(d, dim=64)),
+          LINEAR),
+    # ExactSubstr spans come only from each replica's own repetition:
+    # salted windows never collide across replicas
+    Probe("substr", _on_docs(lambda inp, d: D.substring_duplicate_spans(
+        d, w=8)), NEAR_LINEAR),
+    # one scan, the coefficients ride the model
+    Probe("quality", _on_docs(lambda inp, d: Q.score_quality(
+        d, inp.q_model)), LINEAR),
+    # count-only apply; the executor word cache makes a row a lookup
+    Probe("bpe", _on_docs(lambda inp, d: BP.apply_bpe(
+        d, inp.bpe_merges, with_tokens=False)), LINEAR),
+    Probe("unigram", _on_docs(lambda inp, d: UG.apply_unigram(
+        d, inp.uni_pieces, with_tokens=False)), LINEAR),
+    # gram explode + broadcast weight join + per-doc aggregate
+    Probe("langid", _on_docs(lambda inp, d: T.lang_id_ngram(d, *inp.lang)),
+          LINEAR),
+    # per-row regexp projection over a synthetic page, no shuffle
+    Probe("html", _on_docs(lambda inp, d: d.select(T.html_to_lines(
+        F.concat(F.lit("<html><body><p>"),
+                 F.regexp_replace("text", r"\.\s+", ".</p><p>"),
+                 F.lit("</p><br><div>footer</div></body></html>")))
+        .alias("text"))), LINEAR),
+    # LSH pairs + connected components + component-hash assignment;
+    # rows out = docs
+    Probe("leak", _on_docs(lambda inp, d: SA.leakage_safe_split(
+        d.select("doc_id"), {"train": 0.8, "val": 0.1, "test": 0.1},
+        D.minhash_lsh_pairs(d))), LINEAR),
+    # one repartition(bucket) + a sorted Arrow walk; rows =
+    # sum over buckets of floor(tokens/256), each bucket dropping its
+    # own trailing partial, so linear only to within a row per bucket
+    Probe("packseq", _on_docs(lambda inp, d: PK.pack_sequences(
+        _id_stream(d), seq_len=256, id_col="doc_id")), NEAR_LINEAR),
+    # the shuffle's task count is n_buckets: at a fixed corpus, wall
+    # falls as buckets rise (the record behind derive_n_buckets)
+    Probe("packseq_b4", _on_docs(lambda inp, d: PK.pack_sequences(
+        _id_stream(d), seq_len=256, id_col="doc_id", n_buckets=4)),
+        NEAR_LINEAR),
+    Probe("packseq_b32", _on_docs(lambda inp, d: PK.pack_sequences(
+        _id_stream(d), seq_len=256, id_col="doc_id", n_buckets=32)),
+        NEAR_LINEAR),
+    # ingestion doors: the file is the parallelism unit, rows = files'
+    # contents exactly; wall ~linear once files exceed cores
+    Probe("pdf", _pdf, LINEAR),
+    Probe("archive", _archive, LINEAR),
+    # tar-shard export (derived shard count keeps shard size constant)
+    # and its read-back; candidates = samples read back
+    Probe("wds", _wds, LINEAR),
+    # corpus vs a FIXED benchmark side: one broadcast hash join
+    Probe("semdecon", _over("flipped", lambda inp, d, f:
+                            S.semantic_contamination(d, inp.bench_emb,
+                                                     threshold=-1.0)),
+          NEAR_LINEAR),
+    # encode a factor-f batch against an index frozen at setup: rows =
+    # batch exactly, independent of what the index holds
+    Probe("annappend", _annappend, LINEAR),
+    # 8 fixed queries: rows = |Q|·k at any corpus size; replicas keep
+    # their vectors, as ADC cost depends on the candidate count only
+    Probe("pq", _over("plain", lambda inp, d, f: S.pq_topk(
+        inp.pq_q, d.toDF("c_id", "c_vec"), S.pq_grid_codebooks(64, m=4, k=8),
+        k=5)), FLAT),
+    # n_clusters scales 16·f, so cluster size stays flat and
+    # candidates = sum C(|c|, 2) grow ~f; the k-means fit is timed
+    Probe("semdedup", _over("flipped", lambda inp, d, f: S.semantic_pairs(
+        d, threshold=-1.0, n_clusters=16 * f)), NEAR_LINEAR),
+    # log-ratio table fitted on the ×1 base: gram explode + broadcast
+    # 4096-row join + per-doc sum
+    Probe("dsir", _on_docs(lambda inp, d: SA.dsir_weights(d, inp.dsir_tbl)),
+          LINEAR),
+    # filter fitted on the ×1 snapshot; rows out = n - |snapshot hits|,
+    # and only the unsalted replica hits
+    Probe("bloom", _on_docs(lambda inp, d: D.bloom_snapshot_fresh(
+        d, inp.seen, bloom=inp.bloom)), AFFINE),
+    # gzipped WARC ingestion, one file per replica (as pdf)
+    Probe("crawl", _crawl, LINEAR),
+    # sample-bounded k-means fit, broadcast centers: one row per vector
+    Probe("cluster", _over("flipped", lambda inp, d, f:
+                           S.cluster_embeddings(d, n_clusters=16 * f)[0]),
+          LINEAR),
+    # perceptual hashes through the Manku banding: one planted pair per
+    # replica plus chance band collisions; hot-bucket capping recorded
+    Probe("imgdedup", _imgdedup, NEAR_LINEAR),
+    Probe("auddedup", _auddedup, NEAR_LINEAR),
+    Probe("viddedup", _viddedup, NEAR_LINEAR),
+    # item pairs sharing >=2 near-dup frames; the planted copy shares 6
+    Probe("vcontain", _vcontain, NEAR_LINEAR),
+    # quantile bucketing keeps the same key geometry at any row count,
+    # so the y-box stays a fraction of the 16 files
+    Probe("zorder", _zorder, Growth("below", 16)),
+    # merge a fixed 20-row batch into a store of ~250 rows per bucket:
+    # rewritten rows <= 20 touched buckets; wall adds bucket listing
+    Probe("upsert", _upsert, Growth("below", 6000)),
+    # salted tokens never match the base-vocabulary queries, so the
+    # sorted tf store's footer stats prune to the base postings
+    Probe("bm25", _bm25, FLAT),
+    # brute two-tower retrieval, rows = |Q|·k; wall grows with the scan
+    Probe("hybrid", _hybrid, FLAT),
+    # store-backed dense tower (index built at setup): wall near-flat
+    Probe("hybridivf", functools.partial(_hybrid, ivf=True), FLAT),
+    # a fixed 100-doc batch against a passage snapshot of the corpus:
+    # flat shuffle work over a linear narrow hash scan
+    Probe("substrinc", _substrinc, FLAT),
+    # ~6 hash-derived edges per node, 5 bounded shuffles; rows = nodes
+    Probe("pagerank", _pagerank, LINEAR),
+]
+
+
+def scale_probe(spark, factors: list[int], sf_dir: str,
+                repeat: int) -> dict[str, list[dict]]:
+    """Run every :data:`PROBES` row at each factor: one
+    ``{"factor", "n_docs", "candidates", "sec", ...}`` record per row
+    and factor, ``sec`` the min of ``repeat`` timings."""
+    inp = Inputs(spark, sf_dir, repeat)
+    out: dict[str, list[dict]] = {p.name: [] for p in PROBES}
     try:
-        out["pdf"] = []
-        out["archive"] = []
         for f in factors:
-            dp = os.path.join(ing_root, f"pdf_f{f}")
-            da = os.path.join(ing_root, f"zip_f{f}")
-            os.makedirs(dp, exist_ok=True)
-            os.makedirs(da, exist_ok=True)
-            for i in range(f):
-                for j, b in enumerate(pdf_bytes):
-                    with open(os.path.join(dp, f"r{i}_{j}.pdf"),
-                              "wb") as fh:
-                        fh.write(b)
-                for j, b in enumerate(zip_bytes):
-                    with open(os.path.join(da, f"r{i}_{j}.zip"),
-                              "wb") as fh:
-                        fh.write(b)
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = PDF.read_pdfs(spark, dp).count()
-                best = min(best, time.perf_counter() - t0)
-            out["pdf"].append({"factor": f, "n_docs": 8 * f,
-                               "candidates": c, "sec": round(best, 3)})
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = AR.read_archives(spark, da).count()
-                best = min(best, time.perf_counter() - t0)
-            out["archive"].append({"factor": f, "n_docs": 4 * f,
-                                   "candidates": c,
-                                   "sec": round(best, 3)})
+            for p in PROBES:
+                run = p.build(inp, f)
+                sec, last, count = _best_of(repeat, run.work, run.before)
+                rec = {"factor": f, "n_docs": run.n_docs,
+                       "candidates": count, "sec": sec}
+                if isinstance(last, dict):
+                    rec.update(last)
+                if run.after is not None:
+                    rec.update(run.after(last))
+                out[p.name].append(rec)
+            inp.release()
     finally:
-        shutil.rmtree(ing_root, ignore_errors=True)
-
-    # wds: the SK6 tar-shard export door + its sample read-back. An
-    # export is linear in bytes by nature — the probe's signal is the
-    # PER-ROW cost staying flat as the corpus grows (derived shard
-    # count keeps shard SIZE constant, so writer parallelism grows
-    # with the corpus; superlinear wall here would mean driver-side
-    # listing/manifest overhead creeping in). check_unique=False: the
-    # salted-replica construction guarantees key uniqueness, and the
-    # probe times the export, not the validation aggregate.
-    from dynamic_etl_pipeline_thesis_ii_spark.sources import (
-        sinks as SK,
-    )
-
-    out["wds"] = []
-    wds_root = tempfile.mkdtemp(prefix="bench_wds_")
-    try:
-        for f in factors:
-            corpus = _salted_docs(f)
-            dest = os.path.join(wds_root, f"f{f}")
-            best_w, rep = float("inf"), {}
-            for _ in range(probe_rep):
-                rep = SK.write_webdataset(
-                    corpus, dest, key_col="doc_id", n_shards=None,
-                    target_shard_mb=1, check_unique=False)
-                best_w = min(best_w, rep["elapsed_sec"])
-            best_r, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = AR.read_webdataset(
-                    spark, dest + "/shard-*.tar").count()
-                best_r = min(best_r, time.perf_counter() - t0)
-            # 'candidates' = samples read back (the every-series rows-
-            # out convention the compact stdout line keys on)
-            out["wds"].append(
-                {"factor": f, "n_docs": rep["rows_written"],
-                 "n_shards": rep["shards_written"], "candidates": c,
-                 "sec": round(best_w, 3),
-                 "sec_read": round(best_r, 3)})
-    finally:
-        shutil.rmtree(wds_root, ignore_errors=True)
-
-    # imgdedup: perceptual-hash image near-dup (dhash -> Manku
-    # banding) at REAL scale: 625 synthetic gradient-noise BMPs per
-    # replica puts factor 16 past 10^4 images — enough corpus that
-    # the 28-band self-join's candidate growth (and any hot-bucket
-    # capping, recorded per factor via cap_report) is pinned, not
-    # extrapolated from toy n. Each replica MIXES IN a distinct
-    # random raster so cross-replica GRADIENT SIGNS decorrelate
-    # (dhash is a gradient hash — a uniform brightness offset
-    # wouldn't change it at all; the image analog of the text
-    # probes' word-salting must perturb gradients) while each
-    # replica keeps ONE planted noisy copy — pairs grow ~f (one
-    # planted pair per replica + chance band collisions), never f².
-    # The dhash pass is one Arrow payload scan; everything after
-    # moves 16-byte rows.
-    import numpy as np
-
-    from dynamic_etl_pipeline_thesis_ii_spark.operators import (
-        multimodal as MM,
-    )
-
-    rng = np.random.default_rng(17)
-    grad_v = np.linspace(0, 200, 20, dtype=np.uint8)
-    base_imgs = [((rng.integers(0, 256, (20, 20, 3)).astype(int)
-                   + np.roll(grad_v, 3 * j)[None, :, None]) // 2)
-                 .astype(np.uint8) for j in range(625)]
-    out["imgdedup"] = []
-    for f in factors:
-        rows = []
-        for i in range(f):
-            mix_rng = np.random.default_rng(1000 + i)
-            mixes = (None if i == 0 else
-                     mix_rng.integers(0, 256,
-                                      (len(base_imgs),) + base_imgs[0].shape))
-            for j, im in enumerate(base_imgs):
-                shifted = (im if i == 0 else
-                           ((im.astype(int) + mixes[j]) // 2)
-                           .astype(np.uint8))
-                rows.append((i * 10_000 + j, "image",
-                             bytes(MM.write_bmp(shifted))))
-                if j == 0:   # one planted near-dup per replica
-                    noisy = shifted.copy()
-                    noisy[::9, ::6] = np.clip(
-                        noisy[::9, ::6].astype(int) + 10, 0,
-                        255).astype(np.uint8)
-                    rows.append((i * 10_000 + 5000, "image",
-                                 bytes(MM.write_bmp(noisy))))
-        media = spark.createDataFrame(
-            rows, "media_id long, kind string, payload binary") \
-            .repartition(32).persist()
-        n = media.count()
-        best, c, cap = float("inf"), 0, {}
-        for _ in range(probe_rep):
-            cap = {}
-            t0 = time.perf_counter()
-            c = MM.image_neardup_pairs(media, max_hamming=6,
-                                       cap_report=cap).count()
-            best = min(best, time.perf_counter() - t0)
-        out["imgdedup"].append({"factor": f, "n_docs": n,
-                                "candidates": c, "sec": round(best, 3),
-                                "capped_buckets": cap.get(
-                                    "capped_buckets", 0),
-                                "capped_rows": cap.get("capped_rows", 0)})
-        media.unpersist()
-
-    # auddedup: audio perceptual near-dup (aHash -> the same Manku
-    # banding as imgdedup). 200 synthetic chirp+noise clips per
-    # replica (distinct per replica via seeded generation — gradient
-    # decorrelation falls out of the content being different), one
-    # planted resampled re-encode per replica — pairs grow ~f, wall
-    # linear in clips (one Arrow FFT scan + 16-byte band rows).
-    out["auddedup"] = []
-    audio_rate = 8000
-    t_axis = np.arange(audio_rate) / audio_rate          # 1 s clips
-    for f in factors:
-        rows = []
-        # aHash reads 9x8 time-band energy GRADIENTS, so the fixture
-        # must be broadband with independent band envelopes — a sum of
-        # 8 band-center tones each amplitude-modulated by a random
-        # per-segment envelope gives unrelated clips ~32-bit distances
-        # (single-tone chirps leave most bands at noise level and
-        # unrelated clips false-pair); the planted re-encode stays
-        # within a few bits
-        band_tones = np.sin(2 * np.pi
-                            * np.geomspace(140, 3400, 8)[:, None]
-                            * t_axis[None, :])
-        seg_idx = np.minimum((np.arange(len(t_axis)) * 9)
-                             // len(t_axis), 8)
-        for i in range(f):
-            arng = np.random.default_rng(7000 + i)
-            for j in range(200):
-                env = 0.1 + 0.9 * arng.random((9, 8))
-                clip = (band_tones * env[seg_idx].T).sum(axis=0) / 8.0
-                pcm = (np.clip(clip, -1, 1) * 20000).astype("<i2")
-                wav = bytes(MM.write_wav(pcm, audio_rate))
-                rows.append((i * 10_000 + j, "audio", wav))
-                if j == 0:   # one planted near-dup per replica: a
-                    # gain-scaled, quantization-noised re-encode
-                    # (a 4 kHz resample would CUT the top bands —
-                    # that is a legitimate >6-bit change, not a dup)
-                    redo = ((pcm * 0.5).astype(np.int32)
-                            + arng.integers(-120, 120, len(pcm))) \
-                        .astype("<i2")
-                    rows.append((i * 10_000 + 5000, "audio",
-                                 bytes(MM.write_wav(redo, audio_rate))))
-        media = spark.createDataFrame(
-            rows, "media_id long, kind string, payload binary") \
-            .repartition(32).persist()
-        n = media.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = MM.audio_neardup_pairs(media, max_hamming=6).count()
-            best = min(best, time.perf_counter() - t0)
-        out["auddedup"].append({"factor": f, "n_docs": n,
-                                "candidates": c, "sec": round(best, 3)})
-        media.unpersist()
-
-    # viddedup: video perceptual near-dup (per-frame dHash majority
-    # vote -> the same Manku banding as imgdedup/auddedup). 60
-    # synthetic 6-frame uncompressed-DIB AVI clips per replica —
-    # drifting gradient+blob content with per-clip random phase AND
-    # per-clip random channel mixes so cross-clip gradient signs
-    # decorrelate (vHash is frame dHash, so the imgdedup rule
-    # applies: perturb gradients, not brightness) — one planted
-    # noise-perturbed copy per replica. Wall must be linear in clips
-    # (the decode is one Arrow payload scan, 6 frame rasters per
-    # clip) and candidates ~f, never f².
-    out["viddedup"] = []
-    yy, xx = np.mgrid[0:24, 0:32].astype(float)
-    for f in factors:
-        rows = []
-        for i in range(f):
-            vrng = np.random.default_rng(9000 + i)
-            for j in range(60):
-                # THREE random 2D sinusoids + a static per-clip noise
-                # texture, phases drifting slowly over t: spatially
-                # diverse (two sinusoids left ~200 chance ≤6-bit pairs
-                # at 976 clips — the hash space was too small and
-                # candidates grew ~f²; three + texture measured 5,
-                # so candidates track the planted ~f) yet temporally
-                # smooth, keeping the planted noisy copy within the
-                # ≤6 near-dup budget (measured worst 5 bits over 30)
-                fx = vrng.uniform(0.3, 4.0, 3)
-                fy = vrng.uniform(0.3, 4.0, 3)
-                p0 = vrng.uniform(0, 2 * np.pi, 3)
-                sp = vrng.uniform(0.1, 0.4, 3)
-                tex = vrng.uniform(-30, 30, (24, 32))
-                frames = []
-                for t in range(6):
-                    g = 127.0 + tex
-                    for k in range(3):
-                        g = g + 50 * np.sin(
-                            2 * np.pi * (fx[k] * xx / 32
-                                         + fy[k] * yy / 24)
-                            + p0[k] + t * sp[k])
-                    c0 = np.clip(g, 0, 255).astype(np.uint8)
-                    frames.append(np.stack(
-                        [c0, (c0 // 2 + 40).astype(np.uint8),
-                         255 - c0], axis=2))
-                rows.append((i * 10_000 + j, "video",
-                             MM.write_avi(frames, fps=6.0)))
-                if j == 0:   # one planted near-dup per replica
-                    noisy = [np.clip(fr.astype(int)
-                                     + vrng.integers(-8, 9, fr.shape),
-                                     0, 255).astype(np.uint8)
-                             for fr in frames]
-                    rows.append((i * 10_000 + 5000, "video",
-                                 MM.write_avi(noisy, fps=6.0)))
-        media = spark.createDataFrame(
-            rows, "media_id long, kind string, payload binary") \
-            .repartition(32).persist()
-        n = media.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = MM.video_neardup_pairs(media, max_hamming=6).count()
-            best = min(best, time.perf_counter() - t0)
-        out["viddedup"].append({"factor": f, "n_docs": n,
-                                "candidates": c, "sec": round(best, 3)})
-
-        # vcontain: sub-clip containment over the SAME clip corpus
-        # (per-frame dHash rows -> packed-id banding -> per-pair
-        # rollup). Candidates = item pairs sharing >=2 distinct
-        # near-dup frames; the planted noisy copy shares all 6, so
-        # candidates grow ~f and wall stays linear in clips (the
-        # frame rows are 6x the clip count, still 16-byte rows).
-        out.setdefault("vcontain", [])
-        best2, c2 = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c2 = MM.video_containment_pairs(
-                media, min_shared_frames=2, max_hamming=6).count()
-            best2 = min(best2, time.perf_counter() - t0)
-        out["vcontain"].append({"factor": f, "n_docs": n,
-                               "candidates": c2,
-                               "sec": round(best2, 3)})
-        media.unpersist()
-
-    # semdecon: embedding-space decontamination CANDIDATE stage
-    # (threshold=-1 keeps every bucket-collision pair, the probe
-    # convention). Corpus replicas sign-flip-decorrelate exactly like
-    # the semdedup probe; the benchmark side is FIXED (every 7th base
-    # vector), so candidates = bucket collisions against a constant
-    # bench table — must grow ~linearly in the corpus, never with the
-    # product, and wall time with it (one broadcast hash join, no
-    # corpus shuffle).
-    bench_emb = emb.filter(F.col("vec_id") % 7 == 0).persist()
-    bench_emb.count()
-    out["semdecon"] = []
-    for f in factors:
-        reps = []
-        for i in range(f):
-            v = (F.col("embedding") if i == 0 else
-                 F.transform("embedding", _flip(i)))
-            reps.append(emb.select(
-                (F.col("vec_id") * f + i).alias("vec_id"),
-                v.alias("embedding")))
-        cand = reps[0]
-        for r in reps[1:]:
-            cand = cand.unionAll(r)
-        cand = cand.persist()
-        n = cand.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = S.semantic_contamination(cand, bench_emb,
-                                         threshold=-1.0).count()
-            best = min(best, time.perf_counter() - t0)
-        out["semdecon"].append({"factor": f, "n_docs": n,
-                                "candidates": c, "sec": round(best, 3)})
-        cand.unpersist()
-    bench_emb.unpersist()
-
-    # annappend: frozen-index encode cost. The IVF-PQ index is built
-    # ONCE at setup (the production artifact); the timed work is
-    # ivfpq_append of a factor-f batch — narrow Arrow assign kernel +
-    # broadcast residual join, so rows out = batch size EXACTLY and
-    # wall time ~linear in the BATCH, independent of how much the
-    # index already holds (the epoch-N+1 contract).
-    cand0 = emb.select(F.col("vec_id").alias("c_id"),
-                       F.col("embedding").alias("c_vec"))
-    idx_centers, idx_books, idx_coded = S.ivfpq_build(
-        cand0, n_clusters=16, m=4)
-    ann_q = (emb.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("q_id"),
-                     F.col("embedding").alias("q_vec")).persist())
-    ann_q.count()
-    out["annappend"] = []
-    for f in factors:
-        # every replica sign-flip-decorrelated (mask i+1, so even the
-        # first is distinct from the base corpus): the grown-store
-        # recall grading below needs appended vectors that are neither
-        # exact duplicates of base vectors (ties between identical
-        # vectors under different ids would undercount recall) nor
-        # near-dups of each other
-        reps = [emb.select((F.col("vec_id") * f + i
-                            + 1_000_000).alias("c_id"),
-                           F.transform("embedding", _flip(i + 1))
-                           .alias("c_vec"))
-                for i in range(f)]
-        batch = reps[0]
-        for r in reps[1:]:
-            batch = batch.unionAll(r)
-        batch = batch.persist()
-        n = batch.count()
-        best, c = float("inf"), 0
-        appended = None
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            appended = S.ivfpq_append(idx_centers, idx_books, batch)
-            c = appended.count()
-            best = min(best, time.perf_counter() - t0)
-        # drift telemetry (untimed — the append IS the probe cost):
-        # recall@10 of the GROWN store at the fixed default n_probe,
-        # so the quantizer-drift story is measured per factor, not
-        # just documented. The frozen coarse centers serve f x the
-        # corpus they were fit on; a collapsing recall here is the
-        # 'raise n_probe or rebuild' trigger the N13 telemetry exists
-        # for.
-        grown_codes = idx_coded.unionByName(appended)
-        grown_cand = cand0.unionByName(batch)
-        rep_r = S.ann_recall_estimate(idx_centers, idx_books,
-                                      grown_codes, ann_q, grown_cand,
-                                      k=10, n_probe=2)
-        out["annappend"].append({"factor": f, "n_docs": n,
-                                 "candidates": c, "sec": round(best, 3),
-                                 "recall_at_10": rep_r["recall_at_k"]})
-        batch.unpersist()
-    ann_q.unpersist()
-
-    # zorder: multi-dimensional clustered write (SK4). Timed work is
-    # the quantile pass + the ONE range shuffle + the 16-file write;
-    # wall must be ~linear in rows. "candidates" records the number
-    # of files holding rows for a fixed 4%-of-range y-box — the
-    # pruning property itself: it must stay a FRACTION of the 16
-    # files (a plain x-sort would put it at 16/16) at every factor,
-    # because quantile bucketing re-derives the SAME relative key
-    # geometry no matter the row count.
-    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-        zorder_write,
-    )
-    z_root = tempfile.mkdtemp(prefix="bench_zorder_")
-    try:
-        out["zorder"] = []
-        for f in factors:
-            n = 5000 * f
-            df = (spark.range(n)
-                  .withColumn("x", (F.hash(F.col("id")) % 10_000
-                                    + 10_000) % 10_000)
-                  .withColumn("y", (F.hash(F.col("id"), F.lit(7))
-                                    % 10_000 + 10_000) % 10_000))
-            dest = os.path.join(z_root, f"f{f}")
-            best = float("inf")
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                zorder_write(df, dest, ["x", "y"], bits=6, n_files=16)
-                best = min(best, time.perf_counter() - t0)
-            touched = (spark.read.parquet(dest)
-                       .filter((F.col("y") >= 4000) & (F.col("y") < 4400))
-                       .select(F.input_file_name().alias("fn"))
-                       .distinct().count())
-            out["zorder"].append({"factor": f, "n_docs": n,
-                                  "candidates": touched,
-                                  "sec": round(best, 3)})
-    finally:
-        shutil.rmtree(z_root, ignore_errors=True)
-
-    # upsert: bucketed corpus-store MERGE (SK5). A store of n = 5000·f
-    # rows is built at setup with corpus-PROPORTIONAL buckets (the
-    # save_corpus_store curve — constant ~250 rows per bucket here, so
-    # 20..320 buckets across factors); the timed work is merging a
-    # FIXED 20-row batch (10 updates + 10 inserts). The rewrite unit
-    # is buckets-touched × rows-per-bucket and both are
-    # corpus-independent (<= 20 buckets of ~250 rows), so rewritten
-    # rows must stay ~FLAT as the store grows 16x — the mutable-corpus
-    # maintenance contract. Wall carries one corpus-linear sliver on
-    # top: partition DISCOVERY lists all bucket dirs (O(n_buckets)
-    # driver-side metadata — the part a metastore/manifest absorbs at
-    # production scale), so expect flat rewrite + slowly-growing
-    # listing, not a perfectly flat wall. "candidates" records rows
-    # actually rewritten (kept + batch in touched buckets).
-    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
-        merge_into_corpus,
-        save_corpus_store,
-    )
-    u_root = tempfile.mkdtemp(prefix="bench_upsert_")
-    try:
-        out["upsert"] = []
-        for f in factors:
-            n = 5000 * f
-            df = (spark.range(n).select(
-                F.col("id").alias("doc_id"),
-                F.concat(F.lit("doc text "), F.col("id"))
-                .alias("text")))
-            store = os.path.join(u_root, f"f{f}")
-            save_corpus_store(df, store, rows_per_bucket=250)
-            batch = (spark.range(20).select(
-                F.when(F.col("id") < 10, F.col("id") * 13)
-                .otherwise(F.col("id") + 10_000_000)
-                .alias("doc_id"),
-                F.lit("updated").alias("text")))
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                rep = merge_into_corpus(spark, store, batch)
-                best = min(best, time.perf_counter() - t0)
-                c = rep["rows_kept"] + rep["rows_updated"] \
-                    + rep["rows_inserted"]
-            out["upsert"].append({"factor": f, "n_docs": n,
-                                  "candidates": c,
-                                  "rows_per_bucket":
-                                      rep["est_rows_per_bucket"],
-                                  "sec": round(best, 3)})
-    finally:
-        shutil.rmtree(u_root, ignore_errors=True)
-
-    # bm25: persisted-index search (T17). The index over the factor-f
-    # word-salted corpus is built at SETUP (the expensive corpus scan,
-    # paid once — like the other trained artifacts); the timed work is
-    # search_bm25_index with a FIXED 3-query batch. Salted replica
-    # tokens ("word~i") never match the base-vocabulary query terms,
-    # so the tok-sorted tf store's footer stats prune the lookup to
-    # the base corpus's postings at every factor — wall must stay
-    # ~FLAT as the corpus grows 16x (search-at-query-cost, the store's
-    # whole point). candidates = scored (query, doc) rows, flat by the
-    # same argument.
-    bm_root = tempfile.mkdtemp(prefix="bench_bm25_")
-    bm_queries = spark.createDataFrame(
-        [(1, "spark window agg"), (2, "hash join table"),
-         (3, "stream batch merge line")],
-        "query_id bigint, query_text string").persist()
-    bm_queries.count()
-    try:
-        out["bm25"] = []
-        for f in factors:
-            corpus = _salted_docs(f)
-            n = corpus.count()
-            idx = os.path.join(bm_root, f"f{f}")
-            T.save_bm25_index(corpus, idx)
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                c = T.search_bm25_index(spark, idx, bm_queries,
-                                        k=10).count()
-                best = min(best, time.perf_counter() - t0)
-            out["bm25"].append({"factor": f, "n_docs": n,
-                                "candidates": c,
-                                "sec": round(best, 3)})
-    finally:
-        bm_queries.unpersist()
-        shutil.rmtree(bm_root, ignore_errors=True)
-
-    # hybrid: two-tower retrieval (T18) — 3 fixed (text, vector)
-    # queries against the factor-f corpus (word-salted docs + sign-
-    # flip-decorrelated embeddings). Both towers broadcast the query
-    # set and scan the corpus ONCE each (BM25's own (id, tok) agg +
-    # the brute cosine scan), fusion is |Q|·k_pool rows — wall must
-    # stay ~linear in the corpus with rows out FLAT at |Q|·k.
-    hy_q = (emb.filter(F.col("vec_id") < 3)
-            .select((F.col("vec_id") + 1).alias("query_id"),
-                    F.col("embedding").alias("query_vec")))
-    hy_qtext = spark.createDataFrame(
-        [(1, "spark window agg"), (2, "hash join table"),
-         (3, "stream batch merge line")],
-        "query_id bigint, query_text string")
-    hy_queries = hy_qtext.join(hy_q, "query_id").persist()
-    hy_queries.count()
-    out["hybrid"] = []
-    out["hybridivf"] = []
-    for f in factors:
-        docs_f = _salted_docs(f).persist()
-        cand_f = _flipped_embs(f, "c_id", "c_vec").persist()
-        n = docs_f.count() + cand_f.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = S.hybrid_topk(docs_f, cand_f, hy_queries,
-                              k=8, k_pool=12).count()
-            best = min(best, time.perf_counter() - t0)
-        out["hybrid"].append({"factor": f, "n_docs": n,
-                              "candidates": c, "sec": round(best, 3)})
-        # hybridivf: the store-backed dense tower (T18's documented
-        # scale swap) — index build is SETUP (the persisted-store
-        # lifecycle pays it once); timed work is bm25 + probed-lists
-        # ADC + k_pool exact rerank. The brute series above grows
-        # with the corpus scan; this one must stay near-flat — the
-        # direct evidence the swap matters at 100 TB.
-        centers_f, books_f, coded_f = S.ivfpq_build(
-            cand_f, n_clusters=max(4, int(math.sqrt(n))), m=4, k=8)
-        coded_f = coded_f.persist()
-        coded_f.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = S.hybrid_topk(docs_f, cand_f, hy_queries,
-                              k=8, k_pool=12,
-                              dense_index=(centers_f, books_f,
-                                           coded_f, None),
-                              n_probe=2).count()
-            best = min(best, time.perf_counter() - t0)
-        out["hybridivf"].append({"factor": f, "n_docs": n,
-                                 "candidates": c,
-                                 "sec": round(best, 3)})
-        coded_f.unpersist()
-        docs_f.unpersist()
-        cand_f.unpersist()
-    hy_queries.unpersist()
-
-    # substrinc: incremental ExactSubstr probe — passage snapshot
-    # built over the factor-f corpus at setup; timed work probes a
-    # FIXED 100-doc batch. The batch's shuffle work is flat, but the
-    # snapshot SCAN is honestly linear (uniform hashes defeat footer
-    # skipping — see save_window_snapshot's scale note), so expect a
-    # shallow linear slope dominated by the narrow 8-byte hash scan,
-    # far under the full-corpus recompute the probe replaces.
-    from dynamic_etl_pipeline_thesis_ii_spark.operators.dedup import (
-        incremental_substring_spans,
-        save_window_snapshot,
-    )
-    si_root = tempfile.mkdtemp(prefix="bench_substrinc_")
-    try:
-        out["substrinc"] = []
-        base_docs = Catalog(spark, SF_DIR).documents \
-            .select("doc_id", "text")
-        probe_batch = (base_docs.limit(100)
-                       .select((F.col("doc_id") + 10_000_000)
-                               .alias("doc_id"), "text").persist())
-        probe_batch.count()
-        for f in factors:
-            reps = [base_docs.select(
-                        (F.col("doc_id") * f + i).alias("doc_id"),
-                        (F.regexp_replace("text", r"(\S+)", f"$1~{i}")
-                         if i else F.col("text")).alias("text"))
-                    for i in range(f)]
-            corpus = reps[0]
-            for r in reps[1:]:
-                corpus = corpus.unionAll(r)
-            snap = os.path.join(si_root, f"f{f}")
-            rep = save_window_snapshot(corpus, snap, w=8)
-            best, c = float("inf"), 0
-            for _ in range(probe_rep):
-                t0 = time.perf_counter()
-                spans, _fresh = incremental_substring_spans(
-                    probe_batch, spark, snap, include_batch=False)
-                c = spans.count()
-                best = min(best, time.perf_counter() - t0)
-            out["substrinc"].append({"factor": f,
-                                     "n_docs": rep["n_windows"],
-                                     "candidates": c,
-                                     "sec": round(best, 3)})
-        probe_batch.unpersist()
-    finally:
-        shutil.rmtree(si_root, ignore_errors=True)
-
-    # pagerank: domain ranking over a synthetic power-law-ish link
-    # graph of 2000·f nodes and ~6 edges/node (hash-derived targets —
-    # same generator at every factor, so edge/node ratio is constant
-    # and the per-iteration join work grows ~linearly). 5 iterations
-    # = 5 bounded shuffles; wall must be ~linear in edges, rows out =
-    # node count EXACTLY.
-    from dynamic_etl_pipeline_thesis_ii_spark.operators.web import (
-        domain_pagerank,
-    )
-    out["pagerank"] = []
-    for f in factors:
-        n_nodes = 2000 * f
-        edges = (spark.range(n_nodes * 6).select(
-            F.concat(F.lit("d"), (F.col("id") % n_nodes))
-            .alias("src"),
-            F.concat(F.lit("d"), F.pmod(
-                F.hash(F.col("id")), F.lit(n_nodes))).alias("dst"))
-            .filter(F.col("src") != F.col("dst")).distinct()
-            .persist())
-        edges.count()
-        best, c = float("inf"), 0
-        for _ in range(probe_rep):
-            t0 = time.perf_counter()
-            c = domain_pagerank(edges, n_iter=5).count()
-            best = min(best, time.perf_counter() - t0)
-        out["pagerank"].append({"factor": f, "n_docs": n_nodes,
-                                "candidates": c,
-                                "sec": round(best, 3)})
-        edges.unpersist()
+        inp.close()
     return out
+
+
+def probe_lines(series: dict[str, list[dict]]) -> list[str]:
+    """One compact ``# probe <name> sec/candidates ...`` line per
+    series, in table order."""
+    return [f"# probe {p.name} " + " ".join(
+        f"{r['sec']}/{r['candidates']}" for r in series[p.name])
+        for p in PROBES if p.name in series]
 
 
 def _synth_warc_gz(texts: list[str]) -> bytes:
@@ -1247,45 +916,26 @@ def main() -> None:
     }
 
     if os.environ.get("BENCH_SCALE", "1") != "0":
-        # 1/4/16: the 4x tier caught the narrow-simhash superlinearity
-        # in r5; the 16x tier (~88k docs at sf0.1) probes the
-        # saturation points of the jaccard df-cap and minhash band caps
-        # that a 4x corpus cannot reach
+        # 1/4/16: the 4x tier shows the narrow simhash superlinearity;
+        # the 16x tier (~88k docs at sf0.1) reaches the saturation points
+        # of the jaccard df-cap and minhash band caps
         factors = [int(x) for x in
                    os.environ.get("BENCH_SCALE_FACTORS", "1,4,16").split(",")]
-        probe = scale_probe(spark, factors)
-        # Durable full record: the driver's tail capture keeps only
-        # the last ~2,000 chars of stdout, which lost the probe dict
-        # two rounds running when it printed as one giant line. The
-        # complete series now goes to SCALE_PROBE.json (committed with
-        # the round), and stdout carries one COMPACT line per series —
-        # "sec/candidates" per factor — small enough that every series
-        # plus the final headline JSON fits inside the tail window.
+        probe = scale_probe(
+            spark, factors, SF_DIR,
+            max(1, int(os.environ.get("BENCH_PROBE_REPEAT", "2"))))
+        # The full record goes to SCALE_PROBE.json: a stdout tail capture
+        # keeps only the last ~2,000 chars, most of them claimed by the
+        # bench-health line and the final JSON, so stdout gets a preview.
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "SCALE_PROBE.json"), "w") as fh:
             json.dump({"sf": SF_DIR, "factors": factors, "series": probe},
                       fh, indent=1)
-        lines = []
-        last = ("pq", "semdedup", "dsir", "bloom", "crawl", "cluster",
-                "imgdedup", "auddedup", "viddedup", "vcontain",
-                "zorder", "upsert", "bm25", "hybrid", "hybridivf",
-                "substrinc", "pagerank")
-        order = ([m for m in probe if m not in last] +
-                 [m for m in last if m in probe])
-        for m in order:
-            lines.append(f"# probe {m} " + " ".join(
-                f"{r['sec']}/{r['candidates']}" for r in probe[m]))
-        # hard budget: the bench-health line (~900 chars, r13) + the
-        # final JSON (~850) now claim most of the driver's ~2,000-char
-        # tail, so the probe block gets only the remainder — the FULL
-        # series is durable in SCALE_PROBE.json (committed with the
-        # round; the tail lines are a courtesy preview, newest last).
-        # Any over-long INDIVIDUAL line is truncated (never asserted
-        # on — an abort here would throw away every computed result);
-        # then drop OLDEST series while the block is over budget,
-        # stopping once one line remains so the newest series always
-        # survives.
-        lines = [x if len(x) <= 150 else x[:147] + "..." for x in lines]
+        # Truncate over-long lines (an abort here would throw away every
+        # result), then drop the first series while the block is over
+        # budget, keeping at least the last.
+        lines = [x if len(x) <= 150 else x[:147] + "..."
+                 for x in probe_lines(probe)]
         while sum(len(x) + 1 for x in lines) > 160 and len(lines) > 1:
             lines.pop(0)
         for x in lines:

@@ -1325,7 +1325,11 @@ def load_ivfpq_index(spark, path: str):
     ``(centers_df, codebooks, coded, rotation)`` — rotation is None
     when the index was built without OPQ. The codebooks are driver
     lists (index metadata: m·k·dsub doubles); centers and codes stay
-    DataFrames."""
+    DataFrames. A ``rotation/`` that exists but cannot be read raises
+    (an OPQ index searched unrotated returns wrong neighbours)."""
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
+        read_if_present,
+    )
     centers = spark.read.parquet(path + "/centers")
     brows = spark.read.parquet(path + "/books") \
                  .orderBy("m_idx", "k_idx").collect()
@@ -1335,10 +1339,8 @@ def load_ivfpq_index(spark, path: str):
             books.append([])
         books[r["m_idx"]].append(list(r["centroid"]))
     coded = spark.read.parquet(path + "/codes")
-    try:
-        rotation = load_rotation(spark, path + "/rotation")
-    except Exception:
-        rotation = None
+    rotation = read_if_present(spark, path + "/rotation",
+                               lambda p: load_rotation(spark, p))
     return centers, books, coded, rotation
 
 

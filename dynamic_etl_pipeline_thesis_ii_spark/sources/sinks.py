@@ -71,6 +71,19 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
+def read_if_present(spark: SparkSession, path: str, read):
+    """``read(path)`` when ``path`` exists, else None. A missing store is
+    its bootstrap state; one that exists but cannot be read raises a
+    :class:`SinkError` naming the path, chained to the read error, instead
+    of reading as absent."""
+    if not _path_exists(spark, path):
+        return None
+    try:
+        return read(path)
+    except Exception as exc:  # noqa: BLE001 — any failed read of a present store
+        raise SinkError(f"unreadable store at {path}: {exc}") from exc
+
+
 def append_new_keys(df: DataFrame, path: str, key_cols: list[str],
                     fmt: str = "parquet") -> dict:
     """Idempotent append: only rows whose key is absent from the sink

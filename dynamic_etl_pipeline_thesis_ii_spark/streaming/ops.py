@@ -482,13 +482,19 @@ def marked_fold(meta_path: str, stores: list, stream_id: Optional[str]):
     max_batch_id)`` mark at ``meta_path`` advances only after all
     writes (see :func:`census_fold` for the residual one-batch
     window). ``stream_id`` resolves through
-    :func:`checkpoint_instance_id` on first fold."""
+    :func:`checkpoint_instance_id` on first fold. A missing store or
+    mark is the bootstrap state; one that exists but cannot be read
+    raises instead of restarting the fold."""
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
+        read_if_present,
+    )
+
+    def _collected(spark, path):
+        return read_if_present(
+            spark, path, lambda p: spark.read.parquet(p).collect()) or []
 
     def _folded_rows(spark, path, fresh, merge):
-        try:
-            prior_rows = spark.read.parquet(path).collect()
-        except Exception:           # bootstrap: no store yet
-            prior_rows = []
+        prior_rows = _collected(spark, path)
         if prior_rows:
             prior = spark.createDataFrame(prior_rows, fresh.schema)
             fresh = merge(prior, fresh)
@@ -504,12 +510,9 @@ def marked_fold(meta_path: str, stores: list, stream_id: Optional[str]):
                 # checkpoint metadata, so the instance id is stable
                 resolved.append(checkpoint_instance_id(spark, stream_id))
             sid = resolved[0]
-            try:
-                meta = spark.read.parquet(meta_path).collect()
-            except Exception:       # bootstrap: no mark yet
-                meta = []
             if any(r["stream_id"] == sid
-                   and batch_id <= r["max_batch_id"] for r in meta):
+                   and batch_id <= r["max_batch_id"]
+                   for r in _collected(spark, meta_path)):
                 return              # replayed batch: already folded
         pending = [(path, *_folded_rows(spark, path, fresh_fn(batch_df),
                                         merge_fn))

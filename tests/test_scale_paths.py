@@ -549,6 +549,32 @@ def test_ivfpq_search_shuffle_join_parity(spark, sf_dir):
         assert len(bc) > 0
 
 
+def test_load_ivfpq_index_rejects_unreadable_rotation(spark, tmp_path):
+    """Only a MISSING ``rotation/`` loads as "built without OPQ"; one
+    that exists but cannot be read raises naming the path. Loading it as
+    None would search rotated codes with unrotated queries and return
+    wrong neighbours without an error."""
+    from dynamic_etl_pipeline_thesis_ii_spark.operators import similarity as SIM
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import SinkError
+
+    idx = str(tmp_path / "idx")
+    SIM.save_ivfpq_index(
+        spark,
+        spark.createDataFrame([(0, [0.0, 0.0])],
+                              "__cluster int, center array<double>"),
+        [[[0.0, 0.0]]],
+        spark.createDataFrame([(1, 0, [0])],
+                              "c_id long, __cluster int, codes array<int>"),
+        idx)
+    assert SIM.load_ivfpq_index(spark, idx)[3] is None
+    with open(idx + "/rotation", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(SinkError, match=re.escape(
+            f"unreadable store at {idx}/rotation: ")) as err:
+        SIM.load_ivfpq_index(spark, idx)
+    assert err.value.__cause__ is not None
+
+
 def test_ivfpq_index_roundtrip_and_search_plan(spark, sf_dir, tmp_path):
     """The IVF-PQ index is plain data: centers + coded survive a
     parquet round-trip and a search against the RELOADED index (the

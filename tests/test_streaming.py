@@ -627,6 +627,31 @@ def test_census_fold_replayed_batch_folds_exactly_once(spark, tmp_path):
                       spark.read.parquet(census_path).collect())) == want2
 
 
+@pytest.mark.parametrize("suffix,stream_id", [("", None),
+                                              ("_meta", "ckpt-A")],
+                         ids=["store", "mark"])
+def test_census_fold_rejects_unreadable_sidecar(spark, tmp_path, suffix,
+                                                stream_id):
+    """Only a MISSING census store or replay mark is the bootstrap
+    state; one that exists but cannot be read raises, naming it, instead
+    of restarting the cumulative census from one batch (store) or
+    folding a replayed batch twice (mark)."""
+    import re
+
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import SinkError
+
+    census_path = str(tmp_path / "census")
+    with open(census_path + suffix, "wb") as fh:
+        fh.write(b"not a parquet file")
+    b0 = spark.createDataFrame([(1, "a b", "en", "s0")],
+                               "doc_id long, text string, lang string, "
+                               "source string")
+    with pytest.raises(SinkError, match=re.escape(
+            f"unreadable store at {census_path}{suffix}: ")) as err:
+        S.census_fold(census_path, stream_id=stream_id)(b0, 0)
+    assert err.value.__cause__ is not None
+
+
 def test_census_fold_recreated_checkpoint_is_a_new_instance(
         spark, tmp_path):
     """A user deletes and recreates the SAME checkpoint directory:

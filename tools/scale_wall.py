@@ -3,8 +3,8 @@
 ratio is ~1 because the whole suite is driver/overhead-bound — this
 probe makes parallelism measurable by running the corpus-bound
 composites UNCHANGED against factor-f replicas of the documents table
-(1x/4x/16x, word-salted per replica exactly like bench.scale_probe's
-``_salted_docs`` so near-dup structure grows linearly, never
+(1x/4x/16x, word-salted per replica by ``bench.salted_docs``, the
+scale probe's own recipe, so near-dup structure grows linearly, never
 quadratically).
 
 Each factor-f corpus is materialized ONCE as parquet under /tmp with
@@ -14,7 +14,7 @@ real). Run twice — SPARK_GRAFT_CPUS=32 and =8 — and commit the merged
 series as SCALE_WALL_r14.json: separation >> 1 between the 8c and 32c
 wall at 16x is the scale-out evidence the sf0.1 bench cannot show.
 
-Usage: SPARK_GRAFT_CPUS=32 python tools/scale_wall.py [out.json]
+Usage: PYTHONPATH=. SPARK_GRAFT_CPUS=32 python tools/scale_wall.py [out.json]
 """
 from __future__ import annotations
 
@@ -37,8 +37,7 @@ def _factor_dir(spark, f: int) -> str:
     """Materialize (once) a scale-factor dir whose documents table is
     the word-salted factor-f replica corpus; every other table is a
     symlink into SF_DIR."""
-    from pyspark.sql import functions as F
-
+    from bench import salted_docs
     from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import (
         TABLES,
         Catalog,
@@ -57,17 +56,7 @@ def _factor_dir(spark, f: int) -> str:
             continue
         if not os.path.exists(dst):
             os.symlink(src, dst)
-    base = Catalog(spark, SF_DIR).documents
-    cols = [c for c in base.columns if c not in ("doc_id", "text")]
-    reps = [base.select(
-                (F.col("doc_id") * f + i).alias("doc_id"),
-                (F.regexp_replace("text", r"(\S+)", f"$1~{i}")
-                 if i else F.col("text")).alias("text"),
-                *cols)
-            for i in range(f)]
-    docs = reps[0]
-    for r in reps[1:]:
-        docs = docs.unionAll(r)
+    docs = salted_docs(Catalog(spark, SF_DIR).documents, f)
     docs.coalesce(max(1, f // 4)).write.mode("overwrite").parquet(
         os.path.join(out, "documents.parquet"))
     with open(marker, "w") as fh:
