@@ -23,6 +23,8 @@ from itertools import combinations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark.scope import persist_scoped
+
 H32_PRIME = 4294967311  # smallest prime > 2^32
 
 
@@ -249,7 +251,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
         banded = banded.withColumn(
             "__bn", F.count(F.lit(1)).over(Window.partitionBy("band", "slice")))
         if cap_report is not None or hot_policy == "star":
-            banded = banded.persist()
+            banded = persist_scoped(banded)
         if cap_report is not None:
             cap_report.update(bucket_cap_stats(banded, max_bucket))
         if hot_policy == "star":
@@ -459,12 +461,11 @@ def hamming_band_pairs(docs: DataFrame, max_hamming: int = 3,
         cap_report is not None or hot_policy == "reband")
     hot = None
     if need_mark:
-        marked = hamming_band_keys(docs, max_hamming=max_hamming,
-                                   max_bucket=max_bucket,
-                                   n_blocks=n_blocks,
-                                   key_blocks=key_blocks,
-                                   cap_mode="mark") \
-            .select("id", "sim", "band", "key", "__bn").persist()
+        marked = persist_scoped(
+            hamming_band_keys(docs, max_hamming=max_hamming,
+                              max_bucket=max_bucket, n_blocks=n_blocks,
+                              key_blocks=key_blocks, cap_mode="mark")
+            .select("id", "sim", "band", "key", "__bn"))
         if cap_report is not None:
             cap_report.update(bucket_cap_stats(marked, max_bucket))
         banded = (marked.filter(F.col("__bn") <= max_bucket)
@@ -633,10 +634,10 @@ def _reband_hot_pairs(hot: DataFrame, n_blocks: int, max_hamming: int,
     mult = F.element_at(F.array(*[F.lit(1 << widths[b])
                                   for b in range(n_blocks)]),
                         F.col("extra") + 1)
-    sub = (sub.withColumn("key2", F.col("key") * mult + bv)
-           .withColumn("__bn2", F.count(F.lit(1)).over(
-               Window.partitionBy("band", "extra", "key2")))
-           .persist())
+    sub = persist_scoped(
+        sub.withColumn("key2", F.col("key") * mult + bv)
+        .withColumn("__bn2", F.count(F.lit(1)).over(
+            Window.partitionBy("band", "extra", "key2"))))
 
     ok = sub.filter(F.col("__bn2") <= max_bucket) \
         .select("id", "sim", "band", "extra", "key2")
@@ -841,52 +842,11 @@ def _local_frame(pairs: DataFrame, columns: dict[str, list]) -> DataFrame:
         pa.Table.from_pydict(columns, schema=to_arrow_schema(schema)))
 
 
-def _distributed_components(pairs: DataFrame, max_iter: int = 20,
-                            distributed: str = "star") -> DataFrame:
-    """(id, comp) over a pair list too big for the driver union-find."""
-    if distributed == "star":
-        return star_components(pairs)
-
-    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .unionByName(pairs.select(F.col("id_b").alias("src"),
-                                       F.col("id_a").alias("dst"))))
-    labels = (edges.select(F.col("src").alias("id"))
-              .distinct()
-              .withColumn("comp", F.col("id")))
-    edges = edges.persist()
-    labels = labels.persist()
-    for it in range(max_iter):
-        neighbor_min = (edges.join(labels, edges["dst"] == labels["id"])
-                        .groupBy("src").agg(F.min("comp").alias("ncomp")))
-        new_labels = (labels.join(neighbor_min,
-                                  labels["id"] == neighbor_min["src"], "left")
-                      .select(labels["id"],
-                              F.least("comp", F.coalesce("ncomp", "comp"))
-                              .alias("comp"))
-                      .persist())
-        # convergence probe only every other round (near-dup clusters
-        # are shallow — most runs finish in 2-3 rounds, and each probe
-        # is a full job): odd rounds just roll forward
-        if it % 2 == 1 or it == max_iter - 1:
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-                       .filter(F.col("n.comp") != F.col("o.comp")).count())
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels.unpersist()
-            labels = new_labels
-    return labels.select("id", "comp")
-
-
 _DRIVER_EDGES = 5_000_000
 
 
-def min_label_components(pairs: DataFrame, max_iter: int = 20,
-                         driver_threshold: int = _DRIVER_EDGES,
-                         distributed: str = "star") -> DataFrame:
+def min_label_components(pairs: DataFrame,
+                         driver_threshold: int = _DRIVER_EDGES) -> DataFrame:
     """Connected components over a near-dup pair list: (id, component)
     with component = the smallest doc id reachable — the step that turns
     pairwise matches into dedup groups (keep one doc per component).
@@ -896,16 +856,12 @@ def min_label_components(pairs: DataFrame, max_iter: int = 20,
     the components come from a driver-side union-find over the collected
     pairs: one pair-collect action, then microseconds of Python, and
     the result enters the plan as a sized ``LocalRelation`` (no further
-    job). Above it, the distributed path: ``distributed="star"``
-    (default) runs large-star/small-star contraction
-    (:func:`star_components`, O(log n) rounds — the billion-edge path);
-    ``distributed="propagation"`` keeps Pregel-lite
-    min-label propagation (one shuffle join + aggregate per round,
-    O(graph diameter) rounds, fine for the shallow clusters near-dup
-    graphs produce). The contract stays (id, component)."""
+    job). Above it, large-star/small-star contraction
+    (:func:`star_components`, O(log n) rounds — the billion-edge path).
+    The contract stays (id, component)."""
     labels = _union_find_labels(pairs, driver_threshold)
     if labels is None:
-        return _distributed_components(pairs, max_iter, distributed)
+        return star_components(pairs)
     return _local_frame(pairs, {"id": list(labels),
                                 "comp": list(labels.values())})
 
@@ -965,7 +921,7 @@ def component_drop_set(pairs: DataFrame,
                 if s is not None and (i not in best or _above(s, best[i])):
                     best[i] = s
         return _local_frame(pairs, {"id": _driver_drop_ids(labels, best)})
-    comp = _distributed_components(pairs)
+    comp = star_components(pairs)
     if score is None:
         return comp.filter(F.col("id") != F.col("comp")).select("id")
     # collapse to one score per clustered id BEFORE ranking: a score
@@ -1034,7 +990,7 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # both self-join branches consume `sized`; persist so the shingle
     # explode + two window shuffles compute once (AQE's staged execution
     # defeats ReuseExchange canonicalization here — measured 2x).
-    sized = sized.persist()
+    sized = persist_scoped(sized)
     # alias-style self-join (not pre-renamed selects): both branches
     # stay canonically identical, so ReuseExchange computes the shared
     # prelude once.
@@ -1629,7 +1585,7 @@ def incremental_neardup_pairs(new_docs: DataFrame, seen_bands: DataFrame,
         sb = sb.withColumn(
             "__bn", F.count(F.lit(1)).over(Window.partitionBy("band", "slice")))
         if cap_report is not None or hot_policy == "star":
-            sb = sb.persist()
+            sb = persist_scoped(sb)
         if cap_report is not None:
             # stats over the PROBED buckets only — the buckets this
             # batch actually loses recall in (pruning keeps or drops

@@ -21,6 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope, persist_scoped
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -1151,9 +1153,10 @@ def ann_recall_estimate(centers_df: DataFrame, codebooks: list,
     Returns ``{recall_at_k, k, n_probe, rerank, n_queries,
     pairs_exact, pairs_hit}`` — pairs_exact can fall short of |Q|·k
     on corpora smaller than k. With ``return_hits=True`` returns
-    ``(report, hits)`` where hits is the (cached) index-search frame
-    the estimate graded — callers that also want to persist the
-    sampled answers reuse it instead of re-running the search."""
+    ``(report, hits)`` where hits is the index-search frame the
+    estimate graded, cached in the caller's cache scope — callers that
+    also want to persist the sampled answers reuse it instead of
+    re-running the search."""
     if rerank is None:
         rerank = 4 * k
     # both frames feed two actions each (the hit join + their own
@@ -1162,28 +1165,24 @@ def ann_recall_estimate(centers_df: DataFrame, codebooks: list,
     approx = ivfpq_search(centers_df, codebooks, coded, queries,
                           k=k, n_probe=n_probe, rotation=rotation,
                           rerank=rerank,
-                          candidates=candidates if rerank else None
-                          ).persist()
-    exact = exact_l2_topk(queries, candidates, k).persist()
-    try:
+                          candidates=candidates if rerank else None)
+    if return_hits:
+        approx = persist_scoped(approx)
+    with cache_scope():
+        if not return_hits:
+            approx = persist_scoped(approx)
+        exact = persist_scoped(exact_l2_topk(queries, candidates, k))
         pairs_hit = (approx.select("q_id", "c_id")
                      .join(exact.select("q_id", "c_id"),
                            ["q_id", "c_id"]).count())
         pairs_exact = exact.count()
-        n_queries = queries.select("q_id").distinct().count()
-        report = {"recall_at_k": round(pairs_hit / pairs_exact, 4)
-                  if pairs_exact else None,
-                  "k": k, "n_probe": n_probe, "rerank": rerank,
-                  "n_queries": n_queries,
-                  "pairs_exact": pairs_exact, "pairs_hit": pairs_hit}
-        if return_hits:
-            # caller takes ownership of the cached hits frame
-            return report, approx
-        return report
-    finally:
-        exact.unpersist()
-        if not return_hits:
-            approx.unpersist()
+    n_queries = queries.select("q_id").distinct().count()
+    report = {"recall_at_k": round(pairs_hit / pairs_exact, 4)
+              if pairs_exact else None,
+              "k": k, "n_probe": n_probe, "rerank": rerank,
+              "n_queries": n_queries,
+              "pairs_exact": pairs_exact, "pairs_hit": pairs_hit}
+    return (report, approx) if return_hits else report
 
 
 def ann_nprobe_tune(centers_df: DataFrame, codebooks: list,
@@ -1208,11 +1207,11 @@ def ann_nprobe_tune(centers_df: DataFrame, codebooks: list,
     if rerank is None:
         rerank = 4 * k
     n_lists = centers_df.count()
-    exact = exact_l2_topk(queries, candidates, k).persist()
-    try:
+    curve = []
+    chosen, achieved = None, None
+    with cache_scope():
+        exact = persist_scoped(exact_l2_topk(queries, candidates, k))
         pairs_exact = exact.count()
-        curve = []
-        chosen, achieved = None, None
         p = 1
         while True:
             p = min(p, n_lists)
@@ -1231,14 +1230,12 @@ def ann_nprobe_tune(centers_df: DataFrame, codebooks: list,
             if p >= n_lists:
                 break
             p *= 2
-        return {"chosen_n_probe": chosen,
-                "target_recall": target_recall,
-                "achieved_recall": achieved,
-                "target_met": achieved is not None
-                and achieved >= target_recall,
-                "k": k, "rerank": rerank, "curve": curve}
-    finally:
-        exact.unpersist()
+    return {"chosen_n_probe": chosen,
+            "target_recall": target_recall,
+            "achieved_recall": achieved,
+            "target_met": achieved is not None
+            and achieved >= target_recall,
+            "k": k, "rerank": rerank, "curve": curve}
 
 
 # ---------------------------------------------------------------------------
@@ -1368,11 +1365,13 @@ def load_index_tuning(spark, path: str) -> dict | None:
     """Reload the :func:`save_index_tuning` sidecar; ``None`` when the
     store has never been tuned (callers fall back to their static
     default and say so — an untuned store is a normal state, not an
-    error)."""
-    try:
-        row = spark.read.parquet(path + "/_meta").first()
-    except Exception:
-        return None
+    error). A ``_meta`` that exists but cannot be read raises
+    ``SinkError`` naming the path."""
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
+        read_if_present,
+    )
+    row = read_if_present(spark, path + "/_meta",
+                          lambda p: spark.read.parquet(p).first())
     return dict(row.asDict()) if row is not None else None
 
 

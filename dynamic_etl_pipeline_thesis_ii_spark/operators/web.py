@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark.scope import persist_scoped
+
 # scheme://authority pieces. Only scheme and host are case-INsensitive
 # per RFC 3986 §6.2.2.1 — userinfo (rare, but `user@host` is legal)
 # keeps its case and must not be mistaken for the host.
@@ -363,13 +365,13 @@ def domain_pagerank(edges: DataFrame, n_iter: int = 10,
     # uniform split, exactly the classic formulation.
     w = (F.col(weight_col).cast("double") if weight_col
          else F.lit(1.0))
-    edges = edges.select("src", "dst", w.alias("__w")).persist()
-    nodes = (edges.select(F.col("src").alias("domain"))
-             .unionByName(edges.select(F.col("dst").alias("domain")))
-             .distinct().persist())
+    edges = persist_scoped(edges.select("src", "dst", w.alias("__w")))
+    nodes = persist_scoped(
+        edges.select(F.col("src").alias("domain"))
+        .unionByName(edges.select(F.col("dst").alias("domain")))
+        .distinct())
     n = nodes.count()
     if n == 0:
-        edges.unpersist()
         spark = edges.sparkSession
         return spark.createDataFrame(
             [], "domain string, rank double, in_degree long")
@@ -400,12 +402,9 @@ def domain_pagerank(edges: DataFrame, n_iter: int = 10,
                           * (F.coalesce(F.col("__in"), F.lit(0.0))
                              + F.col("__dm") / n)).alias("rank"))
                  .localCheckpoint())
-    out = (ranks.join(indeg, "domain", "left")
-           .select("domain", F.round("rank", 8).alias("rank"),
-                   F.coalesce("in_degree", F.lit(0)).alias("in_degree")))
-    edges.unpersist()
-    nodes.unpersist()
-    return out
+    return (ranks.join(indeg, "domain", "left")
+            .select("domain", F.round("rank", 8).alias("rank"),
+                    F.coalesce("in_degree", F.lit(0)).alias("in_degree")))
 
 
 def domain_harmonic(edges: DataFrame, max_radius: int = 8,
@@ -442,7 +441,7 @@ def domain_harmonic(edges: DataFrame, max_radius: int = 8,
     if incoming:
         edges = edges.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst"))
-    edges = edges.select("src", "dst").distinct().persist()
+    edges = persist_scoped(edges.select("src", "dst").distinct())
     nodes = (edges.select(F.col("src").alias("domain"))
              .unionByName(edges.select(F.col("dst").alias("domain")))
              .distinct())
@@ -473,11 +472,9 @@ def domain_harmonic(edges: DataFrame, max_radius: int = 8,
                  .select("domain", "sk",
                          F.col("est").alias("est_prev"), "harmonic")
                  .localCheckpoint())
-    out = state.select(
+    return state.select(
         "domain", F.round("harmonic", 4).alias("harmonic"),
         F.round(F.col("est_prev") - 1).cast("long").alias("reachable"))
-    edges.unpersist()
-    return out
 
 
 def html_links(col: Column) -> Column:

@@ -67,7 +67,7 @@ from dynamic_etl_pipeline_thesis_ii_spark.plans.validators import (
     OutputValidator,
     ParameterValidator,
 )
-from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope
+from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope, persist_scoped
 
 if TYPE_CHECKING:
     from dynamic_etl_pipeline_thesis_ii_spark.sources.registry import Catalog
@@ -889,7 +889,7 @@ class Pipeline:
         # fingerprint ONCE (the payload decode dominates this target's
         # cost) and share the frame between the pair join, the kept-row
         # anti-join and the persisted snapshot
-        fps = fingerprint(media).persist()
+        fps = persist_scoped(fingerprint(media))
         n_decodable = fps.count()
         cap: dict = {}
         pairs = dedup.hamming_band_pairs(fps, max_hamming=mh, n_blocks=nb,
@@ -910,7 +910,6 @@ class Pipeline:
             dedup.hamming_band_keys(fps, max_hamming=mh, n_blocks=nb,
                                     cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
-        fps.unpersist()
         self.progress("publish", {"rows": n_kept, "path": output_path})
         return [kept], {"rows_in": n_in,
                         dec_key: n_decodable,
@@ -947,7 +946,7 @@ class Pipeline:
                 self.spark, plan["snapshot_path"])
         media = self._media(cat)
         n_in = media.count()
-        fps = fingerprint(media).persist()
+        fps = persist_scoped(fingerprint(media))
         n_decodable = fps.count()
         pairs = dedup.incremental_hamming_pairs(fps, banded, **geom)
         self.progress("media_probe", {"params": dict(plan),
@@ -989,7 +988,6 @@ class Pipeline:
             reports.update({"snapshot_rows_before": n_before,
                             "snapshot_rows_after": n_after,
                             f"{noun}_appended": n_appended})
-        fps.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
         return [pairs], reports
 
@@ -1020,7 +1018,7 @@ class Pipeline:
         # between the pair rollup and the persisted snapshot
         fh = hashes_fn(media)
         idx_col = fh.columns[1]
-        fh = fh.withColumnRenamed(idx_col, "idx").persist()
+        fh = persist_scoped(fh.withColumnRenamed(idx_col, "idx"))
         n_rows = fh.count()
         n_decodable = fh.select("id").distinct().count()
         cap: dict = {}
@@ -1039,7 +1037,6 @@ class Pipeline:
             dedup.hamming_band_keys(packed, max_hamming=mh, n_blocks=nb,
                                     cap_mode="represent"),
             snap, max_hamming=mh, n_blocks=nb)
-        fh.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
         return [pairs], {"rows_in": n_in,
                          "items_decodable": n_decodable,
@@ -1077,7 +1074,7 @@ class Pipeline:
         media = self._media(cat)
         n_in = media.count()
         fh = hashes_fn(media)
-        fh = fh.withColumnRenamed(fh.columns[1], "idx").persist()
+        fh = persist_scoped(fh.withColumnRenamed(fh.columns[1], "idx"))
         n_decodable = fh.select("id").distinct().count()
         pairs = multimodal.incremental_containment_pairs(
             fh, banded, min_shared=plan["min_shared"],
@@ -1120,7 +1117,6 @@ class Pipeline:
             reports.update({"snapshot_rows_before": n_before,
                             "snapshot_rows_after": n_after,
                             f"{noun}_appended": n_appended})
-        fh.unpersist()
         self.progress("publish", {"rows": n_pairs, "path": output_path})
         return [pairs], reports
 
@@ -2521,7 +2517,6 @@ class Pipeline:
         # hits is the CACHED frame the estimate graded — write it
         # instead of re-running the identical index search
         hits.write.mode("overwrite").parquet(output_path)
-        hits.unpersist()
         n_out = self.spark.read.parquet(output_path).count()
         self.progress("publish", {"rows": n_out, "path": output_path})
         return [hits], {**report,
@@ -2664,7 +2659,7 @@ class Pipeline:
         # totals aggregate, the parquet write, and the above-mean
         # count) — without it the gram-explode pipeline recomputes
         # per action
-        weights = sampling.dsir_weights(docs, table).persist()
+        weights = persist_scoped(sampling.dsir_weights(docs, table))
         # above-mean cut with exact integer arithmetic: broadcast the
         # 1-row totals and keep weight*n > total (no doubles, no
         # order dependence). decimal(38,0) keeps the product exact
@@ -2683,12 +2678,9 @@ class Pipeline:
                  .select("id", "n_grams", "weight_micro"))
         frame = above if plan.get("select") else weights
         self.progress("weight", {"params": dict(plan)})
-        try:
-            back = self._sink(frame, output_path)
-            n_rows = back.count()
-            n_sel = n_rows if plan.get("select") else above.count()
-        finally:
-            weights.unpersist()
+        back = self._sink(frame, output_path)
+        n_rows = back.count()
+        n_sel = n_rows if plan.get("select") else above.count()
         self.progress("publish", {"rows": n_rows, "path": output_path})
         return [frame], {"rows": n_rows, "above_mean": n_sel}
 

@@ -20,6 +20,8 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope, persist_scoped
+
 _MODES = {"append": "append", "replace": "overwrite", "fail": "error"}
 
 
@@ -138,16 +140,14 @@ def compact_snapshot(spark, path: str, dest: str,
     # leave every output file under-filled by the duplication factor.
     # The distinct is cached so the count and the write share one
     # dedup shuffle instead of running it twice.
-    deduped = df.dropDuplicates(key_cols).persist()
-    try:
+    with cache_scope():
+        deduped = persist_scoped(df.dropDuplicates(key_cols))
         n_distinct = deduped.count()
         n_files = max(1, -(-n_distinct // target_rows_per_file))
         out = (deduped
                .repartitionByRange(n_files, *[F.col(c) for c in key_cols])
                .sortWithinPartitions(*key_cols))
         out.write.format(fmt).mode("overwrite").save(dest)
-    finally:
-        deduped.unpersist()
     back = spark.read.format(fmt).load(dest)
     return {"rows": back.count(), "rows_before": rows,
             "files_before": len(files_before),
@@ -586,16 +586,11 @@ def merge_into_corpus(spark: SparkSession, path: str,
     n_keep = keep.count()
     n_batch = batchb.count()
     merged = keep.unionByName(batchb.select(*keep.columns))
-    mode_before = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                   "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bucket") \
-            .parquet(base)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       mode_before)
+    # a writer option, not the session conf: concurrent runs on the
+    # shared session keep their own (static) overwrite semantics
+    merged.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(base)
     report = {"buckets_touched": len(touched),
               "rows_updated": n_existing - n_keep,
               "rows_inserted": n_batch - (n_existing - n_keep),

@@ -392,14 +392,20 @@ def checkpoint_instance_id(spark, checkpoint_dir: str) -> str:
     mistake the new incarnation's early batches for replays of the
     old one (a path-keyed mark would silently skip them). Read via
     the Hadoop FS API so any checkpoint filesystem (local/HDFS/S3A)
-    resolves; when no metadata is readable yet the bare path returns
-    — documented fallback with the pre-instance-id semantics (delete
-    the ``_meta`` sidecar together with the checkpoint dir)."""
+    resolves; when no metadata exists yet the bare path returns —
+    documented fallback with the pre-instance-id semantics (delete
+    the ``_meta`` sidecar together with the checkpoint dir). Metadata
+    that exists but cannot be read raises ``SinkError`` naming it,
+    instead of silently falling back to the path-keyed mark."""
     import json as _json
-    try:
-        jvm = spark.sparkContext._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(
-            checkpoint_dir.rstrip("/") + "/metadata")
+
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
+        read_if_present,
+    )
+    jvm = spark.sparkContext._jvm
+
+    def _query_id(path):
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
         fs = jpath.getFileSystem(
             spark.sparkContext._jsc.hadoopConfiguration())
         stream = fs.open(jpath)
@@ -408,10 +414,11 @@ def checkpoint_instance_id(spark, checkpoint_dir: str) -> str:
                 jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
         finally:
             stream.close()
-        qid = _json.loads(raw.decode("utf-8"))["id"]
-        return f"{checkpoint_dir}#{qid}"
-    except Exception:
-        return checkpoint_dir
+        return _json.loads(raw.decode("utf-8"))["id"]
+
+    qid = read_if_present(spark, checkpoint_dir.rstrip("/") + "/metadata",
+                          _query_id)
+    return checkpoint_dir if qid is None else f"{checkpoint_dir}#{qid}"
 
 
 def census_fold(census_path: str, strata: tuple = ("lang", "source"),

@@ -2578,6 +2578,33 @@ def test_pipeline_neardup_probe_lifecycle(spark, sf_dir, tmp_path):
     assert r2["status"] == "rejected" and "band snapshot" in r2["reason"]
 
 
+def test_neardup_probe_run_leaves_nothing_cached(spark, sf_dir, tmp_path):
+    """A neardup probe through ``run_dataops`` caches its probed band
+    table (the cap telemetry and the pair join share it); the run's
+    cache scope must release it, so a long-lived server does not keep
+    one cached frame per probe run."""
+    from dynamic_etl_pipeline_thesis_ii_spark.operators import dedup as D
+
+    snap = str(tmp_path / "snap")
+    D.minhash_band_keys(spark.createDataFrame(
+        [(1, "a unique seed document about alpine botany and glacier "
+             "meltwater chemistry"),
+         (2, "submarine cable repair logistics in the north atlantic")],
+        ["doc_id", "text"])).write.parquet(snap)
+    batch_src = str(tmp_path / "batch")
+    spark.createDataFrame(
+        [(10, "a unique seed document about alpine botany and glacier "
+              "meltwater chemistry appended")],
+        ["doc_id", "text"]).write.parquet(batch_src + "/documents.parquet")
+    spark.catalog.clearCache()
+    res = Pipeline(spark, FixtureFetcher(spark, sf_dir)).run_dataops(
+        f"flag near-duplicate documents against the band snapshot at "
+        f"{snap}", batch_src, str(tmp_path / "flags"))
+    assert res["status"] == "complete"
+    assert res["reports"]["docs_flagged"] == 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pipeline_band_snapshot_build_then_probe(spark, sf_dir,
                                                  tmp_path):
     """NL-only text near-dup lifecycle: build the band snapshot from

@@ -645,6 +645,40 @@ def test_nl_corpus_store_lifecycle(spark, tmp_path):
     assert r2["status"] == "rejected" and "no corpus store" in r2["reason"]
 
 
+def test_merge_into_corpus_leaves_session_conf_alone(spark, tmp_path,
+                                                    monkeypatch):
+    """The merge's dynamic partition overwrite is a writer option: it
+    never sets the shared session's partitionOverwriteMode, so a
+    concurrent run's partitioned overwrite keeps static semantics."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import (
+        merge_into_corpus,
+        save_corpus_store,
+    )
+
+    store = str(tmp_path / "store")
+    save_corpus_store(spark.createDataFrame(
+        [(i, f"t{i}") for i in range(20)], "doc_id bigint, text string"),
+        store, n_buckets=4)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        sets.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    rep = merge_into_corpus(spark, store, spark.createDataFrame(
+        [(3, "new"), (99, "ins")], "doc_id bigint, text string"))
+    assert rep["rows_updated"] == 1 and rep["rows_inserted"] == 1
+    assert key not in sets
+    assert spark.conf.get(key) == before
+    assert spark.read.parquet(store).count() == 21
+
+
 def test_corpus_store_merge_schema_guard(spark, tmp_path):
     """A batch whose columns don't match the store raises an
     actionable SinkError instead of silently dropping columns."""

@@ -652,6 +652,24 @@ def test_census_fold_rejects_unreadable_sidecar(spark, tmp_path, suffix,
     assert err.value.__cause__ is not None
 
 
+def test_checkpoint_instance_id_rejects_unreadable_metadata(spark,
+                                                            tmp_path):
+    """Checkpoint metadata that exists but is not JSON raises naming
+    it, instead of falling back to the path-keyed replay mark (which
+    would skip a recreated checkpoint's early batches)."""
+    import re
+
+    from dynamic_etl_pipeline_thesis_ii_spark.sources.sinks import SinkError
+
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    (ckpt / "metadata").write_text("not json")
+    with pytest.raises(SinkError, match=re.escape(
+            f"unreadable store at {ckpt}/metadata: ")) as err:
+        S.checkpoint_instance_id(spark, str(ckpt))
+    assert err.value.__cause__ is not None
+
+
 def test_census_fold_recreated_checkpoint_is_a_new_instance(
         spark, tmp_path):
     """A user deletes and recreates the SAME checkpoint directory:
