@@ -223,21 +223,22 @@ def integrate(dfs: list[DataFrame], cfg: Optional[EngineConfig] = None,
     reports: list[dict] = []
     groups, union_ops = U.sequential_union(dfs, cfg)
     reports.extend(union_ops)
-    # persist each group (scoped): the denominator count, every
-    # stage-1/2 pair evaluation and the caller's consumption all read
-    # these same k frames — at any scale the orchestrator is O(k^2)
-    # evaluations over them, so materializing each once is the
-    # shared-scan discipline, not a small-data trick (measured: the
-    # 2-group fixture otherwise launches ~8 jobs, each re-running the
-    # union + dropDuplicates). The frames are returned lazily, so they
-    # live until the caller's cache scope is released.
-    for g in groups:
-        persist_scoped(g)
-
     if len(groups) == 1:
         reports.append({"operation": "early_termination",
                         "reason": "all inputs unioned into one group"})
         return groups, reports
+
+    # cache a group only where this function reads it twice: with k >= 2
+    # groups the denominator count and the O(k^2) stage-1/2 pair
+    # evaluations all read the same k frames (uncached, the 2-group
+    # fixture launches ~8 jobs, each re-running the union +
+    # dropDuplicates). A lone group, returned above, is read once, by
+    # the caller: caching it costs a fill job and pins every read at
+    # spark.sql.shuffle.partitions tasks, since AQE does not coalesce a
+    # cached plan. The frames are returned lazily and live until the
+    # caller's cache scope is released.
+    for g in groups:
+        persist_scoped(g)
 
     # fixed GLOBAL retention denominator for every stage-1/2 pair:
     # min row count over the unioned groups (validator.py:323-325).

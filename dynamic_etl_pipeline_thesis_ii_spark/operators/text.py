@@ -1511,13 +1511,17 @@ def histogram_quantiles(hist, quantiles: tuple = (0.5, 0.9, 0.99),
     within a factor of 2 worst-case inside one (uniform-fill
     assumption), which is the right fidelity for telemetry cut
     decisions. Returns ``{stratum: {q: est_tokens}}``; empty-doc
-    bucket -1 counts at length 0."""
-    rows = (hist.filter(F.col("kind") == kind)
-            .select("stratum", "bucket", "n_docs").collect())
+    bucket -1 counts at length 0. ``hist`` may also be the frame's
+    collected rows, so a caller that needs other kinds too reads the
+    table in one action."""
+    if not isinstance(hist, list):
+        hist = (hist.filter(F.col("kind") == kind)
+                .select("kind", "stratum", "bucket", "n_docs").collect())
     by_stratum: dict = {}
-    for r in rows:
-        by_stratum.setdefault(r["stratum"], []).append(
-            (r["bucket"], r["n_docs"]))
+    for r in hist:
+        if r["kind"] == kind:
+            by_stratum.setdefault(r["stratum"], []).append(
+                (r["bucket"], r["n_docs"]))
     out: dict = {}
     for stratum, buckets in by_stratum.items():
         buckets.sort()

@@ -29,7 +29,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any, Callable, Optional, Protocol
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_pipeline_thesis_ii_spark.config import EngineConfig
@@ -410,6 +410,22 @@ class Pipeline:
         frame.write.mode("overwrite").parquet(path)
         return self.spark.read.parquet(path)
 
+    @staticmethod
+    def _stats(back: DataFrame, *keys: str, **aggs: Column) -> Row:
+        """The statistics of a corpus-sized read-back in ONE Spark
+        action (each further action costs at least two AQE jobs):
+        ``rows`` is its row count, each name in ``keys`` holds that
+        column's distinct count as ``back.select(k).distinct().count()``
+        gives it (NULL counts as one value, which ``count_distinct``
+        alone skips), and each ``aggs`` entry is an aggregate under its
+        keyword."""
+        exprs = [F.count(F.lit(1)).alias("rows")]
+        exprs += [(F.count_distinct(k) + F.coalesce(
+            F.max(F.col(k).isNull().cast("int")), F.lit(0))).alias(k)
+            for k in keys]
+        exprs += [e.alias(name) for name, e in aggs.items()]
+        return back.agg(*exprs).first()
+
     def _publish(self, frame: DataFrame, output_path: str, count_key: str,
                  **reports) -> Result:
         """The common tail: write ``frame`` to the sink, count the
@@ -586,9 +602,8 @@ class Pipeline:
         batch = cat.documents
         spans, fresh = dedup.incremental_substring_spans(
             batch, self.spark, snap)
-        back = self._sink(spans, output_path)
-        n_spans = back.count()
-        n_docs = back.select("id").distinct().count()
+        stats = self._stats(self._sink(spans, output_path), "id")
+        n_spans, n_docs = stats["rows"], stats["id"]
         n_fresh = fresh.count()
         if plan.get("update"):
             fresh.write.mode("append").parquet(snap)
@@ -614,16 +629,15 @@ class Pipeline:
         emb = (similarity.hash_embed(docs, dim=plan["dim"])
                .select(F.col("id").alias("vec_id"), "embedding"))
         self.progress("embed", {"params": dict(plan)})
-        back = self._sink(emb, output_path)
-        n = back.count()
-        norms = back.select(F.aggregate(
-            F.col("embedding").cast("array<double>"), F.lit(0.0),
-            lambda a, x: a + x * x).alias("sq")) \
-            .agg(F.round(F.avg("sq"), 4).alias("mean_sq")).first()
+        sq = F.aggregate(F.col("embedding").cast("array<double>"),
+                         F.lit(0.0), lambda a, x: a + x * x)
+        stats = self._stats(self._sink(emb, output_path),
+                            mean_sq=F.round(F.avg(sq), 4))
+        n = stats["rows"]
         self.progress("publish", {"rows": n, "path": output_path})
         return [emb], {"n_vectors": n,
                        "dim": plan["dim"],
-                       "mean_sq_norm": norms["mean_sq"]}
+                       "mean_sq_norm": stats["mean_sq"]}
 
     def _run_bin_pack(self, plan: dict, cat: Catalog,
                       output_path: str) -> Result:
@@ -743,11 +757,12 @@ class Pipeline:
         edges = web.page_link_edges(pages)
         self.progress("link_graph", {"params": dict(plan),
                                      "pages": n_pages})
-        back = self._sink(edges, output_path)
-        n_edges = back.count()
-        n_domains = (back.select(F.col("src").alias("d"))
-                     .unionByName(back.select(F.col("dst").alias("d")))
-                     .distinct().count())
+        # both ends of every edge as one column: its distinct count
+        # is the domain count, its row count twice the edge count
+        ends = self._sink(edges, output_path).select(
+            F.explode(F.array("src", "dst")).alias("d"))
+        stats = self._stats(ends, "d")
+        n_edges, n_domains = stats["rows"] // 2, stats["d"]
         self.progress("publish", {"rows": n_edges,
                                   "path": output_path})
         return [edges], {"n_pages": n_pages,
@@ -827,24 +842,20 @@ class Pipeline:
         builds the rewritten corpus, which lands with its affected-doc
         and removed-token counts."""
         if plan.get("flag_only"):
-            back = self._sink(spans, output_path)
-            n_spans = back.count()
-            n_docs = back.select("id").distinct().count()
-            self.progress("publish", {"rows": n_spans,
+            stats = self._stats(self._sink(spans, output_path), "id")
+            self.progress("publish", {"rows": stats["rows"],
                                       "path": output_path})
-            return [spans], {"spans_flagged": n_spans,
-                             "docs_affected": n_docs}
+            return [spans], {"spans_flagged": stats["rows"],
+                             "docs_affected": stats["id"]}
         cleaned = cut()
         self.progress(stage, {"params": dict(plan)})
-        back = self._sink(cleaned, output_path)
-        agg = back.agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0))
-            .alias("affected"),
-            F.sum("n_removed").alias("removed")).first()
-        self.progress("publish", {"rows": agg["docs"],
+        agg = self._stats(
+            self._sink(cleaned, output_path),
+            affected=F.sum(F.when(F.col("n_removed") > 0, 1).otherwise(0)),
+            removed=F.sum("n_removed"))
+        self.progress("publish", {"rows": agg["rows"],
                                   "path": output_path})
-        return [cleaned], {"docs_out": agg["docs"],
+        return [cleaned], {"docs_out": agg["rows"],
                            "docs_affected": int(agg["affected"] or 0),
                            "tokens_removed": int(agg["removed"] or 0)}
 
@@ -953,8 +964,8 @@ class Pipeline:
                                       "decodable": n_decodable,
                                       "geometry": geom})
         back = self._sink(pairs, output_path)
-        n_pairs = back.count()
-        n_flagged = back.select("id_new").distinct().count()
+        stats = self._stats(back, "id_new")
+        n_pairs, n_flagged = stats["rows"], stats["id_new"]
         reports = {"batch_rows": n_in,
                    f"{noun}_decodable": n_decodable,
                    "flag_pairs": n_pairs,
@@ -1083,8 +1094,8 @@ class Pipeline:
                       {"params": dict(plan),
                        "decodable": n_decodable, "geometry": geom})
         back = self._sink(pairs, output_path)
-        n_pairs = back.count()
-        n_flagged = back.select("id_new").distinct().count()
+        stats = self._stats(back, "id_new")
+        n_pairs, n_flagged = stats["rows"], stats["id_new"]
         reports = {"batch_rows": n_in,
                    f"{noun}_decodable": n_decodable,
                    "containment_pairs": n_pairs,
@@ -1195,8 +1206,8 @@ class Pipeline:
         self.progress("neardup_probe", {"params": dict(plan),
                                         "cap": cap})
         back = self._sink(pairs, output_path)
-        n_pairs = back.count()
-        n_flagged = back.select("id_new").distinct().count()
+        stats = self._stats(back, "id_new")
+        n_pairs, n_flagged = stats["rows"], stats["id_new"]
         reports = {"batch_rows": n_in,
                    "flag_pairs": n_pairs, "docs_flagged": n_flagged,
                    "cap_telemetry": cap}
@@ -1575,10 +1586,12 @@ class Pipeline:
         docs = cat.documents
         frame = text.corpus_census(docs)
         self.progress("census", {"params": dict(plan)})
-        back = self._sink(frame, output_path)
-        langs = {r["stratum"]: r["n_docs"] for r in
-                 back.filter(F.col("kind") == "lang").collect()}
-        total = back.filter(F.col("kind") == "__total__").first()
+        # one row per stratum: collect the read-back once and derive
+        # every report field from its rows
+        rows = self._sink(frame, output_path).collect()
+        langs = {r["stratum"]: r["n_docs"] for r in rows
+                 if r["kind"] == "lang"}
+        total = next((r for r in rows if r["kind"] == "__total__"), None)
         if total is None:
             # an empty corpus yields zero GROUPING SETS rows — reject
             # with a reason instead of a NoneType subscript crash
@@ -1591,13 +1604,13 @@ class Pipeline:
         outputs = [frame]
         if plan.get("histogram"):
             hist = text.census_histogram(docs)
-            hb = self._sink(hist, output_path + "_hist")
+            hrows = self._sink(hist, output_path + "_hist").collect()
             reports["docs_per_length_bucket"] = {
-                int(r["bucket"]): r["n_docs"] for r in
-                hb.filter(F.col("kind") == "__total__").collect()}
+                int(r["bucket"]): r["n_docs"] for r in hrows
+                if r["kind"] == "__total__"}
             reports["histogram_path"] = output_path + "_hist"
             reports["length_quantiles_per_lang"] = text.histogram_quantiles(
-                hb, quantiles=(0.5, 0.9, 0.99), kind="lang")
+                hrows, quantiles=(0.5, 0.9, 0.99), kind="lang")
             outputs.append(hist)
         if plan.get("distinct"):
             # HLL distinct-fingerprint census: n_docs vs distinct
@@ -1621,7 +1634,7 @@ class Pipeline:
                 1.0 - min(1.0, tot[0] / tot[1]), 4) if tot[1] else 0.0
             reports["distinct_path"] = output_path + "_distinct"
             outputs.append(dcen)
-        self.progress("publish", {"rows": back.count(),
+        self.progress("publish", {"rows": len(rows),
                                   "path": output_path})
         return outputs, reports
 
@@ -1675,7 +1688,7 @@ class Pipeline:
                  .agg(F.count(F.lit(1)).alias("n"),
                       F.round(F.avg("center_cos"), 4).alias("coherence"))
                  .collect())
-        self.progress("publish", {"rows": back.count(),
+        self.progress("publish", {"rows": sum(r["n"] for r in stats),
                                   "path": output_path})
         return [assign, centers], {"rows_in": n_in,
                                    "centers_path": output_path + "_centers",
@@ -1705,9 +1718,8 @@ class Pipeline:
         assign = similarity.assign_to_centers(emb, centers)
         self.progress("assign", {"params": dict(plan),
                                  "n_centers": centers.count()})
-        back = self._sink(assign, output_path)
-        sizes = _counts(back, "cluster")
-        self.progress("publish", {"rows": back.count(),
+        sizes = _counts(self._sink(assign, output_path), "cluster")
+        self.progress("publish", {"rows": sum(sizes.values()),
                                   "path": output_path})
         return [assign], {"rows_in": n_in, "cluster_sizes": sizes}
 
@@ -1770,27 +1782,29 @@ class Pipeline:
         predicted-language agreement) into a nested report + a
         ``datacard.json`` artifact beside the sink parquet (the
         census lands AT the sink as the card's machine-readable
-        companion). Four one-scan aggregations total, every
-        driver-side object bounded by |strata| — never by corpus
-        size."""
+        companion). Seven Spark actions without the optional sections:
+        the census and histogram sink writes, one collect of each
+        read-back, and three aggregations over the documents (distinct
+        sketch, quality means, licence classes). A named tokenizer
+        store adds two, a media table up to four. Every driver-side
+        object is bounded by |strata| — never by corpus size."""
         from dynamic_etl_pipeline_thesis_ii_spark.sources import sinks
 
         docs = cat.documents
         census = text.corpus_census(docs)
-        back = self._sink(census, output_path)
-        total = back.filter(F.col("kind") == "__total__").first()
+        # one row per stratum: every census field below reads these
+        rows = self._sink(census, output_path).collect()
+        total = next((r for r in rows if r["kind"] == "__total__"), None)
         if total is None or total["n_docs"] == 0:
             raise Rejected("documents table is empty")
         self.progress("census", {"params": dict(plan)})
         comp = {
             "n_docs": total["n_docs"], "n_tokens": total["n_tokens"],
             "n_chars": total["n_chars"],
-            "docs_per_lang": {r["stratum"]: r["n_docs"] for r in
-                              back.filter(F.col("kind") == "lang")
-                              .collect()},
-            "docs_per_source": {r["stratum"]: r["n_docs"] for r in
-                                back.filter(F.col("kind") == "source")
-                                .collect()},
+            "docs_per_lang": {r["stratum"]: r["n_docs"] for r in rows
+                              if r["kind"] == "lang"},
+            "docs_per_source": {r["stratum"]: r["n_docs"] for r in rows
+                                if r["kind"] == "source"},
         }
         hist = text.census_histogram(docs)
         hist = self._sink(hist, output_path + "_hist")
@@ -1842,11 +1856,9 @@ class Pipeline:
         # not just what the corpus IS but how a budgeted training run
         # would draw from it.
         if plan.get("mix_budget") is not None:
-            toks_per_lang = {
-                r["stratum"]: r["n_tokens"]
-                for r in back.filter((F.col("kind") == "lang")
-                                     & (F.col("stratum") != "__null__"))
-                .collect()}
+            toks_per_lang = {r["stratum"]: r["n_tokens"] for r in rows
+                             if r["kind"] == "lang"
+                             and r["stratum"] != "__null__"}
             eps = sampling.unimax_epochs(toks_per_lang, plan["mix_budget"],
                                          plan["mix_epochs"])
             card["suggested_mix"] = {
@@ -1929,7 +1941,7 @@ class Pipeline:
             self.progress("media", card["media"])
         card_path = sinks.write_run_artifacts(output_path + "_card",
                                               {"data_card": card})
-        self.progress("publish", {"rows": back.count(),
+        self.progress("publish", {"rows": len(rows),
                                   "path": output_path,
                                   "card_path": card_path})
         return [census], {"data_card": card,
@@ -2205,9 +2217,13 @@ class Pipeline:
         self.progress("hybrid_search", {"params": dict(plan),
                                         "dense_arm": ("ivf" if dense_index
                                                       else "brute")})
-        back = self._sink(hits, output_path)
-        counts = _counts(back, "query_id")
-        both = back.filter(F.col("n_arms") == 2).count()
+        per_query = (self._sink(hits, output_path).groupBy("query_id")
+                     .agg(F.count(F.lit(1)).alias("n"),
+                          F.count(F.when(F.col("n_arms") == 2, 1))
+                          .alias("both"))
+                     .collect())
+        counts = {r["query_id"]: r["n"] for r in per_query}
+        both = sum(r["both"] for r in per_query)
         self.progress("publish", {"rows": sum(counts.values()),
                                   "path": output_path})
         return [hits], {"hits_per_query": counts,

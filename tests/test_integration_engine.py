@@ -222,6 +222,38 @@ def test_integrate_early_termination(spark):
     assert any(r["operation"] == "early_termination" for r in reports)
 
 
+def test_integrate_caches_only_groups_it_reads_twice(spark):
+    """A lone unioned group is read once, by the caller, so integrate
+    leaves it uncached; with two groups the denominator count and the
+    pair evaluations reread them, so they stay cached until the
+    caller's scope exits."""
+    from dynamic_etl_pipeline_thesis_ii_spark.scope import cache_scope
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    a = _mk(spark, [(1, 1.0)], ["key", "value"])
+    b = _mk(spark, [(2, 2.0)], ["key", "value"])
+    with cache_scope():
+        outputs, reports = integrate([a, b], CFG)
+        assert cache.isEmpty()
+        assert any(r["operation"] == "early_termination" for r in reports)
+        assert outputs[0].count() == 2
+    bars = _mk(spark, [("AAPL", 1, 10.0, 11.0), ("MSFT", 1, 20.0, 21.0)],
+               ["ticker", "ts", "open_px", "close_px"])
+    funds = _mk(spark, [("AAPL", 1, 5.0, 7.0, 9.0, 11.0, 13.0, 1.0, 2.0,
+                         3.0)],
+                ["ticker", "ts", "revenue_m", "ebitda_m", "assets_m",
+                 "liab_m", "equity_m", "eps_q", "dps_q", "capex_m"])
+    with cache_scope():
+        outputs, reports = integrate([bars, funds], CFG)
+        assert not any(r["operation"] == "early_termination"
+                       for r in reports)
+        assert not cache.isEmpty()
+        assert outputs[0].count() == 1
+        assert not cache.isEmpty()
+    assert cache.isEmpty()
+
+
 def test_trigram_scorer_behaves():
     assert U.trigram_scorer("close", "close") == 1.0
     assert U.trigram_scorer("close_price", "closeprice") > 0.5
